@@ -6,14 +6,17 @@ Four tiers, from cheapest to fuzziest:
 - n-gram Jaccard: exact set similarity over word 3-gram shingles —
   the *verifier*, quadratic in candidate count, so only ever run on
   candidate pairs.
-- MinHash + LSH: the 100 TB path. Signatures are computed JVM-side
-  (no Python UDF): two md5-derived 32-bit halves per shingle, then
-  128 mixes minhash_j = min((a1_j*hi + a2_j*lo + b_j) mod p).
-  Banding turns near-duplicate search into an equi-join on
-  (band_id, band-tuple key) — the only shuffle — and candidates are
-  then verified with exact Jaccard. Everything is deterministic md5
-  arithmetic, so the d03/d06 DuckDB oracles mirror the pipeline
-  value-for-value.
+- MinHash + LSH: the 100 TB path. Shingle sets are built JVM-side
+  (shingle_sets, one array per doc); signatures and band keys come
+  from ONE vectorized Arrow kernel per batch (mapInArrow over the
+  shingle arrays): two md5-derived 32-bit halves per shingle, then
+  128 mixes minhash_j = min((a1_j*hi + a2_j*lo + b_j) mod p) in
+  int64 numpy, packed into 32 band keys — a narrow map, no aggregate,
+  no shuffle keyed by doc. Banding turns near-duplicate search into
+  an equi-join on (band_id, band-tuple key) — the only shuffle — and
+  candidates are then verified with exact Jaccard. Everything is
+  deterministic md5 arithmetic, so the d03/d06 DuckDB oracles mirror
+  the pipeline value-for-value.
 - SimHash: 64-bit signature via per-bit weighted sums of token
   hashes; hamming-ball candidates found by 16-bit chunk equality
   (pigeonhole: hamming ≤ 3 ⇒ at least one of 4 chunks equal).
@@ -35,14 +38,15 @@ N_BANDS = 32  # 32 bands x 4 rows
 # the shingle string: re-reading the variable-length UTF-8 bytes per
 # seed is the dominant signature cost. The mix
 #   mh_j = (a1_j*hi + a2_j*lo + b_j) mod p
-# needs TWO independent halves to be a usable permutation family under
-# ANSI mode's no-overflow arithmetic: with a single base value the
-# no-wraparound mix is monotone in it, every seed picks the same min
-# shingle, and LSH recall collapses (caught by the planted-pair
-# recall test). With two halves the induced order varies with the
-# (a1, a2) ratio per seed. Bounds: a < 2^29, halves < 2^32 → the sum
-# < 2^62, no BIGINT overflow. md5 (not xxhash64) so the ENTIRE
-# minhash/LSH pipeline is mirrorable in the DuckDB oracle.
+# needs TWO independent halves to be a usable permutation family:
+# with a single base value the mix is monotone in it, every seed picks
+# the same min shingle, and LSH recall collapses (caught by the
+# planted-pair recall test). With two halves the induced order varies
+# with the (a1, a2) ratio per seed. Bounds: a, b < 2^29 and halves
+# < 2^32, so the sum is < 2^62 + 2^29 < 2^63 — int64 numpy computes
+# exactly what the DuckDB oracle's BIGINT arithmetic does (asserted
+# below). md5 (not xxhash64) so the ENTIRE minhash/LSH pipeline is
+# mirrorable in the DuckDB oracle.
 _MERSENNE_P = (1 << 61) - 1
 import random as _random
 
@@ -50,6 +54,12 @@ _rng = _random.Random(20240813)
 _MIX_A1 = [_rng.randrange(1, 1 << 29) for _ in range(N_MINHASH)]
 _MIX_A2 = [_rng.randrange(1, 1 << 29) for _ in range(N_MINHASH)]
 _MIX_B = [_rng.randrange(0, 1 << 29) for _ in range(N_MINHASH)]
+assert max(_MIX_A1 + _MIX_A2 + _MIX_B) < 1 << 29, "int64 mix bound"
+
+# Shingles per kernel chunk (whole docs; a larger doc runs alone):
+# bounds the (128 x shingles) int64 mix matrix at ~64 MB whatever the
+# doc lengths (~1250 docs of the reference corpus per chunk).
+_KERNEL_CHUNK_SHINGLES = 1 << 16
 
 
 def _materialize(df: DataFrame) -> DataFrame:
@@ -72,37 +82,18 @@ def _materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint()
 
 
-def _with_base_fingerprint(sh: DataFrame) -> DataFrame:
-    m = sh.withColumn("__md5", F.md5(F.col("shingle")))
-    return m.withColumn(
-        "__hi", F.conv(F.substring("__md5", 1, 8), 16, 10).cast("long")
-    ).withColumn(
-        "__lo", F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long")
-    )
-
-
-def _minhash_aggs() -> list[Column]:
-    # Single F.expr per agg, not composed Column objects: building the
-    # 128-expression tree through py4j one operator at a time costs
-    # ~2s of DRIVER time per query (measured); one parse call each is
-    # ~50ms total. Identical arithmetic, identical plan.
-    return [
-        F.expr(
-            f"min(pmod({_MIX_A1[j]} * __hi + {_MIX_A2[j]} * __lo"
-            f" + {_MIX_B[j]}, {_MERSENNE_P}))"
-        ).alias(f"mh_{j}")
-        for j in range(N_MINHASH)
-    ]
-
-
-def shingle_df(
+def shingle_sets(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     spread: bool = True,
 ) -> DataFrame:
-    """(id, shingle) pairs — distinct word n-gram shingles per doc.
+    """(doc, shingles): each doc's DISTINCT word n-gram shingles as one
+    array<string> — the package's only shingling code. A doc with fewer
+    than n tokens is one shingle (its whole token string); a NULL text
+    is [NULL]. shingle_df is its explode; a set's size is
+    size(shingles). Doc ids are assumed unique.
 
     Tokenizes ONCE into a column before the transform lambda: inlining
     `split(text)` inside the lambda would re-split per shingle index
@@ -110,11 +101,11 @@ def shingle_df(
 
     The (id, text) projection is spread across the cluster first
     (spread_small_scan): a single-row-group corpus file otherwise
-    serializes the split + shingle transform + md5 map work on one
-    core (r11; no-op at real scale). Pass ``spread=False`` for frames
-    that are SMALL BY CONSTRUCTION (delta batches, candidate-pruned
-    verify sides) where the widening exchange is pure overhead —
-    measured +0.8s on d22's per-batch frames.
+    serializes the shingle transform + signature kernel on one core
+    (r11; no-op at real scale). Pass ``spread=False`` for frames that
+    are SMALL BY CONSTRUCTION (delta batches, candidate-pruned verify
+    sides) where the widening exchange is pure overhead — measured
+    +0.8s on d22's per-batch frames.
     """
     proj = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__t"))
     if spread:
@@ -133,7 +124,170 @@ def shingle_df(
             )
         ),
     ).otherwise(F.array(F.array_join(F.col("__toks"), " ")))
-    return toked.select("doc", F.explode(shingles).alias("shingle"))
+    return toked.select("doc", shingles.alias("shingles"))
+
+
+def shingle_df(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, spread: bool = True
+) -> DataFrame:
+    """(doc, shingle) pairs — the explode of shingle_sets."""
+    return _explode(shingle_sets(df, id_col, text_col, n, spread))
+
+
+def _explode(sets: DataFrame) -> DataFrame:
+    return sets.select("doc", F.explode("shingles").alias("shingle"))
+
+
+def _sizes(sets: DataFrame) -> DataFrame:
+    return sets.select("doc", F.size("shingles").alias("n_sh"))
+
+
+def _overlap(
+    cand: DataFrame, a: str, b: str, sh_a: DataFrame, sh_b: DataFrame,
+    sizes_a: DataFrame, sizes_b: DataFrame,
+) -> DataFrame:
+    """(a, b, inter, n_a, n_b) per candidate pair: shared shingles,
+    joining shingle sets of candidate docs only, plus both set sizes."""
+    inter = (
+        cand.join(sh_a.withColumnRenamed("doc", a), a)
+        .join(sh_b.withColumnRenamed("doc", b), [b, "shingle"])
+        .groupBy(a, b)
+        .agg(F.count("*").alias("inter"))
+    )
+    return inter.join(
+        sizes_a.select(F.col("doc").alias(a), F.col("n_sh").alias("n_a")), a
+    ).join(sizes_b.select(F.col("doc").alias(b), F.col("n_sh").alias("n_b")), b)
+
+
+def _jaccard():
+    return F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+
+
+def _mixes(halves):
+    """(128, S) int64 matrix, row j = (a1_j*hi + a2_j*lo + b_j) mod p,
+    for (S, 2) int64 (hi, lo) halves; exact (bound above). Hash-major,
+    so the per-doc min reduces contiguous runs (2x faster)."""
+    import numpy as np
+
+    mix = np.multiply.outer(np.asarray(_MIX_A1, dtype=np.int64), halves[:, 0])
+    mix += np.multiply.outer(np.asarray(_MIX_A2, dtype=np.int64), halves[:, 1])
+    mix += np.asarray(_MIX_B, dtype=np.int64)[:, None]
+    mix %= _MERSENNE_P
+    return mix
+
+
+def _signature_matrix(shingles):
+    """(sig, ok) for an Arrow list<string> column of shingle sets:
+    sig[i, j] = min over doc i's non-NULL shingles s of mix_j(hi, lo),
+    hi/lo = the first two big-endian 32-bit words of md5(UTF-8 bytes
+    of s) — Spark's conv(substring(md5(s), 1, 8), 16, 10) and its
+    9..16 twin. ok[i] is False (signature NULL, the SQL min over no
+    values) where doc i has no non-NULL shingle."""
+    import hashlib
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = len(shingles)
+    lens = pc.list_value_length(shingles).fill_null(0).to_numpy(zero_copy_only=False)
+    flat = shingles.flatten()  # honours slicing and NULL lists
+    valid = flat.is_valid().to_numpy(zero_copy_only=False)
+    digests = b""
+    if len(flat):  # md5 straight off the Arrow UTF-8 buffers
+        _, obuf, dbuf = flat.buffers()
+        odt = np.int64 if pa.types.is_large_string(flat.type) else np.int32
+        o = np.frombuffer(obuf, odt)[flat.offset : flat.offset + len(flat) + 1].tolist()
+        data = memoryview(dbuf if dbuf is not None else b"")
+        md5 = hashlib.md5
+        digests = b"".join(
+            md5(data[o[k] : o[k + 1]]).digest() for k in np.flatnonzero(valid).tolist()
+        )
+    halves = np.frombuffer(digests, ">u4").reshape(-1, 4)[:, :2].astype(np.int64)
+    # per-doc offsets into the valid shingles
+    vo = np.concatenate(([0], np.cumsum(valid)))[np.concatenate(([0], np.cumsum(lens)))]
+    ok = np.diff(vo) > 0
+    sig = np.zeros((n, N_MINHASH), dtype=np.int64)
+    c0 = 0
+    while c0 < n:
+        end = np.searchsorted(vo, vo[c0] + _KERNEL_CHUNK_SHINGLES, "right") - 1
+        c1 = min(n, max(c0 + 1, int(end)))
+        docs = np.flatnonzero(ok[c0:c1]) + c0
+        if docs.size:  # docs without valid shingles own no columns
+            sig[docs] = np.minimum.reduceat(
+                _mixes(halves[vo[c0] : vo[c1]]), vo[docs] - vo[c0], axis=1
+            ).T
+        c0 = c1
+    return sig, ok
+
+
+def _minhash_kernel(batches):
+    """mapInArrow: (doc, shingles) -> (doc, shingles, sig, bands). sig =
+    the 128 minhash values; bands = the N_BANDS keys, each packing its
+    band's 4 values (15 low bits apiece) into one BIGINT. A doc with a
+    NULL signature gets NULL elements (the SQL form's all-NULL row):
+    its bands never join."""
+    import numpy as np
+    import pyarrow as pa
+
+    rows = N_MINHASH // N_BANDS
+    shifts = np.arange(rows, dtype=np.int64) * 15
+
+    def arrays(values, ok):
+        n, w = values.shape
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(0, w * (n + 1), w), pa.int32()),
+            pa.array(values.ravel(), pa.int64(), mask=np.repeat(~ok, w)),
+        )
+
+    for batch in batches:
+        sig, ok = _signature_matrix(batch.column("shingles"))
+        keys = ((sig & 0x7FFF).reshape(len(sig), N_BANDS, rows) << shifts).sum(axis=2)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column("doc"), batch.column("shingles"), arrays(sig, ok), arrays(keys, ok)],
+            ["doc", "shingles", "sig", "bands"],
+        )
+
+
+def minhash_signed(sets: DataFrame) -> DataFrame:
+    """(doc, shingles, sig, bands): a shingle_sets frame plus its MinHash
+    signature and LSH band keys, from ONE vectorized Arrow kernel
+    (_minhash_kernel: a narrow mapInArrow — no aggregate, no shuffle
+    keyed by doc). Values equal 128 SQL min aggregates of
+    pmod(a1_j*hi + a2_j*lo + b_j, p) and the packed band sums (parity
+    test in tests/test_dedup.py). Materialized once, it feeds bands,
+    sizes and the Jaccard verify."""
+    doc_type = sets.schema["doc"].dataType.simpleString()
+    return sets.select("doc", "shingles").mapInArrow(
+        _minhash_kernel,
+        f"doc {doc_type}, shingles array<string>, sig array<bigint>, bands array<bigint>",
+    )
+
+
+def minhash_signatures(
+    df: DataFrame, id_col: str, text_col: str, n: int = 3, sets: DataFrame | None = None
+) -> DataFrame:
+    """(doc, sig): the 128 minhash values per doc as one array<bigint>,
+    computed by the Arrow kernel of minhash_signed (128 NULLs for a NULL
+    text). Pass ``sets`` to reuse a caller's shingle_sets frame."""
+    if sets is None:
+        sets = shingle_sets(df, id_col, text_col, n)
+    return minhash_signed(sets).select("doc", "sig")
+
+
+def minhash_bands(signed: DataFrame) -> DataFrame:
+    """(doc, band_id, band_hash) LSH band table: the explode of a
+    minhash_signed frame's band keys, N_BANDS rows per doc.
+
+    band key = the 4 minhash values packed into ONE BIGINT (15 low
+    bits each, 60 bits total). Packing can only MERGE distinct tuples
+    (extra candidates, filtered by the exact Jaccard verify — results
+    unchanged), never split equal ones, and the same shift arithmetic
+    exists in DuckDB, so the d03/d06 oracles mirror the candidate set
+    exactly. A long key shuffles ~10x fewer bytes than the
+    concatenated-tuple string and avoids Spark-only xxhash64.
+    """
+    return signed.select("doc", F.posexplode("bands").alias("band_id", "band_hash"))
 
 
 def exact_dedup_stats(
@@ -290,85 +444,12 @@ def jaccard_pairs_prefix(
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
-    inter = (
-        candidates.join(sh.withColumnRenamed("doc", "doc_a"), "doc_a")
-        .join(sh.withColumnRenamed("doc", "doc_b"), ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
     return (
-        inter.join(
-            sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"),
-            "doc_a",
-        )
-        .join(
-            sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6
-            ),
-        )
-        .filter(
-            (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-            >= threshold
-        )
+        _overlap(candidates, "doc_a", "doc_b", sh, sh, sizes, sizes)
+        .withColumn("jaccard", F.round(_jaccard(), 6))
+        .filter(_jaccard() >= threshold)
         .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
     )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    sh: DataFrame | None = None,
-) -> DataFrame:
-    """128 minhash values per doc, computed as 128 parallel MIN
-    aggregates of universal-hash mixes of one base fingerprint per
-    shingle — all JVM-side partial aggregation, zero Python.
-
-    Pass ``sh`` to reuse a shingle frame the caller already built
-    (see jaccard_pairs_prefix)."""
-    if sh is None:
-        sh = shingle_df(df, id_col, text_col, n)
-    return _with_base_fingerprint(sh).groupBy("doc").agg(*_minhash_aggs())
-
-
-def _banded(sigs: DataFrame) -> DataFrame:
-    """(doc, band_id, band_hash) LSH band table from a signature frame.
-
-    band key = the 4 minhash values packed into ONE BIGINT (15 low
-    bits each, 60 bits total). Packing can only MERGE distinct tuples
-    (extra candidates, filtered by the exact Jaccard verify — results
-    unchanged), never split equal ones, and the same shift arithmetic
-    exists in DuckDB, so the d03/d06 oracles mirror the candidate set
-    exactly. A long key shuffles ~10x fewer bytes than the
-    concatenated-tuple string and avoids Spark-only xxhash64.
-    """
-    rows_per_band = N_MINHASH // N_BANDS
-
-    def _band_key(b: int) -> Column:
-        return F.expr(
-            " + ".join(
-                f"pmod(mh_{b * rows_per_band + r}, {1 << 15})"
-                f" * {1 << (15 * r)}"
-                for r in range(rows_per_band)
-            )
-        )
-
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band_id"),
-            _band_key(b).alias("band_hash"),
-        )
-        for b in range(N_BANDS)
-    ]
-    return sigs.select(
-        "doc", F.explode(F.array(*band_cols)).alias("band")
-    ).select("doc", "band.band_id", "band.band_hash")
 
 
 def cap_hot_bands(banded: DataFrame, max_band_df: int) -> DataFrame:
@@ -405,7 +486,7 @@ def lsh_candidate_pairs(
     text_col: str,
     n: int = 3,
     max_band_df: int | None = None,
-    sh: DataFrame | None = None,
+    signed: DataFrame | None = None,
 ) -> DataFrame:
     """CONTENT-based candidate pairs from MinHash-LSH band collisions,
     WITHOUT the Jaccard verify — the reusable blocking stage for any
@@ -415,19 +496,22 @@ def lsh_candidate_pairs(
     of their TEXT, so near-identical docs are found regardless of how
     far apart their ids are (the property id-range blocking lacks).
 
-    Scale: signatures are one groupBy shuffle; banding is narrow; the
-    self-join is an equi-join on (band_id, band_hash) — bucketed,
-    never all-pairs. Pass `max_band_df` to arm the hot-bucket guard
-    (cap_hot_bands) on corpora with templated/boilerplate text, which
-    bounds per-bucket pair work at the cost of mega-bucket recall.
-    Pass ``sh`` to reuse a caller-materialized shingle frame (see
-    jaccard_pairs_prefix).
+    Scale: signatures and band keys are one narrow kernel map
+    (minhash_signed); the self-join is an equi-join on (band_id,
+    band_hash) — bucketed, never all-pairs. Pass `max_band_df` to arm
+    the hot-bucket guard (cap_hot_bands) on corpora with
+    templated/boilerplate text, which bounds per-bucket pair work at
+    the cost of mega-bucket recall. Pass ``signed`` (an
+    already-materialized minhash_signed frame) to share one kernel
+    pass with sibling consumers (d03's verify, d21's exact truth).
     """
-    sigs = minhash_signatures(df, id_col, text_col, n, sh=sh)
-    banded = _banded(sigs)
+    if signed is None:
+        # both self-join sides read it — materialize so the kernel
+        # does not execute once PER SIDE
+        signed = _materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
+    banded = minhash_bands(signed)
     if max_band_df is not None:
         banded = cap_hot_bands(banded, max_band_df)
-    banded = _materialize(banded)
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -452,60 +536,28 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """MinHash+LSH candidate generation → exact Jaccard verification.
 
-    Scale path: signatures are one shuffle (groupBy doc); banding
-    explodes 32 narrow rows per doc; the bucket groupBy is the only
-    wide shuffle, keyed by (band_id, band_hash) which is uniform by
-    construction (hash values) on natural text — templated/boilerplate
-    corpora can still collapse a band value onto many docs, so
-    `max_band_df` arms the cap_hot_bands guard. Verification touches
-    only candidate pairs.
+    Scale path: signatures and bands are one narrow kernel map over
+    the shingle sets (32 band rows per doc); the bucket self-join is
+    the only wide shuffle, keyed by (band_id, band_hash) which is
+    uniform by construction (hash values) on natural text —
+    templated/boilerplate corpora can still collapse a band value onto
+    many docs, so `max_band_df` arms the cap_hot_bands guard.
+    Verification touches only candidate pairs.
     """
-    # One shingle pass feeds signatures, sizes, and candidate
-    # verification — materialize it (reused 4×).
-    sh = _materialize(shingle_df(df, id_col, text_col, n))
-    sigs = _with_base_fingerprint(sh).groupBy("doc").agg(*_minhash_aggs())
-    banded = _banded(sigs)
-    if max_band_df is not None:
-        banded = cap_hot_bands(banded, max_band_df)
-    # The candidate self-join references `banded` twice — materialize
-    # so the 128-min-agg signature groupBy does not execute once PER
-    # SIDE (measured ~2.8s of the 6.6s execution at sf0.1).
-    banded = _materialize(banded)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
+    # ONE materialized kernel pass feeds both band self-join sides, the
+    # sizes, and candidate verification (the shingle sets ride along).
+    signed = _materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
+    candidates = lsh_candidate_pairs(
+        df, id_col, text_col, n, max_band_df=max_band_df, signed=signed
     )
-    # Verify candidates with exact Jaccard (join shingle sets only for
-    # candidate docs).
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
-    inter = (
-        candidates.join(sh.withColumnRenamed("doc", "doc_a"), "doc_a")
-        .join(
-            sh.withColumnRenamed("doc", "doc_b"),
-            ["doc_b", "shingle"],
-        )
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    verified = (
-        inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6),
-        )
+    # Verify candidates with exact Jaccard.
+    sh, sizes = _explode(signed), _sizes(signed)
+    return (
+        _overlap(candidates, "doc_a", "doc_b", sh, sh, sizes, sizes)
+        .withColumn("jaccard", F.round(_jaccard(), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return verified
 
 
 def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -539,9 +591,9 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             "lo", F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long")
         )
     )
-    # Single F.expr per column (see _minhash_aggs): composing these 64
-    # sums + 4 chunk folds operator-by-operator costs ~1.5s of driver
-    # py4j time per query.
+    # Single F.expr per column: composing these 64 sums + 4 chunk
+    # folds operator-by-operator through py4j costs ~1.5s of query
+    # construction; one parse call each is ~50ms total.
     bit_sums = [
         F.expr(
             "sum(case when (({col} >> {sh}) & 1) = 1 then 1 else -1 end)".format(
@@ -1138,12 +1190,12 @@ def corpus_neardup_index(
     screened batch/micro-batch — the historical corpus is never
     rescanned (the same never-rescan contract as st08's exact-
     fingerprint ingest, lifted to NEAR-duplicates)."""
-    sh = shingle_df(corpus, id_col, text_col, n).persist()
-    bands = _banded(
-        _with_base_fingerprint(sh).groupBy("doc").agg(*_minhash_aggs())
-    ).persist()
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
-    return {"bands": bands, "shingles": sh, "sizes": sizes}
+    signed = minhash_signed(shingle_sets(corpus, id_col, text_col, n)).persist()
+    return {
+        "bands": minhash_bands(signed),
+        "shingles": _explode(signed),
+        "sizes": _sizes(signed),
+    }
 
 
 def neardup_screen(
@@ -1166,51 +1218,31 @@ def neardup_screen(
     to the corpus — the property that makes continuous-crawl ingest
     sustainable at 100 TB corpora.
 
-    The batch shingle frame is persisted (it feeds signatures, sizes,
-    and the verify join). Long-running callers (st10's per-micro-batch
-    loop) MUST pass `cache_handles` and unpersist them once the result
-    is materialized — otherwise each batch leaks one cached DataFrame
-    of executor storage.
+    The batch's signed shingle frame is persisted (it feeds the bands,
+    sizes, and the verify join). Long-running callers (st10's
+    per-micro-batch loop) MUST pass `cache_handles` and unpersist them
+    once the result is materialized — otherwise each batch leaks one
+    cached DataFrame of executor storage.
     """
     # micro-batch frames are batch-sized — skip the widening exchange
-    sh_b = shingle_df(batch, id_col, text_col, n, spread=False).persist()
+    signed_b = minhash_signed(
+        shingle_sets(batch, id_col, text_col, n, spread=False)
+    ).persist()
     if cache_handles is not None:
-        cache_handles.append(sh_b)
-    bands_b = _banded(
-        _with_base_fingerprint(sh_b).groupBy("doc").agg(*_minhash_aggs())
-    )
+        cache_handles.append(signed_b)
     candidates = (
-        bands_b.join(
-            index["bands"]
-            .withColumnRenamed("doc", "c_doc"),
-            ["band_id", "band_hash"],
-        )
+        minhash_bands(signed_b)
+        .join(index["bands"].withColumnRenamed("doc", "c_doc"), ["band_id", "band_hash"])
         .filter(F.col("doc") != F.col("c_doc"))
         .select("doc", "c_doc")
         .distinct()
     )
-    sizes_b = sh_b.groupBy("doc").agg(F.count("*").alias("n_b"))
-    inter = (
-        candidates.join(sh_b, "doc")
-        .join(
-            index["shingles"].withColumnRenamed("doc", "c_doc"),
-            ["c_doc", "shingle"],
-        )
-        .groupBy("doc", "c_doc")
-        .agg(F.count("*").alias("inter"))
-    )
     dup_ids = (
-        inter.join(sizes_b, "doc")
-        .join(
-            index["sizes"]
-            .withColumnRenamed("doc", "c_doc")
-            .withColumnRenamed("n_sh", "n_c"),
-            "c_doc",
+        _overlap(
+            candidates, "doc", "c_doc", _explode(signed_b), index["shingles"],
+            _sizes(signed_b), index["sizes"],
         )
-        .filter(
-            F.col("inter") / (F.col("n_b") + F.col("n_c") - F.col("inter"))
-            >= threshold
-        )
+        .filter(_jaccard() >= threshold)
         .select(F.col("doc").alias(id_col))
         .distinct()
     )
@@ -1429,63 +1461,39 @@ def delta_dedup_matches(
     (delta_doc, base_doc, jaccard) for verified matches.
     """
     # per-batch frames are small by construction — the r11 widening
-    # exchange measured as pure overhead here (see shingle_df)
-    sh_d = _materialize(shingle_df(delta, id_col, text_col, n, spread=False))
-    if base_bands is None:
-        sh_b_full = shingle_df(base, id_col, text_col, n)
-        base_bands = _banded(
-            _with_base_fingerprint(sh_b_full).groupBy("doc").agg(*_minhash_aggs())
-        )
-    delta_bands = _banded(
-        _with_base_fingerprint(sh_d).groupBy("doc").agg(*_minhash_aggs())
+    # exchange measured as pure overhead here (see shingle_sets)
+    signed_d = _materialize(
+        minhash_signed(shingle_sets(delta, id_col, text_col, n, spread=False))
     )
-    cand = (
-        delta_bands.alias("d")
+    if base_bands is None:
+        base_bands = minhash_bands(
+            minhash_signed(shingle_sets(base, id_col, text_col, n))
+        )
+    cand = _materialize(
+        minhash_bands(signed_d)
+        .select(F.col("doc").alias("delta_doc"), "band_id", "band_hash")
         .join(
-            base_bands.alias("b"),
-            (F.col("d.band_id") == F.col("b.band_id"))
-            & (F.col("d.band_hash") == F.col("b.band_hash")),
+            base_bands.select(F.col("doc").alias("base_doc"), "band_id", "band_hash"),
+            ["band_id", "band_hash"],
         )
-        .select(
-            F.col("d.doc").alias("delta_doc"),
-            F.col("b.doc").alias("base_doc"),
-        )
+        .select("delta_doc", "base_doc")
         .distinct()
     )
-    cand = _materialize(cand)
     # Verify-side base shingles: ONLY candidate base docs.
     base_needed = base.join(
         cand.select(F.col("base_doc").alias(id_col)).distinct(),
         id_col,
         "semi",
     )
-    sh_b = _materialize(
-        shingle_df(base_needed, id_col, text_col, n, spread=False)
-    )
-    sizes_d = sh_d.groupBy("doc").agg(F.count("*").alias("n_d"))
-    sizes_b = sh_b.groupBy("doc").agg(F.count("*").alias("n_b"))
-    inter = (
-        cand.join(sh_d.withColumnRenamed("doc", "delta_doc"), "delta_doc")
-        .join(
-            sh_b.withColumnRenamed("doc", "base_doc"),
-            ["base_doc", "shingle"],
-        )
-        .groupBy("delta_doc", "base_doc")
-        .agg(F.count("*").alias("inter"))
+    sets_b = _materialize(
+        shingle_sets(base_needed, id_col, text_col, n, spread=False)
     )
     return (
-        inter.join(
-            sizes_d.withColumnRenamed("doc", "delta_doc"), "delta_doc"
+        _overlap(
+            cand, "delta_doc", "base_doc", _explode(signed_d), _explode(sets_b),
+            _sizes(signed_d), _sizes(sets_b),
         )
-        .join(sizes_b.withColumnRenamed("doc", "base_doc"), "base_doc")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("n_d") + F.col("n_b") - F.col("inter")),
-                6,
-            ),
-        )
+        .withColumn("jaccard", F.round(_jaccard(), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("delta_doc", "base_doc", "jaccard")
     )
@@ -1512,10 +1520,11 @@ def lsh_band_sweep(
     narrow projection, so the sweep costs one signature build plus
     |configs| bucketed self-joins over the sample.
 
-    Band keys here are md5 of the comma-joined row values (engine-
-    portable, any rows_per_band); the production path (_banded) packs
-    4x15-bit values into one BIGINT — same collision semantics where
-    both apply, cheaper shuffle bytes, but capped at 4 rows/band.
+    Band keys here are md5 of the comma-joined row values sig[i]
+    (engine-portable, any rows_per_band; a NULL signature joins to
+    md5('')); the production path (minhash_bands) packs 4x15-bit
+    values into one BIGINT — same collision semantics where both
+    apply, cheaper shuffle bytes, but capped at 4 rows/band.
     """
     # validate BEFORE the eager signature/truth builds — a bad config
     # must not cost the two most expensive stages first
@@ -1525,12 +1534,7 @@ def lsh_band_sweep(
     # ONE shingle pass feeds both the signature build and the exact
     # ground truth (r11: each previously paid its own tokenize+explode
     # — two identical scans of the sample, measured ~1s apart at sf0.1)
-    sh = _materialize(shingle_df(df, id_col, text_col, n))
-    # sigs NOT localCheckpointed (r12): since the r11 single-tagged-
-    # join rewrite the signature frame has exactly ONE consumer (the
-    # tagged band explode, which IS materialized below) — the old LC
-    # paid an eager job + one extra pass over sh for nothing.
-    sigs = minhash_signatures(df, id_col, text_col, n, sh=sh)
+    signed = _materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
     # Ground truth via the PLAIN shared-shingle all-pairs join (r12):
     # on the bounded evaluation sample this operator is built for
     # (d21/d23 fix the sample at 2000 docs, so the exact pair work is
@@ -1542,11 +1546,8 @@ def lsh_band_sweep(
     # jaccard_pairs_prefix remains the corpus-WIDE exact form for
     # unbounded inputs (its docstring's 10^6+-doc crossover).
     truth = (
-        jaccard_pairs(df, id_col, text_col, n=n, sh=sh)
-        .filter(
-            (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-            >= threshold
-        )
+        jaccard_pairs(df, id_col, text_col, n=n, sh=_explode(signed))
+        .filter(_jaccard() >= threshold)
         .select("doc_a", "doc_b")
         .withColumn("__true", F.lit(1))
         .localCheckpoint()
@@ -1562,27 +1563,24 @@ def lsh_band_sweep(
     # pair sets distinct ⇒ count(__true) == |truth ∩ cand|); a config
     # with zero candidates is restored by the left join from the
     # literal config table below.
-    band_cols = []
-    for r, b in configs:
-        for i in range(b):
-            band_cols.append(
-                F.struct(
-                    F.lit(r).alias("r"),
-                    F.lit(b).alias("b"),
-                    F.lit(i).alias("band_id"),
-                    F.md5(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"mh_{i * r + j}").cast("string")
-                                for j in range(r)
-                            ],
-                        )
-                    ).alias("band_key"),
-                )
-            )
+    # One lambda per config over the signature array (r x b keys each),
+    # not one struct per band: a 3-expression tree instead of 112.
+    sig = F.col("sig").cast("array<string>")
+
+    def config_keys(r: int, b: int) -> Column:
+        return F.transform(
+            F.sequence(F.lit(0), F.lit(b - 1)),
+            lambda i: F.struct(
+                F.lit(r).alias("r"),
+                F.lit(b).alias("b"),
+                i.alias("band_id"),
+                F.md5(F.concat_ws(",", F.slice(sig, i * r + 1, F.lit(r)))).alias("band_key"),
+            ),
+        )
+
+    keys = F.flatten(F.array(*[config_keys(r, b) for r, b in configs]))
     banded = _materialize(
-        sigs.select("doc", F.explode(F.array(*band_cols)).alias("x")).select(
+        signed.select("doc", F.explode(keys).alias("x")).select(
             "doc", "x.r", "x.b", "x.band_id", "x.band_key"
         )
     )

@@ -645,7 +645,7 @@ def _assign_seeded_argmax_kernel(pts: DataFrame, seeds) -> DataFrame:
       Python repr is shortest-roundtrip like the JVM's, and ONLY the
       boundary window can disagree between the two paths. -0.0 results
       normalize to +0.0 (BigDecimal has no signed zero);
-    - argmax tie rule: seeds arrive sorted by seed_id ascending and
+    - argmax tie rule: seeds are sorted by seed_id ascending here and
       np.argmax takes the FIRST maximum — exactly max(-seed_id);
     - u passes through, replacing the SQL form's join-back;
     - NULL semantics mirror the SQL form exactly (pinned by the
@@ -658,14 +658,17 @@ def _assign_seeded_argmax_kernel(pts: DataFrame, seeds) -> DataFrame:
       that all-NULL fallback; with NO seeds at all the SQL form's
       inner join produces an EMPTY frame, and so does the kernel.
 
-    `seeds`: [(seed_id, [float, ...] | None), ...] sorted by seed_id.
+    `seeds`: [(seed_id, [float, ...] | None), ...] in any order.
     """
     import pyarrow as pa
 
-    seed_list = [
-        (int(s), None if vec is None else [float(x) for x in vec])
-        for s, vec in seeds
-    ]
+    seed_list = sorted(
+        (
+            (int(s), None if vec is None else [float(x) for x in vec])
+            for s, vec in seeds
+        ),
+        key=lambda sv: sv[0],
+    )
 
     def kernel(batches):
         import numpy as np
@@ -831,13 +834,7 @@ def semantic_dedup(
         .select(F.col("id").alias("seed_id"), F.col("u").alias("su"))
         .collect()
     )
-    seeds = sorted(
-        (
-            int(r["seed_id"]),
-            None if r["su"] is None else list(r["su"]),
-        )
-        for r in seed_rows
-    )
+    seeds = [(r["seed_id"], r["su"]) for r in seed_rows]
     assigned = _assign_seeded_argmax_kernel(pts, seeds).localCheckpoint()
     w_rank = Window.partitionBy("cluster").orderBy(F.desc("cent"), F.asc("id"))
     ranked = assigned.withColumn("crank", F.row_number().over(w_rank))

@@ -34,8 +34,9 @@ from pyspark.sql import DataFrame
 # planning) PER CALL — measurable driver time when ~30 call sites each
 # probe per query construction. The count it returns is a function of
 # (leaf file set, maxPartitionBytes, default parallelism) for the
-# scan-projection frames this helper is called on, so one probe per
-# distinct file set serves every later call in the session. A cache
+# scan-projection frames this helper is called on (plus the other
+# file-split settings, openCostInBytes and minPartitionNum), so one
+# probe per distinct key serves every later call in the session. A cache
 # hit costs one walk of the frame's ALREADY-analyzed plan
 # (df.inputFiles()); frames with no file leaves (localCheckpoint /
 # in-memory inputs) skip the cache and probe directly. A stale or
@@ -70,10 +71,14 @@ def spread_small_scan(df: DataFrame) -> DataFrame:
         # no-default get: returns the conf's session default when
         # unset (a passed default string is TYPE-VALIDATED by Spark 4
         # and '' is not a bytes value)
+        conf = df.sparkSession.conf
         key = (
             tuple(sorted(files)),
             target,
-            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes"),
+            *(
+                conf.get(f"spark.sql.files.{k}")
+                for k in ("maxPartitionBytes", "openCostInBytes", "minPartitionNum")
+            ),
         )
         n = _PART_CACHE.get(key)
     if n is None:

@@ -7279,16 +7279,14 @@ def d21_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_sql_and_pyspark_developement__spark.operators.dedup import (
         jaccard_pairs,
         lsh_candidate_pairs,
-    )
-
-    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
-        shingle_df,
+        minhash_signed,
+        shingle_sets,
     )
 
     docs = table(spark, sf_dir, "documents")
     # The sample is NOT localCheckpointed (r12): since the r11 sh=
     # threading, its only real consumer is the shingle pass below
-    # (truth and candidates both ride `sh`) — the old LC paid an
+    # (truth and candidates both ride `signed`) — the old LC paid an
     # eager job for a frame read exactly once.
     sample = (
         docs.select("doc_id", "text")
@@ -7307,8 +7305,12 @@ def d21_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # prefix filter's extra rank/window passes cost more than they
     # save (interleaved A/B 1.70s vs 1.05s at sf0.1; identical pair
     # sets, asserted at three thresholds in tests/test_dedup.py).
-    # jaccard_pairs_prefix remains the corpus-WIDE exact form.
-    sh = shingle_df(sample, "doc_id", "text", 3).localCheckpoint()
+    # jaccard_pairs_prefix remains the corpus-WIDE exact form. The one
+    # materialized frame is the MinHash kernel's output (shingle sets +
+    # signatures + band keys), so truth and candidates share a single
+    # eager job.
+    signed = minhash_signed(shingle_sets(sample, "doc_id", "text", 3)).localCheckpoint()
+    sh = signed.select("doc", F.explode("shingles").alias("shingle"))
     truth = (
         jaccard_pairs(sample, "doc_id", "text", n=3, sh=sh)
         .filter(
@@ -7319,7 +7321,7 @@ def d21_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__true", F.lit(1))
         .localCheckpoint()
     )
-    cand = lsh_candidate_pairs(sample, "doc_id", "text", n=3, sh=sh)
+    cand = lsh_candidate_pairs(sample, "doc_id", "text", n=3, signed=signed)
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
     # truth is sample-bounded (≤ C(2000,2) pairs at ANY corpus size),
     # so the broadcast hint is safe by construction — see the same
@@ -9550,9 +9552,12 @@ def q129_file_metadata_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explicit read schema (source schema + the bucket partition col):
     # schema inference over partition dirs fails outright on an
     # empty-corpus fixture, and production readers pin schemas anyway
-    schema = cached_parquet(
-        spark, os.path.join(sf_dir, "orders.parquet")
-    ).schema.add("bucket", "integer")
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    src_schema = cached_parquet(spark, os.path.join(sf_dir, "orders.parquet")).schema
+    schema = StructType(
+        [*src_schema.fields, StructField("bucket", IntegerType())]
+    )
     df = spark.read.schema(schema).parquet(path)
     return (
         df.select(

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -47,7 +48,12 @@ BROADCAST_DIMS = ("region", "nation", "supplier")
 # are immutable per path (sf testdata never changes within a process;
 # fixture artifacts are content-keyed — a rebuilt fixture gets a NEW
 # path). Do not route mutable/overwritten paths through this helper.
-_SCHEMA_CACHE: dict[str, object] = {}
+# The cache holds a PRIVATE copy of each schema: StructType.add mutates
+# in place, and df.schema of the first reader is the very object a
+# caller may extend — caching it would leak that caller's extra column
+# into every later reader of the path (the session-order bug the
+# regression test in tests/test_io.py pins).
+_SCHEMA_CACHE: dict[str, StructType] = {}
 
 
 def cached_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -57,8 +63,9 @@ def cached_parquet(spark: SparkSession, path: str) -> DataFrame:
     schema = _SCHEMA_CACHE.get(path)
     if schema is None:
         df = spark.read.parquet(path)
-        _SCHEMA_CACHE[path] = df.schema
+        _SCHEMA_CACHE[path] = StructType.fromJson(df.schema.jsonValue())
         return df
+    # the reader serializes the schema, so the cached copy never leaks
     return spark.read.schema(schema).parquet(path)
 
 

@@ -111,7 +111,9 @@ def compact_parquet(
 
 # ORC twin of catalog._SCHEMA_CACHE (r12): q116 re-reads the same
 # immutable content-keyed ORC fixture on every construction, paying a
-# footer-inference job per read. Same immutable-path contract.
+# footer-inference job per read. Same immutable-path contract, and the
+# same private-copy rule (a caller mutating df.schema must not reach
+# the cache).
 _ORC_SCHEMA_CACHE: dict[str, StructType] = {}
 
 
@@ -119,7 +121,7 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     schema = _ORC_SCHEMA_CACHE.get(path)
     if schema is None:
         df = spark.read.orc(path)
-        _ORC_SCHEMA_CACHE[path] = df.schema
+        _ORC_SCHEMA_CACHE[path] = StructType.fromJson(df.schema.jsonValue())
         return df
     return spark.read.schema(schema).orc(path)
 
@@ -593,9 +595,7 @@ def partitioned_events_artifact(
             "event_day", F.date_format("ts", "yyyy-MM-dd")
         )
 
-    from pyspark.sql.types import StringType
-
-    schema = cached_parquet(spark, src).schema.add("event_day", StringType())
+    schema = _with_event_day(cached_parquet(spark, src).schema)
     return _staged_artifact(
         spark,
         _EVENTS_BY_DAY_NAME,
@@ -606,6 +606,14 @@ def partitioned_events_artifact(
         partition_by=["event_day"],
         read_schema=schema,
     )
+
+
+def _with_event_day(schema: StructType) -> StructType:
+    """A NEW schema: ``schema``'s fields plus the event_day partition
+    column (StructType.add would mutate the caller's object)."""
+    from pyspark.sql.types import StringType, StructField
+
+    return StructType([*schema.fields, StructField("event_day", StringType())])
 
 
 def partitioned_events_path(
@@ -622,11 +630,9 @@ def partitioned_events_path(
     (_artifact_dest)."""
     import os
 
-    from pyspark.sql.types import StringType
-
     partitioned_events_artifact(spark, sf_dir, artifact_dir=artifact_dir)
     src = os.path.join(sf_dir, "events.parquet")
-    schema = cached_parquet(spark, src).schema.add("event_day", StringType())
+    schema = _with_event_day(cached_parquet(spark, src).schema)
     return (
         _artifact_dest(
             _EVENTS_BY_DAY_NAME, src, _EVENTS_BY_DAY_PARAMS, artifact_dir
@@ -698,19 +704,13 @@ def minhash_index_artifact(
 
     def build(s: SparkSession) -> DataFrame:
         from etl_sql_and_pyspark_developement__spark.operators.dedup import (
-            _banded,
-            _minhash_aggs,
-            _with_base_fingerprint,
-            shingle_df,
+            minhash_bands,
+            minhash_signed,
+            shingle_sets,
         )
 
         base = s.read.parquet(src).filter("doc_id % 10 != 7")
-        sigs = (
-            _with_base_fingerprint(shingle_df(base, "doc_id", "text", 3))
-            .groupBy("doc")
-            .agg(*_minhash_aggs())
-        )
-        return _banded(sigs)
+        return minhash_bands(minhash_signed(shingle_sets(base, "doc_id", "text", 3)))
 
     from etl_sql_and_pyspark_developement__spark.operators.dedup import (
         N_BANDS,

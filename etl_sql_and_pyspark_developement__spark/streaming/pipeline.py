@@ -304,10 +304,11 @@ def sink_stream_neardup(doc_stream: DataFrame, corpus: DataFrame, out_dir: str):
     """st10: streaming NEAR-duplicate ingest — each arriving micro-
     batch is screened against the static corpus with the full
     MinHash-LSH + exact-Jaccard machinery and survivors land in the
-    sink. foreachBatch is the production shape here: LSH needs a
-    per-doc signature aggregation, which an append-mode stream can't
-    express directly, but per micro-batch the ALREADY-VERIFIED batch
-    operator (operators/dedup.neardup_screen) runs unchanged.
+    sink. foreachBatch is the production shape here: the exact-Jaccard
+    verify needs per-pair intersection aggregates, which an append-mode
+    stream can't express directly, but per micro-batch the
+    ALREADY-VERIFIED batch operator (operators/dedup.neardup_screen)
+    runs unchanged.
 
     The corpus index (band table, shingles, sizes) is built and
     persisted ONCE outside the loop; per-batch caches are unpersisted

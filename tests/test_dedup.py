@@ -742,3 +742,204 @@ def test_lsh_band_sweep_monotone_in_rows_per_band(spark):
         assert 0 <= r.precision_ppm <= 1000000
     # identical-tail docs are true near-dups the loosest banding finds
     assert out[2].n_true_pairs > 0 and out[2].n_hits > 0
+
+
+# --- MinHash kernel parity -------------------------------------------------
+# The retired SQL form of the signature battery (128 JVM min aggregates
+# over two md5-derived halves per shingle) and of the 32-struct band
+# explode lives here ONLY, as the reference the Arrow kernel
+# (dedup._minhash_kernel) must match.
+
+
+def _sql_signatures(sets):
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        N_MINHASH,
+        _MERSENNE_P,
+        _MIX_A1,
+        _MIX_A2,
+        _MIX_B,
+    )
+
+    sh = sets.select("doc", F.explode("shingles").alias("shingle"))
+    based = (
+        sh.withColumn("__md5", F.md5(F.col("shingle")))
+        .withColumn(
+            "__hi", F.conv(F.substring("__md5", 1, 8), 16, 10).cast("long")
+        )
+        .withColumn(
+            "__lo", F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long")
+        )
+    )
+    return based.groupBy("doc").agg(
+        *[
+            F.expr(
+                f"min(pmod({_MIX_A1[j]} * __hi + {_MIX_A2[j]} * __lo"
+                f" + {_MIX_B[j]}, {_MERSENNE_P}))"
+            ).alias(f"mh_{j}")
+            for j in range(N_MINHASH)
+        ]
+    )
+
+
+def _sql_banded(sigs):
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        N_BANDS,
+        N_MINHASH,
+    )
+
+    rows = N_MINHASH // N_BANDS
+    band_cols = [
+        F.struct(
+            F.lit(b).alias("band_id"),
+            F.expr(
+                " + ".join(
+                    f"pmod(mh_{b * rows + r}, {1 << 15}) * {1 << (15 * r)}"
+                    for r in range(rows)
+                )
+            ).alias("band_hash"),
+        )
+        for b in range(N_BANDS)
+    ]
+    return sigs.select(
+        "doc", F.explode(F.array(*band_cols)).alias("band")
+    ).select("doc", "band.band_id", "band.band_hash")
+
+
+_EDGE_DOCS = [
+    (-1, None),  # NULL text: shingles [NULL], NULL signature
+    (-2, ""),  # empty string: one '' shingle
+    (-3, "two words"),  # fewer than n tokens: one whole-text shingle
+    (-4, "a b c a b c a b c a b c"),  # repeated shingles
+    (-5, "naïve café déjà vu — 日本語の テキスト ünïcödé 🙂 emoji"),
+    (-6, "double  spaced  tokens here"),  # empty tokens from split
+    (-7, "solo"),
+]
+
+
+@pytest.fixture(scope="module")
+def parity_sets(spark, sf_dir):
+    """sf0.01 documents (when present beside the test scale) plus the
+    planted edge docs, as one shingle_sets frame."""
+    import os
+
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        shingle_sets,
+    )
+    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
+
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    docs = table(spark, sf if os.path.isdir(sf) else sf_dir, "documents")
+    edges = spark.createDataFrame(_EDGE_DOCS, "doc_id bigint, text string")
+    corpus = docs.select("doc_id", "text").unionByName(edges)
+    return shingle_sets(corpus, "doc_id", "text", 3).localCheckpoint()
+
+
+def test_minhash_kernel_signatures_match_sql_form(spark, parity_sets):
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        N_MINHASH,
+        minhash_signatures,
+    )
+
+    got = {
+        r.doc: r.sig
+        for r in minhash_signatures(None, "", "", sets=parity_sets).collect()
+    }
+    want = {
+        r.doc: [r[f"mh_{j}"] for j in range(N_MINHASH)]
+        for r in _sql_signatures(parity_sets).collect()
+    }
+    assert len(want) > len(_EDGE_DOCS)
+    # the NULL-text doc keeps the SQL form's all-NULL signature
+    assert got[-1] == [None] * N_MINHASH
+    assert got == want
+
+
+def test_minhash_kernel_bands_match_sql_form(spark, parity_sets):
+    from collections import Counter
+
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        N_BANDS,
+        minhash_bands,
+        minhash_signed,
+    )
+
+    kernel = minhash_bands(minhash_signed(parity_sets))
+    sql = _sql_banded(_sql_signatures(parity_sets))
+    assert kernel.dtypes == sql.dtypes
+    got = Counter(tuple(r) for r in kernel.collect())
+    want = Counter(tuple(r) for r in sql.collect())
+    assert got == want
+    # the NULL-text doc keeps all N_BANDS rows with a NULL key, which
+    # can never satisfy the band equi-join
+    assert sum(c for (d, _, h), c in got.items() if d == -1 and h is None) == N_BANDS
+
+
+def test_minhash_mix_is_exact_in_int64():
+    """The mix bound (a, b < 2^29) keeps a1*hi + a2*lo + b below 2^63
+    for 32-bit halves, so int64 numpy equals arbitrary-precision pmod —
+    checked at the extreme hi = lo = 2^32 - 1."""
+    import numpy as np
+
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        _MERSENNE_P,
+        _MIX_A1,
+        _MIX_A2,
+        _MIX_B,
+        _mixes,
+    )
+
+    top = (1 << 32) - 1
+    halves = [(top, top), (0, 0), (top, 0), (0, top), (123456789, 987654321)]
+    got = _mixes(np.asarray(halves, dtype=np.int64))
+    for i, (hi, lo) in enumerate(halves):
+        assert got[:, i].tolist() == [
+            (a1 * hi + a2 * lo + b) % _MERSENNE_P
+            for a1, a2, b in zip(_MIX_A1, _MIX_A2, _MIX_B)
+        ]
+
+
+@pytest.mark.parametrize("chunk_shingles", [1 << 16, 2])
+def test_minhash_kernel_sliced_and_null_arrow_input(monkeypatch, chunk_shingles):
+    """_signature_matrix reads the Arrow buffers directly; a sliced
+    list array, NULL lists and NULL elements must give the same
+    signatures as a plain Python reference over hashlib md5 — also
+    when the shingle budget splits the batch into many chunks and a
+    doc larger than the budget runs alone."""
+    import hashlib
+
+    import pyarrow as pa
+
+    from etl_sql_and_pyspark_developement__spark.operators import dedup
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        _MERSENNE_P,
+        _MIX_A1,
+        _MIX_A2,
+        _MIX_B,
+        _signature_matrix,
+    )
+
+    monkeypatch.setattr(dedup, "_KERNEL_CHUNK_SHINGLES", chunk_shingles)
+
+    def ref(shingles):
+        vals = []
+        for s in shingles or []:
+            if s is None:
+                continue
+            d = hashlib.md5(s.encode("utf-8")).digest()
+            hi, lo = int.from_bytes(d[:4], "big"), int.from_bytes(d[4:8], "big")
+            vals.append(
+                [
+                    (a1 * hi + a2 * lo + b) % _MERSENNE_P
+                    for a1, a2, b in zip(_MIX_A1, _MIX_A2, _MIX_B)
+                ]
+            )
+        return [min(c) for c in zip(*vals)] if vals else None
+
+    docs = [
+        ["skip me"], ["x y z", "ü ö"], None, [None], ["", None, "b"], [],
+        ["p", "q", "r", "s", "t"], ["single"],
+    ]
+    arr = pa.array(docs, pa.list_(pa.string())).slice(1)
+    sig, ok = _signature_matrix(arr)
+    got = [row.tolist() if k else None for row, k in zip(sig, ok)]
+    assert got == [ref(d) for d in docs[1:]]

@@ -964,3 +964,21 @@ def test_q135_default_columns_evolve_without_rewrite(spark, sf_dir, tmp_path):
     t2 = spark.table(name)
     assert {"quality_tier", "review_pass"} <= set(t2.columns)
     assert t2.filter(F.col("doc_id") < 0).count() == 2
+
+
+def test_schema_cache_not_poisoned_by_caller_mutation(spark, sf_dir, monkeypatch):
+    """A caller extending the schema of the FIRST cached read of a path
+    (StructType.add mutates in place) must not leak that column into
+    later readers of the same path: the cache keeps a private copy."""
+    import os
+
+    from pyspark.sql.types import IntegerType
+
+    from etl_sql_and_pyspark_developement__spark.sources import catalog
+
+    monkeypatch.setattr(catalog, "_SCHEMA_CACHE", {})
+    path = os.path.join(sf_dir, "orders.parquet")
+    want = spark.read.parquet(path).columns
+    catalog.cached_parquet(spark, path).schema.add("bucket", IntegerType())
+    assert catalog.table(spark, sf_dir, "orders").columns == want
+    assert catalog.cached_parquet(spark, path).columns == want

@@ -43,10 +43,30 @@ def test_q15_part_join_broadcasts(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
 
 
-def test_d03_no_python_in_signatures(spark, sf_dir):
+def test_minhash_signatures_are_one_arrow_kernel(spark, sf_dir):
+    """The MinHash signature (and band) step is ONE vectorized
+    MapInArrow over the shingle sets: no 128-aggregate HashAggregate,
+    no shuffle keyed by doc, and never row-at-a-time Python."""
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        minhash_bands,
+        minhash_signatures,
+        minhash_signed,
+        shingle_sets,
+    )
+    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
+
+    docs = table(spark, sf_dir, "documents")
+    signed = minhash_signed(shingle_sets(docs, "doc_id", "text"))
+    for df in (minhash_signatures(docs, "doc_id", "text"), minhash_bands(signed)):
+        plan = df._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+        )
+        assert plan.count("MapInArrow") == 1, plan
+        assert "HashAggregate" not in plan, plan
+        assert "hashpartitioning" not in plan, plan
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     plan = plan_of(spark, "d03_dedup_minhash_lsh", sf_dir)
-    assert "BatchEvalPython" not in plan, "minhash must not use Python UDFs"
-    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan, "minhash must not use row-at-a-time UDFs"
 
 
 def test_s01_no_python_vector_math(spark, sf_dir):
@@ -126,9 +146,9 @@ def _materialized_no_rescan(plan: str) -> bool:
 
 
 def test_d03_band_frame_materialized_for_self_join(spark, sf_dir):
-    """The shingle + banded frames feed both candidate-join sides and
-    the verify pass; without materialization the 128-min-agg groupBy
-    re-executes once per side (2x signature cost, measured).
+    """The signed shingle-set frame feeds both candidate-join sides and
+    the verify pass; without materialization the signature kernel
+    re-executes once per consumer.
     localCheckpoint, not persist — persist's columnar cache build
     costs more than the shuffle-block write (dedup._materialize)."""
     plan = plan_of(spark, "d03_dedup_minhash_lsh", sf_dir)

@@ -368,6 +368,33 @@ def test_seeded_argmax_kernel_matches_sql_form(spark, sf_dir):
     assert got == want
 
 
+def test_seeded_argmax_kernel_sorts_unsorted_seeds(spark):
+    """The first-max tie rule equals max(-seed_id) only over seeds in
+    ascending seed_id order; the kernel sorts them itself, so a caller
+    passing seeds in any order gets the same assignments (including
+    the tie, which must still go to the SMALLER seed id)."""
+    from etl_sql_and_pyspark_developement__spark.operators.similarity import (
+        _assign_seeded_argmax_kernel,
+    )
+
+    seeds = [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [-1.0, 0.0])]
+    pts = spark.createDataFrame(
+        [(0, [0.5, 0.5]), (1, [0.0, 1.0]), (2, [-1.0, 0.1]), (3, None)],
+        "id bigint, u array<double>",
+    )
+
+    def assign(ss):
+        return {
+            r["id"]: (r["cluster"], repr(r["cent"]))
+            for r in _assign_seeded_argmax_kernel(pts, ss).collect()
+        }
+
+    want = assign(seeds)
+    assert want[0][0] == 10, "tie must go to the smaller seed id"
+    assert assign(seeds[::-1]) == want
+    assert assign([seeds[1], seeds[2], seeds[0]]) == want
+
+
 def test_mmr_first_pick_is_argmax_relevance_and_diverse(spark, vectors):
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
         cosine_topk,
