@@ -3,14 +3,113 @@
 
 Prints ONE JSON line:
 {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+
+`time_lane` and `calibration` are the repo's only lane timer and load
+probe: tools/bench_heavy_sfx.py and tools/scale_audit.py import them,
+so every tool measures a lane the same way.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
 import time
+
+# Committed envelope (seconds) for the calibration probe: unloaded, the
+# probe measures ~0.07s best-of-3; ~3x headroom. A probe above it =>
+# flag the run as loaded.
+CAL_ENVELOPE_S = float(os.environ.get("SPARK_GRAFT_CAL_ENVELOPE", "0.2"))
+
+
+def calibration(spark) -> float:
+    """Fixed data-independent CPU probe: best of 3 sums over a 20M
+    range, after one untimed warm run. Its wall time on an idle box is
+    stable (~envelope/2); when the box is busy the probe slows with it,
+    so a probe outside CAL_ENVELOPE_S marks the WHOLE run's timings as
+    load-contaminated (two rounds were spent disproving phantom
+    regressions that were exactly this)."""
+    times = []
+    for _ in range(4):
+        t0 = time.perf_counter()
+        spark.range(20_000_000).selectExpr("sum(id * 2 + 1) AS s").collect()
+        times.append(time.perf_counter() - t0)
+    return min(times[1:])
+
+
+def time_lane(spark, key: str, sf_dir: str, runs: int = 2) -> dict:
+    """Time QUERIES[key] at sf_dir: best-of-`runs`, plus ONE extra run
+    when the best exceeds 1.5s (host load is spiky and the heavy tail
+    dominates a total, so a third sample there buys most of the
+    variance reduction for ~none of the cost on the cheap majority).
+    The first execution pays per-query codegen/planning (~1-2s of JVM
+    work unrelated to the data plan); the min reflects the steady-state
+    plan cost that actually scales.
+
+    Each run tags its construct phase (QUERIES[key](...): Python plan
+    building plus EAGER work such as localCheckpoints and sketch
+    collects) and its action phase with their own job groups. Returns
+    every run's time, the best, first/best (the warm-up-depth flag: a
+    large ratio means the lane was caught cold), and the best run's
+    construct_s/action_s/jobs_construct/jobs_action. A lane's
+    exception propagates: the caller decides what a failure means."""
+    from etl_sql_and_pyspark_developement__spark.plans import QUERIES
+
+    sc = spark.sparkContext
+    raw: list[float] = []
+    best: dict = {}
+    for r in range(runs + 1):
+        if r == runs and min(raw) <= 1.5:
+            break
+        gid_c, gid_a = f"lane-construct-{key}-{r}", f"lane-action-{key}-{r}"
+        df = None
+        try:
+            sc.setJobGroup(gid_c, key)
+            t0 = time.perf_counter()
+            df = QUERIES[key](spark, sf_dir)
+            t1 = time.perf_counter()
+            sc.setJobGroup(gid_a, key)
+            # Materialize EVERY output column through the noop sink: a
+            # count() action lets Catalyst prune result columns and even
+            # eliminate whole sub-plans (a left join on unique keys with
+            # no referenced right columns is dropped entirely — d18's
+            # real cost was invisible to count). The noop write is the
+            # standard full-materialization bench action: all columns
+            # computed, nothing written.
+            df.write.format("noop").mode("overwrite").save()
+            t2 = time.perf_counter()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            # Queries persist their own intermediates; drop them between
+            # runs (outside the timed section) so one run's cache neither
+            # pressures memory nor flatters the next. clearCache only
+            # frees InMemoryRelations — NOT localCheckpoint RDD blocks,
+            # which are freed when the frame is GC'd on BOTH sides: drop
+            # the Python ref, collect so py4j releases the JVM handle,
+            # and nudge the JVM GC so ContextCleaner reclaims the blocks
+            # before the next heavy query instead of during it.
+            del df
+            spark.catalog.clearCache()
+            gc.collect()
+            sc._jvm.System.gc()
+        if not raw or t2 - t0 < min(raw):
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            tracker = sc.statusTracker()
+            best = {
+                "construct_s": round(t1 - t0, 3),
+                "action_s": round(t2 - t1, 3),
+                "jobs_construct": len(tracker.getJobIdsForGroup(gid_c)),
+                "jobs_action": len(tracker.getJobIdsForGroup(gid_a)),
+            }
+        raw.append(t2 - t0)
+    b = min(raw)
+    return {
+        "times": [round(t, 3) for t in raw],
+        "best": round(b, 3),
+        "cold_over_best": round(raw[0] / b, 2) if b > 0 else 1.0,
+        **best,
+    }
 
 
 def main() -> None:
@@ -24,96 +123,27 @@ def main() -> None:
     # Warm the JVM/codegen path once so per-query numbers measure the
     # plan, not session startup.
     spark.read.parquet(f"{sf_dir}/region.parquet").count()
+    cal_start = calibration(spark)
 
-    def calibration() -> float:
-        """Fixed data-independent CPU probe: sum over a 20M range.
-        Its wall time on an idle box is stable (~envelope/2); when the
-        box is busy the probe slows with it, so a probe outside the
-        committed envelope marks the WHOLE run's timings as
-        load-contaminated (two rounds were spent disproving phantom
-        regressions that were exactly this)."""
-        t0 = time.perf_counter()
-        spark.range(20_000_000).selectExpr(
-            "sum(id * 2 + 1) AS s"
-        ).collect()
-        return time.perf_counter() - t0
-
-    # Committed envelope (seconds) for the calibration probe on THIS
-    # container unloaded, measured solo best-of-3 ~0.07s; ~3x
-    # headroom. min(start, end) above it => flag the run as loaded.
-    cal_envelope = float(
-        os.environ.get("SPARK_GRAFT_CAL_ENVELOPE", "0.2")
-    )
-    calibration()  # warm the range/codegen path once, untimed
-    cal_start = min(calibration() for _ in range(3))
-
-    # Best-of-N per query (default 2): the first execution pays
-    # per-query codegen/planning (~1-2s of JVM work unrelated to the
-    # data plan) and this box's load is spiky; the min reflects the
-    # steady-state plan cost that actually scales. Set
-    # SPARK_GRAFT_BENCH_RUNS=1 for the old single-shot behavior.
-    runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     timings: dict[str, float] = {}
-    # Warm-up-depth diagnostic (r11): first-run / best-of-N per query.
-    # Lanes whose ratio is large (>~3x) are the "warm-up lottery"
-    # movers prior rounds spent adjudication re-measuring (q61/q111
-    # signatures) — recording the ratio in the full record lets a
-    # round-over-round reader see AT A GLANCE that an apparent mover
-    # was caught cold, without a solo re-measure. Diagnostics only;
-    # the timing methodology (best-of-N, min) is unchanged.
+    # first-run / best per lane: a round-over-round reader sees AT A
+    # GLANCE that an apparent mover was caught cold (r11)
     cold_over_best: dict[str, float] = {}
+    split: dict[str, dict] = {}
     for key in sorted(QUERIES):
-        best = None
-        first = None
-        extra_done = False
-        r = 0
-        while r < runs or (not extra_done and best is not None and best > 1.5):
-            # Heavy queries (>1.5s best-of-2) get ONE extra run: this
-            # box's load is spiky and the heavy tail dominates the
-            # total, so a third sample there buys most of the variance
-            # reduction for ~none of the cost on the cheap majority.
-            if r >= runs:
-                extra_done = True
-            t0 = time.perf_counter()
-            df = QUERIES[key](spark, sf_dir)
-            # Materialize EVERY output column through the noop sink:
-            # a count() action lets Catalyst prune result columns and
-            # even eliminate whole sub-plans (a left join on unique
-            # keys with no referenced right columns is dropped
-            # entirely — d18's real cost was invisible to count), so
-            # counted timings flatter any query whose tail the
-            # optimizer can prove redundant for row counting. The
-            # noop write is the standard full-materialization bench
-            # action: all columns computed, nothing written.
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            if first is None:
-                first = dt
-            best = dt if best is None else min(best, dt)
-            n = df.count()  # row count for the log; outside the timed section
-            # Queries persist their own intermediates; drop them
-            # between runs (outside the timed section) so one run's
-            # cache neither pressures memory nor flatters the next.
-            # clearCache only frees InMemoryRelations — NOT
-            # localCheckpoint RDD blocks (the dedup/IVF queries'
-            # materialization), which are freed when the frame is
-            # GC'd on BOTH sides: drop the Python ref, collect so
-            # py4j releases the JVM handle, and nudge the JVM GC so
-            # ContextCleaner reclaims the blocks before the next
-            # heavy query instead of during it.
-            del df
-            spark.catalog.clearCache()
-            import gc
+        lane = time_lane(spark, key, sf_dir)
+        timings[key] = lane["best"]
+        cold_over_best[key] = lane["cold_over_best"]
+        split[key] = {k: lane[k] for k in (
+            "construct_s", "action_s", "jobs_construct", "jobs_action")}
+        print(
+            f"# {key}: {timings[key]:.3f}s construct={lane['construct_s']:.3f}s"
+            f" (jobs={lane['jobs_construct']}) action={lane['action_s']:.3f}s"
+            f" (jobs={lane['jobs_action']})",
+            file=sys.stderr,
+        )
 
-            gc.collect()
-            spark.sparkContext._jvm.System.gc()
-            r += 1
-        timings[key] = round(best, 3)
-        cold_over_best[key] = round(first / best, 2) if best > 0 else 1.0
-        print(f"# {key}: {timings[key]:.3f}s rows={n}", file=sys.stderr)
-
-    cal_end = min(calibration() for _ in range(3))
-    calibration_s = round(min(cal_start, cal_end), 3)
+    calibration_s = round(min(cal_start, calibration(spark)), 3)
     try:
         loadavg_1m = round(os.getloadavg()[0], 2)
         # normalized by the core count the session was built with —
@@ -143,18 +173,17 @@ def main() -> None:
         "n_queries": len(timings),
         "queries": timings,
         "sf": float(sf) if sf else sf_dir,
-        # Load guard: calibration_s = best of 3 runs of a fixed CPU
-        # probe at start and end; loaded_box means even the best
-        # exceeded the committed unloaded envelope — treat this run's
-        # timings as load-contaminated, don't chase "regressions".
+        # Load guard: calibration_s = the probe's best at start and
+        # end; loaded_box means even the best exceeded the committed
+        # unloaded envelope — treat this run's timings as
+        # load-contaminated, don't chase "regressions".
         "calibration_s": calibration_s,
-        "calibration_envelope_s": cal_envelope,
+        "calibration_envelope_s": CAL_ENVELOPE_S,
         "loadavg_1m": loadavg_1m,
         "loadavg_per_cpu": loadavg_per_cpu,
-        "loaded_box": bool(calibration_s > cal_envelope),
-        # first-run / best-of-N per query — the warm-up-depth flag
-        # (large ratio = the lane was caught cold; see comment above)
+        "loaded_box": bool(calibration_s > CAL_ENVELOPE_S),
         "cold_over_best": cold_over_best,
+        "split": split,
     }
     # Persist the FULL per-query record to a file: with 140+ queries the
     # one-line record exceeds the driver's stdout tail capture, so

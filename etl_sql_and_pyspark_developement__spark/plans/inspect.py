@@ -1,27 +1,15 @@
 """Physical-plan introspection: the programmatic form of the
-`.explain("formatted")` audit PLANS.md records by hand. A pipeline
-author calls `plan_profile(df)` before launching a 100 TB run to
-assert the plan SHAPE (shuffles, join strategies, Python stages,
-scan width) instead of eyeballing explain text — the same contracts
-tests/test_plans.py pins for every shipped query.
+`.explain("formatted")` audit PLANS.md records by hand.
+`executed_plan_metrics(df)` reads the EXECUTED adaptive plan's own
+counters (scans, shuffles, broadcasts, join strategies, Python stages)
+so a pipeline author can assert the plan SHAPE before launching a
+100 TB run instead of eyeballing explain text; tools/plan_audit.py
+pins it for every shipped query.
 """
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
-
-
-def formatted_plan(df: DataFrame) -> str:
-    """The formatted explain string (what `.explain("formatted")`
-    prints), returned instead of printed."""
-    spark = df.sparkSession
-    return df._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "formatted"
-        )
-    )
 
 
 def _walk_executed(node):
@@ -68,8 +56,7 @@ def _node_metrics(node) -> dict:
 
 
 def executed_plan_metrics(df: DataFrame) -> dict:
-    """The EXECUTED adaptive plan's own counters — plan_profile's
-    zero-noise twin. Call AFTER an action on df (the metrics are
+    """The EXECUTED adaptive plan's own counters. Call AFTER an action on df (the metrics are
     populated by execution; before it they read 0/initial). At fixed
     input these are DETERMINISTIC — row counts and node counts don't
     drift with box load the way wall-clock does — so a committed
@@ -161,70 +148,4 @@ def executed_plan_metrics(df: DataFrame) -> dict:
         "n_python_stages": n_python,
         "joins": dict(sorted(joins.items())),
         "has_cartesian": has_cartesian,
-    }
-
-
-def plan_profile(df: DataFrame) -> dict:
-    """Summarize the physical plan into the counters that matter at
-    scale. Keys:
-
-    - n_scans: parquet/file scans (re-reads of the same table count —
-      each is a full pass at 100 TB)
-    - n_exchanges / n_hash_exchanges / n_range_exchanges /
-      n_single_exchanges: SHUFFLE exchanges only (BroadcastExchange
-      and ReusedExchange are excluded — broadcast is counted under
-      n_broadcast) and their kinds (hash; range = global sort;
-      SinglePartition = collapse to one task). All four are counted
-      over the same plan text, so
-      n_exchanges == n_hash + n_range + n_single always holds.
-    - n_broadcast: broadcast exchanges (small-side joins)
-    - joins: join strategy name → count (SortMergeJoin showing up
-      where a broadcast was expected is the classic 10× regression)
-    - n_python: Python eval stages (Batch/ArrowEvalPython, and the
-      Arrow-batched mapInPandas/applyInPandas lanes) — the slow lane;
-      0 for every hot path in this engine
-    - has_cartesian: CartesianProduct / BroadcastNestedLoopJoin
-      present (almost always a bug on two large sides)
-    - scan_columns: ReadSchema column names per scan (pruning check)
-    """
-    plan = formatted_plan(df)
-    tree = plan.split("\n\n")[0]
-    joins: dict[str, int] = {}
-    for m in re.finditer(
-        r"\b(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|"
-        r"BroadcastNestedLoopJoin|CartesianProduct)\b",
-        tree,
-    ):
-        joins[m.group(1)] = joins.get(m.group(1), 0) + 1
-    scan_columns = [
-        sorted(re.findall(r"(\w+):", m.group(1)))
-        for m in re.finditer(r"ReadSchema: struct<([^>]*)>", plan)
-    ]
-    # Shuffle-kind counters come from the detail section's Exchange
-    # Arguments lines (formatted mode prints the partitioning there,
-    # not in the tree); the total is their sum, which by construction
-    # excludes BroadcastExchange/ReusedExchange — a plain substring
-    # count of "Exchange" would overstate shuffles on any
-    # broadcast-join plan.
-    n_hash = len(re.findall(r"Arguments: hashpartitioning\(", plan))
-    n_range = len(re.findall(r"Arguments: rangepartitioning\(", plan))
-    n_single = len(re.findall(r"Arguments: SinglePartition", plan))
-    return {
-        "n_scans": len(re.findall(r"Scan parquet|Scan orc|Scan csv|Scan json", tree)),
-        "n_exchanges": n_hash + n_range + n_single,
-        "n_hash_exchanges": n_hash,
-        "n_range_exchanges": n_range,
-        "n_single_exchanges": n_single,
-        "n_broadcast": len(re.findall(r"\bBroadcastExchange\b", tree)),
-        "joins": joins,
-        "n_python": len(
-            re.findall(
-                r"BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas",
-                tree,
-            )
-        ),
-        "has_cartesian": (
-            "CartesianProduct" in tree or "BroadcastNestedLoopJoin" in tree
-        ),
-        "scan_columns": scan_columns,
     }

@@ -558,26 +558,33 @@ def test_runtime_bloom_filter_prunes_probe_scan(spark, sf_dir):
                 spark.conf.set(k, v)
 
 
-def test_plan_profile_counters(spark, sf_dir):
-    """plan_profile must report the shape contracts the audit pins:
+_PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
+                 "FlatMapGroupsInPandas")
+
+
+def test_plan_shape_counters(spark, sf_dir):
+    """The shape contracts the audit pins, read off the formatted plan:
     q01 = single pruned scan + one hash exchange, no joins/Python;
-    q09 = broadcast dims, no cartesian; t14 = zero shuffles."""
-    from etl_sql_and_pyspark_developement__spark.plans import QUERIES
-    from etl_sql_and_pyspark_developement__spark.plans.inspect import (
-        plan_profile,
-    )
+    q09 = broadcast dims, no cartesian; t14 = zero shuffles. Node
+    counts read the tree (the text before the first blank line, so a
+    node is not counted again in the detail section); exchange kinds
+    read the detail section's Arguments lines."""
+    p01 = plan_of(spark, "q01_pricing_summary", sf_dir)
+    t01 = p01.split("\n\n")[0]
+    assert t01.count("Scan parquet") == 1
+    assert "Join" not in t01 and "CartesianProduct" not in t01
+    assert not any(n in t01 for n in _PYTHON_NODES)
+    assert p01.count("Arguments: hashpartitioning(") == 1
+    assert "l_comment" not in p01
 
-    p01 = plan_profile(QUERIES["q01_pricing_summary"](spark, sf_dir))
-    assert p01["n_scans"] == 1 and p01["joins"] == {} and p01["n_python"] == 0
-    assert p01["n_hash_exchanges"] == 1
-    assert all("l_comment" not in cols for cols in p01["scan_columns"])
+    t09 = plan_of(spark, "q09_geo_topk", sf_dir).split("\n\n")[0]
+    assert t09.count("BroadcastHashJoin") >= 3
+    assert "CartesianProduct" not in t09
+    assert "BroadcastNestedLoopJoin" not in t09
 
-    p09 = plan_profile(QUERIES["q09_geo_topk"](spark, sf_dir))
-    assert p09["joins"].get("BroadcastHashJoin", 0) >= 3
-    assert not p09["has_cartesian"]
-
-    p14 = plan_profile(QUERIES["t14_char_diversity"](spark, sf_dir))
-    assert p14["n_hash_exchanges"] == 0 and p14["n_python"] == 0
+    p14 = plan_of(spark, "t14_char_diversity", sf_dir)
+    assert "Arguments: hashpartitioning(" not in p14
+    assert not any(n in p14.split("\n\n")[0] for n in _PYTHON_NODES)
 
 
 def test_q58_user_keyed_touch_join(spark, sf_dir):
@@ -911,13 +918,9 @@ def test_q93_windows_on_distinct_cents_only(spark, sf_dir):
     """The unpartitioned ECDF windows must run AFTER the distinct-
     cents aggregation (bounded frame), never over raw orders: exactly
     one single-partition exchange, downstream of the cents groupBy."""
-    from etl_sql_and_pyspark_developement__spark.plans.inspect import (
-        plan_profile,
-    )
-
-    prof = plan_profile(QUERIES["q93_ks_two_sample"](spark, sf_dir))
-    assert prof["n_single_exchanges"] == 1
-    assert prof["n_python"] == 0
+    plan = plan_of(spark, "q93_ks_two_sample", sf_dir)
+    assert plan.count("Arguments: SinglePartition") == 1
+    assert not any(n in plan.split("\n\n")[0] for n in _PYTHON_NODES)
 
 
 def test_t22_explodes_projected_array_once(spark, sf_dir):

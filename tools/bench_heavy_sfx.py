@@ -31,10 +31,11 @@ there, so only lanes reading those two tables are eligible.
 Usage:
     SPARK_GRAFT_CPUS=32 python tools/bench_heavy_sfx.py
     SPARK_GRAFT_CPUS=8  python tools/bench_heavy_sfx.py
-Each run times the lane list with bench.py's exact discipline (noop
-sink, best-of-2 + one extra run when best > 1.5s, cache clear + GC
-between runs) and MERGES its column into tools/../BENCH_heavy_sf1.json
-keyed by core count, so the committed record carries both columns.
+Each run times the lane list with bench.time_lane (the repo's one lane
+timer) and MERGES its column into tools/../BENCH_heavy_sf1.json keyed
+by core count, so the committed record carries both columns. A lane
+that raises is recorded under "skipped" with its exception class, and
+the column stores os.cpu_count() beside its SPARK_GRAFT_CPUS label.
 """
 
 from __future__ import annotations
@@ -42,9 +43,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import time_lane  # noqa: E402
 
 FACTOR = 10
 # Corpus-scaling lanes that read ONLY documents/embeddings (the two
@@ -141,7 +143,6 @@ def main() -> None:
     dest = os.path.join(
         root, f"x{FACTOR}_{st.st_mtime_ns}_{st.st_size}"
     )
-    from etl_sql_and_pyspark_developement__spark.plans import QUERIES
     from etl_sql_and_pyspark_developement__spark.session import get_spark
 
     spark = get_spark("bench-heavy-sfx")
@@ -152,34 +153,16 @@ def main() -> None:
         _build(spark, src_dir, dest)
     spark.read.parquet(f"{dest}/documents.parquet").count()  # warm
 
-    import gc
-
     timings: dict[str, float] = {}
+    skipped: dict[str, str] = {}
     for key in LANES:
-        best = None
-        r = 0
-        extra_done = False
         try:
-            while r < 2 or (
-                not extra_done and best is not None and best > 1.5
-            ):
-                if r >= 2:
-                    extra_done = True
-                t0 = time.perf_counter()
-                df = QUERIES[key](spark, dest)
-                df.write.format("noop").mode("overwrite").save()
-                dt = time.perf_counter() - t0
-                best = dt if best is None else min(best, dt)
-                del df
-                spark.catalog.clearCache()
-                gc.collect()
-                spark.sparkContext._jvm.System.gc()
-                r += 1
+            timings[key] = time_lane(spark, key, dest)["best"]
         except Exception as ex:  # noqa: BLE001 — a lane needing an
             # un-synthesized table must not sink the whole record
-            print(f"# {key}: SKIPPED ({type(ex).__name__})", file=sys.stderr)
+            skipped[key] = type(ex).__name__
+            print(f"# {key}: SKIPPED ({skipped[key]})", file=sys.stderr)
             continue
-        timings[key] = round(best, 3)
         print(f"# {key}: {timings[key]:.3f}s", file=sys.stderr)
 
     record = {}
@@ -195,6 +178,8 @@ def main() -> None:
     record.setdefault("cpus", {})[str(cpus)] = {
         "total_s": round(sum(timings.values()), 3),
         "queries": timings,
+        "skipped": skipped,
+        "os_cpu_count": os.cpu_count(),
     }
     with open(RECORD, "w") as f:
         json.dump(record, f, indent=1, sort_keys=True)
@@ -202,6 +187,7 @@ def main() -> None:
         "cpus": cpus,
         "total_s": round(sum(timings.values()), 3),
         "n": len(timings),
+        "skipped": skipped,
         "record": os.path.basename(RECORD),
     }))
     spark.stop()

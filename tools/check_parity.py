@@ -2,13 +2,15 @@
 their DuckDB oracles at a given sf dir. Usage:
     python tools/check_parity.py [sf_dir] [key ...]
 """
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_sql_and_pyspark_developement__spark.plans import ORACLES, QUERIES
 from etl_sql_and_pyspark_developement__spark.session import get_spark
 from tests.parity import assert_parity
+
 
 def main():
     args = sys.argv[1:]
@@ -32,4 +34,6 @@ def main():
     print(f"{len(keys) - len(bad)}/{len(keys)} ok")
     sys.exit(1 if bad else 0)
 
-main()
+
+if __name__ == "__main__":
+    main()

@@ -7,9 +7,10 @@ What it does:
   1. ensures the N-times near-duplicate scratch corpus exists
      (tools/build_scale_scratch.build — same corpus the PLANS.md
      audits used; built once per (N, sf) into /tmp and reused);
-  2. measures each named lane best-of-R at the BASE sf dir and at the
-     scratch (bench.py's exact discipline: noop-write-all-columns
-     action, cache/GC hygiene between runs, calibration load guard);
+  2. measures each named lane at the BASE sf dir and at the scratch
+     with bench.time_lane (the repo's one lane timer: best-of-R plus
+     bench's extra run for heavy lanes) under bench.calibration's load
+     guard and envelope;
   3. prints the PLANS.md audit row (markdown, paste-ready) and a JSON
      record to stderr/stdout;
   4. compares against tools/scale_envelopes.json — a reading outside
@@ -38,13 +39,13 @@ this repo has had) still trips them.
 from __future__ import annotations
 
 import argparse
-import gc
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import CAL_ENVELOPE_S, calibration, time_lane  # noqa: E402
 
 ENVELOPE_PATH = os.path.join(os.path.dirname(__file__), "scale_envelopes.json")
 HEADROOM = 1.7
@@ -65,30 +66,6 @@ def _ensure_scratch(n: int, sf: str, scratch: str) -> str:
     print(f"# building {n}x scratch at {scratch} from {sf}", file=sys.stderr)
     build(scratch, n, sf, tables)
     return scratch
-
-
-def _calibration(spark) -> float:
-    t0 = time.perf_counter()
-    spark.range(20_000_000).selectExpr("sum(id * 2 + 1) AS s").collect()
-    return time.perf_counter() - t0
-
-
-def _measure(spark, key: str, sf_dir: str, runs: int) -> list[float]:
-    from etl_sql_and_pyspark_developement__spark.plans import QUERIES
-
-    times = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        df = QUERIES[key](spark, sf_dir)
-        # bench.py's action: materialize EVERY output column (count()
-        # lets Catalyst prune/eliminate the very work being audited)
-        df.write.format("noop").mode("overwrite").save()
-        times.append(time.perf_counter() - t0)
-        del df
-        spark.catalog.clearCache()
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
-    return [round(t, 3) for t in times]
 
 
 def main() -> None:
@@ -139,26 +116,25 @@ def main() -> None:
     spark = get_spark("scale-audit")
     spark.sparkContext.setLogLevel("ERROR")
     spark.read.parquet(f"{args.sf}/region.parquet").count()  # warm
-    _calibration(spark)  # warm the probe path, untimed
-    cal = min(_calibration(spark) for _ in range(3))
-    loaded = cal > 0.2
+    cal = calibration(spark)
+    loaded = cal > CAL_ENVELOPE_S
 
     results = {}
     breaches = []
     for key in lanes:
-        base_times = (
-            None if args.skip_base else _measure(spark, key, args.sf, args.runs)
+        base_lane = (
+            None if args.skip_base else time_lane(spark, key, args.sf, args.runs)
         )
-        scaled_times = _measure(spark, key, scratch, args.runs)
-        base = min(base_times) if base_times else None
-        scaled = min(scaled_times)
+        scaled_lane = time_lane(spark, key, scratch, args.runs)
+        base = base_lane["best"] if base_lane else None
+        scaled = scaled_lane["best"]
         ratio = round(scaled / base, 2) if base else None
         results[key] = {
             "base_s": base,
             "scaled_s": scaled,
             "ratio": ratio,
-            "base_times": base_times,
-            "scaled_times": scaled_times,
+            "base_times": base_lane["times"] if base_lane else None,
+            "scaled_times": scaled_lane["times"],
         }
         env = bucket.get(key)
         verdict = "no-envelope"
