@@ -9,6 +9,12 @@ Design rules:
 - Lake-format connectors (Delta/Iceberg/Hudi) and JDBC need jars not
   present in this environment; they are import/config-gated stubs that
   raise a clear error instead of failing mid-plan.
+- Build-once fixtures live under one artifact root, a deployment
+  path set in the environment and read only by _artifact_dest. Every
+  fixture keys its directory (and any catalog name derived from it)
+  through _artifact_dest and publishes it through _atomic_dir_commit;
+  the catalog-registered ones point their saveAsTable at an
+  _artifact_dest path.
 """
 
 from __future__ import annotations
@@ -181,23 +187,16 @@ def write_xml(
     )
 
 
-def xml_orders_fixture(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> str:
+def xml_orders_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Build-once XML twin of orders (q122's fixture, q116's ORC
     pattern): the same rows re-staged through write_xml, so the XML
     decode path is exercised against data whose truth the
-    parquet-backed oracle already knows. Committed atomically
-    (_atomic_dir_commit); keyed via _artifact_dest — ONE key recipe,
-    shared with every other artifact helper."""
+    parquet-backed oracle already knows."""
     import os
 
     src = os.path.join(sf_dir, "orders.parquet")
-    path = _artifact_dest("orders_xml", src, "xml|v=1", artifact_dir)
+    path = _artifact_dest("orders_xml", src, "xml|v=1")
     _atomic_dir_commit(
-        os.path.dirname(path),
         path,
         lambda tmp: write_xml(
             spark.read.parquet(src),
@@ -375,30 +374,35 @@ def _clear_torn_dest(dest: str) -> None:
         shutil.rmtree(trash, ignore_errors=True)
 
 
-def _atomic_dir_commit(root: str, dest: str, write_to) -> None:
-    """_staged_artifact's commit protocol for a bare directory: write
-    to a tmp sibling, verify the _SUCCESS marker, os.rename into
-    place. Readers never see a half-written dir; a concurrent builder
-    that loses the rename race discards its tmp and reads the winner.
-    No-op if `dest` is already committed."""
+def _atomic_dir_commit(dest: str, write_to) -> None:
+    """The one commit protocol for a build-once directory: write to a
+    tmp sibling, verify the _SUCCESS marker, os.rename into place.
+    Readers never see a half-written dir; a build that fails removes
+    its tmp and publishes nothing; a concurrent builder that loses the
+    rename race discards its tmp and reads the winner. No-op if `dest`
+    is already committed."""
     import os
     import shutil
 
     if os.path.exists(os.path.join(dest, "_SUCCESS")):
         return
-    os.makedirs(root, exist_ok=True)
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
     # dest existing WITHOUT _SUCCESS is pre-atomic/torn garbage (the
     # atomic path only ever publishes complete dirs via rename) — a
     # rename onto it would fail ENOTEMPTY forever; clear it (race-
     # safely: a concurrently committed winner is restored, not razed)
     _clear_torn_dest(dest)
     tmp = f"{dest}.tmp.{os.getpid()}"
-    write_to(tmp)
-    if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-        raise RuntimeError(
-            f"atomic commit: build at {tmp} finished without a "
-            "_SUCCESS marker; refusing to publish a torn directory"
-        )
+    try:
+        write_to(tmp)
+        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
+            raise RuntimeError(
+                f"atomic commit: build at {tmp} finished without a "
+                "_SUCCESS marker; refusing to publish a torn directory"
+            )
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     try:
         os.rename(tmp, dest)
     except OSError:
@@ -407,25 +411,33 @@ def _atomic_dir_commit(root: str, dest: str, write_to) -> None:
             raise
 
 
-def _artifact_dest(
-    name: str, src_path: str, params: str, artifact_dir: str | None
-) -> str:
-    """The artifact directory _staged_artifact commits `name` to —
-    one key recipe, shared with callers that must re-open a committed
-    artifact through a different reader (partitioned_events_path)."""
+def _artifact_dest(name: str, src_path: str, params: str) -> str:
+    """The one key recipe for build-once artifacts: the directory for
+    `name` built from `src_path` under `params`, inside the artifact
+    root.
+
+    Key = source identity (realpath + mtime + size) x params x the
+    resolved root — a regenerated source or changed semantics (version
+    the params) misses and rebuilds. The root is in the key because
+    catalog-registered fixtures use the basename as their table name
+    and the catalog is session-wide: without it, a second root in the
+    same session would be handed the table registered under the first.
+
+    At 100 TB this is a lake table keyed by corpus snapshot id; here
+    the same contract over a local directory."""
     import hashlib
     import os
     import tempfile
 
-    st = os.stat(src_path)
-    key = hashlib.sha1(
-        f"{os.path.realpath(src_path)}|{st.st_mtime_ns}|{st.st_size}"
-        f"|{params}".encode()
-    ).hexdigest()[:16]
-    root = artifact_dir or os.environ.get(
+    root = os.environ.get(
         "SPARK_GRAFT_ARTIFACT_DIR",
         os.path.join(tempfile.gettempdir(), "spark_graft_artifacts"),
     )
+    st = os.stat(src_path)
+    key = hashlib.sha1(
+        f"{os.path.realpath(src_path)}|{st.st_mtime_ns}|{st.st_size}"
+        f"|{params}|root:{os.path.realpath(root)}".encode()
+    ).hexdigest()[:16]
     return os.path.join(root, f"{name}_{key}")
 
 
@@ -435,54 +447,23 @@ def _staged_artifact(
     src_path: str,
     params: str,
     build,
-    artifact_dir: str | None = None,
     partition_by: list[str] | None = None,
     read_schema: StructType | None = None,
 ) -> DataFrame:
-    """Build-once / read-many parquet artifact with an atomic commit.
+    """Build-once / read-many parquet artifact: `build(spark)`'s frame
+    written once per key (_artifact_dest, _atomic_dir_commit), then
+    read back."""
+    dest = _artifact_dest(name, src_path, params)
 
-    Cache key = (source file identity: realpath + mtime + size) x
-    params string x artifact name — a regenerated source or changed
-    semantics (version the params) misses the cache and rebuilds.
-    Commit protocol: `build()` writes to a tmp dir, the _SUCCESS
-    marker is verified, then os.rename publishes it — readers never
-    see a half-written artifact, and a concurrent builder that loses
-    the rename race reads the winner's output.
-
-    At 100 TB this is a lake table keyed by corpus snapshot id; here
-    the same contract over a local artifact directory (override via
-    $SPARK_GRAFT_ARTIFACT_DIR)."""
-    import os
-    import shutil
-
-    dest = _artifact_dest(name, src_path, params, artifact_dir)
-    root = os.path.dirname(dest)
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        os.makedirs(root, exist_ok=True)
-        # same torn-dest healing as _atomic_dir_commit: a pre-atomic
-        # crash must not wedge every future rename with ENOTEMPTY
-        _clear_torn_dest(dest)
-        tmp = f"{dest}.tmp.{os.getpid()}"
-        tmp = os.path.join(root, f".{os.path.basename(tmp)}")
+    def write_to(tmp: str) -> None:
         writer = build(spark).write.mode("overwrite")
         if partition_by:
             # Hive-style layout (col=value dirs) so readers get
             # partition pruning from directory listing alone.
             writer = writer.partitionBy(*partition_by)
         writer.parquet(tmp)
-        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            raise RuntimeError(
-                f"{name} artifact: build at {tmp} finished without a "
-                "_SUCCESS marker; refusing to commit a torn artifact"
-            )
-        try:
-            os.rename(tmp, dest)
-        except OSError:
-            # Lost the commit race — a concurrent builder already
-            # renamed an identical artifact into place; read theirs.
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-                raise
+
+    _atomic_dir_commit(dest, write_to)
     if read_schema is not None:
         # Explicit schema: an EMPTY partitioned artifact has no data
         # files to infer from (only _SUCCESS), and partition-column
@@ -499,7 +480,6 @@ def knn_graph_artifact(
     sf_dir: str,
     k: int = 5,
     dim: int = 64,
-    artifact_dir: str | None = None,
 ) -> DataFrame:
     """Build-once / read-many kNN-graph artifact — the production shape
     for graph-consuming curation passes: the similarity graph is built
@@ -507,8 +487,7 @@ def knn_graph_artifact(
     every consumer (q68 PageRank, q71 triangles, p12 density pruning)
     reads the materialized parquet instead of re-running the bucket
     join + top-k window inline. Adaptive n_bits is a pure function of
-    the corpus, so it needs no key component. Commit/caching contract:
-    see _staged_artifact."""
+    the corpus, so it needs no key component."""
     import os
 
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
@@ -522,15 +501,10 @@ def knn_graph_artifact(
         src,
         f"k={k}|dim={dim}|v={_KNN_ARTIFACT_VERSION}",
         lambda s: knn_graph(s.read.parquet(src), k=k, n_bits=None, dim=dim),
-        artifact_dir=artifact_dir,
     )
 
 
-def json_docs_artifact(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> DataFrame:
+def json_docs_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged (event_type, doc) JSON-document table for the VARIANT
     workload (q69): the nested document is deterministically derived
     from event columns, but building it with format_string inside the
@@ -538,8 +512,7 @@ def json_docs_artifact(
     VARIANT access. Staging the docs once per corpus snapshot moves
     construction out of the timed plan — the measured work becomes
     scan + parse_json + variant_get, which is what a production
-    pipeline ingesting real JSON actually pays. Commit/caching
-    contract: see _staged_artifact."""
+    pipeline ingesting real JSON actually pays."""
     import os
 
     from pyspark.sql import functions as F
@@ -565,15 +538,10 @@ def json_docs_artifact(
         src,
         f"v={_JSON_DOCS_ARTIFACT_VERSION}",
         build,
-        artifact_dir=artifact_dir,
     )
 
 
-def partitioned_events_artifact(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> DataFrame:
+def partitioned_events_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged DAY-PARTITIONED events table (Hive layout,
     event_day=yyyy-MM-dd directories) — the physical shape a 100 TB
     event lake actually has, which the flat testdata parquet cannot
@@ -581,8 +549,7 @@ def partitioned_events_artifact(
     resolved from the directory listing (zero data touched for pruned
     days) instead of a row filter over the full scan. q97 asserts the
     pruning in-plan; at the lake this is the difference between
-    reading 3 days and reading 3 years. Commit/caching contract: see
-    _staged_artifact."""
+    reading 3 days and reading 3 years."""
     import os
 
     from pyspark.sql import functions as F
@@ -602,7 +569,6 @@ def partitioned_events_artifact(
         src,
         _EVENTS_BY_DAY_PARAMS,
         build,
-        artifact_dir=artifact_dir,
         partition_by=["event_day"],
         read_schema=schema,
     )
@@ -619,24 +585,19 @@ def _with_event_day(schema: StructType) -> StructType:
 def partitioned_events_path(
     spark: SparkSession,
     sf_dir: str,
-    artifact_dir: str | None = None,
 ) -> tuple[str, "StructType"]:
     """(path, read schema) of the committed day-partitioned events
     artifact — for callers that must re-open it through a DIFFERENT
     reader than the artifact helper's default (q125 reads it through
     the DS v2 path to exercise GROUP-BY-partition-column pushdown).
-    Ensures the artifact exists first; the destination comes from
-    the same key recipe _staged_artifact commits with
-    (_artifact_dest)."""
+    Ensures the artifact exists first."""
     import os
 
-    partitioned_events_artifact(spark, sf_dir, artifact_dir=artifact_dir)
+    partitioned_events_artifact(spark, sf_dir)
     src = os.path.join(sf_dir, "events.parquet")
     schema = _with_event_day(cached_parquet(spark, src).schema)
     return (
-        _artifact_dest(
-            _EVENTS_BY_DAY_NAME, src, _EVENTS_BY_DAY_PARAMS, artifact_dir
-        ),
+        _artifact_dest(_EVENTS_BY_DAY_NAME, src, _EVENTS_BY_DAY_PARAMS),
         schema,
     )
 
@@ -646,7 +607,6 @@ def minhash_pairs_artifact(
     sf_dir: str,
     threshold: float = 0.5,
     n: int = 3,
-    artifact_dir: str | None = None,
 ) -> DataFrame:
     """Build-once / read-many MinHash-LSH verified-pairs artifact —
     the knn_graph_artifact pattern applied to the TEXT dedup lane: the
@@ -655,8 +615,7 @@ def minhash_pairs_artifact(
     pair consumer (d06 components, d15 quality keeper — and any
     downstream canonical-selection pass) reads the committed parquet.
     d03 itself stays the inline machinery demonstration (and is the
-    builder whenever it runs first). Commit/caching contract: see
-    _staged_artifact."""
+    builder whenever it runs first)."""
     import os
 
     from etl_sql_and_pyspark_developement__spark.operators.dedup import (
@@ -680,15 +639,10 @@ def minhash_pairs_artifact(
         lambda s: minhash_lsh_pairs(
             s.read.parquet(src), "doc_id", "text", n=n, threshold=threshold
         ),
-        artifact_dir=artifact_dir,
     )
 
 
-def minhash_index_artifact(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> DataFrame:
+def minhash_index_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged LSH BAND INDEX (doc, band_id, band_hash) of the BASE
     corpus (documents with doc_id % 10 != 7 — the already-ingested
     side of the incremental-dedup split): the expensive
@@ -697,7 +651,7 @@ def minhash_index_artifact(
     The same build-once contract as minhash_pairs_artifact, holding
     the INDEX instead of the verified pairs — pairs answer batch
     dedup inside a snapshot; the index answers ingestion dedup
-    against it. Commit/caching contract: see _staged_artifact."""
+    against it."""
     import os
 
     src = os.path.join(sf_dir, "documents.parquet")
@@ -723,15 +677,10 @@ def minhash_index_artifact(
         src,
         f"v=1|split=mod10ne7|n=3|mh={N_MINHASH}x{N_BANDS}",
         build,
-        artifact_dir,
     )
 
 
-def day_dim_artifact(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> DataFrame:
+def day_dim_artifact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged per-day calendar/dim table over events: (event_day,
     n_users, n_events, max_users) — the small dimension a lake keeps
     beside a day-partitioned fact so queries can select days by
@@ -741,8 +690,7 @@ def day_dim_artifact(
     plain column COMPARISON over one scan — the shape Spark's
     dynamic-partition-pruning rule recognizes as a selective
     predicate (a bare boolean column or a cross-relation comparison
-    is not "likely selective" and DPP declines — measured).
-    Commit/caching contract: see _staged_artifact."""
+    is not "likely selective" and DPP declines — measured)."""
     import os
 
     from pyspark.sql import functions as F
@@ -760,14 +708,13 @@ def day_dim_artifact(
         mx = per_day.agg(F.max("n_users").alias("max_users"))
         return per_day.crossJoin(F.broadcast(mx))
 
-    return _staged_artifact(spark, "day_dim", src, "v=1", build, artifact_dir)
+    return _staged_artifact(spark, "day_dim", src, "v=1", build)
 
 
 def bucketed_join_tables(
     spark: SparkSession,
     sf_dir: str,
     n_buckets: int = 16,
-    artifact_dir: str | None = None,
 ) -> tuple[str, str]:
     """Ensure BUCKETED catalog twins of orders and customer exist
     (bucketBy(custkey) + sortBy, external parquet under the artifact
@@ -775,56 +722,35 @@ def bucketed_join_tables(
     100 TB playbook names for repeatedly-joined fact tables: both
     sides pre-hashed into the same bucket count on the join key, so
     the join reads bucket i against bucket i with ZERO Exchange
-    (plan-asserted by q100's test). Build-once semantics keyed by the
-    source identity, the _staged_artifact contract expressed through
-    the catalog (saveAsTable is its own atomic commit).
+    (plan-asserted by q100's test). saveAsTable is the commit here;
+    each twin is keyed on its OWN source, so a regenerated
+    customer.parquet misses the cache even when orders.parquet is
+    unchanged.
 
     At the lake this is table-format clustering (Iceberg bucket
     partition transforms / Delta liquid clustering); here the same
     contract through Spark's native bucketed tables."""
-    import hashlib
     import os
-    import tempfile
 
-    # Per-source identity for EVERY table the key covers (the
-    # _staged_artifact contract): a regenerated customer.parquet with
-    # an unchanged orders.parquet must miss the cache and rebuild —
-    # keying on orders alone would silently serve stale customer rows.
-    stats = "|".join(
-        f"{src}:{s.st_mtime_ns}:{s.st_size}"
-        for src in ("orders.parquet", "customer.parquet")
-        for s in (os.stat(os.path.join(sf_dir, src)),)
-    )
-    key = hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|{stats}|b={n_buckets}|v=2".encode()
-    ).hexdigest()[:12]
-    root = artifact_dir or os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_artifacts"),
-    )
-    names = (f"orders_bkt_{key}", f"customer_bkt_{key}")
-    for name, src, bucket_col in (
-        (names[0], "orders.parquet", "o_custkey"),
-        (names[1], "customer.parquet", "c_custkey"),
-    ):
-        if spark.catalog.tableExists(name):
-            continue
-        (
-            spark.read.parquet(os.path.join(sf_dir, src))
-            .write.mode("overwrite")
-            .bucketBy(n_buckets, bucket_col)
-            .sortBy(bucket_col)
-            .option("path", os.path.join(root, name))
-            .saveAsTable(name)
-        )
-    return names
+    names = []
+    for tbl, col in (("orders", "o_custkey"), ("customer", "c_custkey")):
+        src = os.path.join(sf_dir, f"{tbl}.parquet")
+        dest = _artifact_dest(f"{tbl}_bkt", src, f"b={n_buckets}|v=2")
+        name = os.path.basename(dest)
+        if not spark.catalog.tableExists(name):
+            (
+                spark.read.parquet(src)
+                .write.mode("overwrite")
+                .bucketBy(n_buckets, col)
+                .sortBy(col)
+                .option("path", dest)
+                .saveAsTable(name)
+            )
+        names.append(name)
+    return tuple(names)
 
 
-def analyzed_part_table(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> str:
+def analyzed_part_table(spark: SparkSession, sf_dir: str) -> str:
     """Catalog twin of `part` with COMPUTED STATISTICS — the input the
     cost-based optimizer needs to see THROUGH a filter: `ANALYZE TABLE
     ... COMPUTE STATISTICS` (totalSize + rowCount) plus `FOR COLUMNS`
@@ -834,17 +760,16 @@ def analyzed_part_table(
     can't see that `p_size <= 3` leaves a broadcastable sliver — the
     q106 demonstration.
 
-    Same registration contract as bucketed_join_tables: build-once
-    parquet keyed by the source's identity; the catalog entry (and,
-    per session, the ANALYZE — the in-memory catalog forgets stats on
-    restart) re-created when absent. The dim-sized ANALYZE scan is
+    The catalog entry (and, per session, the ANALYZE — the in-memory
+    catalog forgets stats on restart) is re-created when absent. The
+    dim-sized ANALYZE scan is
     the cheap part; at the lake this is the nightly stats job every
     warehouse already runs.
     """
     import os
 
     src = os.path.join(sf_dir, "part.parquet")
-    dest = _artifact_dest("part_stats", src, "cbo|v=1", artifact_dir)
+    dest = _artifact_dest("part_stats", src, "cbo|v=1")
     name = os.path.basename(dest)
     if not spark.catalog.tableExists(name):
         (
@@ -889,7 +814,6 @@ def _star_stats_complete(spark: SparkSession, name: str, last_col: str) -> bool:
 def analyzed_star_tables(
     spark: SparkSession,
     sf_dir: str,
-    artifact_dir: str | None = None,
 ) -> tuple[str, str, str]:
     """Catalog twins of (lineitem, orders, customer) with table AND
     column statistics — the input the CBO join REORDERER needs:
@@ -903,8 +827,7 @@ def analyzed_star_tables(
     selectivity makes reordering worthwhile.
 
     Same build-once contract as analyzed_part_table; returns
-    (lineitem_name, orders_name, customer_name). Keyed via
-    _artifact_dest — one key recipe, shared.
+    (lineitem_name, orders_name, customer_name).
     """
     import os
 
@@ -916,9 +839,7 @@ def analyzed_star_tables(
     names = []
     for tbl, cols in specs:
         src = os.path.join(sf_dir, f"{tbl}.parquet")
-        dest = _artifact_dest(
-            f"{tbl}_stats", src, "star|v=1", artifact_dir
-        )
+        dest = _artifact_dest(f"{tbl}_stats", src, "star|v=1")
         name = os.path.basename(dest)
         if not spark.catalog.tableExists(name):
             (
@@ -949,7 +870,6 @@ def analyzed_star_tables(
 def analyzed_docs_hist_tables(
     spark: SparkSession,
     sf_dir: str,
-    artifact_dir: str | None = None,
 ) -> tuple[str, str]:
     """HISTOGRAM-STATS twins of documents — the q133 fixture that
     completes the stats story q106 (min/max/ndv broadcast) and q119
@@ -980,9 +900,7 @@ def analyzed_docs_hist_tables(
     names = []
     for hist in (True, False):
         tag = "hist" if hist else "nohist"
-        dest = _artifact_dest(
-            f"docs_{tag}_stats", src, "histstats|v=1", artifact_dir
-        )
+        dest = _artifact_dest(f"docs_{tag}_stats", src, "histstats|v=1")
         name = os.path.basename(dest)
         if not spark.catalog.tableExists(name):
             docs = spark.read.parquet(src)
@@ -1047,7 +965,6 @@ def orders_layout_twins(
     spark: SparkSession,
     sf_dir: str,
     n_files: int = 16,
-    artifact_dir: str | None = None,
 ) -> tuple[str, str]:
     """Build-once CLUSTERED vs UNCLUSTERED parquet twins of orders —
     the zone-map measurement fixture (q108): the clustered twin is
@@ -1064,74 +981,72 @@ def orders_layout_twins(
 
     At 100 TB this is the table's CLUSTER BY / Z-ORDER maintenance
     job (q70 measures layout tightness; this measures the payoff).
+    Each twin commits independently, so a crash between the two
+    leaves at most one published and the next call builds the other.
     """
-    import hashlib
     import os
-    import tempfile
 
-    s = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    key = hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|orders:{s.st_mtime_ns}:{s.st_size}"
-        f"|f={n_files}|v=2".encode()
-    ).hexdigest()[:12]
-    root = artifact_dir or os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_artifacts"),
-    )
-    clustered = os.path.join(root, f"orders_clustered_{key}")
-    unclustered = os.path.join(root, f"orders_unclustered_{key}")
-    # each twin commits independently via tmp + _SUCCESS + rename
-    # (_atomic_dir_commit) — a crash between the two leaves at most
-    # one twin published, and the next call rebuilds only the missing
-    # one; concurrent readers never see a torn directory.
-    src = None
-    for dest, shape in (
-        (clustered, "range"),
-        (unclustered, "roundrobin"),
-    ):
-        if os.path.exists(os.path.join(dest, "_SUCCESS")):
-            continue
-        if src is None:
-            src = spark.read.parquet(
-                os.path.join(sf_dir, "orders.parquet")
-            )
-        if shape == "range":
-            # DETERMINISTIC clustered layout (r12, replaces
-            # repartitionByRange): range sampling draws boundaries
-            # from the input partitions, so the committed file spans —
-            # and the q108 zone-map fingerprint — depended on the
-            # BUILDING session's parallelism (one forced re-baseline
-            # per artifact rebuild, r11's inherited-state note). Now:
-            # one global (o_totalprice, o_orderkey) total order —
-            # unique because o_orderkey is — streamed through a single
-            # writer task, rolled into n_files files of exactly
-            # ceil(N/n_files) rows by maxRecordsPerFile. File k holds
-            # global rank range [k*M, (k+1)*M): contiguous, tight
-            # min/max spans, byte-identical on ANY build parallelism.
-            # The single-task sort is a build-once fixture cost at
-            # local scale; the 100 TB equivalent of this maintenance
-            # job is the distributed zorder/compact_parquet path.
-            n_rows = src.count()
-            per_file = max(1, -(-n_rows // n_files))
-            laid = src.orderBy("o_totalprice", "o_orderkey").coalesce(1)
-            writer_opts = {"maxRecordsPerFile": str(per_file)}
-        else:
-            laid = src.repartition(n_files)
-            writer_opts = {}
-        _atomic_dir_commit(
-            root,
-            dest,
-            lambda tmp, laid=laid, wo=writer_opts: laid.write.options(
-                **wo
-            ).mode("overwrite").parquet(tmp),
+    src = os.path.join(sf_dir, "orders.parquet")
+    params = f"f={n_files}|v=2"
+    clustered = _artifact_dest("orders_clustered", src, params)
+    unclustered = _artifact_dest("orders_unclustered", src, params)
+
+    def build_clustered(tmp: str) -> None:
+        # DETERMINISTIC clustered layout (r12, replaces
+        # repartitionByRange): range sampling draws boundaries
+        # from the input partitions, so the committed file spans —
+        # and the q108 zone-map fingerprint — depended on the
+        # BUILDING session's parallelism (one forced re-baseline
+        # per artifact rebuild, r11's inherited-state note). Now:
+        # one global (o_totalprice, o_orderkey) total order —
+        # unique because o_orderkey is — streamed through a single
+        # writer task, rolled into n_files files of exactly
+        # ceil(N/n_files) rows by maxRecordsPerFile. File k holds
+        # global rank range [k*M, (k+1)*M): contiguous, tight
+        # min/max spans, byte-identical on ANY build parallelism.
+        # The single-task sort is a build-once fixture cost at
+        # local scale; the 100 TB equivalent of this maintenance
+        # job is the distributed zorder/compact_parquet path.
+        df = spark.read.parquet(src)
+        per_file = max(1, -(-df.count() // n_files))
+        (
+            df.orderBy("o_totalprice", "o_orderkey")
+            .coalesce(1)
+            .write.option("maxRecordsPerFile", str(per_file))
+            .mode("overwrite")
+            .parquet(tmp)
         )
+
+    _atomic_dir_commit(clustered, build_clustered)
+    _atomic_dir_commit(
+        unclustered,
+        lambda tmp: spark.read.parquet(src)
+        .repartition(n_files)
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
     return clustered, unclustered
 
 
+def _daily_rollup(ev: DataFrame) -> DataFrame:
+    """Per-(day, event_type) event count and integer cents — the
+    rollup both maintained_daily_table (q114) and retention_swept_path
+    (q128) keep partitioned by day."""
+    from pyspark.sql import functions as F
+
+    return ev.groupBy(
+        F.date_format("ts", "yyyy-MM-dd").alias("day"),
+        F.col("event_type"),
+    ).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.expr(
+            "CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)"
+        ).alias("cents"),
+    )
+
+
 def maintained_daily_table(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
+    spark: SparkSession, sf_dir: str
 ) -> tuple[str, str]:
     """The maintained-table fixture behind q114's SQL INSERT OVERWRITE
     refresh: a catalog table of per-(day, event_type) rollups,
@@ -1145,23 +1060,10 @@ def maintained_daily_table(
     data-derived start of the 7-day refresh window (never
     current_date — determinism discipline).
     """
-    import hashlib
     import os
-    import tempfile
 
-    root = artifact_dir or os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_artifacts"),
-    )
-    s = os.stat(os.path.join(sf_dir, "events.parquet"))
-    # the artifact root is part of the identity: a test pointing at a
-    # scratch root must not collide with the default root's catalog
-    # entry of the same corpus
-    key = hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|events:{s.st_mtime_ns}:{s.st_size}"
-        f"|root:{os.path.realpath(root)}|v=1".encode()
-    ).hexdigest()[:12]
-    name = f"daily_rollup_{key}"
+    from pyspark.sql import functions as F
+
     # catalog.table, not a raw read: events.parquet has shipped in
     # three ts layouts across driver data generations (nanos-as-long /
     # micros / ntz) and only the catalog reader normalizes them — a
@@ -1171,28 +1073,15 @@ def maintained_daily_table(
         table as _table,
     )
 
-    ev = _table(spark, sf_dir, "events")
-    from pyspark.sql import functions as F
-
-    rollup = (
-        ev.groupBy(
-            F.date_format("ts", "yyyy-MM-dd").alias("day"),
-            F.col("event_type"),
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.expr(
-                "CAST(sum(CAST(round(value * 100, 0) AS BIGINT))"
-                " AS BIGINT)"
-            ).alias("cents"),
-        )
+    path = _artifact_dest(
+        "daily_rollup", os.path.join(sf_dir, "events.parquet"), "v=1"
     )
-    # data commits first via tmp + _SUCCESS + rename (atomic for
-    # readers), then the external table is registered over it — a
-    # crash between the two just re-registers on the next call.
-    path = os.path.join(root, name)
+    name = os.path.basename(path)
+    ev = _table(spark, sf_dir, "events")
+    rollup = _daily_rollup(ev)
+    # data commits first, then the external table is registered over
+    # it — a crash between the two just re-registers on the next call.
     _atomic_dir_commit(
-        root,
         path,
         lambda tmp: rollup.write.mode("overwrite")
         .partitionBy("day")
@@ -1226,7 +1115,6 @@ def retention_swept_path(
     spark: SparkSession,
     sf_dir: str,
     keep_days: int = 14,
-    artifact_dir: str | None = None,
 ) -> tuple[str, str]:
     """Day-partitioned daily rollup with RETENTION APPLIED — the
     q128 fixture, the DELETE side of the write/maintenance family
@@ -1235,8 +1123,7 @@ def retention_swept_path(
     nightly). Two-stage protocol, each stage idempotent:
 
     1. Full-history build: the per-(day, event_type) rollup written
-       partitionBy(day), committed via _atomic_dir_commit (tmp +
-       _SUCCESS + rename).
+       partitionBy(day) and committed once.
     2. Retention sweep: every partition with day < cutoff (cutoff =
        max(day) - keep_days + 1, data-derived, never current_date) is
        dropped ATOMICALLY — the partition dir is renamed aside first
@@ -1257,35 +1144,22 @@ def retention_swept_path(
     import os
     import shutil
 
-    from pyspark.sql import functions as F
-
     from etl_sql_and_pyspark_developement__spark.sources.catalog import (
         table as _table,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
     dest = _artifact_dest(
-        "events_retention", src, f"keep={keep_days}|v=1", artifact_dir
+        "events_retention",
+        os.path.join(sf_dir, "events.parquet"),
+        f"keep={keep_days}|v=1",
     )
-    if not os.path.exists(os.path.join(dest, "_SUCCESS")):
-        ev = _table(spark, sf_dir, "events")
-        rollup = ev.groupBy(
-            F.date_format("ts", "yyyy-MM-dd").alias("day"),
-            F.col("event_type"),
-        ).agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.expr(
-                "CAST(sum(CAST(round(value * 100, 0) AS BIGINT))"
-                " AS BIGINT)"
-            ).alias("cents"),
-        )
-        _atomic_dir_commit(
-            os.path.dirname(dest),
-            dest,
-            lambda tmp: rollup.write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(tmp),
-        )
+    _atomic_dir_commit(
+        dest,
+        lambda tmp: _daily_rollup(_table(spark, sf_dir, "events"))
+        .write.mode("overwrite")
+        .partitionBy("day")
+        .parquet(tmp),
+    )
     days = sorted(
         d.split("=", 1)[1]
         for d in os.listdir(dest)
@@ -1339,7 +1213,6 @@ def bucketed_files_path(
     spark: SparkSession,
     sf_dir: str,
     n_buckets: int = 4,
-    artifact_dir: str | None = None,
 ) -> str:
     """ONE-FILE-PER-BUCKET orders layout — q129's fixture: rows are
     bucketed by o_orderkey % n_buckets, repartitioned BY the bucket
@@ -1348,16 +1221,13 @@ def bucketed_files_path(
     data file whose CONTENTS are a pure function of the data. That
     determinism is what lets the _metadata file-lineage lane be
     value-verified: per-file stats == per-bucket stats, replayable
-    from the flat truth by any engine. Atomic commit, shared key
-    recipe."""
+    from the flat truth by any engine."""
     import os
 
     from pyspark.sql import functions as F
 
     src = os.path.join(sf_dir, "orders.parquet")
-    dest = _artifact_dest(
-        "orders_bucket_files", src, f"b={n_buckets}|v=1", artifact_dir
-    )
+    dest = _artifact_dest("orders_bucket_files", src, f"b={n_buckets}|v=1")
 
     def build(tmp: str) -> None:
         df = spark.read.parquet(src).withColumn(
@@ -1370,15 +1240,11 @@ def bucketed_files_path(
             .parquet(tmp)
         )
 
-    _atomic_dir_commit(os.path.dirname(dest), dest, build)
+    _atomic_dir_commit(dest, build)
     return dest
 
 
-def two_generation_docs_path(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> str:
+def two_generation_docs_path(spark: SparkSession, sf_dir: str) -> str:
     """TWO-GENERATION parquet directory — q130's schema-drift fixture:
     generation 1 (even doc_id) was written BEFORE the pipeline added
     source/n_chars columns; generation 2 (odd doc_id) carries them.
@@ -1386,11 +1252,11 @@ def two_generation_docs_path(
     lake table actually has after a schema change, which only a
     mergeSchema (schema-union) read handles correctly. Membership is
     a pure function of doc_id, so the oracle replays the NULL-fill
-    from the flat truth. Atomic commit, shared key recipe."""
+    from the flat truth."""
     import os
 
     src = os.path.join(sf_dir, "documents.parquet")
-    dest = _artifact_dest("docs_two_gen", src, "gen2|v=1", artifact_dir)
+    dest = _artifact_dest("docs_two_gen", src, "gen2|v=1")
 
     def build(tmp: str) -> None:
         docs = spark.read.parquet(src)
@@ -1414,15 +1280,11 @@ def two_generation_docs_path(
         with open(os.path.join(tmp, "_SUCCESS"), "w"):
             pass
 
-    _atomic_dir_commit(os.path.dirname(dest), dest, build)
+    _atomic_dir_commit(dest, build)
     return dest
 
 
-def jsonl_feed_fixture(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> str:
+def jsonl_feed_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Build-once JSONL feed with DETERMINISTIC planted corruption —
     the q115 ingest fixture: every event becomes one JSON line
     (event_id, event_type, value), except rows with event_id % 97 == 0
@@ -1431,30 +1293,21 @@ def jsonl_feed_fixture(
     event_id, so the DuckDB oracle replays clean/quarantine membership
     exactly from the events table without reading the files.
     """
-    import hashlib
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
-    root = artifact_dir or os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_artifacts"),
+    path = _artifact_dest(
+        "jsonl_feed", os.path.join(sf_dir, "events.parquet"), "jsonl|v=1"
     )
-    s = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|events:{s.st_mtime_ns}:{s.st_size}"
-        "|jsonl|v=1".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(root, f"jsonl_feed_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+
+    def build(tmp: str) -> None:
         # catalog reader: a raw read REJECTS the nanos-generation file
         # outright (schema conversion fails before column pruning)
         from etl_sql_and_pyspark_developement__spark.sources.catalog import (
             table as _table,
         )
 
-        ev = _table(spark, sf_dir, "events")
         line = F.when(
             F.pmod(F.col("event_id"), F.lit(97)) == 0,
             F.concat(
@@ -1465,40 +1318,27 @@ def jsonl_feed_fixture(
                 F.lit('", "value": "oops"}'),
             ),
         ).otherwise(F.to_json(F.struct("event_id", "event_type", "value")))
+        ev = _table(spark, sf_dir, "events")
         ev.select(line.alias("value")).coalesce(4).write.mode(
             "overwrite"
-        ).text(path)
+        ).text(tmp)
+
+    _atomic_dir_commit(path, build)
     return path
 
 
-def orc_orders_fixture(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> str:
+def orc_orders_fixture(spark: SparkSession, sf_dir: str) -> str:
     """Build-once ORC twin of orders (q116's fixture): the same rows
     re-staged through write_orc, so the ORC read path — including its
     pushed predicates — is exercised against data whose truth the
     parquet-backed oracle already knows."""
-    import hashlib
     import os
-    import tempfile
 
-    root = artifact_dir or os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_artifacts"),
+    src = os.path.join(sf_dir, "orders.parquet")
+    path = _artifact_dest("orders_orc", src, "orc|v=1")
+    _atomic_dir_commit(
+        path, lambda tmp: write_orc(spark.read.parquet(src), tmp)
     )
-    s = os.stat(os.path.join(sf_dir, "orders.parquet"))
-    key = hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|orders:{s.st_mtime_ns}:{s.st_size}"
-        "|orc|v=1".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(root, f"orders_orc_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_orc(
-            spark.read.parquet(os.path.join(sf_dir, "orders.parquet")),
-            path,
-        )
     return path
 
 
@@ -1506,50 +1346,41 @@ def compacted_events_fixture(
     spark: SparkSession,
     sf_dir: str,
     n_fragments: int = 64,
-    artifact_dir: str | None = None,
 ) -> tuple[str, str]:
     """q117's fixture: events deliberately FRAGMENTED into
     n_fragments small files (the state a per-batch streaming sink
     leaves behind), then compacted once via compact_parquet with
     range clustering on ts. Returns (fragmented_path, compacted_path)
-    — both built once per corpus snapshot; the file-count collapse is
-    asserted in tests, the VALUES are layout-invariant by definition.
+    — each committed on its own, the compacted twin from the
+    committed fragments; the file-count collapse is asserted in
+    tests, the VALUES are layout-invariant by definition.
     """
-    import hashlib
     import os
-    import tempfile
 
-    root = artifact_dir or os.environ.get(
-        "SPARK_GRAFT_ARTIFACT_DIR",
-        os.path.join(tempfile.gettempdir(), "spark_graft_artifacts"),
+    # catalog reader normalizes the ts layout, so the fragmented twin
+    # (and everything compacted from it) carries a real TIMESTAMP
+    # q117's range literals can compare against
+    from etl_sql_and_pyspark_developement__spark.sources.catalog import (
+        table as _table,
     )
-    s = os.stat(os.path.join(sf_dir, "events.parquet"))
-    key = hashlib.sha1(
-        f"{os.path.realpath(sf_dir)}|events:{s.st_mtime_ns}:{s.st_size}"
-        f"|frag={n_fragments}|v=1".encode()
-    ).hexdigest()[:12]
-    frag = os.path.join(root, f"events_fragmented_{key}")
-    comp = os.path.join(root, f"events_compacted_{key}")
-    done = os.path.join(root, f"events_compaction_{key}._done")
-    if not os.path.exists(done):
-        # catalog reader normalizes the ts layout, so the fragmented
-        # twin (and everything compacted from it) carries a real
-        # TIMESTAMP q117's range literals can compare against
-        from etl_sql_and_pyspark_developement__spark.sources.catalog import (
-            table as _table,
-        )
 
-        ev = _table(spark, sf_dir, "events")
-        ev.repartition(n_fragments).write.mode("overwrite").parquet(frag)
-        compact_parquet(
-            spark,
-            frag,
-            comp,
-            target_rows_per_file=10_000_000,
-            order_by=["ts"],
-        )
-        with open(done, "w") as f:
-            f.write("ok")
+    src = os.path.join(sf_dir, "events.parquet")
+    params = f"frag={n_fragments}|v=1"
+    frag = _artifact_dest("events_fragmented", src, params)
+    comp = _artifact_dest("events_compacted", src, params)
+    _atomic_dir_commit(
+        frag,
+        lambda tmp: _table(spark, sf_dir, "events")
+        .repartition(n_fragments)
+        .write.mode("overwrite")
+        .parquet(tmp),
+    )
+    _atomic_dir_commit(
+        comp,
+        lambda tmp: compact_parquet(
+            spark, frag, tmp, target_rows_per_file=10_000_000, order_by=["ts"]
+        ),
+    )
     return frag, comp
 
 
@@ -1592,11 +1423,7 @@ def fanout_rollups(base: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-def multi_output_etl_path(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> str:
+def multi_output_etl_path(spark: SparkSession, sf_dir: str) -> str:
     """ONE FACT SCAN -> N OUTPUT TABLES — the production ETL topology
     the reference's scripts each run one-at-a-time (every reference
     workload reads a fact and writes ONE rollup; a real nightly job
@@ -1634,7 +1461,7 @@ def multi_output_etl_path(
     from pyspark import StorageLevel
 
     src = os.path.join(sf_dir, "lineitem.parquet")
-    dest = _artifact_dest("etl_fanout", src, "fanout|v=1", artifact_dir)
+    dest = _artifact_dest("etl_fanout", src, "fanout|v=1")
 
     def build(tmp: str) -> None:
         base = (
@@ -1660,15 +1487,11 @@ def multi_output_etl_path(
         finally:
             base.unpersist()
 
-    _atomic_dir_commit(os.path.dirname(dest), dest, build)
+    _atomic_dir_commit(dest, build)
     return dest
 
 
-def defaults_evolved_table(
-    spark: SparkSession,
-    sf_dir: str,
-    artifact_dir: str | None = None,
-) -> str:
+def defaults_evolved_table(spark: SparkSession, sf_dir: str) -> str:
     """CATALOG-DEFAULT COLUMN EVOLUTION fixture (q135) — the
     catalog-side half of the schema-drift story whose read-side half
     is q130's mergeSchema: `ALTER TABLE ... ADD COLUMNS (c T DEFAULT
@@ -1699,7 +1522,7 @@ def defaults_evolved_table(
     import os
 
     src = os.path.join(sf_dir, "documents.parquet")
-    dest = _artifact_dest("docs_defaults", src, "defaults|v=1", artifact_dir)
+    dest = _artifact_dest("docs_defaults", src, "defaults|v=1")
     name = os.path.basename(dest)
 
     from pyspark.sql import functions as F

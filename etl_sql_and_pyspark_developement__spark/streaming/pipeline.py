@@ -638,13 +638,13 @@ def sink_stream_scd2(
     update date), and the new state is written as an immutable
     versioned snapshot (state_dir/v{n}) — the plain-parquet stand-in
     for a lake-format MERGE INTO, with time-travel for free. Commit
-    protocol: each snapshot is written to a temp directory and
-    renamed into v{n} only on success (atomic repoint, no
-    read-while-overwrite); version resolution requires the _SUCCESS
-    marker, so a crash mid-write can never be adopted as current
-    state; and n is derived from the max COMMITTED version on disk —
-    not epoch_id — so a checkpoint-less restart extends history
-    rather than overwriting it.
+    protocol: each snapshot is published through sources/io's
+    _atomic_dir_commit (temp dir, _SUCCESS check, rename; a committed
+    v{n} is never rewritten); version resolution requires the
+    _SUCCESS marker, so a crash mid-write can never be adopted as
+    current state; and n is derived from the max COMMITTED version on
+    disk — not epoch_id — so a checkpoint-less restart extends
+    history rather than overwriting it.
 
     Scale: per-batch cost is one key-shuffle join of batch × open
     rows; history rows pass through untouched. The versioned-snapshot
@@ -653,21 +653,19 @@ def sink_stream_scd2(
     gates them) and the per-batch apply logic is unchanged.
     """
     import os
-    import shutil
 
     from pyspark.sql import Window
 
-    def commit_snapshot(df: DataFrame, version: int) -> None:
-        tmp = os.path.join(state_dir, f".tmp-v{version}")
-        final = os.path.join(state_dir, f"v{version}")
-        df.write.mode("overwrite").parquet(tmp)
-        if not os.path.exists(os.path.join(tmp, "_SUCCESS")):
-            raise RuntimeError(f"scd2 snapshot write of v{version} incomplete")
-        if os.path.exists(final):
-            shutil.rmtree(final)  # marker-less partial from a crash
-        os.rename(tmp, final)
+    from etl_sql_and_pyspark_developement__spark.sources.io import (
+        _atomic_dir_commit,
+    )
 
-    os.makedirs(state_dir, exist_ok=True)
+    def commit_snapshot(df: DataFrame, version: int) -> None:
+        _atomic_dir_commit(
+            os.path.join(state_dir, f"v{version}"),
+            lambda tmp: df.write.mode("overwrite").parquet(tmp),
+        )
+
     commit_snapshot(dim_init, 0)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:

@@ -3,6 +3,7 @@ partitioned parquet writer (partition pruning must reach the scan)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -758,20 +759,103 @@ def test_atomic_dir_commit_self_heals_torn_dest(spark, tmp_path):
         _atomic_dir_commit,
     )
 
-    root = str(tmp_path)
-    dest = os.path.join(root, "artifact")
+    dest = str(tmp_path / "artifact")
     os.makedirs(dest)
     with open(os.path.join(dest, "junk.parquet"), "w") as f:
         f.write("torn")
-    _atomic_dir_commit(
-        root, dest, lambda tmp: spark.range(3).write.parquet(tmp)
-    )
+    _atomic_dir_commit(dest, lambda tmp: spark.range(3).write.parquet(tmp))
     assert os.path.exists(os.path.join(dest, "_SUCCESS"))
     assert not os.path.exists(os.path.join(dest, "junk.parquet"))
     assert spark.read.parquet(dest).count() == 3
 
 
-def test_retention_sweep_commit_protocol(spark, sf_dir, tmp_path):
+def test_catalog_fixtures_follow_the_artifact_root(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Catalog-registered fixtures are keyed on the artifact root: after
+    the root changes within one session, each call returns a table whose
+    data lives under the NEW root, not the table the first root
+    registered under the same name."""
+    import os
+
+    from etl_sql_and_pyspark_developement__spark.sources.io import (
+        analyzed_part_table,
+        defaults_evolved_table,
+    )
+
+    names = []
+    for root in (tmp_path / "root_a", tmp_path / "root_b"):
+        monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(root))
+        for fixture in (analyzed_part_table, defaults_evolved_table):
+            name = fixture(spark, sf_dir)
+            names.append(name)
+            location = {
+                r[0]: r[1]
+                for r in spark.sql(f"DESCRIBE TABLE EXTENDED {name}").collect()
+            }["Location"]
+            assert location.removeprefix("file:").startswith(
+                f"{root}{os.sep}"
+            ), (fixture.__name__, root, location)
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+@pytest.mark.parametrize(
+    "fixture, fmt",
+    [
+        ("jsonl_feed_fixture", "text"),
+        ("orc_orders_fixture", "orc"),
+        ("compacted_events_fixture", "parquet"),
+    ],
+)
+def test_failed_fixture_build_leaves_nothing(
+    spark, sf_dir, tmp_path, monkeypatch, fixture, fmt
+):
+    """A build that dies after writing part of its output publishes
+    nothing: the artifact root holds no directory afterwards, and the
+    next call builds the fixture and returns the same rows as a clean
+    build."""
+    import os
+    from collections import Counter
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from etl_sql_and_pyspark_developement__spark.sources import io as io_mod
+
+    build = getattr(io_mod, fixture)
+
+    def rows(out):
+        paths = out if isinstance(out, tuple) else (out,)
+        return [
+            Counter(map(tuple, spark.read.format(fmt).load(p).collect()))
+            for p in paths
+        ]
+
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "clean"))
+    want = rows(build(spark, sf_dir))
+
+    write = getattr(DataFrameWriter, fmt)
+
+    def crash_mid_write(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        # leave a torn directory: one data file and the marker missing
+        parts = sorted(f for f in os.listdir(path) if f.startswith("part-"))
+        os.remove(os.path.join(path, parts[0]))
+        os.remove(os.path.join(path, "_SUCCESS"))
+        raise OSError("simulated crash mid-write")
+
+    root = tmp_path / "crashed"
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(root))
+    monkeypatch.setattr(DataFrameWriter, fmt, crash_mid_write)
+    with pytest.raises(OSError, match="simulated crash"):
+        build(spark, sf_dir)
+    assert not root.exists() or os.listdir(root) == [], os.listdir(root)
+
+    monkeypatch.setattr(DataFrameWriter, fmt, write)
+    assert rows(build(spark, sf_dir)) == want
+
+
+def test_retention_sweep_commit_protocol(spark, sf_dir, tmp_path, monkeypatch):
     """q128's fixture contract: (1) aged partitions are physically
     gone and the marker commits the sweep; (2) a crash mid-sweep
     (marker absent, some aged partitions still present) HEALS on the
@@ -785,10 +869,8 @@ def test_retention_sweep_commit_protocol(spark, sf_dir, tmp_path):
         retention_swept_path,
     )
 
-    root = str(tmp_path / "artifacts")
-    path, cutoff = retention_swept_path(
-        spark, sf_dir, keep_days=7, artifact_dir=root
-    )
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "artifacts"))
+    path, cutoff = retention_swept_path(spark, sf_dir, keep_days=7)
     days = sorted(
         d for d in os.listdir(path) if d.startswith("day=")
     )
@@ -812,9 +894,7 @@ def test_retention_sweep_commit_protocol(spark, sf_dir, tmp_path):
     shutil.copytree(
         os.path.join(path, days[0]), os.path.join(path, f"day={aged_day}")
     )
-    path2, cutoff2 = retention_swept_path(
-        spark, sf_dir, keep_days=7, artifact_dir=root
-    )
+    path2, cutoff2 = retention_swept_path(spark, sf_dir, keep_days=7)
     assert (path2, cutoff2) == (path, cutoff), "heal must re-derive the same cutoff"
     assert not os.path.exists(os.path.join(path, f"day={aged_day}"))
     assert os.path.exists(marker)
@@ -831,9 +911,7 @@ def test_retention_sweep_commit_protocol(spark, sf_dir, tmp_path):
         "a trash orphan must never be readable as live rows"
     )
     os.remove(marker)
-    path3, cutoff3 = retention_swept_path(
-        spark, sf_dir, keep_days=7, artifact_dir=root
-    )
+    path3, cutoff3 = retention_swept_path(spark, sf_dir, keep_days=7)
     assert (path3, cutoff3) == (path, cutoff)
     assert not os.path.exists(orphan), "heal must clear trash orphans"
 
@@ -897,7 +975,9 @@ def test_q130_default_read_cannot_see_evolved_columns(spark, sf_dir):
     assert merged_cols - default_cols == {"source", "n_chars"}
 
 
-def test_q135_default_columns_evolve_without_rewrite(spark, sf_dir, tmp_path):
+def test_q135_default_columns_evolve_without_rewrite(
+    spark, sf_dir, tmp_path, monkeypatch
+):
     """The q135 fixture's zero-IO contract: ALTER TABLE ADD COLUMNS
     DEFAULT must not touch a single pre-evolution data file (mtimes
     byte-stable across the evolution), legacy rows surface the
@@ -911,12 +991,12 @@ def test_q135_default_columns_evolve_without_rewrite(spark, sf_dir, tmp_path):
         defaults_evolved_table,
     )
 
-    root = str(tmp_path / "artifacts")
+    monkeypatch.setenv("SPARK_GRAFT_ARTIFACT_DIR", str(tmp_path / "artifacts"))
     src = os.path.join(sf_dir, "documents.parquet")
 
     # replicate the build's first step to capture pre-ALTER mtimes
-    dest = _artifact_dest("docs_defaults", src, "defaults|v=1", root)
-    name = defaults_evolved_table(spark, sf_dir, artifact_dir=root)
+    dest = _artifact_dest("docs_defaults", src, "defaults|v=1")
+    name = defaults_evolved_table(spark, sf_dir)
     assert name == os.path.basename(dest)
 
     snap_files = {
@@ -946,7 +1026,7 @@ def test_q135_default_columns_evolve_without_rewrite(spark, sf_dir, tmp_path):
     assert planted == {(-1, "expedited", 2), (-2, "unreviewed", 0)}
 
     # idempotent re-entry: no rebuild, snapshot files untouched
-    defaults_evolved_table(spark, sf_dir, artifact_dir=root)
+    defaults_evolved_table(spark, sf_dir)
     for f, m in snap_files.items():
         assert os.stat(os.path.join(dest, f)).st_mtime_ns == m, (
             "ALTER/INSERT evolution must never rewrite snapshot files"
@@ -959,7 +1039,7 @@ def test_q135_default_columns_evolve_without_rewrite(spark, sf_dir, tmp_path):
         "path", dest
     ).saveAsTable(name)
     assert "quality_tier" not in spark.table(name).columns
-    name2 = defaults_evolved_table(spark, sf_dir, artifact_dir=root)
+    name2 = defaults_evolved_table(spark, sf_dir)
     assert name2 == name
     t2 = spark.table(name)
     assert {"quality_tier", "review_pass"} <= set(t2.columns)

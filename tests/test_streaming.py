@@ -1049,6 +1049,35 @@ def test_scd2_state_ignores_uncommitted_partial(spark, tmp_path):
     assert _latest_scd2_version(str(state)).endswith("v0")
 
 
+def test_scd2_restart_keeps_committed_v0(spark, tmp_path):
+    """A sink started over a state_dir that already holds a committed
+    v0 extends that history: v0's files and their mtimes are left
+    exactly as they were, whatever dim_init the restart passes."""
+    import os
+
+    from etl_sql_and_pyspark_developement__spark.streaming.pipeline import (
+        sink_stream_scd2,
+    )
+
+    schema = "k int, v string, valid_from string, valid_to string"
+    v0 = tmp_path / "state" / "v0"
+    spark.createDataFrame([(1, "A", "1995-01-01", None)], schema).write.parquet(
+        str(v0)
+    )
+    before = {f: os.stat(v0 / f).st_mtime_ns for f in os.listdir(v0)}
+
+    (tmp_path / "cdc").mkdir()
+    stream = spark.readStream.schema("k int, v string, update_date string")
+    sink_stream_scd2(
+        stream.parquet(str(tmp_path / "cdc")),
+        spark.createDataFrame([(2, "B", "1995-01-01", None)], schema),
+        str(tmp_path / "state"),
+        key="k",
+        attr_cols=["v"],
+    )
+    assert {f: os.stat(v0 / f).st_mtime_ns for f in os.listdir(v0)} == before
+
+
 def test_rocksdb_state_store_windowed_agg_parity(spark, sf_dir, events_dir):
     """Opt-in RocksDB state store (session.enable_rocksdb_state_store,
     the 100 TB answer to heap-bounded streaming state): the same st01
