@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import materialize
+
 
 def pair_cooccurrence(
     df: DataFrame,
@@ -34,11 +36,8 @@ def pair_cooccurrence(
             items.join(sizes.filter(F.col("n") <= max_basket_size), "basket")
             .drop("n")
         )
-    # both self-join sides read the distinct+guard subtree; Spark
-    # assigns each side fresh expression ids (no ReusedExchange), so
-    # materialize it once (localCheckpoint — cheaper than persist's
-    # columnar cache build, see dedup._materialize)
-    items = items.localCheckpoint()
+    # both self-join sides read the distinct+guard subtree
+    items = materialize(items)
     a = items.alias("a")
     b = items.alias("b")
     return (

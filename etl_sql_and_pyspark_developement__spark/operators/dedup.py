@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import materialize
+
 N_MINHASH = 128
 N_BANDS = 32  # 32 bands x 4 rows
 
@@ -60,26 +62,6 @@ assert max(_MIX_A1 + _MIX_A2 + _MIX_B) < 1 << 29, "int64 mix bound"
 # bounds the (128 x shingles) int64 mix matrix at ~64 MB whatever the
 # doc lengths (~1250 docs of the reference corpus per chunk).
 _KERNEL_CHUNK_SHINGLES = 1 << 16
-
-
-def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a frame that multiple downstream consumers (self-join
-    sides, size/verify passes) will read, WITHOUT re-executing its
-    subtree per consumer.
-
-    localCheckpoint, not persist: Spark does not reuse the exchange
-    across self-join sides (each side gets fresh expression ids), so
-    some materialization is required for scale correctness — but
-    persist() pays the InMemoryRelation COLUMNAR CACHE BUILD, measured
-    2-3s for a 160k-row band frame at sf0.1 vs 0.5s to recompute;
-    localCheckpoint writes plain shuffle-style blocks (measured: LSH
-    pipeline 4.1s persist / 3.7s no-persist / 3.3s localCheckpoint at
-    sf0.1, with the subtree still executed exactly once). Caveat (same
-    as dedup_components): localCheckpoint blocks don't survive
-    executor loss — on a preemptible cluster set a checkpoint dir and
-    use .checkpoint() instead.
-    """
-    return df.localCheckpoint()
 
 
 def shingle_sets(
@@ -346,7 +328,7 @@ def jaccard_pairs(
     # The shingle set feeds sizes AND both sides of the pair join —
     # materialize it so the tokenize+explode runs once, not three times.
     if sh is None:
-        sh = _materialize(shingle_df(df, id_col, text_col, n))
+        sh = materialize(shingle_df(df, id_col, text_col, n))
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     # Shingles unique to one doc can't intersect any pair — dropping
     # them before the self-join is semantics-preserving (sizes are
@@ -417,7 +399,7 @@ def jaccard_pairs_prefix(
     frame is the same either way).
     """
     if sh is None:
-        sh = _materialize(shingle_df(df, id_col, text_col, n))
+        sh = materialize(shingle_df(df, id_col, text_col, n))
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
     # rank shingles within each doc, rarest first (deterministic ties)
@@ -508,7 +490,7 @@ def lsh_candidate_pairs(
     if signed is None:
         # both self-join sides read it — materialize so the kernel
         # does not execute once PER SIDE
-        signed = _materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
+        signed = materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
     banded = minhash_bands(signed)
     if max_band_df is not None:
         banded = cap_hot_bands(banded, max_band_df)
@@ -546,7 +528,7 @@ def minhash_lsh_pairs(
     """
     # ONE materialized kernel pass feeds both band self-join sides, the
     # sizes, and candidate verification (the shingle sets ride along).
-    signed = _materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
+    signed = materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
     candidates = lsh_candidate_pairs(
         df, id_col, text_col, n, max_band_df=max_band_df, signed=signed
     )
@@ -628,11 +610,23 @@ def simhash_pairs(
     into a nested-loop join (quadratic at scale); exploding 4 narrow
     rows per doc keeps it a hash join.
     """
+    return _chunk_hamming_pairs(
+        simhash_signatures(df, id_col, text_col), "doc", max_hamming
+    )
+
+
+def _chunk_hamming_pairs(
+    sigs: DataFrame, id_col: str, max_hamming: int | None
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) over 64-bit signatures stored as four
+    16-bit chunks c0..c3, keyed by `id_col`: candidates are pairs that
+    share a (chunk_id, chunk_val), scored by popcount of the xor.
+    `max_hamming=None` keeps every candidate."""
     # `sigs` feeds FOUR subtrees (both chunk-join sides + sa + sb);
-    # unpersisted, the 64-conditional-sum groupBy would run four times.
-    sigs = _materialize(simhash_signatures(df, id_col, text_col))
+    # unmaterialized, the signature build would run four times.
+    sigs = materialize(sigs)
     chunks = sigs.select(
-        "doc",
+        F.col(id_col).alias("doc"),
         F.explode(
             F.array(
                 *[
@@ -657,19 +651,20 @@ def simhash_pairs(
         .distinct()
     )
     sa = sigs.select(
-        F.col("doc").alias("doc_a"), *[F.col(f"c{c}").alias(f"a_c{c}") for c in range(4)]
+        F.col(id_col).alias("doc_a"), *[F.col(f"c{c}").alias(f"a_c{c}") for c in range(4)]
     )
     sb = sigs.select(
-        F.col("doc").alias("doc_b"), *[F.col(f"c{c}").alias(f"b_c{c}") for c in range(4)]
+        F.col(id_col).alias("doc_b"), *[F.col(f"c{c}").alias(f"b_c{c}") for c in range(4)]
     )
     hamming = sum(F.bit_count(F.expr(f"a_c{c} ^ b_c{c}")) for c in range(4))
-    return (
+    scored = (
         candidates.join(sa, "doc_a")
         .join(sb, "doc_b")
         .withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
     )
+    if max_hamming is not None:
+        scored = scored.filter(F.col("hamming") <= max_hamming)
+    return scored.select("doc_a", "doc_b", "hamming")
 
 
 def dedup_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
@@ -693,20 +688,14 @@ def dedup_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     wrong component assignment is the worst failure mode a dedup
     pipeline can have (it deletes the wrong docs).
 
-    Iteration frames are localCheckpoint-ed, not persisted: each round
-    would otherwise re-analyze a lineage that grows by two joins per
-    iteration, and (worse) cached plans pin the full shuffle fan-out.
-    Checkpointing truncates the plan to the materialized partitions —
-    measured ~5x faster on the loop. (On a cluster with dynamic
-    allocation, executor loss invalidates localCheckpoint blocks; set a
-    reliable spark.sparkContext.setCheckpointDir and swap to
-    .checkpoint() if executors are preemptible.)
+    Iteration frames are materialized: each round would otherwise
+    re-analyze a lineage that grows by two joins per iteration.
     """
-    # The union reads `pairs` twice; without this persist the whole
+    # The union reads `pairs` twice; unmaterialized, the whole
     # upstream pair pipeline (e.g. MinHash-LSH) executes twice just to
     # build the edge set — measured 2x the d06 runtime.
-    pairs = _materialize(pairs)
-    edges = (
+    pairs = materialize(pairs)
+    edges = materialize(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .unionByName(
             pairs.select(
@@ -714,7 +703,6 @@ def dedup_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
             )
         )
         .distinct()
-        .localCheckpoint()
     )
     # Init fuses the FIRST adopt step (r11): component starts as
     # min(self, direct neighbors) — one groupBy, the same cost as the
@@ -722,11 +710,10 @@ def dedup_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     # Star/clique-shaped near-dup components (the common case) then
     # converge one full loop iteration (≈4 jobs) earlier; the fixpoint,
     # convergence test, and raise-on-budget semantics are unchanged.
-    labels = (
+    labels = materialize(
         edges.groupBy("src")
         .agg(F.least(F.col("src"), F.min("dst")).alias("component"))
         .select(F.col("src").alias("doc"), "component")
-        .localCheckpoint()
     )
     converged = False
     for _ in range(max_iterations):
@@ -754,14 +741,13 @@ def dedup_components(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
         )
         # Carry old + new label in ONE materialized frame so the
         # convergence check is a filter over it, not a second join.
-        jumped = (
+        jumped = materialize(
             updated.join(lk, updated.component == lk.__c, "left")
             .select(
                 "doc",
                 "__old",
                 F.coalesce(F.col("__cc"), F.col("component")).alias("component"),
             )
-            .localCheckpoint()
         )
         changed = (
             jumped.filter(F.col("component") != F.col("__old")).limit(1).count()
@@ -807,8 +793,8 @@ def contamination_check(
 
     test = df.filter(F.col(split_col) == test_value)
     train = df.filter(F.col(split_col) != test_value)
-    # test-side shingles feed sizes AND the overlap join — persist.
-    sh_t = _materialize(shingle_df(test, id_col, text_col, n))
+    # test-side shingles feed sizes AND the overlap join — materialize.
+    sh_t = materialize(shingle_df(test, id_col, text_col, n))
     sh_r = shingle_df(train, id_col, text_col, n).withColumnRenamed(
         "doc", "train_doc"
     )
@@ -873,7 +859,7 @@ def duplicated_spans(
     Returns one row per (doc_a, doc_b) pair with n_spans,
     max_span_tokens, total_span_tokens.
 
-    Scale: the gram frame is persisted (feeds both join sides);
+    Scale: the gram frame is materialized (feeds both join sides);
     k-grams occurring in a single document are pruned before the
     self-join — semantics-preserving (they cannot produce a cross-doc
     match) and it removes the long tail. The join key is a k-token
@@ -894,10 +880,9 @@ def duplicated_spans(
             f"i -> struct(i AS pos, concat_ws(' ', slice(__toks, i, {k})) AS gram))"
         ),
     ).otherwise(F.expr("array()").cast("array<struct<pos:int,gram:string>>"))
-    grams = (
+    grams = materialize(
         toked.select("doc", F.explode(grams_arr).alias("g"))
         .select("doc", F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
-        .localCheckpoint()
     )
     # "appears in >= 2 distinct docs" == min(doc) != max(doc): same
     # predicate as count_distinct >= 2 but with cheap decomposable
@@ -1387,7 +1372,7 @@ def containment_pairs(
     false positives. The df≥2 prune is semantics-preserving
     (singleton shingles intersect nothing).
     """
-    sh = _materialize(shingle_df(df, id_col, text_col, n))
+    sh = materialize(shingle_df(df, id_col, text_col, n))
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
     shared = dfreq.filter(F.col("df_") >= 2)
@@ -1462,14 +1447,14 @@ def delta_dedup_matches(
     """
     # per-batch frames are small by construction — the r11 widening
     # exchange measured as pure overhead here (see shingle_sets)
-    signed_d = _materialize(
+    signed_d = materialize(
         minhash_signed(shingle_sets(delta, id_col, text_col, n, spread=False))
     )
     if base_bands is None:
         base_bands = minhash_bands(
             minhash_signed(shingle_sets(base, id_col, text_col, n))
         )
-    cand = _materialize(
+    cand = materialize(
         minhash_bands(signed_d)
         .select(F.col("doc").alias("delta_doc"), "band_id", "band_hash")
         .join(
@@ -1485,7 +1470,7 @@ def delta_dedup_matches(
         id_col,
         "semi",
     )
-    sets_b = _materialize(
+    sets_b = materialize(
         shingle_sets(base_needed, id_col, text_col, n, spread=False)
     )
     return (
@@ -1515,10 +1500,10 @@ def lsh_band_sweep(
     threshold-Jaccard ground truth. Fewer rows per band collide more
     (higher recall, more verify work); more rows collide less — the
     classic r x b trade a dedup owner must price BEFORE burning a
-    100 TB pass on the wrong curve. Signatures are computed ONCE
-    (localCheckpoint) and re-banded per config — re-banding is a
-    narrow projection, so the sweep costs one signature build plus
-    |configs| bucketed self-joins over the sample.
+    100 TB pass on the wrong curve. Signatures are computed ONCE and
+    re-banded per config — re-banding is a narrow projection, so the
+    sweep costs one signature build plus |configs| bucketed self-joins
+    over the sample.
 
     Band keys here are md5 of the comma-joined row values sig[i]
     (engine-portable, any rows_per_band; a NULL signature joins to
@@ -1534,7 +1519,7 @@ def lsh_band_sweep(
     # ONE shingle pass feeds both the signature build and the exact
     # ground truth (r11: each previously paid its own tokenize+explode
     # — two identical scans of the sample, measured ~1s apart at sf0.1)
-    signed = _materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
+    signed = materialize(minhash_signed(shingle_sets(df, id_col, text_col, n)))
     # Ground truth via the PLAIN shared-shingle all-pairs join (r12):
     # on the bounded evaluation sample this operator is built for
     # (d21/d23 fix the sample at 2000 docs, so the exact pair work is
@@ -1545,12 +1530,11 @@ def lsh_band_sweep(
     # asserted generally in tests/test_dedup.py at three thresholds).
     # jaccard_pairs_prefix remains the corpus-WIDE exact form for
     # unbounded inputs (its docstring's 10^6+-doc crossover).
-    truth = (
+    truth = materialize(
         jaccard_pairs(df, id_col, text_col, n=n, sh=_explode(signed))
         .filter(_jaccard() >= threshold)
         .select("doc_a", "doc_b")
         .withColumn("__true", F.lit(1))
-        .localCheckpoint()
     )
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
     # ALL configs ride ONE tagged band frame and ONE bucketed self-join
@@ -1579,7 +1563,7 @@ def lsh_band_sweep(
         )
 
     keys = F.flatten(F.array(*[config_keys(r, b) for r, b in configs]))
-    banded = _materialize(
+    banded = materialize(
         signed.select("doc", F.explode(keys).alias("x")).select(
             "doc", "x.r", "x.b", "x.band_id", "x.band_key"
         )

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import materialize
+
 
 def undirect(edges: DataFrame) -> DataFrame:
     """Canonical undirected edge set (a < b, distinct) from a
@@ -62,7 +64,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # closure) and tris three times (one per corner) — materialize
     # both so the wedge machinery isn't replayed per consumer. Both
     # are edge-scale (≤ n·k rows), far below the wedge intermediate.
-    und = undirect(edges).localCheckpoint()
+    und = materialize(undirect(edges))
     deg = (
         und.select(F.col("a").alias("node"))
         .union(und.select(F.col("b").alias("node")))
@@ -100,13 +102,12 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     wedges = w1.join(w2, "apex").filter(F.col("u") < F.col("v"))
     # A wedge closes iff (u, v) is an edge; u < v is already the
     # undirected canonical form, so close against `und` directly.
-    tris = (
+    tris = materialize(
         wedges.join(
             und,
             (wedges.u == und.a) & (wedges.v == und.b),
         )
         .select("apex", "u", "v")
-        .localCheckpoint()
     )
     corner = (
         tris.select(F.col("apex").alias("node"))
@@ -146,7 +147,7 @@ def kcore(edges: DataFrame, k: int = 4, max_rounds: int = 8) -> DataFrame:
 
     Scale: each round is one degree count (union + groupBy) and two
     semi-joins filtering the edge set — all equi-join shuffles, edge-
-    scale frames, localCheckpoint-truncated lineage. Rounds are
+    scale frames, materialized (truncated) lineage. Rounds are
     bounded by the peel depth (≤ degeneracy ordering depth, small on
     bounded-degree kNN graphs); like resolve_hierarchy, a fixpoint
     not reached in `max_rounds` RAISES rather than returning a
@@ -154,7 +155,7 @@ def kcore(edges: DataFrame, k: int = 4, max_rounds: int = 8) -> DataFrame:
     is a fixpoint forever), so replaying extra rounds is a no-op —
     what lets a fixed-round SQL unroll mirror the converged answer.
     """
-    cur = undirect(edges).localCheckpoint()
+    cur = materialize(undirect(edges))
     n_edges = cur.count()
     # max_rounds bounds PRODUCTIVE peels; the +1 iteration exists so a
     # graph whose last productive peel lands exactly on round
@@ -168,11 +169,10 @@ def kcore(edges: DataFrame, k: int = 4, max_rounds: int = 8) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("core_degree"))
         )
         alive = deg.filter(F.col("core_degree") >= k).select("node")
-        nxt = (
+        nxt = materialize(
             cur.join(alive.withColumnRenamed("node", "a"), "a", "left_semi")
             .join(alive.withColumnRenamed("node", "b"), "b", "left_semi")
             .select("a", "b")
-            .localCheckpoint()
         )
         n_next = nxt.count()
         if n_next == n_edges:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import materialize
+
 
 def resolve_hierarchy(
     nodes: DataFrame,
@@ -35,10 +37,9 @@ def resolve_hierarchy(
     than returning a partial labeling, mirroring
     dedup.dedup_components' convergence contract.
 
-    Iteration frames are localCheckpoint-ed: the self-join doubles
-    lineage depth per round, and an unmaterialized loop re-executes
-    the whole prefix each round (see dedup_components for the same
-    pattern and the preemptible-executor caveat).
+    Iteration frames are materialized: the self-join doubles lineage
+    depth per round, and an unmaterialized loop re-executes the whole
+    prefix each round.
     """
     # Pre-validate (opt-out with validate=False for known-good
     # production inputs — it costs one eager distinct + anti-join job
@@ -74,22 +75,24 @@ def resolve_hierarchy(
                 "forest (dangling parent pointer); refusing to return "
                 "a partially-resolved labeling."
             )
-    cur = nodes.select(
-        F.col(id_col).alias("node"),
-        F.col(parent_col).alias("anc"),
-        F.when(F.col(parent_col) == F.col(id_col), F.lit(0))
-        .otherwise(F.lit(1))
-        .cast("bigint")
-        .alias("depth"),
-    ).localCheckpoint()
+    cur = materialize(
+        nodes.select(
+            F.col(id_col).alias("node"),
+            F.col(parent_col).alias("anc"),
+            F.when(F.col(parent_col) == F.col(id_col), F.lit(0))
+            .otherwise(F.lit(1))
+            .cast("bigint")
+            .alias("depth"),
+        )
+    )
     # Convergence = every known ancestor IS a root. ("Did any pointer
     # move" is NOT a valid test: inside a parent CYCLE the doubled
     # pointers reach a bogus fixpoint — e.g. a 2-cycle lands each node
     # on itself after one round — and a moved-based check would return
     # garbage depths instead of detecting the non-forest input.)
-    roots = (
+    roots = materialize(
         cur.filter(F.col("depth") == 0).select(F.col("node").alias("__r"))
-    ).localCheckpoint()
+    )
     for _ in range(max_iterations):
         pending = (
             cur.join(roots, cur.anc == roots.__r, "left_anti")
@@ -105,14 +108,13 @@ def resolve_hierarchy(
             F.col("anc").alias("__a"),
             F.col("depth").alias("__d"),
         )
-        cur = (
+        cur = materialize(
             cur.join(hop, cur.anc == hop.__n)
             .select(
                 "node",
                 F.col("__a").alias("anc"),
                 (F.col("depth") + F.col("__d")).alias("depth"),
             )
-            .localCheckpoint()
         )
     raise RuntimeError(
         f"resolve_hierarchy did not converge in {max_iterations} "
@@ -148,7 +150,7 @@ def pagerank(
     lineage is truncated only every `checkpoint_every` rounds: each
     rank frame feeds exactly one consumer (the next round), so
     nothing is recomputed without checkpoints, and a per-round
-    localCheckpoint just serializes the loop into eager blocking jobs
+    materialization just serializes the loop into eager blocking jobs
     (measured 1.95s vs 1.17s fully lazy for 5 rounds at sf0.1). The
     periodic truncation is what matters at 50+ rounds, where plan
     depth itself becomes the cost. The edge set (with out-degrees) is
@@ -157,15 +159,14 @@ def pagerank(
     # The caller's edge list may itself be expensive (a kNN bucket
     # join); it is consumed three times below (node union x2,
     # out-degree join) — materialize it once at entry.
-    edges = edges.localCheckpoint()
-    nodes = (
+    edges = materialize(edges)
+    nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("__od"))
-    ed = edges.join(outdeg, "src").localCheckpoint()
+    ed = materialize(edges.join(outdeg, "src"))
     base = 1_000_000 - damping_ppm
     ranks = nodes.withColumn("r", F.lit(1_000_000).cast("bigint"))
     for i in range(iterations):
@@ -191,5 +192,5 @@ def pagerank(
             )
         )
         if (i + 1) % checkpoint_every == 0 and i < iterations - 1:
-            ranks = ranks.localCheckpoint()
+            ranks = materialize(ranks)
     return ranks.select("node", F.col("r").alias("rank_ppm"))

@@ -17,6 +17,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+    _chunk_hamming_pairs,
+)
+
 DECODE_SCHEMA = (
     "doc_id bigint, n_bytes int, width int, height int, status string"
 )
@@ -355,53 +359,9 @@ def phash_neardup_pairs(
     corpus scale, cap pathological chunk buckets the way
     dedup.cap_hot_bands guards the minhash band join.
     """
-    # both the explode side and the verify side read sigs;
-    # localCheckpoint beats persist's columnar cache build (see
-    # dedup._materialize for measurements) — and here it also cuts the
-    # mapInPandas hash kernel to ONE execution
-    sigs = sigs.localCheckpoint()
-    chunked = sigs.select(
-        F.col("doc_id").alias("doc"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(c).alias("chunk_id"), F.col(f"c{c}").alias("chunk_val")
-                )
-                for c in range(4)
-            ])
-        ).alias("ch"),
-    ).select("doc", "ch.chunk_id", "ch.chunk_val")
-    a = chunked.alias("a")
-    b = chunked.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"c{c}").alias(f"a_c{c}") for c in range(4)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"c{c}").alias(f"b_c{c}") for c in range(4)],
-    )
-    hamming = sum(
-        F.bit_count(F.expr(f"a_c{c} ^ b_c{c}")) for c in range(4)
-    )
-    scored = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("hamming", hamming)
-    )
-    if max_hamming is not None:
-        scored = scored.filter(F.col("hamming") <= max_hamming)
-    return scored.select("doc_a", "doc_b", "hamming")
+    # the materialization inside also cuts the mapInPandas hash
+    # kernel to ONE execution
+    return _chunk_hamming_pairs(sigs, "doc_id", max_hamming)
 
 
 _PNG_HEX = "89504E470D0A1A0A"   # \x89PNG\r\n\x1a\n

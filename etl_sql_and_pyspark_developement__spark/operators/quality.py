@@ -38,10 +38,6 @@ def matches(col: str, pattern: str) -> Check:
     )
 
 
-def non_negative(col: str) -> Check:
-    return in_range(col, 0.0, float("inf"))
-
-
 def validate(df: DataFrame, checks: list[Check]) -> DataFrame:
     """One-pass violation summary: (check, n_violations, violation_pct)."""
     total = F.count("*")

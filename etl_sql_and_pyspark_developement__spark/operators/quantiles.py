@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import materialize
+
 
 def approx_ntile(
     df: DataFrame,
@@ -162,14 +164,13 @@ def scalable_ntile(
     tests/test_sampling.py — at ~P-way parallel sort cost.
 
     `range_partitions` bounds per-task sort size: at 10⁹ entities use
-    n_rows / ~5M. The input is materialized (localCheckpoint — cheaper
-    than persist's columnar cache build, see dedup._materialize) as the
-    sketch, count, and rank passes would otherwise re-execute its
-    whole upstream plan 3x — callers feed it a per-entity aggregate,
+    n_rows / ~5M. The input is materialized as the sketch, count, and
+    rank passes would otherwise re-execute its whole upstream plan 3x
+    — callers feed it a per-entity aggregate,
     which is exactly the frame worth caching (bench: q16 1.75s→~0.6s
     at sf0.1)."""
     key = -F.col(value_col) if descending else F.col(value_col)
-    df = df.localCheckpoint()
+    df = materialize(df)
     bucketed = range_bucket(df, key, range_partitions, accuracy)
     counts = bucketed.groupBy("__rb").count()
     # ≤ range_partitions rows: a global window over this aggregate is
@@ -245,7 +246,7 @@ def grouped_prefix_stats(
     # Materialized for the same 3-pass reason as scalable_ntile — the
     # upstream here is often a feature-heavy scan (p06's quality
     # scoring regexes), the worst thing to execute three times.
-    tagged = df.withColumn("__rkey", key.cast("double")).localCheckpoint()
+    tagged = materialize(df.withColumn("__rkey", key.cast("double")))
     probs = [i / range_partitions for i in range(1, range_partitions)]
     cuts = tagged.groupBy(group_col).agg(
         F.percentile_approx("__rkey", probs, accuracy).alias("__cuts")
@@ -324,9 +325,11 @@ def grouped_weighted_quantiles(
     # crossing-bucket join side, and unmaterialized it would re-run
     # once per consumer inside the single final action. Checkpointing
     # a |groups|-row frame is near-free.
-    cuts = tagged.groupBy(group_col).agg(
-        F.percentile_approx("__rkey", probs, accuracy).alias("__cuts")
-    ).localCheckpoint()
+    cuts = materialize(
+        tagged.groupBy(group_col).agg(
+            F.percentile_approx("__rkey", probs, accuracy).alias("__cuts")
+        )
+    )
     bucketed = (
         tagged.join(F.broadcast(cuts), group_col)
         .withColumn("__rb", _bucket_from_cuts_col(range_partitions - 1))

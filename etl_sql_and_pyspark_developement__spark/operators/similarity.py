@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import materialize
+
 
 def _dot(a: str, b: str) -> Column:
     return F.expr(
@@ -256,21 +258,20 @@ def knn_graph(
         n_bits = adaptive_n_bits(corpus.count())
     # norms computed ONCE per vector here, not per candidate pair —
     # per-pair work drops to one dot product + two scalar reads
-    # localCheckpoint, not persist: both join sides read this frame,
-    # but persist's columnar cache build costs more than the one-time
-    # shuffle-block write (see dedup._materialize for measurements)
     from etl_sql_and_pyspark_developement__spark.operators.spread import (
         spread_small_scan,
     )
 
-    base = spread_small_scan(
-        corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-    ).select(
-        "vid",
-        "vec",
-        lsh_signature("vec", n_bits, dim).alias("bucket"),
-        _norm("vec").alias("nrm"),
-    ).localCheckpoint()
+    base = materialize(
+        spread_small_scan(
+            corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
+        ).select(
+            "vid",
+            "vec",
+            lsh_signature("vec", n_bits, dim).alias("bucket"),
+            _norm("vec").alias("nrm"),
+        )
+    )
     probes = F.array(
         F.col("bucket"),
         *[F.expr(f"bucket ^ {1 << b}").cast("long") for b in range(n_bits)],
@@ -509,15 +510,14 @@ def ann_ivf_topk(
     # drop such rows at the operator boundary (no-op on clean data)
     corpus = corpus.filter(F.col(vec_col).isNotNull())
     # training scans the corpus once per Lloyd iteration and the final
-    # assignment once more — materialize it across those passes
-    # (localCheckpoint: cheaper than persist's columnar cache build,
-    # see dedup._materialize); spread first so training/assignment map
-    # work parallelizes off a single-row-group file (r11)
+    # assignment once more — materialize it across those passes;
+    # spread first so training/assignment map work parallelizes off a
+    # single-row-group file (r11)
     from etl_sql_and_pyspark_developement__spark.operators.spread import (
         spread_small_scan,
     )
 
-    corpus = spread_small_scan(corpus).localCheckpoint()
+    corpus = materialize(spread_small_scan(corpus))
     centroids = kmeans_lite_centroids(
         corpus, vec_col, n_clusters, train_iterations, dim
     )
@@ -835,7 +835,7 @@ def semantic_dedup(
         .collect()
     )
     seeds = [(r["seed_id"], r["su"]) for r in seed_rows]
-    assigned = _assign_seeded_argmax_kernel(pts, seeds).localCheckpoint()
+    assigned = materialize(_assign_seeded_argmax_kernel(pts, seeds))
     w_rank = Window.partitionBy("cluster").orderBy(F.desc("cent"), F.asc("id"))
     ranked = assigned.withColumn("crank", F.row_number().over(w_rank))
     a = ranked.filter(F.col("crank") <= top_compare).select(
@@ -1023,7 +1023,7 @@ def embedding_neardup_index(
 ) -> DataFrame:
     """Precomputed artifact for screening ARRIVING embeddings against a
     static reference corpus: (c_id, L2-unit vector, LSH bucket),
-    materialized once (localCheckpoint) and reused across every
+    materialized once and reused across every
     screened batch/micro-batch — the embedding twin of
     dedup.corpus_neardup_index's never-rescan contract. Signatures are
     scale-invariant, so hashing the raw vector and storing the unit
@@ -1035,13 +1035,15 @@ def embedding_neardup_index(
     sig = lsh_signature(vec_col, n_bits, dim)
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    return spread_small_scan(corpus.select(id_col, vec_col)).select(
-        F.col(id_col).alias("c_id"),
-        F.when(nrm > 0, F.transform(v, lambda x: x / nrm))
-        .otherwise(v)
-        .alias("c_unit"),
-        sig.alias("bucket"),
-    ).localCheckpoint()
+    return materialize(
+        spread_small_scan(corpus.select(id_col, vec_col)).select(
+            F.col(id_col).alias("c_id"),
+            F.when(nrm > 0, F.transform(v, lambda x: x / nrm))
+            .otherwise(v)
+            .alias("c_unit"),
+            sig.alias("bucket"),
+        )
+    )
 
 
 def embedding_neardup_screen(
@@ -1270,9 +1272,7 @@ def ann_pq_topk(
     ]
     # encoded frame feeds the ADC scan; the refine stage re-reads real
     # vectors from the corpus — materialize the (tiny-per-row) codes
-    enc = corpus.select(
-        F.col(id_col).alias("cand_id"), *code_cols
-    ).localCheckpoint()
+    enc = materialize(corpus.select(F.col(id_col).alias("cand_id"), *code_cols))
 
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
@@ -1365,14 +1365,16 @@ def collapse_exact_vectors(
         F.md5(F.to_json(F.col(vec_col))).alias("__h"),
     )
     w = Window.partitionBy("__h").orderBy("__vid")
-    tagged = hashed.select(
-        "__vid",
-        "__vec",
-        "__h",
-        F.min("__vid").over(w.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )).alias("__rep"),
-    ).localCheckpoint()
+    tagged = materialize(
+        hashed.select(
+            "__vid",
+            "__vec",
+            "__h",
+            F.min("__vid").over(w.rowsBetween(
+                Window.unboundedPreceding, Window.unboundedFollowing
+            )).alias("__rep"),
+        )
+    )
     reps = (
         tagged.filter(F.col("__vid") == F.col("__rep"))
         .join(
@@ -1440,9 +1442,11 @@ def ann_ivf_pq_topk(
     # the k-means seeds and PQ codebook seeds in ONE job (both are "the
     # lowest-id vectors", k_codes ≤ n_clusters here and the slice is
     # free) instead of two separate orderBy-limit collects.
-    corpus = spread_small_scan(
-        corpus.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col)
-    ).localCheckpoint()
+    corpus = materialize(
+        spread_small_scan(
+            corpus.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col)
+        )
+    )
     n_seed = max(k_codes, n_clusters)
     seed_rows = (
         corpus.orderBy(id_col).limit(n_seed).select(vec_col).collect()

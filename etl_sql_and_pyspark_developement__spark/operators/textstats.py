@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import materialize
+
 STOPWORDS = ("a", "the")
 
 # Marker-token profiles for the n-gram/stopword language heuristic.
@@ -70,14 +72,6 @@ def _isin_pred(markers: tuple[str, ...]):
     # parameter, which F.filter interprets as the (value, index)
     # two-arg lambda form.
     return lambda t: t.isin(*markers)
-
-
-def lang_scores(text_col: str = "text") -> dict[str, Column]:
-    toks = tokens(F.col(text_col))
-    return {
-        lang: F.size(F.filter(toks, _isin_pred(markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
 
 
 def predict_lang(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -177,7 +171,7 @@ def repetition_stats(
     Scale: bigrams and trigrams are generated in ONE tagged explode
     and counted by ONE groupBy on (doc, n, gram) — a single scan and a
     single shuffle whose keys are high-cardinality and skew-free; the
-    counts frame is persisted so the two readers (top-bigram window,
+    counts frame is materialized so the two readers (top-bigram window,
     dup-trigram rollup) don't re-run the explode. The per-doc top-1
     window partitions by doc_id. No global sort, no UDFs.
     """
@@ -205,7 +199,7 @@ def repetition_stats(
             ),
         )
 
-    counts = (
+    counts = materialize(
         base.select(
             id_col,
             "n_chars",
@@ -213,7 +207,6 @@ def repetition_stats(
         )
         .groupBy(id_col, "n_chars", F.col("g.n").alias("n"), F.col("g.gram").alias("gram"))
         .agg(F.count("*").alias("cnt"))
-        .localCheckpoint()
     )
     w = Window.partitionBy(id_col).orderBy(F.desc("cnt"), "gram")
     top_bg = (
@@ -533,7 +526,7 @@ def bigram_surprisal_scores(
     toked = df.select(
         F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("t")
     )
-    flat = (
+    flat = materialize(
         toked.filter(F.size("t") >= 2)
         .select(
             "doc",
@@ -546,7 +539,6 @@ def bigram_surprisal_scores(
             ).alias("x"),
         )
         .select("doc", "x.w1", "x.bg")
-        .localCheckpoint()
     )
     f12 = flat.groupBy("bg").agg(F.count("*").alias("c12"))
     f1 = flat.groupBy("w1").agg(F.count("*").alias("c1"))
@@ -910,7 +902,7 @@ def bpe_train(
     1-row results (k-seeds-bounded collect discipline).
     """
     spark = df.sparkSession
-    words = _bpe_dictionary(df, text_col).localCheckpoint()
+    words = materialize(_bpe_dictionary(df, text_col))
     merges = []
     for step in range(1, n_merges + 1):
         # Project the split array to a column FIRST: codegen
@@ -953,10 +945,12 @@ def bpe_train(
             )
         l, r, cnt = top[0].l, top[0].r, int(top[0].pair_count)
         merges.append((step, l, r, l + r, cnt))
-        words = words.select(
-            F.expr(_bpe_apply_expr("s", l, r)).alias("s"),
-            "freq",
-        ).localCheckpoint()
+        words = materialize(
+            words.select(
+                F.expr(_bpe_apply_expr("s", l, r)).alias("s"),
+                "freq",
+            )
+        )
     return spark.createDataFrame(
         merges,
         "step INT, lhs STRING, rhs STRING, merged STRING,"
@@ -1059,7 +1053,7 @@ def heldout_bigram_eval(
         test_pred.alias("is_test"),
         tokens(F.col(text_col)).alias("t"),
     )
-    flat = (
+    flat = materialize(
         toked.filter(F.size("t") >= 2)
         .select(
             "doc",
@@ -1074,7 +1068,6 @@ def heldout_bigram_eval(
             ).alias("x"),
         )
         .select("doc", "is_test", "x.w1", "x.bg")
-        .localCheckpoint()
     )
     train = flat.filter(~F.col("is_test"))
     test = flat.filter(F.col("is_test"))

@@ -20,6 +20,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import (
+    conf_scope,
+    configure_existing,
+    materialize,
+)
 from etl_sql_and_pyspark_developement__spark.sources.catalog import (
     cached_parquet,
     table,
@@ -35,10 +40,6 @@ def query(key: str):
             # Idempotent session guard: the driver may call queries()
             # on a session that never went through entry(); UTC + AQE
             # must hold for timestamp parity with the DuckDB oracles.
-            from etl_sql_and_pyspark_developement__spark.session import (
-                configure_existing,
-            )
-
             configure_existing(spark)
             return fn(spark, sf_dir)
 
@@ -3240,7 +3241,7 @@ def d17_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chunk fps feed the corpus-wide fp rollup AND the per-doc join
     # side — materialize so the kernel executes once (the frame is
     # ~chunks/doc × docs rows of (id, hex, cnt) — tiny).
-    chunks = cdc_chunk_doc_fps(docs).localCheckpoint()
+    chunks = materialize(cdc_chunk_doc_fps(docs))
     # countDistinct, not count: the kernel emits per-(input row, fp),
     # so this stays exactly count(DISTINCT doc_id) even if an input
     # ever carried duplicate doc_ids (oracle parity under any input).
@@ -5224,7 +5225,7 @@ def p17_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base (per-entity targets) feeds both the category statistics
     # and the final encode join — materialize it once rather than
     # re-running the orders rollup + customer join per consumer.
-    base = (
+    base = materialize(
         cust.select("c_custkey", "c_mktsegment")
         .join(per_cust, cust.c_custkey == per_cust.o_custkey, "left")
         .select(
@@ -5232,7 +5233,6 @@ def p17_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
             F.coalesce("spend_cents", F.lit(0)).alias("spend_cents"),
         )
-        .localCheckpoint()
     )
     seg = base.groupBy("c_mktsegment").agg(
         F.sum("spend_cents").alias("seg_sum"),
@@ -5324,13 +5324,12 @@ def q73_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # counts is tiny (|types| x 10) and feeds BOTH the spine and the
     # join probe — materialize it so the full binning scan runs once.
-    counts = (
+    counts = materialize(
         binned.groupBy("event_type", "bin")
         .agg(
             F.sum(F.when(F.col("win") == 1, 1).otherwise(0)).alias("n1"),
             F.sum(F.when(F.col("win") == 2, 1).otherwise(0)).alias("n2"),
         )
-        .localCheckpoint()
     )
     spine = (
         counts.select("event_type")
@@ -5908,7 +5907,7 @@ def t21_keyness_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
     source over vocab-sized input (t07 discipline).
     """
     docs = table(spark, sf_dir, "documents")
-    sw = (
+    sw = materialize(
         docs.filter(F.col("text").isNotNull())
         .select(
             "source", F.explode(F.split(F.col("text"), " ")).alias("word")
@@ -5916,7 +5915,6 @@ def t21_keyness_loglik(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("word") != "")
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).alias("o1"))
-        .localCheckpoint()
     )
     word_tot = sw.groupBy("word").agg(F.sum("o1").alias("wt"))
     src_tot = sw.groupBy("source").agg(F.sum("o1").alias("st"))
@@ -6334,14 +6332,13 @@ def q85_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer ppm.
     """
     docs = table(spark, sf_dir, "documents")
-    sw = (
+    sw = materialize(
         docs.filter(F.col("text").isNotNull())
         .select(
             "source", F.explode(F.split(F.col("text"), " ")).alias("word")
         )
         .filter(F.col("word") != "")
         .distinct()
-        .localCheckpoint()
     )
     sizes = sw.groupBy("source").agg(F.count(F.lit(1)).alias("n_words"))
     a = sw.alias("a")
@@ -7309,9 +7306,9 @@ def d21_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialized frame is the MinHash kernel's output (shingle sets +
     # signatures + band keys), so truth and candidates share a single
     # eager job.
-    signed = minhash_signed(shingle_sets(sample, "doc_id", "text", 3)).localCheckpoint()
+    signed = materialize(minhash_signed(shingle_sets(sample, "doc_id", "text", 3)))
     sh = signed.select("doc", F.explode("shingles").alias("shingle"))
-    truth = (
+    truth = materialize(
         jaccard_pairs(sample, "doc_id", "text", n=3, sh=sh)
         .filter(
             (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
@@ -7319,7 +7316,6 @@ def d21_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_a", "doc_b")
         .withColumn("__true", F.lit(1))
-        .localCheckpoint()
     )
     cand = lsh_candidate_pairs(sample, "doc_id", "text", n=3, signed=signed)
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
@@ -7634,7 +7630,7 @@ def q101_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     left = ev.repartition(16).select(
         F.expr(hot.format(c="user_id")).alias("k"), "event_type"
     )
-    right = (
+    right = materialize(
         orders.select(
             F.expr(hot.format(c="o_custkey")).alias("k"), "o_totalprice"
         )
@@ -7646,7 +7642,6 @@ def q101_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("rev_cents"),
         )
-        .localCheckpoint()
     )
     joined = left.join(right.hint("merge"), "k", "inner")
     return (
@@ -8430,10 +8425,11 @@ def q113_python_ds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushFilters-implementing reader while it is off (gate pinned in
     tests/test_io.py), planning is lazy so a per-lane set/restore
     would flip it back before the caller's action plans, and it is a
-    no-op for readers without pushFilters. The set below is an
-    idempotent guard for bare sessions; the baseline source
-    (q105/st33) deliberately does NOT implement pushFilters so it
-    stays plannable even under non-engine confs.
+    no-op for readers without pushFilters. The `query` wrapper's
+    configure_existing sets it before every lane, also on sessions
+    the engine did not build; the baseline source (q105/st33)
+    deliberately does NOT implement pushFilters so it stays plannable
+    even under non-engine confs.
 
     Generation is md5-on-index (the q105 contract), so the DuckDB
     oracle replays the filtered table from generate_series and the
@@ -8446,7 +8442,6 @@ def q113_python_ds_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_python_sources(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     synth = (
         spark.read.format("graft_synth_docs_push")
         .option("n", "1000")
@@ -8523,17 +8518,14 @@ def q114_insert_overwrite_dynamic(
         )
         .createOrReplaceTempView("q114_refresh_window")
     )
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(mode_key)
     cols = ", ".join(spark.table(name).columns)
-    try:
-        spark.conf.set(mode_key, "dynamic")
+    with conf_scope(
+        spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
+    ):
         spark.sql(
             f"INSERT OVERWRITE TABLE {name}"
             f" SELECT {cols} FROM q114_refresh_window"
         )
-    finally:
-        spark.conf.set(mode_key, old)
     return spark.table(name).orderBy("day", "event_type")
 
 
@@ -8735,9 +8727,9 @@ def p22_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     pairs = minhash_pairs_artifact(spark, sf_dir, threshold=0.5)
-    labeled = leakage_safe_split(
-        docs.select("doc_id", "n_chars"), pairs
-    ).localCheckpoint()
+    labeled = materialize(
+        leakage_safe_split(docs.select("doc_id", "n_chars"), pairs)
+    )
     sides = labeled.select("doc_id", "split", "split_naive")
     pa = pairs.select("doc_a", "doc_b").join(
         sides.select(
@@ -9747,12 +9739,7 @@ def q131_aqe_runtime_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
         # runtime conversion ON at the session's production threshold
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
     }
-    # the adaptive threshold is UNSET by default (falls back to the
-    # static one) — a None restore must unset, never set(None)
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         rows = (
             li.join(
                 part.filter(F.col("p_size") <= 3),
@@ -9769,12 +9756,6 @@ def q131_aqe_runtime_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .collect()  # EAGER: the conversion must happen in-scope
         )
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     return spark.createDataFrame(
         rows,
         "p_brand string, n_items bigint, sum_qty bigint,"

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from etl_sql_and_pyspark_developement__spark.session import conf_scope, materialize
 from etl_sql_and_pyspark_developement__spark.sources.catalog import (
     cached_parquet,
 )
@@ -278,8 +279,8 @@ def read_jsonl_quarantine(
     pruning leaves only the corrupt column
     (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN) — and
     `quarantine.count()` is exactly such a query — so the parsed
-    frame is localCheckpoint()'d before the split: the lineage is cut
-    at a materialized RDD, so BOTH sides are served by ONE parse AND
+    frame is materialized before the split: the lineage is cut at a
+    materialized RDD, so BOTH sides are served by ONE parse AND
     the returned plans stay valid independent of cache lifetime
     (spark.catalog.clearCache() cannot resurrect the corrupt-column
     analysis error the raw file relation would raise). At 100 TB
@@ -293,12 +294,11 @@ def read_jsonl_quarantine(
     full = StructType(
         list(schema.fields) + [StructField(marker, StringType(), True)]
     )
-    df = (
+    df = materialize(
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", marker)
         .json(path)
-        .localCheckpoint(eager=True)
     )
     clean = df.filter(F.col(marker).isNull()).drop(marker)
     quarantine = df.filter(F.col(marker).isNotNull()).withColumnRenamed(
@@ -322,25 +322,14 @@ def v2_parquet_pushdown(spark: SparkSession):
     definition of the conf set, so lane and test cannot drift).
     Restores the prior values on exit; remember planning is LAZY —
     materialize inside the `with`, not after (q113's lesson)."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _scope():
-        confs = {
+    return conf_scope(
+        spark,
+        {
             "spark.sql.parquet.aggregatePushdown": "true",
             "spark.sql.sources.useV1SourceList":
                 "avro,csv,json,kafka,orc,text",
-        }
-        old = {k: spark.conf.get(k) for k in confs}
-        try:
-            for k, v in confs.items():
-                spark.conf.set(k, v)
-            yield
-        finally:
-            for k, v in old.items():
-                spark.conf.set(k, v)
-
-    return _scope()
+        },
+    )
 
 
 def _clear_torn_dest(dest: str) -> None:
@@ -921,20 +910,14 @@ def analyzed_docs_hist_tables(
                 .saveAsTable(name)
             )
         if not _docs_hist_stats_complete(spark, name, hist):
-            old = spark.conf.get("spark.sql.statistics.histogram.enabled")
-            try:
-                spark.conf.set(
-                    "spark.sql.statistics.histogram.enabled",
-                    str(hist).lower(),
-                )
+            with conf_scope(
+                spark,
+                {"spark.sql.statistics.histogram.enabled": str(hist).lower()},
+            ):
                 spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS")
                 spark.sql(
                     f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR COLUMNS"
                     " lang_code, doc_id, n_chars"
-                )
-            finally:
-                spark.conf.set(
-                    "spark.sql.statistics.histogram.enabled", old
                 )
         names.append(name)
     return tuple(names)

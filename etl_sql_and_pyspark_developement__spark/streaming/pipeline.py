@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import materialize
+
 # events.parquet has shipped `ts` in two physical layouts across driver
 # data generations: INT64 TIMESTAMP(NANOS) (declare as long nanos and
 # convert) and TIMESTAMP(MICROS) (declare as timestamp_ntz and cast —
@@ -940,7 +942,7 @@ def sink_stream_temporal_enrich(
         as_of_join,
     )
 
-    dim = versions.localCheckpoint()
+    dim = materialize(versions)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         enriched = as_of_join(

@@ -150,10 +150,78 @@ def test_d03_band_frame_materialized_for_self_join(spark, sf_dir):
     the verify pass; without materialization the signature kernel
     re-executes once per consumer.
     localCheckpoint, not persist — persist's columnar cache build
-    costs more than the shuffle-block write (dedup._materialize)."""
+    costs more than the shuffle-block write (session.materialize)."""
     plan = plan_of(spark, "d03_dedup_minhash_lsh", sf_dir)
     assert _materialized_no_rescan(plan)
-    assert "InMemoryTableScan" not in plan, "persist regressed (see _materialize)"
+    assert "InMemoryTableScan" not in plan, (
+        "persist regressed (see session.materialize)"
+    )
+
+
+def test_one_materialization_site():
+    """Every in-lane barrier goes through session.materialize: the
+    package holds exactly one localCheckpoint call, inside it, and no
+    name _materialize (the retired per-module helper)."""
+    import ast
+    import pathlib
+
+    import etl_sql_and_pyspark_developement__spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites, names = [], set()
+
+    class Visitor(ast.NodeVisitor):
+        def __init__(self, rel: str):
+            self.rel, self.fn = rel, None
+
+        def visit_FunctionDef(self, node):
+            names.add(node.name)
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            if (
+                isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                sites.append((self.rel, self.fn))
+            self.generic_visit(node)
+
+        def visit_Name(self, node):
+            names.add(node.id)
+
+        def visit_Attribute(self, node):
+            names.add(node.attr)
+            self.generic_visit(node)
+
+    for path in sorted(root.rglob("*.py")):
+        rel = str(path.relative_to(root))
+        Visitor(rel).visit(ast.parse(path.read_text(), rel))
+    assert sites == [("session.py", "materialize")], sites
+    assert "_materialize" not in names
+
+
+def test_conf_scope_restores_set_and_unset_keys(spark):
+    """conf_scope puts a key that was set back to its value and unsets
+    a key that was unset — on a clean exit and when the body raises.
+    The pair is q131's: the static broadcast threshold (set by
+    get_spark) and the adaptive one (unset, it falls back)."""
+    from etl_sql_and_pyspark_developement__spark.session import conf_scope
+
+    set_key = "spark.sql.autoBroadcastJoinThreshold"
+    unset_key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
+    scoped = {set_key: "-1", unset_key: "64m"}
+    before = {k: spark.conf.get(k, None) for k in scoped}
+    assert before[set_key] is not None and before[unset_key] is None
+    with conf_scope(spark, scoped):
+        assert {k: spark.conf.get(k) for k in scoped} == scoped
+    assert {k: spark.conf.get(k, None) for k in scoped} == before
+    with pytest.raises(RuntimeError, match="body failed"):
+        with conf_scope(spark, scoped):
+            assert spark.conf.get(unset_key) == "64m"
+            raise RuntimeError("body failed")
+    assert {k: spark.conf.get(k, None) for k in scoped} == before
 
 
 def test_d04_signatures_materialized_for_self_join(spark, sf_dir):
