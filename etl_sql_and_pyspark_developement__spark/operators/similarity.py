@@ -7,8 +7,27 @@
   a deterministic plane matrix; bucket equi-join shrinks candidates
   to ~corpus/2^bits per query before exact scoring.
 
-All vector math is built-in higher-order functions (zip_with +
-aggregate) in DOUBLE — JVM-side, no Python in the hot path.
+Vector vocabulary. Every operator's vector math comes from the
+builders below, each written once; nothing else in this module folds
+an array:
+
+- `_fold` — the one left fold: built-in higher-order functions
+  (`aggregate` over `transform` / `zip_with`) from 0D in DOUBLE,
+  JVM-side, no Python in the hot path. Its callers keep their own
+  per-element form (multiply or `power`), so values do not move.
+- `_dot`, `_norm` — the dot product and L2 norm.
+- `_side` — (id, vector, norm) of one side of a pair join: norms are
+  computed once per row, never per pair.
+- `_unit_vectors` — the L2-unit projection.
+- `_cosine` — round(dot / (|q|·|c|), 6), the one cosine division.
+- `_topk` — score the pairs with `_cosine`, keep each query's top k.
+- `_argmin` — nearest literal codeword (IVF centroid, PQ code).
+- `_pq_search` — the PQ ADC scan, shortlist, exact refine and top k.
+
+Zero-norm rule: an all-zero vector has cosine 0.0 with every vector.
+Its unit vector is itself, and `_cosine` returns 0.0 instead of
+dividing by zero (DIVIDE_BY_ZERO under ANSI). A NULL vector still
+scores NULL. mmr_select alone drops zero-norm candidates (see there).
 """
 
 from __future__ import annotations
@@ -16,22 +35,132 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.operators.spread import (
+    spread_small_scan,
+)
 from etl_sql_and_pyspark_developement__spark.session import materialize
 
 
+def _fold(term: str, a: str, b: str | None = None) -> str:
+    """SQL text of the left fold from 0D of `term` over the elements x
+    of array `a` (zipped with the elements y of `b`, if given)."""
+    if b is None:
+        arr = f"transform({a}, x -> {term})"
+    else:
+        arr = f"zip_with({a}, {b}, (x, y) -> {term})"
+    return f"aggregate({arr}, 0D, (acc, v) -> acc + v)"
+
+
+def _literal(vec: list[float]) -> str:
+    """A double array literal; repr() round-trips doubles exactly."""
+    return "array(" + ", ".join(f"{v!r}D" for v in vec) + ")"
+
+
 def _dot(a: str, b: str) -> Column:
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        f"0D, (acc, v) -> acc + v)"
-    )
+    return F.expr(_fold("CAST(x AS DOUBLE) * CAST(y AS DOUBLE)", a, b))
 
 
 def _norm(a: str) -> Column:
-    return F.sqrt(
-        F.expr(
-            f"aggregate(transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-            f"0D, (acc, v) -> acc + v)"
-        )
+    return F.sqrt(F.expr(_fold("CAST(x AS DOUBLE) * CAST(x AS DOUBLE)", a)))
+
+
+def _sq_l2(a: str, b: str) -> Column:
+    """Squared L2 distance, multiply form (the join-path argmin)."""
+    return F.expr(_fold("(CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)", a, b))
+
+
+def _pow_l2(a: str, b: str) -> str:
+    """SQL text of the squared L2 distance in power(·, 2) form — the
+    literal argmin and the PQ ADC. Math.pow and a multiply can differ
+    in the last ulp (which could flip an argmin tie), and the s03/s06
+    oracles mirror this form, so it stays apart from `_sq_l2`."""
+    return _fold("power(CAST(x AS DOUBLE) - y, 2)", a, b)
+
+
+def _side(
+    df: DataFrame, id_col: str, vec_col: str, side: str, *extra: Column | str
+) -> DataFrame:
+    """One side of a scored pair join: (query_id, q_vec, q_nrm) for
+    side "q", (cand_id, c_vec, c_nrm) for side "c", plus `extra`.
+    Higher-order folds evaluate interpreted per element, so the norm
+    is projected once per row here rather than once per pair."""
+    return df.select(
+        F.col(id_col).alias("query_id" if side == "q" else "cand_id"),
+        F.col(vec_col).alias(f"{side}_vec"),
+        _norm(vec_col).alias(f"{side}_nrm"),
+        *extra,
+    )
+
+
+def _unit_vectors(
+    df: DataFrame, vec_col: str, out: str, *keep: Column | str
+) -> DataFrame:
+    """`keep` plus `out`, the L2-unit DOUBLE vector of `vec_col`: a
+    zero vector stays zero, NULL stays NULL.
+
+    Two projections on purpose. The norm is its own column, and the
+    zero guard references it a second time, outside the lambda.
+    CollapseProject inlines a non-trivial column into the next
+    projection when that projection references it once; a bare
+    transform(v, x -> x / n) references n once, so the norm fold
+    would be pasted into the lambda and re-run for every element —
+    O(dim²) work per row (20k × 64 vectors on 4 cores, warm: 2.5 s
+    inlined vs 0.35 s in this form, identical values)."""
+    step = df.select(
+        *keep,
+        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
+        _norm(vec_col).alias("__n"),
+    )
+    n, v = F.col("__n"), F.col("__v")
+    unit = F.when(n > 0, F.transform(v, lambda x: x / n)).otherwise(v)
+    return step.select(*step.columns[:-2], unit.alias(out))
+
+
+def _cosine(q_vec: str, q_norm: str, c_vec: str, c_norm: str) -> Column:
+    """round(dot / (|q|·|c|), 6), and 0.0 when either norm is 0."""
+    denom = F.col(q_norm) * F.col(c_norm)
+    return F.when(denom == 0, F.lit(0.0)).otherwise(
+        F.round(_dot(q_vec, c_vec) / denom, 6)
+    )
+
+
+def _topk(pairs: DataFrame, k: int, *extra: str) -> DataFrame:
+    """Score `pairs` (two `_side` frames joined) by `_cosine` and keep
+    each query's k best, ties to the lower cand_id:
+    (query_id, rnk, cand_id, *extra, cosine)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("cand_id"))
+    return (
+        pairs.withColumn("cosine", _cosine("q_vec", "q_nrm", "c_vec", "c_nrm"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("query_id", "rnk", "cand_id", *extra, "cosine")
+    )
+
+
+def _argmin(vec: str, table: list[list[float]]) -> Column:
+    """Index of the row of `table` (literal codewords) nearest to the
+    array expression `vec` by `_pow_l2`, ties to the lower index.
+
+    array_sort over (distance, index) structs, so every distance
+    expression appears exactly ONCE in the plan: a chained
+    when(closer, d).otherwise(best) fold would duplicate each distance
+    subtree at every step — exponential expression growth that stalls
+    Catalyst past ~10 centroids. One parsed expression (see
+    lsh_signature): k × dim literals built through py4j cost ~2s of
+    driver time at k=16, dim=64."""
+    entries = ", ".join(
+        f"named_struct('d', {_pow_l2(vec, _literal(c))}, 'i', {i})"
+        for i, c in enumerate(table)
+    )
+    return F.expr(f"cast(array_sort(array({entries}))[0].i as int)")
+
+
+def _probes(n_bits: int) -> Column:
+    """Multi-probe bucket ids: the own bucket plus every hamming-1
+    neighbour (n_bits + 1 values)."""
+    return F.array(
+        F.col("bucket"),
+        *[F.expr(f"bucket ^ {1 << b}").cast("long") for b in range(n_bits)],
     )
 
 
@@ -48,48 +177,16 @@ def cosine_topk(
     Scale: F.broadcast on the query side → a broadcast nested-loop
     that streams the corpus exactly once, no shuffle of the corpus;
     the window partitions by query (small) for the top-k.
-
-    Norms are computed ONCE PER ROW on each side before the pair
-    join, not per pair (r11 — the knn_graph/d08 lesson applied to
-    the exact baseline: higher-order-function folds evaluate
-    interpreted per element, and the per-pair form paid 3 of them —
-    dot + both norms — where 1 suffices; |queries|·|corpus| pairs ×
-    2×64 interpreted ops was most of s08's exact side). Same
-    sequential fold per vector, same multiply order in the divisor —
-    bit-identical cosine values.
     """
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(vec_col).alias("__qn"),
-    )
+    q = _side(queries, id_col, vec_col, "q")
     # corpus side spread BEFORE the norm projection + pair scoring —
     # a single-row-group embeddings file otherwise scores every
     # |queries|·|corpus| pair on one core (r11; no-op at real scale)
-    c = spread_small_scan(
-        corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec"))
-    ).select(
-        "cand_id",
-        "c_vec",
-        _norm("c_vec").alias("__cn"),
-    )
+    c = _side(spread_small_scan(corpus.select(id_col, vec_col)), id_col, vec_col, "c")
     pairs = c.join(F.broadcast(q), F.lit(True))
     if not include_self:
         pairs = pairs.filter(F.col("cand_id") != F.col("query_id"))
-    scored = pairs.withColumn(
-        "cosine",
-        F.round(_dot("q_vec", "c_vec") / (F.col("__qn") * F.col("__cn")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "cand_id", "cosine")
-    )
+    return _topk(pairs, k)
 
 
 def _planes(n_bits: int, dim: int) -> list[list[float]]:
@@ -112,19 +209,15 @@ def lsh_signature(vec_col: str, n_bits: int, dim: int) -> Column:
 
     Emitted as ONE parsed SQL expression: composing the n_bits × dim
     plane literals through py4j one Column op at a time costs ~1.5s of
-    driver time per call (and this is called once per join side).
+    driver time per call.
     repr() round-trips doubles exactly, so the literals — and thus the
     buckets the s02/d08 oracles mirror — are bit-identical.
     """
-    planes = _planes(n_bits, dim)
-    terms = []
-    for b, row in enumerate(planes):
-        arr = "array(" + ", ".join(f"{v!r}D" for v in row) + ")"
-        proj = (
-            f"aggregate(zip_with({vec_col}, {arr},"
-            " (x, w) -> cast(x as double) * w), 0D, (acc, v) -> acc + v)"
-        )
-        terms.append(f"(case when {proj} > 0 then {1 << b} else 0 end)")
+    terms = [
+        f"(case when {_fold('CAST(x AS DOUBLE) * y', vec_col, _literal(row))} > 0"
+        f" then {1 << b} else 0 end)"
+        for b, row in enumerate(_planes(n_bits, dim))
+    ]
     return F.expr("cast(" + " + ".join(terms) + " as bigint)")
 
 
@@ -151,47 +244,20 @@ def ann_lsh_topk(
     Recall is tested against cosine_topk in tests/test_similarity.py.
     """
     sig = lsh_signature(vec_col, n_bits, dim)
-    # norms once per row, not per pair (r11 — see cosine_topk)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        _norm(vec_col).alias("__qn"),
-        sig.alias("bucket"),
-    )
+    q = _side(queries, id_col, vec_col, "q", sig.alias("bucket"))
     if multiprobe:
-        probes = F.array(
-            F.col("bucket"),
-            *[
-                F.expr(f"bucket ^ {1 << b}").cast("long")
-                for b in range(n_bits)
-            ],
-        )
-        q = q.withColumn("bucket", F.explode(probes))
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
-    c = spread_small_scan(
-        corpus.select(F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec"))
-    ).select(
-        "cand_id",
-        "c_vec",
-        _norm("c_vec").alias("__cn"),
-        lsh_signature("c_vec", n_bits, dim).alias("bucket"),
+        q = q.withColumn("bucket", F.explode(_probes(n_bits)))
+    c = _side(
+        spread_small_scan(corpus.select(id_col, vec_col)),
+        id_col,
+        vec_col,
+        "c",
+        sig.alias("bucket"),
     )
     pairs = c.join(F.broadcast(q), "bucket").filter(
         F.col("cand_id") != F.col("query_id")
     )
-    scored = pairs.withColumn(
-        "cosine",
-        F.round(_dot("q_vec", "c_vec") / (F.col("__qn") * F.col("__cn")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "cand_id", "cosine")
-    )
+    return _topk(pairs, k)
 
 
 def adaptive_n_bits(n_rows: int, target_bucket: int = 8, floor_bits: int = 8) -> int:
@@ -256,53 +322,23 @@ def knn_graph(
     """
     if n_bits is None:
         n_bits = adaptive_n_bits(corpus.count())
-    # norms computed ONCE per vector here, not per candidate pair —
-    # per-pair work drops to one dot product + two scalar reads
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
-    base = materialize(
-        spread_small_scan(
-            corpus.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        ).select(
-            "vid",
-            "vec",
-            lsh_signature("vec", n_bits, dim).alias("bucket"),
-            _norm("vec").alias("nrm"),
+    c = materialize(
+        _side(
+            spread_small_scan(corpus.select(id_col, vec_col)),
+            id_col,
+            vec_col,
+            "c",
+            lsh_signature(vec_col, n_bits, dim).alias("bucket"),
         )
     )
-    probes = F.array(
-        F.col("bucket"),
-        *[F.expr(f"bucket ^ {1 << b}").cast("long") for b in range(n_bits)],
+    q = c.select(
+        F.col("cand_id").alias("query_id"),
+        F.col("c_vec").alias("q_vec"),
+        F.col("c_nrm").alias("q_nrm"),
+        F.explode(_probes(n_bits)).alias("bucket"),
     )
-    q = base.select(
-        F.col("vid").alias("query_id"),
-        F.col("vec").alias("q_vec"),
-        F.col("nrm").alias("q_nrm"),
-        F.explode(probes).alias("bucket"),
-    )
-    c = base.select(
-        F.col("vid").alias("cand_id"),
-        F.col("vec").alias("c_vec"),
-        F.col("nrm").alias("c_nrm"),
-        F.col("bucket"),
-    )
-    scored = (
-        q.join(c, "bucket")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot("q_vec", "c_vec") / (F.col("q_nrm") * F.col("c_nrm")), 6),
-        )
-        .select("query_id", "cand_id", "cosine")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "cand_id", "cosine")
-    )
+    pairs = q.join(c, "bucket").filter(F.col("query_id") != F.col("cand_id"))
+    return _topk(pairs, k)
 
 
 def _centroids_df(spark, centroids: list[list[float]]):
@@ -321,45 +357,6 @@ def _centroids_df(spark, centroids: list[list[float]]):
         }
     )
     return spark.createDataFrame(pdf, "cluster int, centroid array<double>")
-
-
-def _sq_l2(vec_col: str, cent_col: str) -> Column:
-    return F.aggregate(
-        F.zip_with(
-            F.col(vec_col),
-            F.col(cent_col),
-            lambda x, w: (x.cast("double") - w) * (x.cast("double") - w),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _nearest_centroid(vec_col: str, centroids: list[list[float]]):
-    """Map-side argmin over squared L2 distance to each (literal)
-    centroid, as array_sort over (distance, id) structs so every
-    distance expression appears exactly ONCE in the plan. A chained
-    when(closer, d).otherwise(best) fold would duplicate each distance
-    subtree at every step — exponential expression growth that stalls
-    Catalyst past ~10 centroids.
-    """
-    entries = []
-    for i, c in enumerate(centroids):
-        arr = "array(" + ", ".join(f"{v!r}D" for v in c) + ")"
-        # power(..., 2), not x*x: mirrors the Column form's `** 2` so
-        # the rewrite below is bit-identical (Math.pow vs multiply can
-        # differ in the last ulp, which could flip argmin ties).
-        d = (
-            f"aggregate(zip_with({vec_col}, {arr},"
-            " (x, w) -> power(cast(x as double) - w, 2)),"
-            " 0D, (acc, v) -> acc + v)"
-        )
-        entries.append(f"named_struct('d', {d}, 'cluster', {i})")
-    # One parsed expression (see lsh_signature): k × dim literals built
-    # through py4j cost ~2s of driver time at k=16, dim=64.
-    return F.expr(
-        "cast(array_sort(array(" + ", ".join(entries) + "))[0].cluster as int)"
-    )
 
 
 MAX_INLINE_CENTROID_CELLS = 4096  # k*dim above this -> join formulation
@@ -398,7 +395,7 @@ def assign_clusters(
         return corpus.select(
             F.col(id_col),
             F.col(vec_col),
-            _nearest_centroid(vec_col, centroids).alias("cluster"),
+            _argmin(vec_col, centroids).alias("cluster"),
         )
     spark = corpus.sparkSession
     cents = _centroids_df(spark, centroids)
@@ -483,6 +480,20 @@ def kmeans_lite_centroids(
     return centroids
 
 
+def _probe_lists(q: DataFrame, cents: DataFrame, n_probe: int) -> DataFrame:
+    """`q` (a "q" `_side`) once per probed inverted list: the n_probe
+    centroids of `cents` nearest each query by `_sq_l2`, ties to the
+    lower cluster id."""
+    w = Window.partitionBy("query_id").orderBy("__dist", "cluster")
+    return (
+        q.join(F.broadcast(cents), F.lit(True))
+        .withColumn("__dist", _sq_l2("q_vec", "centroid"))
+        .withColumn("__pr", F.row_number().over(w))
+        .filter(F.col("__pr") <= n_probe)
+        .drop("centroid", "__dist", "__pr")
+    )
+
+
 def ann_ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -513,10 +524,6 @@ def ann_ivf_topk(
     # assignment once more — materialize it across those passes;
     # spread first so training/assignment map work parallelizes off a
     # single-row-group file (r11)
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
     corpus = materialize(spread_small_scan(corpus))
     centroids = kmeans_lite_centroids(
         corpus, vec_col, n_clusters, train_iterations, dim
@@ -528,38 +535,22 @@ def ann_ivf_topk(
         return spark.createDataFrame(
             [], "query_id BIGINT, rnk INT, cand_id BIGINT, cosine DOUBLE"
         )
-    c = assign_clusters(corpus, centroids, id_col, vec_col).select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("c_vec"),
+    c = _side(
+        assign_clusters(corpus, centroids, id_col, vec_col),
+        id_col,
+        vec_col,
+        "c",
         "cluster",
     )
-    # each query probes its n_probe nearest centroids
-    cents = _centroids_df(spark, centroids)
-    q_scored = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-    ).join(F.broadcast(cents), F.lit(True)).withColumn(
-        "__dist", _sq_l2("q_vec", "centroid")
+    q = _probe_lists(
+        _side(queries, id_col, vec_col, "q"),
+        _centroids_df(spark, centroids),
+        n_probe,
     )
-    probe_w = Window.partitionBy("query_id").orderBy("__dist", "cluster")
-    # norms once per row, not per probe pair (r11 — see cosine_topk)
-    q = (
-        q_scored.withColumn("__pr", F.row_number().over(probe_w))
-        .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "q_vec", _norm("q_vec").alias("__qn"), "cluster")
+    pairs = c.join(F.broadcast(q), "cluster").filter(
+        F.col("cand_id") != F.col("query_id")
     )
-    pairs = c.withColumn("__cn", _norm("c_vec")).join(
-        F.broadcast(q), "cluster"
-    ).filter(F.col("cand_id") != F.col("query_id"))
-    scored = pairs.withColumn(
-        "cosine",
-        F.round(_dot("q_vec", "c_vec") / (F.col("__qn") * F.col("__cn")), 6),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.col("cand_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "cand_id", "cosine")
-    )
+    return _topk(pairs, k)
 
 
 def cosine_neardup_pairs(
@@ -586,38 +577,15 @@ def cosine_neardup_pairs(
     dot/(|a|·|b|) per pair — 3x less array math on the quadratic
     side of the plan.
     """
-
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
     emb = spread_small_scan(emb.select(id_col, vec_col))
-
-    def normed(side_id: str, side_vec: str):
-        v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-        nrm = F.sqrt(
-            F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)
-        )
-        return emb.select(
-            F.col(id_col).alias(side_id), v.alias("__v"), nrm.alias("__n")
-        ).select(
-            side_id,
-            F.transform(F.col("__v"), lambda x: x / F.col("__n")).alias(side_vec),
-        )
-
-    a = normed("id_a", "va")
-    b = normed("id_b", "vb")
+    a = _unit_vectors(emb, vec_col, "va", F.col(id_col).alias("id_a"))
+    b = _unit_vectors(emb, vec_col, "vb", F.col(id_col).alias("id_b"))
     if candidates is not None:
         pairs = candidates.join(a, "id_a").join(b, "id_b")
     else:
         pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-    cos = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     return (
-        pairs.withColumn("__cos", cos)
+        pairs.withColumn("__cos", _dot("va", "vb"))
         .filter(F.col("__cos") >= threshold)
         .select("id_a", "id_b", F.round(F.col("__cos"), 6).alias("cosine"))
     )
@@ -799,10 +767,6 @@ def semantic_dedup(
     the assignment scan can route through s02's LSH prefilter.
     Zero-norm vectors keep cosine 0 and are never dropped.
     """
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
     base = spread_small_scan(
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     )
@@ -810,10 +774,7 @@ def semantic_dedup(
         import math
 
         k = max(1, math.isqrt(base.count()))
-    v = F.transform(F.col("v"), lambda x: x.cast("double"))
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    unit = F.when(nrm > 0, F.transform(v, lambda x: x / nrm)).otherwise(v)
-    pts = base.select("id", unit.alias("u"))
+    pts = _unit_vectors(base, "v", "u", "id")
     # Seeds COLLECTED (k·dim doubles — the same tiny payload the old
     # broadcast shipped; at n=10⁹, k=√n this is ~16 MB, the standard
     # quantizer-training collect, NOT a data collect) and handed to
@@ -853,14 +814,7 @@ def semantic_dedup(
     more_central = (F.col("cent_a") > F.col("cent_b")) | (
         (F.col("cent_a") == F.col("cent_b")) & (F.col("id_a") < F.col("id_b"))
     )
-    cos_ab = F.round(
-        F.aggregate(
-            F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
-        6,
-    )
+    cos_ab = F.round(_dot("va", "vb"), 6)
     dropped = (
         a.join(b, (F.col("ca") == F.col("cb")) & more_central)
         .filter(cos_ab > threshold)
@@ -909,10 +863,6 @@ def mmr_select(
 
     Returns (rank, id, relevance, mmr_score) with rank 1..k.
     """
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
     base = spread_small_scan(
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     )
@@ -931,7 +881,7 @@ def mmr_select(
             [], "rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE"
         )
     # Normalize the query DRIVER-side with the same left-to-right
-    # float64 ops the corpus-side F.aggregate fold uses (acc starts at
+    # float64 ops the corpus-side `_norm` fold uses (acc starts at
     # 0.0; one square, add, sqrt, divide per element — bit-identical
     # to the previous in-plan normalization), then inline it as a
     # LITERAL array: no broadcast join, no per-row query sub-plan —
@@ -947,26 +897,19 @@ def mmr_select(
         return corpus.sparkSession.createDataFrame(
             [], "rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE"
         )
-    qu = F.array(*[F.lit(float(x) / qn) for x in qraw])
-    unit = F.transform(F.col("v"), lambda x: x.cast("double"))
-    nrm = F.sqrt(F.aggregate(
-        F.transform(F.col("v"), lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x,
-    ))
-    # Zero-norm guard: x/0 would make NaN relevance, and Spark sorts
-    # NaN LARGEST under ORDER BY DESC — degenerate vectors would
-    # hijack top pool slots and poison the driver greedy loop. Exclude
-    # them (a zero query vector yields no result rather than NaNs).
+    qu = _literal([float(x) / qn for x in qraw])
+    # Zero-norm candidates are excluded (the unit projection alone
+    # would keep them at relevance 0): a vector with no direction is
+    # neither relevant to nor diverse from anything, just as a zero
+    # query yields no result.
     cands = (
-        base.filter((F.col("id") != query_id) & (nrm > 0))
-        .select("id", F.transform(unit, lambda x: x / nrm).alias("uv"))
-        .withColumn(
-            "relevance",
-            F.aggregate(
-                F.zip_with(F.col("uv"), qu, lambda x, y: x * y),
-                F.lit(0.0), lambda acc, x: acc + x,
-            ),
+        _unit_vectors(
+            base.filter((F.col("id") != query_id) & (_norm("v") > 0)),
+            "v",
+            "uv",
+            "id",
         )
+        .withColumn("relevance", _dot("uv", qu))
         .orderBy(F.desc("relevance"), "id")
         .limit(pool)
         .select("id", "uv", "relevance")
@@ -1028,21 +971,14 @@ def embedding_neardup_index(
     dedup.corpus_neardup_index's never-rescan contract. Signatures are
     scale-invariant, so hashing the raw vector and storing the unit
     vector is consistent."""
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
-    sig = lsh_signature(vec_col, n_bits, dim)
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
     return materialize(
-        spread_small_scan(corpus.select(id_col, vec_col)).select(
+        _unit_vectors(
+            spread_small_scan(corpus.select(id_col, vec_col)),
+            vec_col,
+            "c_unit",
             F.col(id_col).alias("c_id"),
-            F.when(nrm > 0, F.transform(v, lambda x: x / nrm))
-            .otherwise(v)
-            .alias("c_unit"),
-            sig.alias("bucket"),
-        )
+            lsh_signature(vec_col, n_bits, dim).alias("bucket"),
+        ).select("c_id", "c_unit", "bucket")
     )
 
 
@@ -1070,32 +1006,20 @@ def embedding_neardup_screen(
     (st12's per-micro-batch loop) MUST pass `cache_handles` and
     unpersist them after the sink write.
     """
-    sig = lsh_signature(vec_col, n_bits, dim)
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    nrm = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-    b = batch.select(
+    b = _unit_vectors(
+        batch,
+        vec_col,
+        "b_unit",
         F.col(id_col).alias("b_id"),
-        F.when(nrm > 0, F.transform(v, lambda x: x / nrm))
-        .otherwise(v)
-        .alias("b_unit"),
-        sig.alias("bucket"),
+        lsh_signature(vec_col, n_bits, dim).alias("bucket"),
     ).persist()
     if cache_handles is not None:
         cache_handles.append(b)
-    probes = F.array(
-        F.col("bucket"),
-        *[F.expr(f"bucket ^ {1 << i}").cast("long") for i in range(n_bits)],
-    )
-    probed = b.select("b_id", "b_unit", F.explode(probes).alias("bucket"))
-    cos = F.aggregate(
-        F.zip_with(F.col("b_unit"), F.col("c_unit"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    probed = b.select("b_id", "b_unit", F.explode(_probes(n_bits)).alias("bucket"))
     dup_ids = (
         index.join(F.broadcast(probed), "bucket")
         .filter(F.col("b_id") != F.col("c_id"))
-        .filter(cos >= threshold)
+        .filter(_dot("b_unit", "c_unit") >= threshold)
         .select("b_id")
         .distinct()
     )
@@ -1190,27 +1114,60 @@ def density_prune(
     )
 
 
-def _pq_code_expr(
-    vec_col: str, codebook: list[list[float]], offset: int, sub_dim: int
-) -> Column:
-    """Argmin code over one subspace's codebook: squared-L2 between
-    slice(vec, offset+1, sub_dim) and each (literal) codebook entry,
-    via array_sort-of-structs so every distance subtree appears once
-    (same construction and Math.pow discipline as _nearest_centroid,
-    which the s03 oracle already mirrors bit-exactly)."""
-    sub = f"slice({vec_col}, {offset + 1}, {sub_dim})"
-    entries = []
-    for i, c in enumerate(codebook):
-        arr = "array(" + ", ".join(f"{v!r}D" for v in c) + ")"
-        d = (
-            f"aggregate(zip_with({sub}, {arr},"
-            " (x, w) -> power(cast(x as double) - w, 2)),"
-            " 0D, (acc, v) -> acc + v)"
+def _pq_codes(
+    vec_col: str, seeds: list[list[float]], m_sub: int, sub_dim: int
+) -> tuple[list[list[list[float]]], list[Column]]:
+    """Codebook m is slice m of every seed vector; code_m is the
+    `_argmin` of slice m of `vec_col` over codebook m (the s03
+    construction, which the s06/s10 oracles mirror bit-exactly)."""
+    codebooks = [
+        [s[m * sub_dim : (m + 1) * sub_dim] for s in seeds] for m in range(m_sub)
+    ]
+    codes = [
+        _argmin(f"slice({vec_col}, {m * sub_dim + 1}, {sub_dim})", cb).alias(
+            f"code_{m}"
         )
-        entries.append(f"named_struct('d', {d}, 'code', {i})")
-    return F.expr(
-        "cast(array_sort(array(" + ", ".join(entries) + "))[0].code as int)"
+        for m, cb in enumerate(codebooks)
+    ]
+    return codebooks, codes
+
+
+def _pq_search(
+    pairs: DataFrame,
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    codebooks: list[list[list[float]]],
+    sub_dim: int,
+    k: int,
+    refine_n: int,
+) -> DataFrame:
+    """The PQ search tail over `pairs`, a "q" `_side` joined to encoded
+    candidates (cand_id, code_0 … code_{m-1}):
+
+    - ADC: per subspace, the `_pow_l2` from the query's subvector to
+      the codeword the candidate stored (element_at over the literal
+      codebook), summed in FIXED order d0 + d1 + … as one parsed
+      expression, rounded 6dp;
+    - shortlist: each query's refine_n smallest ADC, ties to the
+      lower cand_id;
+    - refine: exact `_topk` cosine against the real vectors."""
+    adc = " + ".join(
+        _pow_l2(
+            f"slice(q_vec, {m * sub_dim + 1}, {sub_dim})",
+            f"element_at(array({', '.join(map(_literal, cb))}), code_{m} + 1)",
+        )
+        for m, cb in enumerate(codebooks)
     )
+    w = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
+    shortlist = (
+        pairs.withColumn("adc_dist", F.round(F.expr(adc), 6))
+        .withColumn("__pr", F.row_number().over(w))
+        .filter(F.col("__pr") <= refine_n)
+        .select("query_id", "q_vec", "q_nrm", "cand_id", "adc_dist")
+    )
+    refined = shortlist.join(_side(corpus, id_col, vec_col, "c"), "cand_id")
+    return _topk(refined, k, "adc_dist")
 
 
 def ann_pq_topk(
@@ -1260,76 +1217,15 @@ def ann_pq_topk(
             f"adc_dist double, cosine double",
         )
     seeds = [[float(x) for x in r[0]] for r in seed_rows]
-    codebooks = [
-        [s[m * sub_dim : (m + 1) * sub_dim] for s in seeds]
-        for m in range(m_sub)
-    ]
-    code_cols = [
-        _pq_code_expr(vec_col, codebooks[m], m * sub_dim, sub_dim).alias(
-            f"code_{m}"
-        )
-        for m in range(m_sub)
-    ]
+    codebooks, code_cols = _pq_codes(vec_col, seeds, m_sub, sub_dim)
     # encoded frame feeds the ADC scan; the refine stage re-reads real
     # vectors from the corpus — materialize the (tiny-per-row) codes
     enc = materialize(corpus.select(F.col(id_col).alias("cand_id"), *code_cols))
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+    pairs = F.broadcast(_side(queries, id_col, vec_col, "q")).join(
+        enc, F.col("query_id") != F.col("cand_id")
     )
-    # ADC: per subspace, distance from the query's subvector to the
-    # codeword the candidate stored — element_at over the literal
-    # codebook, summed in FIXED order (d0 + d1 + ...)
-    def sub_d(m: int) -> Column:
-        cb = (
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{v!r}D" for v in c) + ")"
-                for c in codebooks[m]
-            )
-            + ")"
-        )
-        return F.expr(
-            f"aggregate(zip_with(slice(q_vec, {m * sub_dim + 1}, {sub_dim}),"
-            f" element_at({cb}, code_{m} + 1),"
-            " (x, w) -> power(cast(x as double) - w, 2)),"
-            " 0D, (acc, v) -> acc + v)"
-        )
-
-    adc_dist = sub_d(0)
-    for m in range(1, m_sub):
-        adc_dist = adc_dist + sub_d(m)
-    scored = (
-        F.broadcast(q)
-        .join(enc, F.col("query_id") != F.col("cand_id"))
-        .withColumn("adc_dist", F.round(adc_dist, 6))
-    )
-    w_adc = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    shortlist = (
-        scored.withColumn("__pr", F.row_number().over(w_adc))
-        .filter(F.col("__pr") <= refine_n)
-        .select("query_id", "q_vec", "cand_id", "adc_dist")
-    )
-    # exact refine: true cosine on the shortlisted real vectors
-    cand_vecs = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(vec_col).alias("c_nrm"),
-    )
-    refined = shortlist.join(cand_vecs, "cand_id").withColumn(
-        "cosine",
-        F.round(
-            _dot("q_vec", "c_vec") / (_norm("q_vec") * F.col("c_nrm")),
-            6,
-        ),
-    )
-    w_fin = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col("cand_id")
-    )
-    return (
-        refined.withColumn("rnk", F.row_number().over(w_fin))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "cand_id", "adc_dist", "cosine")
+    return _pq_search(
+        pairs, corpus, id_col, vec_col, codebooks, sub_dim, k, refine_n
     )
 
 
@@ -1430,10 +1326,6 @@ def ann_ivf_pq_topk(
     corpus; the probe join is a broadcast equi-join on cluster id;
     refine re-reads refine_n real vectors per query.
     """
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
     spark = corpus.sparkSession
     # r12 (VERDICT item 5): project to the two consumed columns, SPREAD
     # before materializing (the corpus feeds the heavy inline argmin +
@@ -1467,17 +1359,7 @@ def ann_ivf_pq_topk(
     if not centroids:
         return spark.createDataFrame([], empty_schema)
     sub_dim = dim // m_sub
-    seeds = all_seeds[:k_codes]
-    codebooks = [
-        [s[m * sub_dim : (m + 1) * sub_dim] for s in seeds]
-        for m in range(m_sub)
-    ]
-    code_cols = [
-        _pq_code_expr(vec_col, codebooks[m], m * sub_dim, sub_dim).alias(
-            f"code_{m}"
-        )
-        for m in range(m_sub)
-    ]
+    codebooks, code_cols = _pq_codes(vec_col, all_seeds[:k_codes], m_sub, sub_dim)
     # ONE map-side pass: coarse cluster id + the m_sub PQ codes.
     # NOT localCheckpointed (r12): the encoded frame has exactly one
     # consumer (the probe join) — the old LC paid an eager job + a
@@ -1485,68 +1367,16 @@ def ann_ivf_pq_topk(
     enc = assign_clusters(corpus, centroids, id_col, vec_col).select(
         F.col(id_col).alias("cand_id"), "cluster", *code_cols
     )
-    cents = _centroids_df(spark, centroids)
-    q_scored = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        )
-        .join(F.broadcast(cents), F.lit(True))
-        .withColumn("__dist", _sq_l2("q_vec", "centroid"))
-    )
-    probe_w = Window.partitionBy("query_id").orderBy("__dist", "cluster")
-    q = (
-        q_scored.withColumn("__pr", F.row_number().over(probe_w))
-        .filter(F.col("__pr") <= n_probe)
-        .select("query_id", "q_vec", "cluster")
+    q = _probe_lists(
+        _side(queries, id_col, vec_col, "q"),
+        _centroids_df(spark, centroids),
+        n_probe,
     )
     pairs = enc.join(F.broadcast(q), "cluster").filter(
         F.col("cand_id") != F.col("query_id")
     )
-
-    def sub_d(m: int) -> Column:
-        cb = (
-            "array("
-            + ", ".join(
-                "array(" + ", ".join(f"{v!r}D" for v in c) + ")"
-                for c in codebooks[m]
-            )
-            + ")"
-        )
-        return F.expr(
-            f"aggregate(zip_with(slice(q_vec, {m * sub_dim + 1}, {sub_dim}),"
-            f" element_at({cb}, code_{m} + 1),"
-            " (x, w) -> power(cast(x as double) - w, 2)),"
-            " 0D, (acc, v) -> acc + v)"
-        )
-
-    adc_dist = sub_d(0)
-    for m in range(1, m_sub):
-        adc_dist = adc_dist + sub_d(m)
-    scored = pairs.withColumn("adc_dist", F.round(adc_dist, 6))
-    w_adc = Window.partitionBy("query_id").orderBy("adc_dist", "cand_id")
-    shortlist = (
-        scored.withColumn("__pr", F.row_number().over(w_adc))
-        .filter(F.col("__pr") <= refine_n)
-        .select("query_id", "q_vec", "cand_id", "adc_dist")
-    )
-    cand_vecs = corpus.select(
-        F.col(id_col).alias("cand_id"),
-        F.col(vec_col).alias("c_vec"),
-        _norm(vec_col).alias("c_nrm"),
-    )
-    refined = shortlist.join(cand_vecs, "cand_id").withColumn(
-        "cosine",
-        F.round(
-            _dot("q_vec", "c_vec") / (_norm("q_vec") * F.col("c_nrm")), 6
-        ),
-    )
-    w_fin = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col("cand_id")
-    )
-    return (
-        refined.withColumn("rnk", F.row_number().over(w_fin))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "rnk", "cand_id", "adc_dist", "cosine")
+    return _pq_search(
+        pairs, corpus, id_col, vec_col, codebooks, sub_dim, k, refine_n
     )
 
 

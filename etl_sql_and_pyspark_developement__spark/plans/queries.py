@@ -4836,23 +4836,16 @@ def s07_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scoring expression is cosine_topk's, so the oracle mirror and
     # tie behavior are unchanged.
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
-        _dot,
-        _norm,
+        _cosine,
+        _side,
     )
 
-    q = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_vec")
-    )
+    q = _side(emb.filter(F.col("vec_id") == 0), "vec_id", "embedding", "q")
     scored_vec = (
-        emb.select(F.col("vec_id").alias("cand_id"), F.col("embedding").alias("c_vec"))
+        _side(emb, "vec_id", "embedding", "c")
         .join(F.broadcast(q), F.lit(True))
         .filter(F.col("cand_id") != 0)
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot("q_vec", "c_vec") / (_norm("q_vec") * _norm("c_vec")), 6
-            ),
-        )
+        .withColumn("cosine", _cosine("q_vec", "q_nrm", "c_vec", "c_nrm"))
     )
     vec_top = scored_vec.orderBy(F.desc("cosine"), "cand_id").limit(20)
     vec_lane = vec_top.select(

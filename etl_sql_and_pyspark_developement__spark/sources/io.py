@@ -6,9 +6,9 @@ Design rules:
   scan and non-deterministic typing — never in production paths.
 - Writers default to snappy parquet with partitionBy for pruning and
   optional bucketing for shuffle-free downstream joins.
-- Lake-format connectors (Delta/Iceberg/Hudi) and JDBC need jars not
-  present in this environment; they are import/config-gated stubs that
-  raise a clear error instead of failing mid-plan.
+- Lake-format connectors (Delta/Iceberg/Hudi) need jars not present
+  in this environment; they are import/config-gated stubs that raise a
+  clear error instead of failing mid-plan.
 - Build-once fixtures live under one artifact root, a deployment
   path set in the environment and read only by _artifact_dest. Every
   fixture keys its directory (and any catalog name derived from it)
@@ -208,16 +208,6 @@ def xml_orders_fixture(spark: SparkSession, sf_dir: str) -> str:
         ),
     )
     return path
-
-
-def read_jdbc(spark: SparkSession, url: str, dbtable: str, **options) -> DataFrame:
-    """JDBC source. Requires the driver jar on the classpath; pass
-    partitionColumn/lowerBound/upperBound/numPartitions for parallel
-    reads — a single-connection JDBC scan does not scale."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", dbtable)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
 
 
 def read_delta(spark: SparkSession, path: str) -> DataFrame:

@@ -78,7 +78,9 @@ def test_every_query_tolerates_null_values(spark, nulled_sf_dir):
 @pytest.fixture(scope="module")
 def adversarial_sf_dir(sf_dir, tmp_path_factory):
     """documents with adversarial text: empty strings, whitespace-only,
-    emoji/CJK/RTL unicode, embedded tabs/newlines, 5000-char tokens."""
+    emoji/CJK/RTL unicode, embedded tabs/newlines, 5000-char tokens;
+    and all-zero embeddings (every 25th vec_id, vec_id 0 among them),
+    the zero-norm vectors a cosine must not divide by."""
     d = tmp_path_factory.mktemp("sf_adversarial")
     adv = """SELECT doc_id,
      CASE doc_id % 7
@@ -90,12 +92,19 @@ def adversarial_sf_dir(sf_dir, tmp_path_factory):
        ELSE text END AS text,
      lang, source, n_chars
      FROM read_parquet('{src}/documents.parquet')"""
+    zero = """SELECT vec_id,
+     CASE WHEN vec_id % 25 = 0
+       THEN list_transform(embedding, x -> 0.0::FLOAT)
+       ELSE embedding END AS embedding,
+     label
+     FROM read_parquet('{src}/embeddings.parquet')"""
     con = duckdb.connect()
-    con.execute(
-        f"COPY ({adv.format(src=sf_dir)}) TO '{d}/documents.parquet' (FORMAT PARQUET)"
-    )
+    for t, sql in (("documents", adv), ("embeddings", zero)):
+        con.execute(
+            f"COPY ({sql.format(src=sf_dir)}) TO '{d}/{t}.parquet' (FORMAT PARQUET)"
+        )
     for t in TABLES:
-        if t != "documents":
+        if t not in ("documents", "embeddings"):
             con.execute(
                 f"COPY (SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')) "
                 f"TO '{d}/{t}.parquet' (FORMAT PARQUET)"
@@ -104,9 +113,11 @@ def adversarial_sf_dir(sf_dir, tmp_path_factory):
 
 
 def test_every_query_tolerates_adversarial_text(spark, adversarial_sf_dir):
-    """Empty / whitespace-only / unicode / giant-token documents must
-    not crash any query (ANSI mode turns division-by-zero on
-    degenerate docs into task failures — guarded in textstats)."""
+    """Empty / whitespace-only / unicode / giant-token documents and
+    all-zero embeddings must not crash any query (ANSI mode turns
+    division-by-zero on degenerate docs or zero-norm vectors into task
+    failures — guarded in textstats and by similarity's zero-norm
+    rule)."""
     failures = []
     for key in sorted(QUERIES):
         try:

@@ -6,6 +6,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import conf_scope
+
 
 def test_csv_json_roundtrip(spark, tmp_path):
     from etl_sql_and_pyspark_developement__spark.sources.io import (
@@ -463,9 +465,7 @@ def test_python_ds_pushdown_prunes_partitions_and_rows(spark):
     )
 
     register_python_sources(spark)
-    old = spark.conf.get("spark.sql.python.filterPushdown.enabled", None)
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    with conf_scope(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
         pred = (
             (F.col("lang") == "de")
             & (F.col("doc_id") >= 250)
@@ -503,11 +503,6 @@ def test_python_ds_pushdown_prunes_partitions_and_rows(spark):
         assert sorted(map(tuple, pushed.collect())) == sorted(
             map(tuple, baseline.collect())
         )
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.python.filterPushdown.enabled")
-        else:
-            spark.conf.set("spark.sql.python.filterPushdown.enabled", old)
 
 
 def test_python_ds_pushdown_conf_gate_raises_clearly(spark):
@@ -522,9 +517,7 @@ def test_python_ds_pushdown_conf_gate_raises_clearly(spark):
     )
 
     register_python_sources(spark)
-    old = spark.conf.get("spark.sql.python.filterPushdown.enabled", None)
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "false")
+    with conf_scope(spark, {"spark.sql.python.filterPushdown.enabled": "false"}):
         df = (
             spark.read.format("graft_synth_docs_push")
             .option("n", "10")
@@ -537,11 +530,6 @@ def test_python_ds_pushdown_conf_gate_raises_clearly(spark):
             spark.read.format("graft_synth_docs").option("n", "10").load()
         )
         assert base.count() == 10
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.python.filterPushdown.enabled")
-        else:
-            spark.conf.set("spark.sql.python.filterPushdown.enabled", old)
 
 
 def test_q114_dynamic_overwrite_scoping_and_repair(

@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from etl_sql_and_pyspark_developement__spark.plans import QUERIES
+from etl_sql_and_pyspark_developement__spark.session import conf_scope
 
 
 def plan_of(spark, key, sf_dir) -> str:
@@ -202,13 +203,69 @@ def test_one_materialization_site():
     assert "_materialize" not in names
 
 
+def test_one_vector_vocabulary():
+    """similarity.py writes its vector math once: the only
+    aggregate/zip_with, as a Column call or as SQL text, is inside
+    `_fold` (which `_dot`, `_norm`, `_sq_l2`, `_pow_l2` and
+    lsh_signature build on); and plans/queries.py scores through
+    `_cosine` rather than importing the raw `_dot`/`_norm` folds."""
+    import ast
+    import pathlib
+
+    import etl_sql_and_pyspark_developement__spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    sites = []
+
+    class Visitor(ast.NodeVisitor):
+        fn = None
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            self.generic_visit(node)
+            self.fn = outer
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name in ("aggregate", "zip_with"):
+                sites.append((self.fn, name))
+            self.generic_visit(node)
+
+        def visit_Constant(self, node):
+            if isinstance(node.value, str) and (
+                "aggregate(" in node.value or "zip_with(" in node.value
+            ):
+                sites.append((self.fn, node.value))
+
+    sim = root / "operators" / "similarity.py"
+    Visitor().visit(ast.parse(sim.read_text(), str(sim)))
+    assert sites and {fn for fn, _ in sites} == {"_fold"}, sites
+
+    queries = ast.parse((root / "plans" / "queries.py").read_text())
+    imported = {
+        alias.name
+        for node in ast.walk(queries)
+        if isinstance(node, ast.ImportFrom)
+        for alias in node.names
+    }
+    assert not imported & {"_dot", "_norm"}, imported & {"_dot", "_norm"}
+
+
+def test_d08_unit_norm_is_not_inlined_per_element(spark, sf_dir):
+    """d08's unit projection divides by a norm COLUMN: the fold must
+    not be inlined into the per-element lambda (CollapseProject does
+    that to a bare transform(v, x -> x / n), costing O(dim²) per
+    row). Inlined, the formatted plan shows `/ SQRT(` once per side."""
+    plan = plan_of(spark, "d08_embedding_neardup", sf_dir)
+    assert "/ SQRT(" not in plan
+
+
 def test_conf_scope_restores_set_and_unset_keys(spark):
     """conf_scope puts a key that was set back to its value and unsets
     a key that was unset — on a clean exit and when the body raises.
     The pair is q131's: the static broadcast threshold (set by
     get_spark) and the adaptive one (unset, it falls back)."""
-    from etl_sql_and_pyspark_developement__spark.session import conf_scope
-
     set_key = "spark.sql.autoBroadcastJoinThreshold"
     unset_key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
     scoped = {set_key: "-1", unset_key: "64m"}
@@ -573,6 +630,17 @@ def test_t16_hash_embed_single_groupby_no_python(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
+# Every key enable_runtime_bloom_filters sets, scoped DISARMED (the rule
+# off, Spark's default thresholds) so that the helper is what arms it,
+# plus the broadcast switch-off that makes the join shuffle.
+_BLOOM_DISARMED = {
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "false",
+    "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "10MB",
+    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "10GB",
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+}
+
+
 def test_runtime_bloom_filter_prunes_probe_scan(spark, sf_dir):
     """enable_runtime_bloom_filters makes Catalyst build a
     bloom_filter_agg on the selective build side and inject
@@ -585,23 +653,10 @@ def test_runtime_bloom_filter_prunes_probe_scan(spark, sf_dir):
     from etl_sql_and_pyspark_developement__spark.sources.catalog import table
     from pyspark.sql import functions as F
 
-    keys = [
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold",
-    ]
-    old = {}
-    for k in keys:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-    try:
+    with conf_scope(spark, _BLOOM_DISARMED):
         enable_runtime_bloom_filters(
             spark, application_side_threshold="0"
         )
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         orders = table(spark, sf_dir, "orders").filter(
             F.col("o_orderpriority") == "1-URGENT"
         )
@@ -618,12 +673,6 @@ def test_runtime_bloom_filter_prunes_probe_scan(spark, sf_dir):
         )
         assert "might_contain" in plan, "probe side must carry the bloom filter"
         assert "bloom_filter_agg" in plan, "build side must aggregate the filter"
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 _PYTHON_NODES = ("BatchEvalPython", "ArrowEvalPython", "MapInPandas",
@@ -1078,19 +1127,13 @@ def test_q101_aqe_splits_skewed_partition(spark, sf_dir):
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "2k",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
     }
-    old = {k: spark.conf.get(k) for k in scaled}
-    for k, v in scaled.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, scaled):
         df = QUERIES["q101_aqe_skew_join"](spark, sf_dir)
         rows = df.collect()  # AQE finalizes the plan only on execution
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "skew=true" in plan, "AQE must split the skewed partition"
         assert "skewed" in plan  # AQEShuffleRead ... skewed
         assert len(rows) > 0
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
 
 
 def test_q102_observation_equals_q33_batch_rollup(spark, sf_dir):
@@ -1273,16 +1316,10 @@ def test_q106_column_stats_enable_broadcast_through_filter(spark, sf_dir):
         "spark.sql.cbo.enabled": "true",
         "spark.sql.autoBroadcastJoinThreshold": str(threshold),
     }
-    old = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         plan_cbo = plan_of(spark, "q106_cbo_stats_join", sf_dir)
         spark.conf.set("spark.sql.cbo.enabled", "false")
         plan_naive = plan_of(spark, "q106_cbo_stats_join", sf_dir)
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
     assert "BroadcastHashJoin" in plan_cbo, (
         "with column stats + CBO the filtered dim must broadcast"
     )
@@ -1331,9 +1368,7 @@ def test_q108_clustered_layout_skips_row_groups(spark, sf_dir):
     cut = spark.read.parquet(unclustered).stat.approxQuantile(
         "o_totalprice", [0.1], 0.001
     )[0]
-    old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    with conf_scope(spark, {"spark.sql.adaptive.enabled": "false"}):
         decoded = {}
         for name, path in (
             ("clustered", clustered),
@@ -1354,8 +1389,6 @@ def test_q108_clustered_layout_skips_row_groups(spark, sf_dir):
                 " ", ""
             ), f"{name}: range predicate must reach PushedFilters"
             decoded[name] = _scan_output_rows(spark, df)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
     assert decoded["unclustered"] == n_total, (
         "round-robin files span the full range - nothing skippable"
     )
@@ -1375,21 +1408,8 @@ def test_q110_bloom_filter_injection_flip(spark, sf_dir):
         enable_runtime_bloom_filters,
     )
 
-    keys = [
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "spark.sql.autoBroadcastJoinThreshold",
-    ]
-    old = {}
-    for k in keys:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-    try:
+    with conf_scope(spark, _BLOOM_DISARMED):
         enable_runtime_bloom_filters(spark, application_side_threshold="0")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         armed = plan_of(spark, "q110_bloom_filter_join", sf_dir)
         assert "might_contain" in armed, "probe scan must carry the filter"
         assert "bloom_filter_agg" in armed, "build side must aggregate it"
@@ -1400,12 +1420,6 @@ def test_q110_bloom_filter_injection_flip(spark, sf_dir):
         disarmed = plan_of(spark, "q110_bloom_filter_join", sf_dir)
         assert "might_contain" not in disarmed
         assert "bloom_filter_agg" not in disarmed
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_q111_window_group_limit_flip(spark, sf_dir):
@@ -1426,14 +1440,9 @@ def test_q111_window_group_limit_flip(spark, sf_dir):
     assert len(nodes(armed)) == 2, (
         f"expected partial+final WindowGroupLimit, got {nodes(armed)}"
     )
-    key = "spark.sql.optimizer.windowGroupLimitThreshold"
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "-1")
+    with conf_scope(spark, {"spark.sql.optimizer.windowGroupLimitThreshold": "-1"}):
         disarmed = plan_of(spark, "q111_window_group_limit", sf_dir)
         assert len(nodes(disarmed)) == 0
-    finally:
-        spark.conf.set(key, old)
 
 
 def test_q112_exchange_reuse_in_final_plan(spark, sf_dir):
@@ -1528,19 +1537,13 @@ def test_q119_join_reorder_flips_with_stats(spark, sf_dir):
         "spark.sql.cbo.enabled": "true",
         "spark.sql.cbo.joinReorder.enabled": "true",
     }
-    old = {k: spark.conf.get(k) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         df = QUERIES["q119_cbo_join_reorder"](spark, sf_dir)
         order_cbo = rel_order(df._jdf.queryExecution().optimizedPlan().toString())
         for k in confs:
             spark.conf.set(k, "false")
         df = QUERIES["q119_cbo_join_reorder"](spark, sf_dir)
         order_naive = rel_order(df._jdf.queryExecution().optimizedPlan().toString())
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
     assert order_naive == "LOC", (
         f"without reorder the written left-deep order must survive: {order_naive}"
     )
@@ -1667,17 +1670,12 @@ def test_q126_aqe_coalesces_shuffle_partitions(spark, sf_dir):
     # not enough: 7 event types over 8 partitions leave an empty
     # partition, and empty-partition elimination prints `coalesced`
     # at any advisory size.)
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
     df_off = QUERIES["q126_aqe_coalesce"](spark, sf_dir)
-    old = spark.conf.get(key)
-    try:
-        spark.conf.set(key, "false")
+    with conf_scope(spark, {"spark.sql.adaptive.coalescePartitions.enabled": "false"}):
         rows_off = df_off.collect()
         plan_off = df_off._jdf.queryExecution().executedPlan().toString()
         assert "coalesced" not in plan_off
         assert rows_on == rows_off, "coalescing must never change values"
-    finally:
-        spark.conf.set(key, old)
 
 
 def test_q127_udf_is_arrow_not_row_python(spark, sf_dir):
@@ -1743,8 +1741,6 @@ def test_q131_aqe_converts_smj_to_broadcast_at_runtime(spark, sf_dir):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-
     def run():
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
         part = spark.read.parquet(f"{sf_dir}/part.parquet")
@@ -1760,9 +1756,7 @@ def test_q131_aqe_converts_smj_to_broadcast_at_runtime(spark, sf_dir):
         plan = df._jdf.queryExecution().executedPlan().toString()
         return rows, plan
 
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_scope(spark, confs):
         rows_on, plan_on = run()
         assert "SortMergeJoin" in plan_on.split("== Initial Plan ==")[1]
         final = plan_on.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
@@ -1773,12 +1767,6 @@ def test_q131_aqe_converts_smj_to_broadcast_at_runtime(spark, sf_dir):
         assert "SortMergeJoin" in final_off
         assert "BroadcastHashJoin" not in final_off
         assert rows_on == rows_off, "join strategy must never change values"
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_q132_script_transform_node_and_null_roundtrip(spark, sf_dir):
@@ -1840,10 +1828,7 @@ def test_q133_histogram_estimates_and_broadcast_flip(spark, sf_dir):
         assert rc.isDefined(), "CBO + column stats must yield a rowCount"
         return int(str(rc.get())), int(str(st.sizeInBytes()))
 
-    confs = ("spark.sql.cbo.enabled", "spark.sql.autoBroadcastJoinThreshold")
-    old = {k: spark.conf.get(k) for k in confs}
-    try:
-        spark.conf.set("spark.sql.cbo.enabled", "true")
+    with conf_scope(spark, {"spark.sql.cbo.enabled": "true"}):
         u_dom, u_dom_sz = est(nohist_name, dom["lang_code"])
         u_rare, _ = est(nohist_name, rare["lang_code"])
         h_dom, h_dom_sz = est(hist_name, dom["lang_code"])
@@ -1862,35 +1847,32 @@ def test_q133_histogram_estimates_and_broadcast_flip(spark, sf_dir):
         # the flip: threshold strictly between the two size estimates
         assert h_dom_sz > u_dom_sz, "histogram must size the head larger"
         thr = (h_dom_sz + u_dom_sz) // 2
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(thr))
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            F.col("vec_id").alias("doc_id")
-        )
-
-        def plan(name):
-            df = (
-                spark.table(name)
-                .filter(F.col("lang_code") == dom["lang_code"])
-                .join(emb, "doc_id")
+        with conf_scope(spark, {"spark.sql.autoBroadcastJoinThreshold": str(thr)}):
+            emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+                F.col("vec_id").alias("doc_id")
             )
-            return df._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
+
+            def plan(name):
+                df = (
+                    spark.table(name)
+                    .filter(F.col("lang_code") == dom["lang_code"])
+                    .join(emb, "doc_id")
                 )
-            )
+                return df._jdf.queryExecution().explainString(
+                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                        "formatted"
+                    )
+                )
 
-        p_uniform = plan(nohist_name)
-        p_hist = plan(hist_name)
-        assert "BroadcastHashJoin" in p_uniform, (
-            "ndv-only: the under-estimated dominant sliver broadcasts"
-        )
-        assert "BroadcastHashJoin" not in p_hist, (
-            "histogram: the correctly-sized head stays off the broadcast bus"
-        )
-        assert "SortMergeJoin" in p_hist or "ShuffledHashJoin" in p_hist
-    finally:
-        for k, v in old.items():
-            spark.conf.set(k, v)
+            p_uniform = plan(nohist_name)
+            p_hist = plan(hist_name)
+            assert "BroadcastHashJoin" in p_uniform, (
+                "ndv-only: the under-estimated dominant sliver broadcasts"
+            )
+            assert "BroadcastHashJoin" not in p_hist, (
+                "histogram: the correctly-sized head stays off the broadcast bus"
+            )
+            assert "SortMergeJoin" in p_hist or "ShuffledHashJoin" in p_hist
 
 
 def test_q134_fanout_scans_parquet_exactly_once(spark, sf_dir):
@@ -1992,38 +1974,34 @@ def test_q136_cached_batch_pruning_by_layout(spark, sf_dir):
             if name == "InMemoryTableScanExec"
         )
 
-    old_bs = spark.conf.get("spark.sql.inMemoryColumnarStorage.batchSize")
-    spark.conf.set("spark.sql.inMemoryColumnarStorage.batchSize", "100")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    )
-    n = orders.count()
-    # DECILE band (q108's lesson): wide enough that every round-robin
-    # batch must contain matches — a too-narrow band lets even random
-    # batches skip when their min lands above it
-    p10 = orders.agg(
-        F.expr("percentile_approx(o_totalprice, 0.1)").alias("p")
-    ).collect()[0]["p"]
-    sel = F.col("o_totalprice") < p10
-    n_match = orders.filter(sel).count()
-    assert 0 < n_match < n // 5, "band must stay selective for the contract"
-    clustered = (
-        orders.repartitionByRange(4, "o_totalprice")
-        .sortWithinPartitions("o_totalprice")
-        .cache()
-    )
-    rr = orders.repartition(4).cache()
-    try:
-        clustered.count()
-        rr.count()
-        rows_clustered = cache_scan_rows(clustered.filter(sel))
-        rows_rr = cache_scan_rows(rr.filter(sel))
-    finally:
-        clustered.unpersist()
-        rr.unpersist()
-        spark.conf.set(
-            "spark.sql.inMemoryColumnarStorage.batchSize", old_bs
+    with conf_scope(spark, {"spark.sql.inMemoryColumnarStorage.batchSize": "100"}):
+        orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
         )
+        n = orders.count()
+        # DECILE band (q108's lesson): wide enough that every round-robin
+        # batch must contain matches — a too-narrow band lets even random
+        # batches skip when their min lands above it
+        p10 = orders.agg(
+            F.expr("percentile_approx(o_totalprice, 0.1)").alias("p")
+        ).collect()[0]["p"]
+        sel = F.col("o_totalprice") < p10
+        n_match = orders.filter(sel).count()
+        assert 0 < n_match < n // 5, "band must stay selective for the contract"
+        clustered = (
+            orders.repartitionByRange(4, "o_totalprice")
+            .sortWithinPartitions("o_totalprice")
+            .cache()
+        )
+        rr = orders.repartition(4).cache()
+        try:
+            clustered.count()
+            rr.count()
+            rows_clustered = cache_scan_rows(clustered.filter(sel))
+            rows_rr = cache_scan_rows(rr.filter(sel))
+        finally:
+            clustered.unpersist()
+            rr.unpersist()
     assert rows_clustered >= n_match, "pruning may only skip non-matching batches"
     assert rows_clustered <= n // 4, (
         f"clustered cache must batch-skip: decoded {rows_clustered}/{n}"

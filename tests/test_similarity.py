@@ -65,6 +65,32 @@ def test_bruteforce_cosine_bounds_and_ranks(spark, vectors):
         assert cosines == sorted(cosines, reverse=True)
 
 
+def test_zero_norm_vector_scores_cosine_zero(spark, vectors):
+    """An all-zero embedding has cosine 0.0 with every vector (the
+    zero-norm rule in similarity's module docstring), where the
+    division by its norm used to raise DIVIDE_BY_ZERO under ANSI: as
+    a cosine_topk query it scores exactly 0.0 against every candidate
+    (ties ranked by cand_id), and cosine_neardup_pairs emits no pair
+    containing it at threshold 0.45."""
+    from etl_sql_and_pyspark_developement__spark.operators.similarity import (
+        cosine_neardup_pairs,
+        cosine_topk,
+    )
+
+    zero = spark.createDataFrame([(99, [0.0] * 16)], vectors.schema)
+    corpus = vectors.unionByName(zero)
+    n = corpus.count()
+    top = cosine_topk(corpus, zero, k=n).collect()
+    assert len(top) == n - 1
+    assert all(repr(r.cosine) == "0.0" for r in top), top
+    assert [r.cand_id for r in top] == sorted(r.cand_id for r in top)
+    pairs = {
+        (r.id_a, r.id_b) for r in cosine_neardup_pairs(corpus, threshold=0.45).collect()
+    }
+    assert (0, 50) in pairs, "the planted copy must still pair"
+    assert not any(99 in p for p in pairs)
+
+
 def test_lsh_self_bucket_and_recall(spark, vectors):
     """An exact copy hashes to the same bucket, so LSH must find it;
     overall recall vs brute force must be positive."""

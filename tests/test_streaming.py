@@ -9,6 +9,19 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.session import conf_scope
+
+# The keys enable_rocksdb_state_store sets, scoped to Spark's default
+# provider (changelog off) so that the helper is what switches them.
+_HDFS_STATE_STORE = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state."
+        "HDFSBackedStateStoreProvider"
+    ),
+    "spark.sql.streaming.stateStore.rocksdb."
+    "changelogCheckpointing.enabled": "false",
+}
+
 
 @pytest.fixture(scope="module")
 def events_dir(sf_dir, tmp_path_factory):
@@ -989,9 +1002,8 @@ def test_st25_transform_with_state_matches_q61(spark, sf_dir, events_dir):
             streaming_capped_total_tws(read_event_stream(spark, events_dir))
         return
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    enable_rocksdb_state_store(spark)
-    try:
+    with conf_scope(spark, _HDFS_STATE_STORE):
+        enable_rocksdb_state_store(spark)
         stream = streaming_capped_total_tws(read_event_stream(spark, events_dir))
         q = (
             stream.writeStream.outputMode("update")
@@ -1001,13 +1013,6 @@ def test_st25_transform_with_state_matches_q61(spark, sf_dir, events_dir):
         )
         q.processAllAvailable()
         q.stop()
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
     got = {
         r.user_id: (r.n_purchases, r.n_capped, r.balance)
         for r in spark.sql(
@@ -1095,11 +1100,8 @@ def test_rocksdb_state_store_windowed_agg_parity(spark, sf_dir, events_dir):
         windowed_event_counts,
     )
 
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    enable_rocksdb_state_store(spark)
-    try:
+    with conf_scope(spark, _HDFS_STATE_STORE):
+        enable_rocksdb_state_store(spark)
         assert "RocksDBStateStoreProvider" in spark.conf.get(
             "spark.sql.streaming.stateStore.providerClass"
         )
@@ -1134,13 +1136,6 @@ def test_rocksdb_state_store_windowed_agg_parity(spark, sf_dir, events_dir):
         assert got, "stream emitted nothing under RocksDB"
         for key, val in got.items():
             assert expected[key] == val
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
 
 
 def test_stream_sketch_maintenance_matches_batch_bit_exact(
@@ -3346,14 +3341,18 @@ def test_st44_stream_static_dim_frozen_for_query_lifetime(spark, tmp_path):
         spark.createDataFrame([(20, "B")], dschema).write.mode(
             "append"
         ).parquet(str(dim))
-        spark.createDataFrame([(2, 20)], eschema).write.mode(
+        # coalesce(1): a 1-row frame otherwise writes an empty
+        # part-00000 beside its data file, and a micro-batch that lists
+        # src between the two renames of the job commit splits the
+        # append over two batches (the last one empty)
+        spark.createDataFrame([(2, 20)], eschema).coalesce(1).write.mode(
             "append"
         ).parquet(str(src))
         q.processAllAvailable()
         assert got[-1] == [(20, 2, None)], "appended dim file is invisible"
         # catalog refresh does NOT reach the running query's plan
         spark.catalog.refreshByPath(str(dim))
-        spark.createDataFrame([(3, 20)], eschema).write.mode(
+        spark.createDataFrame([(3, 20)], eschema).coalesce(1).write.mode(
             "append"
         ).parquet(str(src))
         q.processAllAvailable()
@@ -3540,14 +3539,7 @@ def test_rocksdb_changelog_checkpointing_recovery(spark, sf_dir, tmp_path):
         "spark.sql.streaming.stateStore.rocksdb."
         "changelogCheckpointing.enabled": "true",
     }
-    old = {}
-    for k, v in confs.items():
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, v)
-    try:
+    with conf_scope(spark, confs):
         ev = table(spark, sf_dir, "events")
         d0 = ev.agg(F.min(F.to_date("ts"))).collect()[0][0]
         src = tmp_path / "clog_src"
@@ -3604,12 +3596,6 @@ def test_rocksdb_changelog_checkpointing_recovery(spark, sf_dir, tmp_path):
             "changelog-checkpointed state must equal the batch truth "
             "across a restart"
         )
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_st46_query_listener_matches_recent_progress(spark, sf_dir, tmp_path):
