@@ -21,6 +21,20 @@ Four tiers, from cheapest to fuzziest:
   hashes; hamming-ball candidates found by 16-bit chunk equality
   (pigeonhole: hamming ≤ 3 ⇒ at least one of 4 chunks equal).
 
+The shingle vocabulary, each piece written once:
+- textstats.tokens is the only whitespace split, and textstats.ngrams
+  builds every word n-gram (shingles, positional spans, the corpus
+  profile, t06's repetition grams, d18's novelty grams).
+- shingle_sets (doc, shingles) is the only shingle frame. Every
+  Jaccard / containment consumer takes one, or a minhash_signed frame,
+  which carries it; _explode is its only exploded form and _sizes its
+  only set size.
+- _shared_pairs is the one df ≥ 2-pruned shared-shingle self-join
+  (jaccard_pairs, containment_pairs), _overlap the one
+  candidate-restricted intersection (prefix filter, LSH verify,
+  index/delta screens), _with_sizes the one size join and _jaccard
+  the one Jaccard ratio.
+
 Reference note: the reference repo has no dedup surface — these are
 the training-data-pipeline extensions SURVEY §2 lists as first-class.
 """
@@ -30,6 +44,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.operators.spread import spread_small_scan
+from etl_sql_and_pyspark_developement__spark.operators.textstats import (
+    bag_fingerprint,
+    exact_fingerprint,
+    ngrams,
+    tokens,
+)
 from etl_sql_and_pyspark_developement__spark.session import materialize
 
 N_MINHASH = 128
@@ -72,14 +93,14 @@ def shingle_sets(
     spread: bool = True,
 ) -> DataFrame:
     """(doc, shingles): each doc's DISTINCT word n-gram shingles as one
-    array<string> — the package's only shingling code. A doc with fewer
+    array<string> — the package's only shingle frame. A doc with fewer
     than n tokens is one shingle (its whole token string); a NULL text
-    is [NULL]. shingle_df is its explode; a set's size is
-    size(shingles). Doc ids are assumed unique.
+    is [NULL]. Doc ids are assumed unique.
 
-    Tokenizes ONCE into a column before the transform lambda: inlining
-    `split(text)` inside the lambda would re-split per shingle index
-    (O(tokens²) per doc — measured 3-4× slower end-to-end).
+    Tokenizes ONCE into a column before the n-gram lambda (see
+    textstats.ngrams): an inline split inside the lambda would
+    re-split per shingle index (O(tokens²) per doc — measured 3-4×
+    slower end-to-end).
 
     The (id, text) projection is spread across the cluster first
     (spread_small_scan): a single-row-group corpus file otherwise
@@ -91,57 +112,81 @@ def shingle_sets(
     """
     proj = df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__t"))
     if spread:
-        from etl_sql_and_pyspark_developement__spark.operators.spread import (
-            spread_small_scan,
-        )
-
         proj = spread_small_scan(proj)
-    toked = proj.select("doc", F.split(F.col("__t"), " ").alias("__toks"))
+    toked = proj.select("doc", tokens(F.col("__t")).alias("__toks"))
+    toks = F.col("__toks")
     shingles = F.when(
-        F.size(F.col("__toks")) >= n,
-        F.array_distinct(
-            F.expr(
-                f"transform(sequence(1, size(__toks) - {n - 1}), "
-                f"i -> concat_ws(' ', slice(__toks, i, {n})))"
-            )
-        ),
-    ).otherwise(F.array(F.array_join(F.col("__toks"), " ")))
+        F.size(toks) >= n, F.array_distinct(ngrams(toks, n))
+    ).otherwise(F.array(F.array_join(toks, " ")))
     return toked.select("doc", shingles.alias("shingles"))
 
 
-def shingle_df(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, spread: bool = True
-) -> DataFrame:
-    """(doc, shingle) pairs — the explode of shingle_sets."""
-    return _explode(shingle_sets(df, id_col, text_col, n, spread))
-
-
 def _explode(sets: DataFrame) -> DataFrame:
+    """(doc, shingle): a shingle-set frame's only exploded form."""
     return sets.select("doc", F.explode("shingles").alias("shingle"))
 
 
 def _sizes(sets: DataFrame) -> DataFrame:
-    return sets.select("doc", F.size("shingles").alias("n_sh"))
+    """(doc, n_sh): a shingle-set frame's only set size, a BIGINT like
+    the count it equals."""
+    return sets.select("doc", F.size("shingles").cast("bigint").alias("n_sh"))
+
+
+def _shared_pairs(sets: DataFrame, max_shingle_df: int | None = None) -> DataFrame:
+    """(doc_a, doc_b, inter) for EVERY doc pair (doc_a < doc_b) sharing
+    a shingle: the shared-shingle self-join, quadratic in colliding
+    docs. Shingles unique to one doc can't intersect any pair, so they
+    are dropped before the join (semantics-preserving; sizes still
+    come from the full sets) — that removes the long tail of the
+    shingle frequency distribution. `max_shingle_df` also drops
+    shingles found in more docs than that (containment_pairs' hot-
+    shingle cap)."""
+    sh = _explode(sets)
+    dfreq = (
+        sh.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df_"))
+        .filter(F.col("df_") >= 2)
+    )
+    if max_shingle_df is not None:
+        dfreq = dfreq.filter(F.col("df_") <= max_shingle_df)
+    shared = sh.join(dfreq.select("shingle"), "shingle")
+    a, b = shared.alias("a"), shared.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc") < F.col("b.doc")),
+        )
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
 
 
 def _overlap(
-    cand: DataFrame, a: str, b: str, sh_a: DataFrame, sh_b: DataFrame,
-    sizes_a: DataFrame, sizes_b: DataFrame,
+    cand: DataFrame, a: str, b: str, sets_a: DataFrame, sets_b: DataFrame
 ) -> DataFrame:
     """(a, b, inter, n_a, n_b) per candidate pair: shared shingles,
     joining shingle sets of candidate docs only, plus both set sizes."""
     inter = (
-        cand.join(sh_a.withColumnRenamed("doc", a), a)
-        .join(sh_b.withColumnRenamed("doc", b), [b, "shingle"])
+        cand.join(_explode(sets_a).withColumnRenamed("doc", a), a)
+        .join(_explode(sets_b).withColumnRenamed("doc", b), [b, "shingle"])
         .groupBy(a, b)
         .agg(F.count("*").alias("inter"))
     )
-    return inter.join(
-        sizes_a.select(F.col("doc").alias(a), F.col("n_sh").alias("n_a")), a
-    ).join(sizes_b.select(F.col("doc").alias(b), F.col("n_sh").alias("n_b")), b)
+    return _with_sizes(inter, a, b, sets_a, sets_b)
+
+
+def _with_sizes(
+    pairs: DataFrame, a: str, b: str, sets_a: DataFrame, sets_b: DataFrame
+) -> DataFrame:
+    """`pairs` plus n_a / n_b, the set sizes of its `a` and `b` docs."""
+    return pairs.join(
+        _sizes(sets_a).select(F.col("doc").alias(a), F.col("n_sh").alias("n_a")), a
+    ).join(_sizes(sets_b).select(F.col("doc").alias(b), F.col("n_sh").alias("n_b")), b)
 
 
 def _jaccard():
+    """The Jaccard ratio of a pair carrying inter, n_a and n_b."""
     return F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
 
 
@@ -276,11 +321,6 @@ def exact_dedup_stats(
     df: DataFrame, id_col: str, text_col: str, group_col: str
 ) -> DataFrame:
     """Per-group exact + bag dedup statistics (n_docs vs n_unique)."""
-    from etl_sql_and_pyspark_developement__spark.operators.textstats import (
-        bag_fingerprint,
-        exact_fingerprint,
-    )
-
     # NOT spread (r11): interleaved A/B measured the widening exchange
     # at +0.33s here — the fingerprint map work is light and the
     # groupBy's partial aggregation already parallelizes
@@ -313,7 +353,7 @@ def jaccard_pairs(
     id_col: str,
     text_col: str,
     n: int = 3,
-    sh: DataFrame | None = None,
+    sets: DataFrame | None = None,
 ) -> DataFrame:
     """Exact pairwise n-gram Jaccard over ALL pairs sharing ≥1 shingle.
 
@@ -321,40 +361,17 @@ def jaccard_pairs(
     At scale use minhash_lsh_pairs, which feeds only LSH candidates
     into this same verification math.
 
-    Pass ``sh`` (an ALREADY-MATERIALIZED (doc, shingle) frame from
-    shingle_df) to share one shingle pass with sibling consumers —
-    same contract as jaccard_pairs_prefix's ``sh``.
+    Pass ``sets`` (an ALREADY-MATERIALIZED shingle_sets or
+    minhash_signed frame) to share one shingle pass with sibling
+    consumers — same contract as jaccard_pairs_prefix's ``sets``.
     """
-    # The shingle set feeds sizes AND both sides of the pair join —
-    # materialize it so the tokenize+explode runs once, not three times.
-    if sh is None:
-        sh = materialize(shingle_df(df, id_col, text_col, n))
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
-    # Shingles unique to one doc can't intersect any pair — dropping
-    # them before the self-join is semantics-preserving (sizes are
-    # computed from the FULL shingle set) and shrinks the join input
-    # by the long tail of the shingle frequency distribution.
-    shared = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df_"))
-        .filter(F.col("df_") >= 2)
-        .select("shingle")
-    )
-    sh_shared = sh.join(shared, "shingle")
-    a = sh_shared.alias("a")
-    b = sh_shared.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
-        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .agg(F.count("*").alias("inter"))
-    )
+    # The sets feed sizes AND both sides of the pair join — materialize
+    # them so the tokenize+shingle transform runs once, not three times.
+    if sets is None:
+        sets = materialize(shingle_sets(df, id_col, text_col, n))
     return (
-        inter.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_sh", "n_a"), "doc_a")
-        .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_sh", "n_b"), "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")), 6),
-        )
+        _with_sizes(_shared_pairs(sets), "doc_a", "doc_b", sets, sets)
+        .withColumn("jaccard", F.round(_jaccard(), 6))
         .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
     )
 
@@ -365,7 +382,7 @@ def jaccard_pairs_prefix(
     text_col: str,
     threshold: float,
     n: int = 3,
-    sh: DataFrame | None = None,
+    sets: DataFrame | None = None,
 ) -> DataFrame:
     """Threshold-Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin
     family): losslessly prunes the candidate join that jaccard_pairs
@@ -391,16 +408,16 @@ def jaccard_pairs_prefix(
     IDENTICAL to jaccard_pairs(...).filter(jaccard >= t) — asserted
     in tests/test_dedup.py at three thresholds.
 
-    Pass ``sh`` (an ALREADY-MATERIALIZED (doc, shingle) frame from
-    shingle_df) to share one shingle pass with sibling consumers —
-    the d21/d23 evaluation lanes build signatures AND exact truth
-    from the same sample, and without sharing each pipeline pays its
-    own tokenize+explode (r11 optimization; values unchanged, the
-    frame is the same either way).
+    Pass ``sets`` (an ALREADY-MATERIALIZED shingle_sets or
+    minhash_signed frame) to share one shingle pass with sibling
+    consumers — the d21/d23 evaluation lanes build signatures AND
+    exact truth from the same sample, and without sharing each
+    pipeline pays its own tokenize+shingle pass (values unchanged,
+    the frame is the same either way).
     """
-    if sh is None:
-        sh = materialize(shingle_df(df, id_col, text_col, n))
-    sizes = sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
+    if sets is None:
+        sets = materialize(shingle_sets(df, id_col, text_col, n))
+    sh, sizes = _explode(sets), _sizes(sets)
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
     # rank shingles within each doc, rarest first (deterministic ties)
     ranked = (
@@ -427,7 +444,7 @@ def jaccard_pairs_prefix(
         .distinct()
     )
     return (
-        _overlap(candidates, "doc_a", "doc_b", sh, sh, sizes, sizes)
+        _overlap(candidates, "doc_a", "doc_b", sets, sets)
         .withColumn("jaccard", F.round(_jaccard(), 6))
         .filter(_jaccard() >= threshold)
         .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
@@ -533,9 +550,8 @@ def minhash_lsh_pairs(
         df, id_col, text_col, n, max_band_df=max_band_df, signed=signed
     )
     # Verify candidates with exact Jaccard.
-    sh, sizes = _explode(signed), _sizes(signed)
     return (
-        _overlap(candidates, "doc_a", "doc_b", sh, sh, sizes, sizes)
+        _overlap(candidates, "doc_a", "doc_b", signed, signed)
         .withColumn("jaccard", F.round(_jaccard(), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
@@ -556,15 +572,11 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     d08/s02's deterministic-LSH oracles). Two halves, never combined:
     hi*2^32+lo would overflow BIGINT under ANSI mode.
     """
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
     toks = (
         spread_small_scan(
             df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__t"))
         )
-        .select("doc", F.explode(F.split(F.col("__t"), " ")).alias("tok"))
+        .select("doc", F.explode(tokens(F.col("__t"))).alias("tok"))
         .withColumn("__md5", F.md5("tok"))
         .withColumn(
             "hi", F.conv(F.substring("__md5", 1, 8), 16, 10).cast("long")
@@ -787,20 +799,16 @@ def contamination_check(
     candidates with minhash_lsh_pairs and keep cross-split pairs — the
     per-pair verification arithmetic here is unchanged.
     """
-    from etl_sql_and_pyspark_developement__spark.operators.textstats import (
-        exact_fingerprint,
-    )
-
     test = df.filter(F.col(split_col) == test_value)
     train = df.filter(F.col(split_col) != test_value)
-    # test-side shingles feed sizes AND the overlap join — materialize.
-    sh_t = materialize(shingle_df(test, id_col, text_col, n))
-    sh_r = shingle_df(train, id_col, text_col, n).withColumnRenamed(
+    # test-side sets feed sizes AND the overlap join — materialize.
+    sets_t = materialize(shingle_sets(test, id_col, text_col, n))
+    sh_r = _explode(shingle_sets(train, id_col, text_col, n)).withColumnRenamed(
         "doc", "train_doc"
     )
-    sizes = sh_t.groupBy("doc").agg(F.count("*").alias("n_sh"))
     shared = (
-        sh_t.join(sh_r, "shingle")
+        _explode(sets_t)
+        .join(sh_r, "shingle")
         .groupBy("doc", "train_doc")
         .agg(F.count("*").alias("shared"))
     )
@@ -822,7 +830,7 @@ def contamination_check(
         "doc", F.coalesce(F.col("__hit"), F.lit(0)).alias("exact_dup")
     )
     return (
-        best.join(sizes, "doc")
+        best.join(_sizes(sets_t), "doc")
         .join(flags, "doc")
         .select(
             "doc",
@@ -866,23 +874,13 @@ def duplicated_spans(
     string — high-cardinality, skew-free for k >= 4; the span window
     partitions by (pair, diagonal), never globally. No UDFs.
     """
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
     toked = spread_small_scan(
         df.select(F.col(id_col).alias("doc"), F.col(text_col).alias("__t"))
-    ).select("doc", F.split(F.col("__t"), " ").alias("__toks"))
-    grams_arr = F.when(
-        F.size("__toks") >= k,
-        F.expr(
-            f"transform(sequence(1, size(__toks) - {k - 1}), "
-            f"i -> struct(i AS pos, concat_ws(' ', slice(__toks, i, {k})) AS gram))"
-        ),
-    ).otherwise(F.expr("array()").cast("array<struct<pos:int,gram:string>>"))
+    ).select("doc", tokens(F.col("__t")).alias("__toks"))
+    # posexplode's 0-based positions: only their differences (diagonal,
+    # run breaks) reach the output
     grams = materialize(
-        toked.select("doc", F.explode(grams_arr).alias("g"))
-        .select("doc", F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
+        toked.select("doc", F.posexplode(ngrams(F.col("__toks"), k)).alias("pos", "gram"))
     )
     # "appears in >= 2 distinct docs" == min(doc) != max(doc): same
     # predicate as count_distinct >= 2 but with cheap decomposable
@@ -953,26 +951,15 @@ def corpus_dup_profile(
     high-cardinality grams (skew-free); the final rollup is
     |groups|-sized. Linear in corpus size, never pairwise.
     """
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
     base = spread_small_scan(
         df.select(
             F.col(group_col).alias("grp"),
             F.col(id_col).alias("doc"),
             F.col(text_col).alias("__t"),
         )
-    ).select("grp", "doc", F.split(F.col("__t"), " ").alias("_toks"))
-    idx = F.when(
-        F.size("_toks") >= n, F.sequence(F.lit(1), F.size("_toks") - (n - 1))
-    ).otherwise(F.array())
+    ).select("grp", "doc", tokens(F.col("__t")).alias("_toks"))
     grams = base.select(
-        "grp",
-        "doc",
-        F.explode(
-            F.transform(idx, lambda i: F.array_join(F.slice("_toks", i, n), " "))
-        ).alias("gram"),
+        "grp", "doc", F.explode(ngrams(F.col("_toks"), n)).alias("gram")
     )
     per_gram_doc = grams.groupBy("grp", "gram", "doc").agg(
         F.count("*").alias("occ")
@@ -1019,8 +1006,7 @@ def _segments(
     exchange at +0.46s on d13 — the chunk transform is light and the
     doc-frequency groupBy's partial aggregation parallelizes the
     heavy half already."""
-    toks = F.split(F.col(text_col), " ")
-    base = df.select(F.col(id_col).alias("doc"), toks.alias("_toks"))
+    base = df.select(F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("_toks"))
     n_chunks = F.ceil(F.size("_toks") / F.lit(seg_words)).cast("int")
     return base.select(
         "doc",
@@ -1170,17 +1156,13 @@ def corpus_neardup_index(
     corpus: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3
 ) -> dict[str, DataFrame]:
     """Precomputed (and persisted) artifacts for screening arriving
-    documents against a STATIC reference corpus: LSH band table,
-    shingle set, and shingle-set sizes. Build once, reuse across every
+    documents against a STATIC reference corpus: the LSH band table
+    and the signed shingle sets. Build once, reuse across every
     screened batch/micro-batch — the historical corpus is never
     rescanned (the same never-rescan contract as st08's exact-
     fingerprint ingest, lifted to NEAR-duplicates)."""
     signed = minhash_signed(shingle_sets(corpus, id_col, text_col, n)).persist()
-    return {
-        "bands": minhash_bands(signed),
-        "shingles": _explode(signed),
-        "sizes": _sizes(signed),
-    }
+    return {"bands": minhash_bands(signed), "sets": signed}
 
 
 def neardup_screen(
@@ -1223,10 +1205,7 @@ def neardup_screen(
         .distinct()
     )
     dup_ids = (
-        _overlap(
-            candidates, "doc", "c_doc", _explode(signed_b), index["shingles"],
-            _sizes(signed_b), index["sizes"],
-        )
+        _overlap(candidates, "doc", "c_doc", signed_b, index["sets"])
         .filter(_jaccard() >= threshold)
         .select(F.col("doc").alias(id_col))
         .distinct()
@@ -1354,8 +1333,9 @@ def containment_pairs(
     SHINGLE SET (ties broken toward the lower id), in exact integer
     ppm — engine-portable.
 
-    Scale: same candidate shape as jaccard_pairs — the shingle
-    self-join restricted to shingles with document frequency ≥ 2.
+    Scale: the candidate join of jaccard_pairs (_shared_pairs) — the
+    shingle self-join restricted to shingles with document frequency
+    ≥ 2.
     Pair work is Σ_shingle df², which boilerplate/near-dup-heavy
     shingles dominate: measured 104× wall at 10× near-duplicated docs
     (df ×10 ⇒ Σdf² ×100 — partially output-bound, the copies ARE
@@ -1372,49 +1352,16 @@ def containment_pairs(
     false positives. The df≥2 prune is semantics-preserving
     (singleton shingles intersect nothing).
     """
-    sh = materialize(shingle_df(df, id_col, text_col, n))
-    sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
-    dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-    shared = dfreq.filter(F.col("df_") >= 2)
-    if max_shingle_df is not None:
-        shared = shared.filter(F.col("df_") <= max_shingle_df)
-    sh_shared = sh.join(shared.select("shingle"), "shingle")
-    a = sh_shared.alias("a")
-    b = sh_shared.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .groupBy(F.col("a.doc").alias("doc_x"), F.col("b.doc").alias("doc_y"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    scored = (
-        inter.join(
-            sizes.select(F.col("doc").alias("doc_x"), F.col("n_sh").alias("n_x")),
-            "doc_x",
-        )
-        .join(
-            sizes.select(F.col("doc").alias("doc_y"), F.col("n_sh").alias("n_y")),
-            "doc_y",
-        )
-        .select(
-            F.expr(
-                "CASE WHEN n_x < n_y OR (n_x = n_y AND doc_x < doc_y)"
-                " THEN doc_x ELSE doc_y END"
-            ).alias("doc_small"),
-            F.expr(
-                "CASE WHEN n_x < n_y OR (n_x = n_y AND doc_x < doc_y)"
-                " THEN doc_y ELSE doc_x END"
-            ).alias("doc_big"),
-            "inter",
-            F.least("n_x", "n_y").alias("n_small"),
-            F.greatest("n_x", "n_y").alias("n_big"),
-            F.expr("1000000 * inter DIV least(n_x, n_y)").alias(
-                "containment_ppm"
-            ),
-        )
+    sets = materialize(shingle_sets(df, id_col, text_col, n))
+    pairs = _shared_pairs(sets, max_shingle_df)
+    a_small = "n_a < n_b OR (n_a = n_b AND doc_a < doc_b)"
+    scored = _with_sizes(pairs, "doc_a", "doc_b", sets, sets).select(
+        F.expr(f"CASE WHEN {a_small} THEN doc_a ELSE doc_b END").alias("doc_small"),
+        F.expr(f"CASE WHEN {a_small} THEN doc_b ELSE doc_a END").alias("doc_big"),
+        "inter",
+        F.least("n_a", "n_b").alias("n_small"),
+        F.greatest("n_a", "n_b").alias("n_big"),
+        F.expr("1000000 * inter DIV least(n_a, n_b)").alias("containment_ppm"),
     )
     return scored.filter(F.col("containment_ppm") >= threshold_ppm)
 
@@ -1474,10 +1421,7 @@ def delta_dedup_matches(
         shingle_sets(base_needed, id_col, text_col, n, spread=False)
     )
     return (
-        _overlap(
-            cand, "delta_doc", "base_doc", _explode(signed_d), _explode(sets_b),
-            _sizes(signed_d), _sizes(sets_b),
-        )
+        _overlap(cand, "delta_doc", "base_doc", signed_d, sets_b)
         .withColumn("jaccard", F.round(_jaccard(), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("delta_doc", "base_doc", "jaccard")
@@ -1531,7 +1475,7 @@ def lsh_band_sweep(
     # jaccard_pairs_prefix remains the corpus-WIDE exact form for
     # unbounded inputs (its docstring's 10^6+-doc crossover).
     truth = materialize(
-        jaccard_pairs(df, id_col, text_col, n=n, sh=_explode(signed))
+        jaccard_pairs(df, id_col, text_col, n=n, sets=signed)
         .filter(_jaccard() >= threshold)
         .select("doc_a", "doc_b")
         .withColumn("__true", F.lit(1))
@@ -1677,10 +1621,6 @@ def cdc_chunk_doc_fps(
     form (guide §4.2: batch work belongs in native kernels).
     """
     import pyarrow as pa
-
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
 
     prepared = spread_small_scan(
         df.filter(

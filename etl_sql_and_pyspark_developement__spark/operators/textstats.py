@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.operators.spread import spread_small_scan
 from etl_sql_and_pyspark_developement__spark.session import materialize
 
 STOPWORDS = ("a", "the")
@@ -29,7 +30,25 @@ LANG_MARKERS = {
 
 
 def tokens(col: Column) -> Column:
+    """Single-space word tokens (a run of spaces yields empty tokens):
+    the one whitespace split of every textstats and dedup operator."""
     return F.split(col, " ")
+
+
+def ngrams(toks: Column, n: int) -> Column:
+    """Word n-grams of an ALREADY-PROJECTED token array, in position
+    order, each the n tokens joined by one space; empty when the array
+    has fewer than n tokens (sequence() would descend). Every word
+    n-gram in the package is built here. Pass a column reference, not
+    an inline tokens(...) expression: subexpression elimination does
+    not reach inside the lambda, so an inline split re-runs per gram."""
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
 
 
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -135,18 +154,6 @@ def exact_fingerprint(text_col: str = "text") -> Column:
     return F.md5(F.lower(F.trim(F.col(text_col))))
 
 
-def _spread(df):
-    """Spread a small-file scan before heavy per-row map work — see
-    operators/spread.spread_small_scan (r11): a single-row-group
-    corpus file otherwise serializes the tokenize/explode/regex map
-    stages on one core; no-op at real scale."""
-    from etl_sql_and_pyspark_developement__spark.operators.spread import (
-        spread_small_scan,
-    )
-
-    return spread_small_scan(df)
-
-
 def repetition_stats(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -176,7 +183,7 @@ def repetition_stats(
     window partitions by doc_id. No global sort, no UDFs.
     """
     toks = tokens(F.col("__t"))
-    base = _spread(
+    base = spread_small_scan(
         df.select(F.col(id_col), F.col(text_col).alias("__t"))
     ).select(
         F.col(id_col),
@@ -187,16 +194,9 @@ def repetition_stats(
     )
 
     def gram_arr(n: int):
-        # sequence() descends when start > stop, so guard short docs.
-        idx = F.when(
-            F.size("_toks") >= n, F.sequence(F.lit(1), F.size("_toks") - (n - 1))
-        ).otherwise(F.array())
         return F.transform(
-            idx,
-            lambda i: F.struct(
-                F.lit(n).alias("n"),
-                F.array_join(F.slice("_toks", i, n), " ").alias("gram"),
-            ),
+            ngrams(F.col("_toks"), n),
+            lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram")),
         )
 
     counts = materialize(
@@ -588,7 +588,7 @@ def heuristic_rules(
     array_distinct/contains), zero shuffles, zero UDFs — adding the
     gate to a pipeline costs no extra pass, same contract as t08.
     """
-    toks = F.split(F.col(text_col), " ")
+    toks = tokens(F.col(text_col))
     n = F.size(toks)
     total_chars = F.length(F.col(text_col)) - (n - F.lit(1))
     n_uniq = F.size(F.array_distinct(toks))
@@ -702,7 +702,7 @@ def char_stats(
         f"(length(__t) - length(replace(__t, '{c}', ''))) AS __c{i}"
         for i, c in enumerate(CHAR_ALPHABET)
     ]
-    base = _spread(
+    base = spread_small_scan(
         df.selectExpr(id_col, f"lower({text_col}) AS __t")
     ).selectExpr(id_col, *cnt_exprs)
     counted = " + ".join(f"__c{i}" for i in range(n))

@@ -2177,14 +2177,13 @@ def d07_components_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide; the component step is unchanged.
     """
     from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        _jaccard,
         dedup_components,
         jaccard_pairs,
     )
 
     docs = table(spark, sf_dir, "documents")
-    pairs = jaccard_pairs(docs, "doc_id", "text").filter(
-        (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))) >= 0.4
-    )
+    pairs = jaccard_pairs(docs, "doc_id", "text").filter(_jaccard() >= 0.4)
     comps = dedup_components(pairs)
     return (
         comps.groupBy("component")
@@ -4382,17 +4381,19 @@ def d18_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles is shingle-keyed. Short docs (<5 tokens) surface with
     n_shingles = 0 via the left join from the full doc list.
 
-    The token array is PROJECTED before the 5-gram lambda reads it:
-    codegen subexpression elimination does not reach inside
-    higher-order-function arguments (the t02 lesson), so an inline
-    split() here is re-evaluated by every element_at — 5 per gram ×
-    ~|tokens| grams ≈ 230 regex splits per document per side, which
-    turned this linear screen into 35s at sf0.1; with the projection
-    it is one split per document.
+    The token array (a regex split of the lowered text, not the
+    single-space textstats.tokens) is PROJECTED before the 5-gram
+    lambda (textstats.ngrams) reads it: codegen subexpression
+    elimination does not reach inside higher-order-function arguments
+    (the t02 lesson), so an inline split() here is re-evaluated per
+    gram — ≈ 230 regex splits per document per side, which turned
+    this linear screen into 35s at sf0.1; with the projection it is
+    one split per document.
     """
     from etl_sql_and_pyspark_developement__spark.operators.spread import (
         spread_small_scan,
     )
+    from etl_sql_and_pyspark_developement__spark.operators.textstats import ngrams
 
     docs = table(spark, sf_dir, "documents")
     # spread before the (deliberately unmaterialized, twice-run)
@@ -4403,21 +4404,7 @@ def d18_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split(F.lower(F.col("text")), r"\s+"), lambda t: t != ""
         ).alias("_toks"),
     )
-    toks = F.col("_toks")
-    grams = F.when(
-        F.size(toks) >= 5,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - 4),
-            lambda i: F.concat_ws(
-                " ",
-                F.element_at(toks, i),
-                F.element_at(toks, i + 1),
-                F.element_at(toks, i + 2),
-                F.element_at(toks, i + 3),
-                F.element_at(toks, i + 4),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = ngrams(F.col("_toks"), 5)
     # Shingles ride as md5 KEYS: fixed 32-byte join/shuffle keys
     # instead of ~40-byte-plus raw 5-gram strings, applied inside the
     # transform so array_distinct dedups hashes directly. The frame is
@@ -7267,6 +7254,7 @@ def d21_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate costs.
     """
     from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        _jaccard,
         jaccard_pairs,
         lsh_candidate_pairs,
         minhash_signed,
@@ -7274,8 +7262,8 @@ def d21_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    # The sample is NOT localCheckpointed (r12): since the r11 sh=
-    # threading, its only real consumer is the shingle pass below
+    # The sample is NOT localCheckpointed (r12): since the r11 shared
+    # shingle pass, its only real consumer is the shingle pass below
     # (truth and candidates both ride `signed`) — the old LC paid an
     # eager job for a frame read exactly once.
     sample = (
@@ -7300,13 +7288,9 @@ def d21_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # signatures + band keys), so truth and candidates share a single
     # eager job.
     signed = materialize(minhash_signed(shingle_sets(sample, "doc_id", "text", 3)))
-    sh = signed.select("doc", F.explode("shingles").alias("shingle"))
     truth = materialize(
-        jaccard_pairs(sample, "doc_id", "text", n=3, sh=sh)
-        .filter(
-            (F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter")))
-            >= 0.5
-        )
+        jaccard_pairs(sample, "doc_id", "text", n=3, sets=signed)
+        .filter(_jaccard() >= 0.5)
         .select("doc_a", "doc_b")
         .withColumn("__true", F.lit(1))
     )

@@ -60,6 +60,11 @@ def get_spark(
         # for readers that don't implement pushFilters — defaulting it
         # removes any run-order dependence between lanes.
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # events.parquet's ts has shipped as INT64 TIMESTAMP(NANOS),
+        # which the reader rejects unless it reads the column as a long
+        # (catalog.normalize_events_ts converts it); a session default,
+        # so no reader flips it mid-session
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .getOrCreate()
@@ -116,6 +121,7 @@ def configure_existing(spark: SparkSession) -> SparkSession:
     # engine default (see get_spark): required before a pushFilters
     # reader can PLAN, harmless for every other source
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark
 
 

@@ -69,33 +69,34 @@ def cached_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(path)
 
 
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Give a raw events frame (batch or stream) the TIMESTAMP `ts`
+    every operator expects. events.parquet has shipped `ts` in three
+    physical layouts across data generations; the session reads INT64
+    TIMESTAMP(NANOS) as a long (spark.sql.legacy.parquet.nanosAsLong,
+    set by get_spark / configure_existing):
+
+    - bigint nanos: truncated to micros by integer `div`, not `/`
+      (nano epochs ~1.7e18 exceed double's 2^53 integer range). That
+      is what DuckDB does loading timestamp[ns] into its µs TIMESTAMP,
+      so oracle parity holds exactly.
+    - timestamp_ntz (TIMESTAMP(MICROS) not adjusted to UTC): the
+      session TZ is pinned to UTC, so reinterpreting the naive value
+      as UTC is value-preserving.
+    - timestamp (adjusted to UTC): already the type; unchanged."""
+    ts_type = dict(df.dtypes)["ts"]
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        # events.parquet has shipped `ts` in two physical layouts across
-        # driver data generations: INT64 TIMESTAMP(NANOS) (which the
-        # Spark reader rejects without the legacy nanosAsLong flag) and
-        # plain TIMESTAMP(MICROS). Handle both so the catalog is stable
-        # across regenerated testdata.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = cached_parquet(spark, f"{sf_dir}/{name}.parquet")
-        ts_type = dict(df.dtypes)["ts"]
-        if ts_type == "bigint":
-            # Integer `div`, not `/`: nano epochs (~1.7e18) exceed
-            # double's 2^53 integer range, so float division would
-            # corrupt the tail. Truncating nanos→micros matches what
-            # DuckDB does loading timestamp[ns] into its µs TIMESTAMP,
-            # so oracle parity holds exactly.
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # Session TZ is pinned to UTC, so reinterpreting the naive
-            # value as UTC is value-preserving and gives every
-            # downstream operator the TIMESTAMP (LTZ) arithmetic they
-            # were built against (ts/epoch casts, interval math).
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return cached_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = cached_parquet(spark, f"{sf_dir}/{name}.parquet")
+    return normalize_events_ts(df) if name == "events" else df
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

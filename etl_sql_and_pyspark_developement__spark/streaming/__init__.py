@@ -1,6 +1,4 @@
 from etl_sql_and_pyspark_developement__spark.streaming.pipeline import (
-    EVENTS_SCHEMA_MICROS_NTZ,
-    EVENTS_SCHEMA_NANOS,
     read_event_stream,
     session_window_agg,
     streaming_dedup,
@@ -8,8 +6,6 @@ from etl_sql_and_pyspark_developement__spark.streaming.pipeline import (
 )
 
 __all__ = [
-    "EVENTS_SCHEMA_MICROS_NTZ",
-    "EVENTS_SCHEMA_NANOS",
     "read_event_stream",
     "windowed_event_counts",
     "session_window_agg",

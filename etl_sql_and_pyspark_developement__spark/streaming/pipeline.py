@@ -19,66 +19,25 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from etl_sql_and_pyspark_developement__spark.session import materialize
+from etl_sql_and_pyspark_developement__spark.sources.catalog import normalize_events_ts
 
-# events.parquet has shipped `ts` in two physical layouts across driver
-# data generations: INT64 TIMESTAMP(NANOS) (declare as long nanos and
-# convert) and TIMESTAMP(MICROS) (declare as timestamp_ntz and cast —
-# session TZ is UTC so the reinterpretation is value-preserving). A
-# file-source stream needs its schema declared up front, so probe the
-# actual layout with a one-off batch footer read, matching
-# sources/catalog.py's branching.
-EVENTS_SCHEMA_NANOS = (
-    "event_id bigint, ts bigint, user_id bigint, event_type string, "
-    "value double, props string"
-)
-EVENTS_SCHEMA_MICROS_NTZ = (
-    "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, "
-    "value double, props string"
-)
-EVENTS_SCHEMA_MICROS_LTZ = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, props string"
-)
-
-_PROBED_TS: dict[str, str] = {}
+_RAW_SCHEMA: dict[str, StructType] = {}
 
 
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming events reader, mirroring catalog.table's THREE-way ts
-    layout handling (nanos-as-long / timestamp_ntz / UTC-adjusted
-    timestamp) so a future events generation shipping TIMESTAMP(MICROS,
-    isAdjustedToUTC=true) is declared correctly instead of silently
-    misread as ntz. The batch-side dtype probe runs once per directory
-    (cached) — not a full directory read per call."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    if sf_dir not in _PROBED_TS:
-        _PROBED_TS[sf_dir] = dict(spark.read.parquet(f"{sf_dir}/").dtypes)["ts"]
-    probe = _PROBED_TS[sf_dir]
-    if probe == "bigint":
-        raw = (
-            spark.readStream.schema(EVENTS_SCHEMA_NANOS)
-            .format("parquet")
-            .load(f"{sf_dir}/")
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    if probe == "timestamp_ntz":
-        raw = (
-            spark.readStream.schema(EVENTS_SCHEMA_MICROS_NTZ)
-            .format("parquet")
-            .load(f"{sf_dir}/")
-        )
-        # Session TZ is UTC: reinterpreting naive-as-UTC is
-        # value-preserving (same rule as catalog.table).
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    # UTC-adjusted TIMESTAMP(MICROS): already the LTZ type every
-    # downstream operator expects.
-    return (
-        spark.readStream.schema(EVENTS_SCHEMA_MICROS_LTZ)
-        .format("parquet")
-        .load(f"{sf_dir}/")
-    )
+    """Streaming events reader. A file-source stream needs its schema
+    declared up front, so it declares the raw schema a one-off batch
+    footer read of the directory found (probed once per directory, not
+    a full read per call), then applies catalog.table's ts normalizer
+    (normalize_events_ts): every events layout reaches the operators
+    as the same TIMESTAMP column in both readers."""
+    if sf_dir not in _RAW_SCHEMA:
+        _RAW_SCHEMA[sf_dir] = spark.read.parquet(f"{sf_dir}/").schema
+    raw = spark.readStream.schema(_RAW_SCHEMA[sf_dir]).format("parquet").load(f"{sf_dir}/")
+    return normalize_events_ts(raw)
 
 
 def windowed_event_counts(events: DataFrame) -> DataFrame:
@@ -163,14 +122,14 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
 
 def sink_foreach_batch_parquet(stream_df: DataFrame, out_dir: str):
     """Exactly-once-style sink via foreachBatch: each micro-batch is
-    written as an idempotent overwrite of its epoch partition."""
+    written as an overwrite of its own epoch partition
+    (`out_dir/__epoch=<id>`), so an epoch replayed after a restart (the
+    sink wrote it, the commit log did not record it) replaces its rows
+    instead of adding a second copy. Readers of `out_dir` see `__epoch`
+    as a partition column."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.withColumn("__epoch", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(out_dir)
-        )
+        batch_df.write.mode("overwrite").parquet(f"{out_dir}/__epoch={epoch_id}")
 
     return stream_df.writeStream.foreachBatch(write_batch)
 

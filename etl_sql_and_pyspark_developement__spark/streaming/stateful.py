@@ -345,9 +345,8 @@ def _ewma_update(
     # Merge ALL Arrow chunks into one day-grouped frame before folding:
     # per-chunk folding would let chunk boundaries interleave days and
     # re-open an already-folded day as a "new" pending day.
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        merged = pd.concat(chunks, ignore_index=True) if len(chunks) > 1 else chunks[0]
+    merged = _merge_chunks(pdfs)
+    if merged is not None:
         days = (
             merged.assign(day=merged["ts"].dt.strftime("%Y-%m-%d"))
             .groupby("day")

@@ -817,21 +817,31 @@ _EDGE_DOCS = [
 
 
 @pytest.fixture(scope="module")
-def parity_sets(spark, sf_dir):
+def parity_corpus(spark, sf_dir):
     """sf0.01 documents (when present beside the test scale) plus the
-    planted edge docs, as one shingle_sets frame."""
+    planted edge docs and a copy of each (id - 100), so every edge
+    text can pair with another doc."""
     import os
 
-    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
-        shingle_sets,
-    )
     from etl_sql_and_pyspark_developement__spark.sources.catalog import table
 
     sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
     docs = table(spark, sf if os.path.isdir(sf) else sf_dir, "documents")
-    edges = spark.createDataFrame(_EDGE_DOCS, "doc_id bigint, text string")
-    corpus = docs.select("doc_id", "text").unionByName(edges)
-    return shingle_sets(corpus, "doc_id", "text", 3).localCheckpoint()
+    edges = spark.createDataFrame(
+        _EDGE_DOCS + [(d - 100, t) for d, t in _EDGE_DOCS],
+        "doc_id bigint, text string",
+    )
+    return docs.select("doc_id", "text").unionByName(edges).localCheckpoint()
+
+
+@pytest.fixture(scope="module")
+def parity_sets(parity_corpus):
+    """The parity corpus as one shingle_sets frame."""
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        shingle_sets,
+    )
+
+    return shingle_sets(parity_corpus, "doc_id", "text", 3).localCheckpoint()
 
 
 def test_minhash_kernel_signatures_match_sql_form(spark, parity_sets):
@@ -943,3 +953,219 @@ def test_minhash_kernel_sliced_and_null_arrow_input(monkeypatch, chunk_shingles)
     sig, ok = _signature_matrix(arr)
     got = [row.tolist() if k else None for row, k in zip(sig, ok)]
     assert got == [ref(d) for d in docs[1:]]
+
+
+# --- Shingle-set parity ----------------------------------------------------
+# The retired exploded-frame form of the Jaccard/containment family —
+# (doc, shingle) rows, set sizes by a count aggregate, and each
+# operator's shared-shingle self-join written inline — lives here ONLY,
+# as the reference the shingle_sets form must match row for row.
+
+
+def _ref_exploded(sets):
+    return sets.select("doc", F.explode("shingles").alias("shingle"))
+
+
+def _ref_sizes(sh):
+    return sh.groupBy("doc").agg(F.count("*").alias("n_sh"))
+
+
+def _ref_with_sizes(pairs, sizes):
+    return pairs.join(
+        sizes.select(F.col("doc").alias("doc_a"), F.col("n_sh").alias("n_a")), "doc_a"
+    ).join(sizes.select(F.col("doc").alias("doc_b"), F.col("n_sh").alias("n_b")), "doc_b")
+
+
+def _ref_ratio():
+    return F.col("inter") / (F.col("n_a") + F.col("n_b") - F.col("inter"))
+
+
+def _ref_shared_self_join(sh, max_shingle_df=None):
+    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df_")).filter(F.col("df_") >= 2)
+    if max_shingle_df is not None:
+        dfreq = dfreq.filter(F.col("df_") <= max_shingle_df)
+    shared = sh.join(dfreq.select("shingle"), "shingle")
+    a, b = shared.alias("a"), shared.alias("b")
+    return (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
+        .groupBy(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .agg(F.count("*").alias("inter"))
+    )
+
+
+def _ref_jaccard_pairs(sets):
+    sh = _ref_exploded(sets)
+    return (
+        _ref_with_sizes(_ref_shared_self_join(sh), _ref_sizes(sh))
+        .withColumn("jaccard", F.round(_ref_ratio(), 6))
+        .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
+    )
+
+
+def _ref_jaccard_pairs_prefix(sets, threshold):
+    from pyspark.sql import Window
+
+    sh = _ref_exploded(sets)
+    sizes = _ref_sizes(sh)
+    freq = sh.groupBy("shingle").agg(F.count("*").alias("df_"))
+    ranked = sh.join(freq, "shingle").join(sizes, "doc").withColumn(
+        "__r", F.row_number().over(Window.partitionBy("doc").orderBy("df_", "shingle"))
+    )
+    prefix_len = F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+    prefixes = ranked.filter(F.col("__r") <= prefix_len).select("doc", "shingle")
+    a, b = prefixes.alias("a"), prefixes.alias("b")
+    cand = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc") < F.col("b.doc")))
+        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+        .distinct()
+    )
+    inter = (
+        cand.join(sh.withColumnRenamed("doc", "doc_a"), "doc_a")
+        .join(sh.withColumnRenamed("doc", "doc_b"), ["doc_b", "shingle"])
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("inter"))
+    )
+    return (
+        _ref_with_sizes(inter, sizes)
+        .withColumn("jaccard", F.round(_ref_ratio(), 6))
+        .filter(_ref_ratio() >= threshold)
+        .select("doc_a", "doc_b", "inter", "n_a", "n_b", "jaccard")
+    )
+
+
+def _ref_contamination_check(df):
+    from pyspark.sql import Window
+
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        shingle_sets,
+    )
+    from etl_sql_and_pyspark_developement__spark.operators.textstats import (
+        exact_fingerprint,
+    )
+
+    test = df.filter(F.col("split") == "test")
+    train = df.filter(F.col("split") != "test")
+    sh_t = _ref_exploded(shingle_sets(test, "doc_id", "text", 3))
+    sh_r = _ref_exploded(shingle_sets(train, "doc_id", "text", 3)).withColumnRenamed(
+        "doc", "train_doc"
+    )
+    shared = (
+        sh_t.join(sh_r, "shingle").groupBy("doc", "train_doc").agg(F.count("*").alias("shared"))
+    )
+    w = Window.partitionBy("doc").orderBy(F.desc("shared"), "train_doc")
+    best = shared.withColumn("__rnk", F.row_number().over(w)).filter(F.col("__rnk") == 1)
+    t_fp = test.select(F.col("doc_id").alias("doc"), exact_fingerprint("text").alias("fp"))
+    r_fp = train.select(exact_fingerprint("text").alias("fp")).distinct().withColumn(
+        "__hit", F.lit(1)
+    )
+    flags = t_fp.join(r_fp, "fp", "left").select(
+        "doc", F.coalesce(F.col("__hit"), F.lit(0)).alias("exact_dup")
+    )
+    return (
+        best.join(_ref_sizes(sh_t), "doc")
+        .join(flags, "doc")
+        .select(
+            "doc",
+            "n_sh",
+            "train_doc",
+            "shared",
+            F.round(F.col("shared") / F.col("n_sh"), 6).alias("containment"),
+            "exact_dup",
+        )
+    )
+
+
+def _ref_containment_pairs(sets, threshold_ppm, max_shingle_df):
+    sh = _ref_exploded(sets)
+    small = "n_a < n_b OR (n_a = n_b AND doc_a < doc_b)"
+    return (
+        _ref_with_sizes(_ref_shared_self_join(sh, max_shingle_df), _ref_sizes(sh))
+        .select(
+            F.expr(f"CASE WHEN {small} THEN doc_a ELSE doc_b END").alias("doc_small"),
+            F.expr(f"CASE WHEN {small} THEN doc_b ELSE doc_a END").alias("doc_big"),
+            "inter",
+            F.least("n_a", "n_b").alias("n_small"),
+            F.greatest("n_a", "n_b").alias("n_big"),
+            F.expr("1000000 * inter DIV least(n_a, n_b)").alias("containment_ppm"),
+        )
+        .filter(F.col("containment_ppm") >= threshold_ppm)
+    )
+
+
+def _same_rows(got, want):
+    from collections import Counter
+
+    assert got.dtypes == want.dtypes
+    g = Counter(tuple(r) for r in got.collect())
+    w = Counter(tuple(r) for r in want.collect())
+    assert g == w, (len(g), len(w), list((g - w).items())[:3], list((w - g).items())[:3])
+    return g
+
+
+def test_jaccard_pairs_match_exploded_form(spark, parity_sets):
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import jaccard_pairs
+
+    rows = _same_rows(
+        jaccard_pairs(None, "", "", sets=parity_sets), _ref_jaccard_pairs(parity_sets)
+    )
+    # every planted edge text that can shingle-match its copy does:
+    # '' , the short doc, the repeated-shingle doc, the non-ASCII doc
+    # and the single token; the NULL text never joins
+    edge_pairs = {(a, b) for a, b, *_ in rows if b < 0}
+    assert {(d - 100, d) for d in (-2, -3, -4, -5, -6, -7)} <= edge_pairs
+    assert not {p for p in edge_pairs if -1 in p or -101 in p}
+
+
+@pytest.mark.parametrize("tau", [0.3, 0.5, 0.8])
+def test_jaccard_pairs_prefix_matches_exploded_form(spark, parity_sets, tau):
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        jaccard_pairs_prefix,
+    )
+
+    _same_rows(
+        jaccard_pairs_prefix(None, "", "", tau, sets=parity_sets),
+        _ref_jaccard_pairs_prefix(parity_sets, tau),
+    )
+
+
+def test_contamination_check_matches_exploded_form(spark, parity_corpus):
+    """Edge docs are test docs and their copies train docs, next to a
+    1-in-4 test split of the corpus."""
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        contamination_check,
+    )
+
+    keyed = parity_corpus.withColumn(
+        "split",
+        F.when(
+            ((F.col("doc_id") < 0) & (F.col("doc_id") > -100))
+            | ((F.col("doc_id") >= 0) & (F.col("doc_id") % 4 == 0)),
+            F.lit("test"),
+        ).otherwise(F.lit("train")),
+    )
+    rows = _same_rows(
+        contamination_check(keyed, "doc_id", "text"), _ref_contamination_check(keyed)
+    )
+    assert {r[0] for r in rows} >= {-2, -3, -4, -5, -6, -7}
+
+
+@pytest.mark.parametrize(
+    "threshold_ppm,max_shingle_df", [(800_000, None), (0, None), (0, 3), (800_000, 3)]
+)
+def test_containment_pairs_match_exploded_form(
+    spark, parity_corpus, parity_sets, threshold_ppm, max_shingle_df
+):
+    from etl_sql_and_pyspark_developement__spark.operators.dedup import (
+        containment_pairs,
+    )
+
+    _same_rows(
+        containment_pairs(
+            parity_corpus,
+            "doc_id",
+            "text",
+            threshold_ppm=threshold_ppm,
+            max_shingle_df=max_shingle_df,
+        ),
+        _ref_containment_pairs(parity_sets, threshold_ppm, max_shingle_df),
+    )

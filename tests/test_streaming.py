@@ -216,6 +216,102 @@ def test_stream_static_enrich_and_foreach_batch(spark, sf_dir, events_dir, tmp_p
         assert expected[key] == val
 
 
+def test_foreach_batch_sink_replayed_epoch_writes_once(spark, sf_dir, events_dir, tmp_path):
+    """st05's foreachBatch sink overwrites its epoch's partition: after
+    the last commit-log entry is deleted, the restarted query replays
+    that epoch, and the sink must still hold exactly one copy of it.
+    No-data micro-batches are off, so the last epoch is the one that
+    carries the rows (a trailing watermark-only epoch writes none)."""
+    import os
+    from collections import Counter
+
+    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
+    from etl_sql_and_pyspark_developement__spark.streaming.pipeline import (
+        read_event_stream,
+        sink_foreach_batch_parquet,
+        stream_static_enrich,
+    )
+
+    dim = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+
+    def run():
+        stream = stream_static_enrich(read_event_stream(spark, events_dir), dim)
+        q = (
+            sink_foreach_batch_parquet(stream, out)
+            .outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .start()
+        )
+        q.processAllAvailable()
+        q.stop()
+        return Counter(tuple(r) for r in spark.read.parquet(out).collect())
+
+    with conf_scope(spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}):
+        first = run()
+        assert first and max(first.values()) == 1
+        last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
+        for f in (str(last), f".{last}.crc"):
+            if os.path.exists(f"{ckpt}/commits/{f}"):
+                os.remove(f"{ckpt}/commits/{f}")
+        assert run() == first
+
+
+def test_events_nanos_layout_reads_truncated_micros(spark, tmp_path):
+    """events.parquet has shipped ts as INT64 TIMESTAMP(NANOS); every
+    committed file is TIMESTAMP(MICROS), so this writes a nanos file.
+    catalog.table and read_event_stream must both return the values
+    truncated to micros, and the session conf that lets the reader
+    open the file is set by configure_existing (and get_spark), not by
+    whichever lane reads events first."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from etl_sql_and_pyspark_developement__spark.session import configure_existing
+    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
+    from etl_sql_and_pyspark_developement__spark.streaming.pipeline import (
+        read_event_stream,
+        run_to_memory,
+    )
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    with conf_scope(spark, {key: "false"}):
+        configure_existing(spark)
+        assert spark.conf.get(key) == "true"
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_060_000_000_999, 86_400_000_000_001]
+    d = tmp_path / "nanos_events"
+    d.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(ns, pa.timestamp("ns")),
+                "user_id": pa.array([7, 8, 9], pa.int64()),
+                "event_type": ["view", "click", "purchase"],
+                "value": [1.5, 2.5, 3.5],
+                "props": ["{}", "{}", "{}"],
+            }
+        ),
+        d / "events.parquet",
+    )
+    assert pq.read_schema(d / "events.parquet").field("ts").type == pa.timestamp("ns")
+    want = {i: n // 1000 for i, n in zip([1, 2, 3], ns)}
+
+    batch = table(spark, str(d), "events")
+    assert dict(batch.dtypes)["ts"] == "timestamp"
+    got = {r[0]: r[1] for r in batch.select("event_id", F.unix_micros("ts")).collect()}
+    assert got == want
+
+    stream = read_event_stream(spark, str(d))
+    assert dict(stream.dtypes)["ts"] == "timestamp"
+    run_to_memory(
+        stream.select("event_id", F.unix_micros("ts").alias("us")), "nanos_events_out", "append"
+    )
+    got = {r.event_id: r.us for r in spark.sql("SELECT * FROM nanos_events_out").collect()}
+    assert got == want
+
+
 def test_stream_stream_interval_join(spark, sf_dir, events_dir):
     """st06: stream-stream interval join must match the equivalent
     batch interval join exactly (inner join, bounded interval)."""
