@@ -23,45 +23,15 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # Entries with no driver CORRECTNESS row for their *current* code —
 # listed FIRST so a driver that samples 50 entries per round covers
-# the unproven backlog before re-proving already-green rows.
-# Round-10 backlog: every lane round 10 added or touched, with the
-# reason (prior rounds' entries are pruned once their fresh row
-# lands — every r9 entry is green in CORRECTNESS_r09.json).
+# the unproven backlog before re-proving already-green rows. Entries
+# are pruned once their fresh row lands (every earlier entry is green
+# in CORRECTNESS_r11.json and CORRECTNESS_r12.json).
 _NEEDS_DRIVER_ROW = [
-    # round-10 addition: equi-height histogram CBO stats lane
-    # (skew-aware estimates + the broadcast-decision flip)
-    "q133_histogram_stats",
-    # round-10 addition: one-scan multi-output ETL fan-out (persist +
-    # atomic 3-table commit; scan-count plan-asserted, each output
-    # value-verified by the consumer rollup)
-    "q134_multi_output_etl",
-    # round-10 addition: ALTER TABLE ADD COLUMNS DEFAULT evolution
-    # (zero-IO schema change; exists/current-default populations
-    # value-verified, mtimes pinned untouched)
-    "q135_default_columns",
-    # round-10 addition: in-memory cache batch pruning (the cache-tier
-    # zone map — q108's discipline on cached columnar batches; scoped
-    # cache, eager in-scope execution)
-    "q136_cache_zone_pruning",
-    # round-10 addition: grouped-agg Arrow UDF rung (in-row
-    # UDF==builtin equality; mix-refusal and window-form pinned)
-    "q137_grouped_agg_udf",
-    # round-10 addition: unicode hygiene audit (planted fault fixture
-    # replayed by the oracle; NFC via cross-engine-verified Arrow UDF)
-    "t26_unicode_hygiene",
-    # round-10 addition: ANSI arithmetic-safety ladder (plain sum
-    # raises / try_* NULLs / DECIMAL widens — all three regimes on
-    # one planted-boundary fixture, HUGEINT-replayed oracle)
-    "q138_try_arithmetic",
-    # round-10 change: q130's oracle n_gen2 now replays count(source)
-    # exactly (NULL-source gen-2 rows skipped on both sides — ADVICE
-    # r9); fresh row re-proves the pair
-    "q130_schema_evolution_read",
-    # round-10 change: retention sweep renames aside to an
-    # underscore-prefixed trash name (invisible to partition
-    # discovery mid-sweep — ADVICE r9) and heals orphans; fresh row
-    # re-proves the consumer lane
-    "q128_retention_delete",
+    # ewma_stats now builds its guarded milli series through
+    # fold._milli_series (same expression text, same plan)
+    "q72_ewma_smoothing",
+    # holt_stats builds the same series through fold._milli_series
+    "q86_holt_forecast",
 ]
 
 

@@ -34,7 +34,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["capped_running_total", "ewma_stats", "round_half_up"]
+__all__ = [
+    "capped_fold",
+    "capped_running_total",
+    "ewma_stats",
+    "holt_stats",
+    "round_half_up",
+]
 
 
 def round_half_up(x: float, digits: int = 2) -> float:
@@ -52,6 +58,25 @@ def round_half_up(x: float, digits: int = 2) -> float:
 
     q = Decimal(1).scaleb(-digits)
     return float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
+
+
+def capped_fold(
+    values, cap: float, bal: float = 0.0, n: int = 0, ncap: int = 0
+) -> tuple[float, int, int]:
+    """The sequential capped fold: ``bal = min(cap, bal + v)`` for each
+    ``v`` of ``values`` in order, from state (bal, n, ncap). Returns the
+    new state; ``n`` counts the values and ``ncap`` the clamps. The
+    general-sign arm below and the streaming twins st21/st25 all step
+    through it, so they share one IEEE add/compare sequence."""
+    for v in values:
+        n += 1
+        s = bal + float(v)
+        if s > cap:
+            ncap += 1
+            bal = cap
+        else:
+            bal = s
+    return bal, n, ncap
 
 
 def capped_running_total(
@@ -111,18 +136,11 @@ def capped_running_total(
 
     def fold(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf.sort_values(order)
-        bal, ncap = 0.0, 0
-        for val in pdf[value_col]:
-            s = bal + float(val)
-            if s > cap:
-                ncap += 1
-                bal = cap
-            else:
-                bal = s
+        bal, n, ncap = capped_fold(pdf[value_col], cap)
         return pd.DataFrame(
             {
                 key: [pdf[key].iloc[0]],
-                "n_events": [len(pdf)],
+                "n_events": [n],
                 "n_capped": [ncap],
                 "final_balance": [round_half_up(bal)],
             }
@@ -133,6 +151,31 @@ def capped_running_total(
         fold,
         f"{key} {key_type}, n_events bigint, n_capped bigint, "
         "final_balance double",
+    )
+
+
+def _milli_series(
+    daily: DataFrame, key: str, order: str, cnt: str, who: str
+) -> DataFrame:
+    """Per-key (key, x): the key's ``cnt`` values sorted by ``order``,
+    in milli-units — the series ewma_stats and holt_stats fold. A value
+    outside [0, 2^31) milli-units raises in-plan, naming ``who``: the
+    packed lanes hold 31 bits, and a negative value would corrupt them
+    silently (negative DIV truncates toward zero and the low lane
+    underflows into the high one)."""
+    guard = (
+        f"CASE WHEN CAST(e.{cnt} AS BIGINT) < 0"
+        f" OR CAST(e.{cnt} AS BIGINT) * 1000 >= 2147483648"
+        f" THEN CAST(raise_error(concat('{who}: value ',"
+        f" CAST(e.{cnt} AS STRING),"
+        f" ' outside the [0, 2^31) milli-unit packing budget')) AS BIGINT)"
+    )
+    return daily.groupBy(key).agg(
+        F.expr(
+            f"transform(sort_array(collect_list(struct({order}, {cnt}))),"
+            f" e -> {guard}"
+            f"      ELSE CAST(e.{cnt} AS BIGINT) * 1000 END)"
+        ).alias("x")
     )
 
 
@@ -165,25 +208,9 @@ def ewma_stats(
     sequences use per-partition associative composition of the affine
     maps instead (module docstring).
     """
-    # 2^32 = 4294967296; budget: 0 ≤ s < 2^31 milli-units. EWMA of
-    # values in [0, M] stays in [0, M], so guarding inputs covers both
-    # lanes end-to-end. Negative inputs must ALSO raise: a negative
-    # lane value silently corrupts the packing (negative DIV truncates
-    # toward zero and the low lane underflows into the high lane).
-    guard = (
-        f"CASE WHEN CAST(e.{cnt} AS BIGINT) < 0"
-        f" OR CAST(e.{cnt} AS BIGINT) * 1000 >= 2147483648"
-        f" THEN CAST(raise_error(concat('ewma_stats: value ',"
-        f" CAST(e.{cnt} AS STRING),"
-        f" ' outside the [0, 2^31) milli-unit packing budget')) AS BIGINT)"
-    )
-    series = daily.groupBy(key).agg(
-        F.expr(
-            f"transform(sort_array(collect_list(struct({order}, {cnt}))),"
-            f" e -> {guard}"
-            f"      ELSE CAST(e.{cnt} AS BIGINT) * 1000 END)"
-        ).alias("x")
-    )
+    # 2^32 = 4294967296. EWMA of values in [0, M] stays in [0, M], so
+    # the input guard covers both lanes end-to-end.
+    series = _milli_series(daily, key, order, cnt, "ewma_stats")
     # Lane A folds (s, peak), lane B folds (s, spikes); both seed from
     # the first element (s = peak = x₁, spikes = 0 — the same init
     # convention DuckDB's list_reduce applies natively).
@@ -253,20 +280,7 @@ def holt_stats(
     Scale: bounded series per key (calendar days — the t20 sorted-
     fold discipline), one groupBy + one codegen fold.
     """
-    guard = (
-        f"CASE WHEN CAST(e.{cnt} AS BIGINT) < 0"
-        f" OR CAST(e.{cnt} AS BIGINT) * 1000 >= 2147483648"
-        f" THEN CAST(raise_error(concat('holt_stats: value ',"
-        f" CAST(e.{cnt} AS STRING),"
-        f" ' outside the [0, 2^31) milli-unit packing budget')) AS BIGINT)"
-    )
-    series = daily.groupBy(key).agg(
-        F.expr(
-            f"transform(sort_array(collect_list(struct({order}, {cnt}))),"
-            f" e -> {guard}"
-            f"      ELSE CAST(e.{cnt} AS BIGINT) * 1000 END)"
-        ).alias("x")
-    )
+    series = _milli_series(daily, key, order, cnt, "holt_stats")
     # K = 2^26 lane width, BIAS = 2^25.
     l_prev = "(acc DIV 67108864)"
     b_prev = "(acc % 67108864 - 33554432)"

@@ -120,18 +120,21 @@ def stream_static_enrich(events: DataFrame, dim: DataFrame) -> DataFrame:
     )
 
 
+def _write_epoch(df: DataFrame, out_dir: str, epoch_id: int) -> None:
+    """The one foreachBatch parquet write: overwrite the epoch's own
+    partition `out_dir/__epoch=<id>`, so an epoch replayed after a
+    restart (the sink wrote it, the commit log did not record it)
+    replaces its rows instead of adding a second copy. Readers of
+    `out_dir` see `__epoch` as a partition column."""
+    df.write.mode("overwrite").parquet(f"{out_dir}/__epoch={epoch_id}")
+
+
 def sink_foreach_batch_parquet(stream_df: DataFrame, out_dir: str):
-    """Exactly-once-style sink via foreachBatch: each micro-batch is
-    written as an overwrite of its own epoch partition
-    (`out_dir/__epoch=<id>`), so an epoch replayed after a restart (the
-    sink wrote it, the commit log did not record it) replaces its rows
-    instead of adding a second copy. Readers of `out_dir` see `__epoch`
-    as a partition column."""
-
-    def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(f"{out_dir}/__epoch={epoch_id}")
-
-    return stream_df.writeStream.foreachBatch(write_batch)
+    """Exactly-once-style sink via foreachBatch: each micro-batch goes
+    through `_write_epoch`."""
+    return stream_df.writeStream.foreachBatch(
+        lambda batch_df, epoch_id: _write_epoch(batch_df, out_dir, epoch_id)
+    )
 
 
 def _attribution_interval_join(
@@ -287,7 +290,7 @@ def sink_stream_neardup(doc_stream: DataFrame, corpus: DataFrame, out_dir: str):
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         handles: list = []
         survivors = neardup_screen(batch_df, index, cache_handles=handles)
-        survivors.write.mode("append").parquet(out_dir)
+        _write_epoch(survivors, out_dir, epoch_id)
         for h in handles:  # write materialized the screen; drop caches
             h.unpersist()
 
@@ -318,7 +321,7 @@ def sink_stream_embed_neardup(vec_stream: DataFrame, corpus: DataFrame, out_dir:
         survivors = embedding_neardup_screen(
             batch_df, index, cache_handles=handles
         )
-        survivors.write.mode("append").parquet(out_dir)
+        _write_epoch(survivors, out_dir, epoch_id)
         for h in handles:
             h.unpersist()
 
@@ -351,9 +354,7 @@ def sink_stream_boilerplate(doc_stream: DataFrame, corpus: DataFrame, out_dir: s
     boiler.count()  # materialize once, before the first batch
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
-        boilerplate_apply(batch_df, boiler).write.mode("append").parquet(
-            out_dir
-        )
+        _write_epoch(boilerplate_apply(batch_df, boiler), out_dir, epoch_id)
 
     return doc_stream.writeStream.foreachBatch(process)
 
@@ -719,7 +720,7 @@ def sink_stream_trending(
 
 def sink_stream_sketches(events: DataFrame, out_dir: str, lg_k: int = 12):
     """st22: streaming MERGEABLE-SKETCH maintenance (q51's merge axis
-    live): each micro-batch appends per-day Datasketches HLL PARTIALS
+    live): each micro-batch writes per-day Datasketches HLL PARTIALS
     of the distinct-user set — tiny binary sketches, never raw ids —
     and ``read_sketch_state`` union-merges them into per-day and
     global estimates. This is the lakehouse pattern that makes COUNT
@@ -738,16 +739,11 @@ def sink_stream_sketches(events: DataFrame, out_dir: str, lg_k: int = 12):
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        (
-            batch_df.groupBy(F.to_date("ts").alias("day"))
-            .agg(
-                F.hll_sketch_agg("user_id", F.lit(lg_k)).alias("sk"),
-                F.count(F.lit(1)).alias("n_events"),
-            )
-            .withColumn("epoch", F.lit(epoch_id).cast("bigint"))
-            .write.mode("append")
-            .parquet(out_dir)
+        partials = batch_df.groupBy(F.to_date("ts").alias("day")).agg(
+            F.hll_sketch_agg("user_id", F.lit(lg_k)).alias("sk"),
+            F.count(F.lit(1)).alias("n_events"),
         )
+        _write_epoch(partials, out_dir, epoch_id)
 
     return events.writeStream.foreachBatch(process).outputMode("append")
 
@@ -912,7 +908,7 @@ def sink_stream_temporal_enrich(
             right_ts=right_ts,
             payload={"segment": "segment", "valid_from": "valid_from"},
         )
-        enriched.write.mode("append").parquet(out_dir)
+        _write_epoch(enriched, out_dir, epoch_id)
 
     return fact_stream.writeStream.foreachBatch(process)
 
@@ -928,7 +924,7 @@ def sink_stream_quarantine(
     contract live: a JSONL feed is parsed PERMISSIVE with a
     _corrupt_record marker as it ARRIVES; each micro-batch splits
     into clean rows (marker dropped) and quarantined raw lines, each
-    appended to its own sink — the never-fail / never-silently-null
+    written to its own sink — the never-fail / never-silently-null
     property enforced at stream speed, where a single malformed line
     would otherwise kill a continuous ingest query.
 
@@ -954,18 +950,12 @@ def sink_stream_quarantine(
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df = batch_df.cache()
         try:
-            (
-                batch_df.filter(F.col(marker).isNull())
-                .drop(marker)
-                .write.mode("append")
-                .parquet(clean_dir)
+            clean = batch_df.filter(F.col(marker).isNull()).drop(marker)
+            _write_epoch(clean, clean_dir, epoch_id)
+            bad = batch_df.filter(F.col(marker).isNotNull()).select(
+                F.col(marker).alias("raw_line")
             )
-            (
-                batch_df.filter(F.col(marker).isNotNull())
-                .select(F.col(marker).alias("raw_line"))
-                .write.mode("append")
-                .parquet(quarantine_dir)
-            )
+            _write_epoch(bad, quarantine_dir, epoch_id)
         finally:
             batch_df.unpersist()
 

@@ -1,25 +1,30 @@
-"""Custom stateful streaming operator via applyInPandasWithState:
-per-user running statistics with anomaly flagging.
+"""Stateful streaming operators: per-key state carried across
+micro-batches with applyInPandasWithState (st25: transformWithState).
 
-This is the pattern for operators Structured Streaming's built-ins
-can't express: arbitrary per-key state (here Welford-style running
-count/mean/M2) updated batch-by-batch.
+Most of them are ordered folds that equal a batch twin bit for bit
+(st21 ↔ q61, st23 ↔ q72, st28 ↔ q80, st29 ↔ q86), and they share one
+fold vocabulary:
 
-The reference's "Real-time Personalization Effectiveness" tracks
-per-user engagement against their history — this is that computation
-expressed as a native streaming operator instead of a batch self-join.
+- ``_merge_chunks(pdfs, by)`` is the only chunk merge and sort. Its
+  docstring holds the order contract: a fold sorts its key's whole
+  micro-batch once, and batches fold in arrival order.
+- ``_roll_days`` is the one pending-day roll of the day-bucketed folds
+  st23 (EWMA), st28 (CUSUM) and st29 (Holt), whose state is
+  ``(pend_day, pend_cnt, *acc, ndays)``; ``_fold_pending`` folds the
+  pending day, for good or for a provisional view.
+- ``fold.capped_fold`` is the one clamp loop, shared by st21, st25 and
+  q61's general-sign arm.
 
-State expiry: pass `expire_ms` to arm ProcessingTimeTimeout-based
-eviction (bounds state at 100 TB/day rates). Note that an armed
-processing-time timeout makes the engine schedule perpetual
-timeout-evaluation micro-batches, so `processAllAvailable()`-driven
-tests/smoke runs must use the default expire_ms=None (NoTimeout).
+Order-free folds (st24's binning, st27/st32's min-k, st31's BIT_OR)
+read their chunks as they come. st04 (Welford running mean/std with
+3-sigma anomaly flags) keeps its state for the query's lifetime
+(NoTimeout).
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterable
+from collections.abc import Callable, Iterable
 
 import pandas as pd
 
@@ -28,22 +33,31 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-from etl_sql_and_pyspark_developement__spark.operators.fold import round_half_up
+from etl_sql_and_pyspark_developement__spark.operators.fold import (
+    capped_fold,
+    round_half_up,
+)
 
 
-def _merge_chunks(pdfs: Iterable[pd.DataFrame]) -> pd.DataFrame | None:
-    """Concat a key's Arrow chunks into ONE frame (None if all empty).
+def _merge_chunks(
+    pdfs: Iterable[pd.DataFrame], by: str | list[str] | None = None
+) -> pd.DataFrame | None:
+    """Concat a key's Arrow chunks into one frame (None if all are
+    empty) and, given ``by``, sort it once.
 
-    Order-sensitive folds must sort the WHOLE micro-batch once: a
-    key's batch spanning multiple Arrow record batches (default 10k
-    rows) sorted per-chunk folds in a non-globally-sorted order and
-    diverges from the batch twin's IEEE sequence."""
+    A key's micro-batch can span several Arrow record batches (10k
+    rows each by default), and sorted chunks are not a sorted batch:
+    an order-sensitive fold that sorted per chunk would diverge from
+    its batch twin. So every such fold reads its batch through here,
+    merged first and sorted once. The sort is stable, so rows tied on
+    ``by`` keep their arrival order. Across micro-batches a fold runs
+    in batch order."""
     chunks = [pdf for pdf in pdfs if len(pdf)]
     if not chunks:
         return None
-    return chunks[0] if len(chunks) == 1 else pd.concat(
-        chunks, ignore_index=True
-    )
+    merged = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    return merged if by is None else merged.sort_values(by, kind="stable")
+
 
 OUTPUT_SCHEMA = (
     "user_id bigint, n_events bigint, mean_value double, std_value double, "
@@ -52,65 +66,49 @@ OUTPUT_SCHEMA = (
 STATE_SCHEMA = "count bigint, mean double, m2 double"
 
 
-def _make_update_fn(expire_ms: int | None):
-    def update(
-        key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
-    ) -> Iterable[pd.DataFrame]:
-        (user_id,) = key
-        if expire_ms is not None and state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            count, mean, m2 = state.get
-        else:
-            count, mean, m2 = 0, 0.0, 0.0
-        anomalies = 0
-        for pdf in pdfs:
-            for v in pdf["value"]:
-                v = float(v)
-                # flag before updating: anomaly = outside 3 sigma of history
-                if count >= 10:
-                    std = math.sqrt(m2 / (count - 1)) if count > 1 else 0.0
-                    if std > 0 and abs(v - mean) > 3 * std:
-                        anomalies += 1
-                count += 1
-                delta = v - mean
-                mean += delta / count
-                m2 += delta * (v - mean)
-        state.update((count, mean, m2))
-        if expire_ms is not None:
-            state.setTimeoutDuration(expire_ms)
-        std = math.sqrt(m2 / (count - 1)) if count > 1 else 0.0
-        yield pd.DataFrame(
-            {
-                "user_id": [user_id],
-                "n_events": [count],
-                "mean_value": [mean],
-                "std_value": [std],
-                "n_anomalies": [anomalies],
-            }
-        )
-
-    return update
-
-
-def running_user_stats(events: DataFrame, expire_ms: int | None = None) -> DataFrame:
-    """Per-user running mean/std + 3-sigma anomaly counts, maintained
-    as keyed state across micro-batches."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if expire_ms is not None
-        else GroupStateTimeout.NoTimeout
+def _user_stats_update(
+    key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    (user_id,) = key
+    count, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
+    anomalies = 0
+    for pdf in pdfs:
+        for v in pdf["value"]:
+            v = float(v)
+            # flag before updating: anomaly = outside 3 sigma of history
+            if count >= 10:
+                std = math.sqrt(m2 / (count - 1)) if count > 1 else 0.0
+                if std > 0 and abs(v - mean) > 3 * std:
+                    anomalies += 1
+            count += 1
+            delta = v - mean
+            mean += delta / count
+            m2 += delta * (v - mean)
+    state.update((count, mean, m2))
+    std = math.sqrt(m2 / (count - 1)) if count > 1 else 0.0
+    yield pd.DataFrame(
+        {
+            "user_id": [user_id],
+            "n_events": [count],
+            "mean_value": [mean],
+            "std_value": [std],
+            "n_anomalies": [anomalies],
+        }
     )
+
+
+def running_user_stats(events: DataFrame) -> DataFrame:
+    """st04: per-user running mean/std + 3-sigma anomaly counts,
+    maintained as keyed state across micro-batches."""
     return (
         events.select("user_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
-            _make_update_fn(expire_ms),
+            _user_stats_update,
             OUTPUT_SCHEMA,
             STATE_SCHEMA,
             "update",
-            timeout,
+            GroupStateTimeout.NoTimeout,
         )
     )
 
@@ -129,17 +127,11 @@ def _make_budget_fn(budget: int):
         (source,) = key
         spent = state.get[0] if state.exists else 0
         out = {k: [] for k in ("doc_id", "source", "ws_tokens", "spent_after", "admitted")}
-        # Deterministic intra-batch order: doc_id ascending (the
-        # stream's arrival order within a micro-batch is not
-        # contractual; sorting makes re-runs identical). Merge ALL
-        # Arrow chunks first — admission is a prefix-dependent fold,
-        # so a per-chunk sort is not a global sort.
-        merged = _merge_chunks(pdfs)
+        # doc_id order: arrival order within a micro-batch is not
+        # contractual, and admission is a prefix fold.
+        merged = _merge_chunks(pdfs, by="doc_id")
         if merged is not None:
-            for doc_id, toks in sorted(
-                zip(merged["doc_id"], merged["ws_tokens"]),
-                key=lambda t: t[0],
-            ):
+            for doc_id, toks in zip(merged["doc_id"], merged["ws_tokens"]):
                 toks = int(toks)
                 admitted = 1 if spent + toks <= budget else 0
                 if admitted:
@@ -194,13 +186,11 @@ def _locf_update(
     (user,) = key
     last_val = state.get[0] if state.exists else None
     out = {k: [] for k in ("event_id", "ts", "filled_value", "was_filled")}
-    # Event-time order within the batch (arrival order is not
-    # contractual); cross-batch order is the file/source order. Merge
-    # ALL Arrow chunks first — the carry is order-sensitive.
-    merged = _merge_chunks(pdfs)
+    merged = _merge_chunks(pdfs, by=["ts", "event_id"])
     if merged is not None:
-        pdf = merged.sort_values(["ts", "event_id"])
-        for eid, ts, val in zip(pdf["event_id"], pdf["ts"], pdf["value"]):
+        for eid, ts, val in zip(
+            merged["event_id"], merged["ts"], merged["value"]
+        ):
             missing = pd.isna(val)
             if missing:
                 filled = last_val
@@ -252,39 +242,35 @@ CAPPED_OUTPUT_SCHEMA = (
 CAPPED_STATE_SCHEMA = "bal double, n bigint, ncap bigint"
 
 
+def _capped_batch(
+    user, pdfs: Iterable[pd.DataFrame], prev: tuple, cap: float
+) -> tuple[tuple, pd.DataFrame]:
+    """st21/st25's batch step: fold the user's non-NULL purchases, in
+    (ts, event_id) order, into prev = (bal, n, ncap) with q61's clamp
+    step. Returns the new state and the output row."""
+    bal, n, ncap = prev
+    merged = _merge_chunks(pdfs, by=["ts", "event_id"])
+    if merged is not None:
+        bal, n, ncap = capped_fold(merged["value"].dropna(), cap, bal, n, ncap)
+    return (bal, n, ncap), pd.DataFrame(
+        {
+            "user_id": [user],
+            "n_purchases": [n],
+            "n_capped": [ncap],
+            # q61's HALF_UP (Spark F.round), not Python's banker's round().
+            "balance": [round_half_up(bal)],
+        }
+    )
+
+
 def _make_capped_fn(cap: float):
     def update(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
     ) -> Iterable[pd.DataFrame]:
-        (user,) = key
-        bal, n, ncap = state.get if state.exists else (0.0, 0, 0)
-        # Merge ALL Arrow chunks, THEN sort once — the clamp fold is
-        # order-sensitive, so a per-chunk sort diverges from q61's
-        # batch fold when a key's batch spans chunks.
-        merged = _merge_chunks(pdfs)
-        if merged is not None:
-            pdf = merged.sort_values(["ts", "event_id"])
-            for v in pdf["value"]:
-                if pd.isna(v):
-                    continue
-                n += 1
-                s = bal + float(v)
-                if s > cap:
-                    ncap += 1
-                    bal = cap
-                else:
-                    bal = s
-        state.update((bal, n, ncap))
-        yield pd.DataFrame(
-            {
-                "user_id": [user],
-                "n_purchases": [n],
-                "n_capped": [ncap],
-                # Same HALF_UP helper as q61's pandas arm (Spark
-                # F.round semantics), not Python banker's round().
-                "balance": [round_half_up(bal)],
-            }
-        )
+        prev = state.get if state.exists else (0.0, 0, 0)
+        new, out = _capped_batch(key[0], pdfs, prev, cap)
+        state.update(new)
+        yield out
 
     return update
 
@@ -319,7 +305,63 @@ EWMA_STATE_SCHEMA = (
     "spikes bigint, ndays int"
 )
 
-_EWMA_BUDGET = 1 << 31  # milli-units — the fold.ewma_stats guard
+_MILLI_BUDGET = 1 << 31  # fold._milli_series' input guard, in milli-units
+
+
+def _fold_pending(st: tuple, step: Callable) -> tuple:
+    """(*acc, ndays) of a day-bucketed fold's state st = (pend_day,
+    pend_cnt, *acc, ndays) with its pending day folded in, if it has
+    one: acc = step(*acc, pend_cnt * 1000)."""
+    pend_day, pend_cnt, *acc, ndays = st
+    if pend_day is None:
+        return (*acc, ndays)
+    return (*step(*acc, pend_cnt * 1000), ndays + 1)
+
+
+def _roll_days(
+    pdfs: Iterable[pd.DataFrame],
+    st: tuple,
+    step: Callable,
+    who: str,
+    guard: str | None = None,
+) -> tuple:
+    """Roll a key's micro-batch into its day-bucketed fold's state
+    st = (pend_day, pend_cnt, *acc, ndays) and return the new state.
+
+    The merged batch is counted per day. The pending day is the latest
+    day seen: more events for it add to its count, and a later day
+    folds it for good (`_fold_pending`) and becomes the pending day.
+    An earlier day has been folded already, so it raises rather than
+    count twice; a day folds only once a later one arrives, so late
+    events for the pending day still count. ``guard`` names the batch
+    twin whose [0, 2^31) milli-unit input budget the pending count
+    must keep."""
+    pend_day, pend_cnt, *acc, ndays = st
+    merged = _merge_chunks(pdfs)
+    days = (
+        {}
+        if merged is None
+        else merged.groupby(merged["ts"].dt.strftime("%Y-%m-%d")).size()
+    )
+    for day, cnt in days.items():
+        if pend_day is not None and day < pend_day:
+            raise ValueError(
+                f"{who}: out-of-order day {day!r} arrived after "
+                f"{pend_day!r} was already pending — that day is "
+                "permanently folded and cannot absorb late events; feed "
+                "the stream in non-decreasing day order (or backfill "
+                "late data through the batch twin)"
+            )
+        if day != pend_day:
+            *acc, ndays = _fold_pending((pend_day, pend_cnt, *acc, ndays), step)
+            pend_day, pend_cnt = day, 0
+        pend_cnt += int(cnt)
+        if guard and pend_cnt * 1000 >= _MILLI_BUDGET:
+            raise ValueError(
+                f"{who}: daily count exceeds the 2^31 milli-unit "
+                f"packing budget ({guard} guard)"
+            )
+    return (pend_day, pend_cnt, *acc, ndays)
 
 
 def _ewma_step(
@@ -339,67 +381,24 @@ def _ewma_update(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
     (etype,) = key
-    pend_day, pend_cnt, s, peak, spikes, ndays = (
-        state.get if state.exists else (None, 0, -1, 0, 0, 0)
+    st = _roll_days(
+        pdfs,
+        state.get if state.exists else (None, 0, -1, 0, 0, 0),
+        _ewma_step,
+        "streaming_ewma",
+        guard="fold.ewma_stats",
     )
-    # Merge ALL Arrow chunks into one day-grouped frame before folding:
-    # per-chunk folding would let chunk boundaries interleave days and
-    # re-open an already-folded day as a "new" pending day.
-    merged = _merge_chunks(pdfs)
-    if merged is not None:
-        days = (
-            merged.assign(day=merged["ts"].dt.strftime("%Y-%m-%d"))
-            .groupby("day")
-            .size()
-            .sort_index()
-        )
-        for day, cnt in days.items():
-            if pend_day is not None and day < pend_day:
-                # A day EARLIER than the pending day was already folded
-                # permanently (pend_day is the max day ever seen, and a
-                # day folds the moment a later one arrives). Folding it
-                # again would double-count: n_days inflates and the
-                # EWMA/peak/spike state silently corrupts. Fail loudly
-                # — the batch twin (fold.ewma_stats) sorts by day, so
-                # order is an input contract here, not best-effort.
-                raise ValueError(
-                    f"streaming_ewma: out-of-order day {day!r} arrived "
-                    f"after {pend_day!r} was already pending — that day "
-                    "is permanently folded and cannot absorb late "
-                    "events; feed the stream in non-decreasing day "
-                    "order (or pre-bucket late data into a batch "
-                    "backfill via fold.ewma_stats)"
-                )
-            if pend_day is None:
-                pend_day, pend_cnt = day, int(cnt)
-            elif day == pend_day:
-                pend_cnt += int(cnt)
-            else:
-                s, peak, spikes = _ewma_step(s, peak, spikes, pend_cnt * 1000)
-                ndays += 1
-                pend_day, pend_cnt = day, int(cnt)
-            if pend_cnt * 1000 >= _EWMA_BUDGET:
-                raise ValueError(
-                    "streaming_ewma: daily count exceeds the 2^31 "
-                    "milli-unit packing budget (fold.ewma_stats guard)"
-                )
-    state.update((pend_day, pend_cnt, s, peak, spikes, ndays))
-    # Provisional view: fold the in-progress day too, matching the
-    # batch ewma_stats over everything seen so far (a day is only
-    # PERMANENTLY folded once a later day arrives, so late events for
-    # the current day still count).
-    vs, vp, vk = s, peak, spikes
-    vdays = ndays
-    if pend_day is not None:
-        vs, vp, vk = _ewma_step(s, peak, spikes, pend_cnt * 1000)
-        vdays += 1
+    state.update(st)
+    # Provisional view: with the pending day folded in, it equals the
+    # batch ewma_stats over everything seen so far.
+    s, peak, spikes, ndays = _fold_pending(st, _ewma_step)
     yield pd.DataFrame(
         {
             "event_type": [etype],
-            "n_days": [vdays],
-            "ewma_final_milli": [vs],
-            "ewma_peak_milli": [vp],
-            "n_spikes": [vk],
+            "n_days": [ndays],
+            "ewma_final_milli": [s],
+            "ewma_peak_milli": [peak],
+            "n_spikes": [spikes],
         }
     )
 
@@ -407,19 +406,13 @@ def _ewma_update(
 def streaming_ewma(events: DataFrame) -> DataFrame:
     """st23: streaming EWMA of daily event volumes per type — q72's
     packed integer fold carried across micro-batches as keyed state
-    (applyInPandasWithState). State is four scalars per key: the
-    in-progress day's (date, count) plus the packed (smoothed, peak,
-    spikes) accumulator and folded-day count. A day folds
-    PERMANENTLY only when a later day arrives, so late events for
-    the current day are still absorbed; each batch emits the
-    provisional view including the pending day, which equals the
-    batch fold over everything seen (parity tested batch-by-batch
-    semantics: identical truncating integer arithmetic). Days must
-    arrive in non-decreasing order: an event for a day EARLIER than
-    the pending day RAISES (that day is permanently folded — silently
-    re-folding it would double-count), and all Arrow chunks of a batch
-    are merged before folding so chunk boundaries cannot interleave
-    days.
+    (applyInPandasWithState). State is the pending day's (date,
+    count), the (smoothed, peak, spikes) accumulator and the folded-day
+    count, rolled by ``_roll_days``: days arrive in non-decreasing
+    order, and an earlier one raises. Each batch emits the provisional
+    view including the pending day, which equals the batch fold over
+    everything seen (identical truncating integer arithmetic; parity
+    tested).
 
     Scale: state is O(1) per event type; per-batch work is one
     pandas groupby over the batch's rows for the key. The same
@@ -552,20 +545,13 @@ def streaming_drift(events: DataFrame) -> DataFrame:
 
 
 class _CappedTotalProcessor(StatefulProcessor):
-    """st25: q61's capped fold as a TYPED StatefulProcessor — the
-    transformWithState port of st21's applyInPandasWithState update fn.
-
-    Same state (three scalars per user), same IEEE add/clamp/count
-    sequence, so the emitted rows are bit-identical to st21's. What
-    the new API changes is the STATE CONTRACT, not the math: state is
-    a named, schema-typed handle (`getValueState`) the engine can
-    evolve/inspect per variable instead of one opaque row, timers
-    replace the single timeout, and composite ops get list/map state
-    — the migration recipe for the other applyInPandasWithState ops
-    (st04/st11/st19/st23/st24) when they need per-variable TTL or
-    state-schema evolution. Requires the RocksDB state store provider
-    (session.enable_rocksdb_state_store) — Spark only implements
-    transformWithState against it.
+    """st25: st21's batch step (`_capped_batch`) as a typed
+    StatefulProcessor on transformWithState, so its rows equal st21's.
+    The state is a named, schema-typed ValueState handle instead of one
+    opaque row — the migration recipe for the other ops when they need
+    per-variable TTL or state-schema evolution. Spark implements
+    transformWithState only on the RocksDB state store provider
+    (session.enable_rocksdb_state_store).
     """
 
     def __init__(self, cap: float):
@@ -577,36 +563,10 @@ class _CappedTotalProcessor(StatefulProcessor):
         )
 
     def handleInputRows(self, key, rows, timerValues):
-        (user,) = key
-        bal, n, ncap = self._state.get() if self._state.exists() else (0.0, 0, 0)
-        # Merge ALL Arrow chunks, THEN sort once (same discipline as
-        # _ewma_update / st21): per-chunk sorts are not a global sort
-        # when a key's batch spans record batches, and the clamp fold
-        # is order-sensitive.
-        merged = _merge_chunks(rows)
-        if merged is not None:
-            pdf = merged.sort_values(["ts", "event_id"])
-            for v in pdf["value"]:
-                if pd.isna(v):
-                    continue
-                n += 1
-                s = bal + float(v)
-                if s > self._cap:
-                    ncap += 1
-                    bal = self._cap
-                else:
-                    bal = s
-        self._state.update((bal, n, ncap))
-        yield pd.DataFrame(
-            {
-                "user_id": [user],
-                "n_purchases": [n],
-                "n_capped": [ncap],
-                # q61's HALF_UP (Spark F.round) helper — parity with
-                # the batch fold on exact half boundaries too.
-                "balance": [round_half_up(bal)],
-            }
-        )
+        prev = self._state.get() if self._state.exists() else (0.0, 0, 0)
+        new, out = _capped_batch(key[0], rows, prev, self._cap)
+        self._state.update(new)
+        yield out
 
     def close(self) -> None:
         pass
@@ -685,18 +645,10 @@ def _hh_update(
         counters = dict(zip(items, cnts))
     else:
         counters, n, dec = {}, 0, 0
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        merged = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        # Deterministic fold order: MG state depends on arrival order,
-        # which is not contractual within a micro-batch — (ts,
-        # event_id) order makes replays bit-identical (st11/st19
-        # discipline).
-        merged = merged.sort_values(["ts", "event_id"])
+    # MG state depends on fold order: (ts, event_id) makes replays
+    # bit-identical.
+    merged = _merge_chunks(pdfs, by=["ts", "event_id"])
+    if merged is not None:
         counters, n, dec = _hh_fold(counters, n, dec, merged["user_id"])
     items = sorted(counters)
     state.update((items, [counters[u] for u in items], n, dec))
@@ -817,75 +769,43 @@ CUSUM_STATE_SCHEMA = (
 _CUSUM_BASELINE_DAYS = 5
 
 
-def _cusum_fold_day(st: dict, cnt: int) -> None:
+def _cusum_fold_day(
+    musum: int, nmu: int, mu: int, s: int, alarms: int, x_milli: int
+) -> tuple[int, int, int, int, int]:
     """Fold one COMPLETED day into CUSUM state: the first
     _CUSUM_BASELINE_DAYS folded days form the locked baseline μ
     (their milli-mean, DIV truncation); every later day accumulates
     S = max(0, S + x − μ − μ/10) and counts 4μ crossings. Exact
     integer arithmetic — replays bit-for-bit."""
-    st["ndays"] += 1
-    if st["nmu"] < _CUSUM_BASELINE_DAYS:
-        st["musum"] += cnt * 1000
-        st["nmu"] += 1
-        if st["nmu"] == _CUSUM_BASELINE_DAYS:
-            st["mu"] = st["musum"] // _CUSUM_BASELINE_DAYS
-        return
-    st["s"] = max(0, st["s"] + cnt * 1000 - st["mu"] - st["mu"] // 10)
-    if st["s"] > 4 * st["mu"]:
-        st["alarms"] += 1
+    if nmu < _CUSUM_BASELINE_DAYS:
+        musum, nmu = musum + x_milli, nmu + 1
+        if nmu == _CUSUM_BASELINE_DAYS:
+            mu = musum // _CUSUM_BASELINE_DAYS
+        return musum, nmu, mu, s, alarms
+    s = max(0, s + x_milli - mu - mu // 10)
+    return musum, nmu, mu, s, alarms + (1 if s > 4 * mu else 0)
 
 
 def _cusum_update(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
     (etype,) = key
-    if state.exists:
-        pend_day, pend_cnt, musum, nmu, mu, s, alarms, ndays = state.get
-    else:
-        pend_day, pend_cnt, musum, nmu, mu, s, alarms, ndays = (
-            None, 0, 0, 0, -1, 0, 0, 0,
-        )
-    st = {"musum": musum, "nmu": nmu, "mu": mu, "s": s,
-          "alarms": alarms, "ndays": ndays}
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        merged = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        days = (
-            merged.assign(day=merged["ts"].dt.strftime("%Y-%m-%d"))
-            .groupby("day")
-            .size()
-            .sort_index()
-        )
-        for day, cnt in days.items():
-            if pend_day is not None and day < pend_day:
-                raise ValueError(
-                    f"streaming_cusum: out-of-order day {day!r} after "
-                    f"{pend_day!r} — that day is permanently folded "
-                    "(st23's ordering contract)"
-                )
-            if pend_day is None:
-                pend_day, pend_cnt = day, int(cnt)
-            elif day == pend_day:
-                pend_cnt += int(cnt)
-            else:
-                _cusum_fold_day(st, pend_cnt)
-                pend_day, pend_cnt = day, int(cnt)
-    state.update(
-        (pend_day, pend_cnt, st["musum"], st["nmu"], st["mu"],
-         st["s"], st["alarms"], st["ndays"])
+    st = _roll_days(
+        pdfs,
+        state.get if state.exists else (None, 0, 0, 0, -1, 0, 0, 0),
+        _cusum_fold_day,
+        "streaming_cusum",
     )
-    locked = 1 if st["nmu"] >= _CUSUM_BASELINE_DAYS else 0
+    state.update(st)
+    _, _, _, nmu, mu, s, alarms, ndays = st
+    locked = 1 if nmu >= _CUSUM_BASELINE_DAYS else 0
     yield pd.DataFrame(
         {
             "event_type": [etype],
-            "n_days": [st["ndays"]],
-            "mu_milli": [st["mu"] if locked else None],
-            "cusum_milli": [st["s"]],
-            "n_alarms": [st["alarms"]],
+            "n_days": [ndays],
+            "mu_milli": [mu if locked else None],
+            "cusum_milli": [s],
+            "n_alarms": [alarms],
             "locked": [locked],
         }
     )
@@ -894,7 +814,7 @@ def _cusum_update(
 def streaming_cusum(events: DataFrame) -> DataFrame:
     """st28: LIVE CUSUM drift alarming — q80's clamp fold running
     against a LOCKED baseline (st24's lock discipline + st23's
-    day-fold discipline): the first 5 COMPLETED days of each event
+    ``_roll_days``): the first 5 COMPLETED days of each event
     type freeze μ (their milli-mean), and every later completed day
     folds S = max(0, S + x − μ − μ/10), counting 4μ crossings — the
     persistent-shift alarm q80 computes in batch, maintained with
@@ -923,7 +843,6 @@ HOLT_STATE_SCHEMA = (
     "ndays bigint"
 )
 
-_HOLT_BUDGET = 1 << 31
 _HOLT_TREND_BUDGET = 1 << 25
 
 
@@ -956,56 +875,23 @@ def _holt_update(
     key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
 ) -> Iterable[pd.DataFrame]:
     (etype,) = key
-    pend_day, pend_cnt, lvl, trend, ndays = (
-        state.get if state.exists else (None, 0, -1, 0, 0)
+    st = _roll_days(
+        pdfs,
+        state.get if state.exists else (None, 0, -1, 0, 0),
+        _holt_step,
+        "streaming_holt",
+        guard="fold.holt_stats",
     )
-    chunks = [pdf for pdf in pdfs if len(pdf)]
-    if chunks:
-        merged = (
-            pd.concat(chunks, ignore_index=True)
-            if len(chunks) > 1
-            else chunks[0]
-        )
-        days = (
-            merged.assign(day=merged["ts"].dt.strftime("%Y-%m-%d"))
-            .groupby("day")
-            .size()
-            .sort_index()
-        )
-        for day, cnt in days.items():
-            if pend_day is not None and day < pend_day:
-                raise ValueError(
-                    f"streaming_holt: out-of-order day {day!r} after "
-                    f"{pend_day!r} — that day is permanently folded "
-                    "(st23's ordering contract)"
-                )
-            if pend_day is None:
-                pend_day, pend_cnt = day, int(cnt)
-            elif day == pend_day:
-                pend_cnt += int(cnt)
-            else:
-                lvl, trend = _holt_step(lvl, trend, pend_cnt * 1000)
-                ndays += 1
-                pend_day, pend_cnt = day, int(cnt)
-            if pend_cnt * 1000 >= _HOLT_BUDGET:
-                raise ValueError(
-                    "streaming_holt: daily count exceeds the 2^31 "
-                    "milli-unit packing budget (fold.holt_stats guard)"
-                )
-    state.update((pend_day, pend_cnt, lvl, trend, ndays))
-    # Provisional view folds the pending day too (st23 discipline) —
-    # equals the batch fold over everything seen so far.
-    vl, vt, vdays = lvl, trend, ndays
-    if pend_day is not None:
-        vl, vt = _holt_step(lvl, trend, pend_cnt * 1000)
-        vdays += 1
+    state.update(st)
+    # Provisional view, as st23's.
+    lvl, trend, ndays = _fold_pending(st, _holt_step)
     yield pd.DataFrame(
         {
             "event_type": [etype],
-            "n_days": [vdays],
-            "level_milli": [vl],
-            "trend_milli": [vt],
-            "forecast7_milli": [vl + 7 * vt],
+            "n_days": [ndays],
+            "level_milli": [lvl],
+            "trend_milli": [trend],
+            "forecast7_milli": [lvl + 7 * trend],
         }
     )
 
@@ -1013,14 +899,11 @@ def _holt_update(
 def streaming_holt(events: DataFrame) -> DataFrame:
     """st29: streaming HOLT level+trend forecasting — q86's coupled
     integer recurrence carried across micro-batches as keyed state
-    (the st23 pattern with two-variable state): a day folds
-    PERMANENTLY only when a later day arrives, batches emit the
-    provisional view including the pending day, days must arrive in
-    non-decreasing order (raises otherwise), Arrow chunks merge
-    before folding. Identical truncating arithmetic to
-    fold.holt_stats ⇒ the emitted (level, trend, forecast) equals
-    the batch fold BIT-FOR-BIT (parity tested). State is five
-    scalars per event type."""
+    (st23's ``_roll_days`` with two-variable state): batches emit the
+    provisional view including the pending day. Identical truncating
+    arithmetic to fold.holt_stats ⇒ the emitted (level, trend,
+    forecast) equals the batch fold BIT-FOR-BIT (parity tested).
+    State is five scalars per event type."""
     return events.select("event_type", "ts").groupBy(
         "event_type"
     ).applyInPandasWithState(
@@ -1050,9 +933,8 @@ def _coverage_update(
         cur_s, cur_e, covered, closed, n_ev = state.get
     else:
         cur_s, cur_e, covered, closed, n_ev = None, None, 0, 0, 0
-    merged = _merge_chunks(pdfs)
+    merged = _merge_chunks(pdfs, by=["s", "event_id"])
     if merged is not None:
-        merged = merged.sort_values(["s", "event_id"])
         for s, e in zip(merged["s"], merged["e"]):
             s, e = int(s), int(e)
             n_ev += 1
@@ -1092,8 +974,7 @@ def streaming_interval_union(events: DataFrame) -> DataFrame:
     trade, same contract as st19's LOCF).
 
     All integer epoch-second arithmetic (the q91 exactness
-    discipline); Arrow chunks merge before the fold (the st21
-    lesson — the sweep is order-sensitive)."""
+    discipline)."""
     iv = events.select(
         "user_id",
         "event_id",

@@ -649,34 +649,41 @@ def test_ewma_stats_tracks_spikes_and_peak(spark):
     )
 
 
-def test_ewma_stats_packing_guards_raise(spark):
+def test_ewma_stats_packing_guards_raise(spark, op="ewma_stats"):
     """Values at or over the 2^31 milli-unit budget must fail loudly
     (in-plan raise), never silently corrupt a packed lane; values
     that broke the OLD 2^26 single-acc packing (e.g. the 68.7k daily
     counts a 100x events replay produces) must now fold fine."""
     import pytest as _pytest  # noqa: PLC0415
 
-    from etl_sql_and_pyspark_developement__spark.operators.fold import (
-        ewma_stats,
-    )
+    from etl_sql_and_pyspark_developement__spark.operators import fold
 
+    stats = getattr(fold, op)
     big = spark.createDataFrame([("a", 0, 3_000_000)], ["k", "day", "cnt"])
-    with _pytest.raises(Exception, match="packing budget"):
-        ewma_stats(big, "k", "day", "cnt").collect()
+    with _pytest.raises(Exception, match=f"{op}: value .* packing budget"):
+        stats(big, "k", "day", "cnt").collect()
     ok = spark.createDataFrame(
         [("a", 0, 70_000), ("a", 1, 140_100)], ["k", "day", "cnt"]
     )
-    row = ewma_stats(ok, "k", "day", "cnt").collect()[0]
-    # s1 = 70000000, spike (140100 > 2*70000), s2 = (3*140100000 + 7*70000000) DIV 10
-    assert row.ewma_final_milli == (3 * 140_100_000 + 7 * 70_000_000) // 10
-    assert row.ewma_peak_milli == row.ewma_final_milli
-    assert row.n_spikes == 1
+    row = stats(ok, "k", "day", "cnt").collect()[0]
+    if op == "ewma_stats":
+        # s1 = 70000000, spike (140100 > 2*70000), s2 = (3*140100000 + 7*70000000) DIV 10
+        assert row.ewma_final_milli == (3 * 140_100_000 + 7 * 70_000_000) // 10
+        assert row.ewma_peak_milli == row.ewma_final_milli
+        assert row.n_spikes == 1
+    else:
+        # l2 = (3*140100000 + 7*70000000) DIV 10, b2 = (l2 - 70000000) DIV 5
+        assert (row.level_milli, row.trend_milli) == (91_030_000, 4_206_000)
     # Negative values must ALSO raise: a negative lane silently
     # corrupts the packing (negative DIV truncation + lane underflow),
     # and the guard's lower bound is what turns that into a loud error.
     neg = spark.createDataFrame([("a", 0, -5)], ["k", "day", "cnt"])
-    with _pytest.raises(Exception, match="packing budget"):
-        ewma_stats(neg, "k", "day", "cnt").collect()
+    with _pytest.raises(Exception, match=f"{op}: value .* packing budget"):
+        stats(neg, "k", "day", "cnt").collect()
+
+
+def test_holt_stats_packing_guards_raise(spark):
+    test_ewma_stats_packing_guards_raise(spark, "holt_stats")
 
 
 def test_resolve_hierarchy_raises_on_dangling_parent(spark):

@@ -373,6 +373,128 @@ def test_one_shingle_vocabulary():
     )
 
 
+def test_one_streaming_fold():
+    """The ordered streaming folds share one vocabulary. In stateful.py
+    the only pd.concat and the only sort of a merged micro-batch are in
+    `_merge_chunks`; the only pending-day loop and the only
+    out-of-order raise are in `_roll_days`; the 2^31 milli budget is
+    one constant and `expire_ms` is gone. Across stateful.py and
+    fold.py the only clamp loop is `fold.capped_fold`; fold.py builds
+    its guarded milli series only in `_milli_series`; and
+    streaming/pipeline.py has no append write (every foreachBatch sink
+    overwrites its epoch through `_write_epoch`)."""
+    import ast
+    import pathlib
+
+    import etl_sql_and_pyspark_developement__spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = {
+        "stateful": root / "streaming" / "stateful.py",
+        "fold": root / "operators" / "fold.py",
+        "pipeline": root / "streaming" / "pipeline.py",
+    }
+    sites: dict[str, list] = {}
+
+    def hit(kind, where):
+        sites.setdefault(kind, []).append(where)
+
+    def names(node):
+        return {
+            n.id if isinstance(n, ast.Name) else n.attr
+            for n in ast.walk(node)
+            if isinstance(n, (ast.Name, ast.Attribute))
+        }
+
+    class Visitor(ast.NodeVisitor):
+        def __init__(self, mod):
+            self.mod, self.fn, self.merged = mod, None, set()
+
+        def visit_FunctionDef(self, node):
+            outer, self.fn = self.fn, node.name
+            merged, self.merged = self.merged, {
+                t.id
+                for a in ast.walk(node)
+                if isinstance(a, ast.Assign)
+                and isinstance(a.value, ast.Call)
+                and getattr(a.value.func, "id", "") == "_merge_chunks"
+                for t in a.targets
+                if isinstance(t, ast.Name)
+            }
+            if any(a.arg == "expire_ms" for a in node.args.args):
+                hit("expire_ms", (self.mod, node.name))
+            self.generic_visit(node)
+            self.fn, self.merged = outer, merged
+
+        def visit_Call(self, node):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            where = (self.mod, self.fn)
+            if name == "concat" and getattr(f.value, "id", "") == "pd":
+                hit("pd.concat", where)
+            if self.mod == "stateful" and (
+                name == "sort_values"
+                or (name == "sorted" and names(node) & self.merged)
+            ):
+                hit("sort", where)
+            if (
+                name == "mode"
+                and node.args
+                and getattr(node.args[0], "value", None) == "append"
+            ):
+                hit("append", where)
+            self.generic_visit(node)
+
+        def visit_For(self, node):
+            body = ast.Module(body=node.body, type_ignores=[])
+            if "pend_day" in names(body):
+                hit("day roll", (self.mod, self.fn))
+            if any(
+                isinstance(c, ast.Compare)
+                and isinstance(c.ops[0], ast.Gt)
+                and any("cap" in n.lower() for n in names(c.comparators[0]))
+                for c in ast.walk(body)
+            ):
+                hit("clamp", (self.mod, self.fn))
+            self.generic_visit(node)
+
+        def visit_Raise(self, node):
+            if any(
+                isinstance(c, ast.Constant)
+                and isinstance(c.value, str)
+                and "out-of-order day" in c.value
+                for c in ast.walk(node)
+            ):
+                hit("out-of-order", (self.mod, self.fn))
+            self.generic_visit(node)
+
+        def visit_BinOp(self, node):
+            if ast.unparse(node) in ("1 << 31", "2 ** 31"):
+                hit("2^31", (self.mod, self.fn))
+            self.generic_visit(node)
+
+        def visit_Constant(self, node):
+            v = node.value
+            if v == 2**31 and not isinstance(v, bool):
+                hit("2^31", (self.mod, self.fn))
+            if self.mod == "fold" and isinstance(v, str) and "collect_list(struct(" in v:
+                hit("milli series", (self.mod, self.fn))
+            if isinstance(v, str) and "expire_ms" in v:
+                hit("expire_ms", (self.mod, self.fn))
+
+    for mod, path in files.items():
+        Visitor(mod).visit(ast.parse(path.read_text(), str(path)))
+
+    assert sites["pd.concat"] == [("stateful", "_merge_chunks")], sites["pd.concat"]
+    assert sites["sort"] == [("stateful", "_merge_chunks")], sites["sort"]
+    assert sites["day roll"] == [("stateful", "_roll_days")], sites["day roll"]
+    assert sites["out-of-order"] == [("stateful", "_roll_days")], sites["out-of-order"]
+    assert [m for m, _ in sites["2^31"]].count("stateful") == 1, sites["2^31"]
+    assert sites["clamp"] == [("fold", "capped_fold")], sites["clamp"]
+    assert sites["milli series"] == [("fold", "_milli_series")], sites["milli series"]
+    assert "append" not in sites and "expire_ms" not in sites, sites
+
+
 def test_d08_unit_norm_is_not_inlined_per_element(spark, sf_dir):
     """d08's unit projection divides by a norm COLUMN: the fold must
     not be inlined into the per-element lambda (CollapseProject does
@@ -2196,17 +2318,18 @@ def test_plan_metrics_record_subset_matches(spark):
     subset spans the regression classes the record exists to catch:
     a pushdown consumer (q108), a broadcast-strategy lane (q106), the
     reuse lane (q112), a Python-stage lane (q127), a plain
-    aggregate (q01), the construct_wide benchmark lane (d03) and the
-    shared-shingle pair path (d02). Exact equality, sf0.01 (the
-    record's sf).
+    aggregate (q01), the shared-shingle pair path (d02), the
+    benchmark's batch lanes (d03, d08, s11) and the batch twins of the
+    streaming folds (q72, q86). Exact equality, sf0.01 (the record's
+    sf).
 
     The record is taken at the session default, local[32]. At another
     parallelism d02's shingle document-frequency partial aggregate runs
     over a different number of spread partitions, so its partial-row
     counts, and only those, differ (at local[4]: shuffle_rows [11533,
     22882, 22882] against the recorded [11533, 25702, 25702]); there
-    d02 is compared on every other field. d03 is the same at local[4],
-    [8] and [32]."""
+    d02 is compared on every other field. d03, d08, s11, q72 and q86
+    are the same at local[4], [8] and [32]."""
     import json
     import os
 
@@ -2234,6 +2357,10 @@ def test_plan_metrics_record_subset_matches(spark):
         "q127_arrow_scalar_udf",
         "d03_dedup_minhash_lsh",
         "d02_dedup_ngram_jaccard",
+        "d08_embedding_neardup",
+        "s11_arrow_vector_features",
+        "q72_ewma_smoothing",
+        "q86_holt_forecast",
     ):
         df = QUERIES[key](spark, sf01)
         df.collect()

@@ -216,45 +216,92 @@ def test_stream_static_enrich_and_foreach_batch(spark, sf_dir, events_dir, tmp_p
         assert expected[key] == val
 
 
-def test_foreach_batch_sink_replayed_epoch_writes_once(spark, sf_dir, events_dir, tmp_path):
-    """st05's foreachBatch sink overwrites its epoch's partition: after
-    the last commit-log entry is deleted, the restarted query replays
-    that epoch, and the sink must still hold exactly one copy of it.
+def _sink_case(case, spark, sf_dir, events_dir, documents_dir, out):
+    """A fresh, unstarted writer for foreachBatch sink `case` writing
+    under `out`, and the output directories it writes."""
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
+    from etl_sql_and_pyspark_developement__spark.sources.io import (
+        jsonl_feed_fixture,
+    )
+    from etl_sql_and_pyspark_developement__spark.streaming import pipeline
+
+    if case == "st05":
+        dim = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+        stream = pipeline.stream_static_enrich(
+            pipeline.read_event_stream(spark, events_dir), dim
+        )
+        writer = pipeline.sink_foreach_batch_parquet(stream, out)
+        return writer.outputMode("update"), [out]
+    if case == "st13":
+        docs = table(spark, sf_dir, "documents")
+        stream = spark.readStream.schema(docs.schema).parquet(documents_dir)
+        return pipeline.sink_stream_boilerplate(stream, docs, out), [out]
+    if case == "st22":
+        stream = pipeline.read_event_stream(spark, events_dir)
+        return pipeline.sink_stream_sketches(stream, out), [out]
+    schema = StructType(
+        [
+            StructField("event_id", LongType(), True),
+            StructField("event_type", StringType(), True),
+            StructField("value", DoubleType(), True),
+        ]
+    )
+    dirs = [f"{out}/clean", f"{out}/quarantine"]
+    feed = jsonl_feed_fixture(spark, sf_dir)
+    return pipeline.sink_stream_quarantine(spark, feed, schema, *dirs), dirs
+
+
+def test_foreach_batch_sink_replayed_epoch_writes_once(
+    spark, sf_dir, events_dir, documents_dir, tmp_path, case="st05"
+):
+    """A foreachBatch sink overwrites its epoch's partition: after the
+    last commit-log entry is deleted, the restarted query replays that
+    epoch, and every output must still hold exactly one copy of it.
     No-data micro-batches are off, so the last epoch is the one that
     carries the rows (a trailing watermark-only epoch writes none)."""
     import os
     from collections import Counter
 
-    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
-    from etl_sql_and_pyspark_developement__spark.streaming.pipeline import (
-        read_event_stream,
-        sink_foreach_batch_parquet,
-        stream_static_enrich,
-    )
-
-    dim = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     out, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
     def run():
-        stream = stream_static_enrich(read_event_stream(spark, events_dir), dim)
-        q = (
-            sink_foreach_batch_parquet(stream, out)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
+        writer, dirs = _sink_case(case, spark, sf_dir, events_dir, documents_dir, out)
+        q = writer.option("checkpointLocation", ckpt).start()
         q.processAllAvailable()
         q.stop()
-        return Counter(tuple(r) for r in spark.read.parquet(out).collect())
+        return [
+            Counter(
+                tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+                for r in spark.read.parquet(d).collect()
+            )
+            for d in dirs
+        ]
 
     with conf_scope(spark, {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}):
         first = run()
-        assert first and max(first.values()) == 1
+        assert all(c and max(c.values()) == 1 for c in first), first
         last = max(int(f) for f in os.listdir(f"{ckpt}/commits") if f.isdigit())
         for f in (str(last), f".{last}.crc"):
             if os.path.exists(f"{ckpt}/commits/{f}"):
                 os.remove(f"{ckpt}/commits/{f}")
         assert run() == first
+
+
+@pytest.mark.parametrize("case", ["st13", "st22", "st37"])
+def test_foreach_batch_sinks_replayed_epoch_write_once(
+    spark, sf_dir, events_dir, documents_dir, tmp_path, case
+):
+    test_foreach_batch_sink_replayed_epoch_writes_once(
+        spark, sf_dir, events_dir, documents_dir, tmp_path, case
+    )
 
 
 def test_events_nanos_layout_reads_truncated_micros(spark, tmp_path):
@@ -1426,11 +1473,11 @@ def test_st24_streaming_drift_matches_batch_replay(spark, sf_dir, tmp_path):
 
 
 class _FakeGroupState:
-    """Minimal stand-in for pyspark's GroupState — just enough for
-    unit-testing the update functions' state protocol directly."""
+    """Minimal applyInPandasWithState GroupState stand-in for
+    unit-testing update fns without a streaming query."""
 
-    def __init__(self):
-        self._v = None
+    def __init__(self, value=None):
+        self._v = value
 
     @property
     def exists(self):
@@ -1441,47 +1488,86 @@ class _FakeGroupState:
         return self._v
 
     def update(self, v):
-        self._v = v
+        self._v = tuple(v)
 
 
-def test_st23_ewma_rejects_out_of_order_days():
+def test_st23_ewma_rejects_out_of_order_days(update="_ewma_update"):
     """A day earlier than the pending day is already permanently
     folded — re-opening it would double-count (n_days inflates, the
     packed state corrupts). The update fn must raise, not mis-fold."""
     import pandas as pd
     import pytest
 
-    from etl_sql_and_pyspark_developement__spark.streaming.stateful import (
-        _ewma_update,
-    )
+    from etl_sql_and_pyspark_developement__spark.streaming import stateful
 
+    fn = getattr(stateful, update)
     st = _FakeGroupState()
     b1 = pd.DataFrame({"ts": pd.to_datetime(["2024-01-01", "2024-01-02"])})
-    list(_ewma_update(("a",), iter([b1]), st))
-    assert st.get[0] == "2024-01-02" and st.get[5] == 1  # day 1 folded
+    list(fn(("a",), iter([b1]), st))
+    assert st.get[0] == "2024-01-02" and st.get[-1] == 1  # day 1 folded
     late = pd.DataFrame({"ts": pd.to_datetime(["2024-01-01"])})
     with pytest.raises(ValueError, match="out-of-order day"):
-        list(_ewma_update(("a",), iter([late]), st))
+        list(fn(("a",), iter([late]), st))
 
 
-def test_st23_ewma_merges_arrow_chunks_before_folding():
+# st28 and st29 roll days through st23's `_roll_days`; all three states
+# read (pend_day, pend_cnt, *acc, ndays).
+@pytest.mark.parametrize("update", ["_cusum_update", "_holt_update"])
+def test_day_folds_reject_out_of_order_days(update):
+    test_st23_ewma_rejects_out_of_order_days(update)
+
+
+def test_st23_ewma_merges_arrow_chunks_before_folding(
+    update="_ewma_update",
+    want=(("n_days", 2), ("ewma_final_milli", (3 * 1000 + 7 * 2000) // 10)),
+):
     """Two chunks of the SAME batch interleaving days must fold as one
     day-grouped frame — per-chunk folding would see day 2 then day 1
-    and either raise or double-fold."""
+    and either raise or double-fold. Merged, day 1 (2 events) is folded
+    and day 2 (1 event) is pending."""
     import pandas as pd
 
-    from etl_sql_and_pyspark_developement__spark.streaming.stateful import (
-        _ewma_update,
-    )
+    from etl_sql_and_pyspark_developement__spark.streaming import stateful
 
     st = _FakeGroupState()
     c1 = pd.DataFrame({"ts": pd.to_datetime(["2024-01-02"])})
     c2 = pd.DataFrame({"ts": pd.to_datetime(["2024-01-01", "2024-01-01"])})
-    (out,) = _ewma_update(("a",), iter([c1, c2]), st)
-    # Merged view: day1 cnt=2 (folded, seed 2000), day2 pending cnt=1.
-    assert st.get[:2] == ("2024-01-02", 1)
-    assert out["n_days"].iloc[0] == 2
-    assert out["ewma_final_milli"].iloc[0] == (3 * 1000 + 7 * 2000) // 10
+    (out,) = getattr(stateful, update)(("a",), iter([c1, c2]), st)
+    assert st.get[:2] == ("2024-01-02", 1) and st.get[-1] == 1
+    assert {col: out[col].iloc[0] for col, _ in want} == dict(want)
+
+
+@pytest.mark.parametrize(
+    "update,want",
+    [
+        # CUSUM reports folded days only: day 1 is its first baseline day.
+        ("_cusum_update", (("n_days", 1), ("locked", 0), ("cusum_milli", 0))),
+        # Holt's provisional view: level (3·1000 + 7·2000) DIV 10 = 1700,
+        # trend (1700 − 2000) DIV 5 = −60.
+        ("_holt_update", (("n_days", 2), ("level_milli", 1700), ("trend_milli", -60))),
+    ],
+)
+def test_day_folds_merge_arrow_chunks_before_folding(update, want):
+    test_st23_ewma_merges_arrow_chunks_before_folding(update, want)
+
+
+def test_st26_hh_update_merges_arrow_chunks_before_sorting():
+    """Misra-Gries counts depend on fold order. In (ts, event_id) order
+    users 1-8 fill the 8 counters, user 9 retires them all and user 10
+    is left; chunk by chunk (9, 10, then 1-8) user 8 would be left."""
+    import pandas as pd
+
+    from etl_sql_and_pyspark_developement__spark.streaming.stateful import (
+        _hh_update,
+    )
+
+    c1 = pd.DataFrame({"ts": [9, 10], "event_id": [9, 10], "user_id": [9, 10]})
+    ids = list(range(1, 9))
+    c2 = pd.DataFrame({"ts": ids, "event_id": ids, "user_id": ids})
+    state = _FakeGroupState()
+    (out,) = _hh_update(("view",), [c1, c2], state)
+    assert list(out["user_id"]) == [10] and list(out["est_count"]) == [1]
+    assert state.get == ([10], [1], 10, 1)
 
 
 def test_st24_drift_defers_lock_on_degenerate_first_batch():
@@ -1796,25 +1882,6 @@ def test_st29_streaming_holt_matches_batch_fold(spark, sf_dir, tmp_path):
         for r in holt_stats(daily, "event_type", "day", "cnt").collect()
     }
     assert got == want, "streaming Holt fold must equal the batch fold"
-
-
-class _FakeGroupState:
-    """Minimal applyInPandasWithState GroupState stand-in for
-    unit-testing update fns without a streaming query."""
-
-    def __init__(self, value=None):
-        self._v = value
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
 
 
 class _FakeValueState:
