@@ -24,6 +24,17 @@ an array:
 - `_argmin` — nearest literal codeword (IVF centroid, PQ code).
 - `_pq_search` — the PQ ADC scan, shortlist, exact refine and top k.
 
+The Arrow kernels (`_neardup_kernel` for cosine_neardup_pairs,
+`_assign_seeded_argmax_kernel` for semantic_dedup) run the same math
+in numpy, through three helpers written once:
+
+- `_np_lists` — an Arrow list column as float64 values plus each
+  row's start, length and foldability (no NULL row, no NULL element).
+- `_np_fold` — `_fold`'s left fold from 0.0, one dimension at a time,
+  so each value is the IEEE op sequence of the SQL form.
+- `_np_round6` — Spark's round(·, 6): HALF_UP on the double's decimal
+  repr.
+
 Zero-norm rule: an all-zero vector has cosine 0.0 with every vector.
 Its unit vector is itself, and `_cosine` returns 0.0 instead of
 dividing by zero (DIVIDE_BY_ZERO under ANSI). A NULL vector still
@@ -32,6 +43,11 @@ scores NULL. mmr_select alone drops zero-norm candidates (see there).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -49,6 +65,52 @@ def _fold(term: str, a: str, b: str | None = None) -> str:
     else:
         arr = f"zip_with({a}, {b}, (x, y) -> {term})"
     return f"aggregate({arr}, 0D, (acc, v) -> acc + v)"
+
+
+def _np_lists(vecs) -> tuple:
+    """(flat, starts, lens, ok) of an Arrow list array: its values
+    widened to float64, each row's start and length in them, and ok —
+    the row is non-NULL with no NULL element. Any other row folds to
+    NULL in the SQL form, so it scores nothing."""
+    offs = np.asarray(vecs.offsets)  # absolute into .values, sliced or not
+    ok = ~np.asarray(vecs.is_null())
+    if vecs.values.null_count:
+        bad = np.concatenate(([0], np.cumsum(~np.asarray(vecs.values.is_valid()))))
+        ok &= bad[offs[1:]] == bad[offs[:-1]]
+    flat = vecs.values.to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat, offs[:-1], np.diff(offs), ok
+
+
+def _np_fold(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """`_fold`'s sum of x*y in numpy: a left fold from 0.0 over the
+    leading (dimension) axis of a and b, their other axes broadcast
+    — (dim, m, 1) by (dim, 1, n) gives the m×n pair matrix. numpy
+    mul/add are plain IEEE doubles (no FMA, no pairwise sum), so each
+    value is the SQL fold's, op for op."""
+    acc = np.zeros(np.broadcast_shapes(a.shape[1:], b.shape[1:]))
+    for x, y in zip(a, b):
+        acc += x * y
+    return acc
+
+
+def _np_round6(x: np.ndarray) -> np.ndarray:
+    """Spark's round(x, 6) on doubles: HALF_UP on BigDecimal(repr(x)).
+    Fast path sign·floor(|x|·1e6 + 0.5)/1e6 is exact whenever the
+    scaled fraction is farther than 1e-7 from .5 (at |x| ≲ 1 the
+    double multiply errs ≤1e-10); values inside that window are
+    recomputed with Decimal(repr(x)) — Python's repr is
+    shortest-roundtrip like the JVM's. -0.0 becomes 0.0 (BigDecimal
+    has no signed zero); NaN and ±Inf pass through, as in Spark."""
+    with np.errstate(invalid="ignore"):
+        scaled = np.abs(x) * 1e6
+        out = np.sign(x) * np.floor(scaled + 0.5) / 1e6
+        risky = np.abs(scaled - np.floor(scaled) - 0.5) < 1e-7
+    for i in np.flatnonzero(risky):
+        out.flat[i] = float(
+            Decimal(repr(float(x.flat[i]))).quantize(Decimal("1e-6"), ROUND_HALF_UP)
+        )
+    out[out == 0.0] = 0.0
+    return out
 
 
 def _literal(vec: list[float]) -> str:
@@ -553,41 +615,88 @@ def ann_ivf_topk(
     return _topk(pairs, k)
 
 
+_PAIR_TILE_CELLS = 1 << 20  # pair-matrix cells a kernel tile holds (8 MB of doubles)
+
+
+def _neardup_kernel(threshold: float, tile_cells: int):
+    """applyInArrow over one bucket (bucket, id, vec) -> (id_a, id_b,
+    cosine): the retired SQL form's values, repr for repr (parity test
+    in tests/test_similarity.py). Rows sort by id; each row's norm is
+    `_np_fold` of it with itself, then sqrt; its unit vector divides
+    by the norm unless the norm is 0 (Spark's `n > 0` holds for NaN, so
+    a NaN norm divides too). Row tiles of `tile_cells // rows` score
+    pairs with id_a < id_b by `_np_fold`, keep cos >= threshold (NaN
+    passes: Spark orders NaN above every value) and round with
+    `_np_round6`. A zip_with of unequal lengths pads with NULL, so
+    only rows of equal length pair."""
+
+    def kernel(t):
+        with np.errstate(invalid="ignore"):  # ±Inf elements make NaN on purpose
+            ids = t.column(1).combine_chunks()
+            flat, starts, lens, ok = _np_lists(t.column(2).combine_chunks())
+            ok &= np.asarray(ids.is_valid())
+            rank = np.asarray(pc.rank(ids, tiebreaker="dense"))
+            parts = [(np.zeros(0, np.int64), np.zeros(0, np.int64), np.zeros(0))]
+            for dim in np.unique(lens[ok]):
+                rows = np.flatnonzero(ok & (lens == dim))
+                rows = rows[np.argsort(rank[rows], kind="stable")]
+                # dimension-major (dim, rows), so x[k] is contiguous
+                x = np.ascontiguousarray(flat[starts[rows][:, None] + np.arange(dim)].T)
+                nrm = np.sqrt(_np_fold(x, x))
+                u, r = x / np.where(nrm == 0, 1.0, nrm), rank[rows]
+                step = max(1, tile_cells // len(rows))
+                for s in range(0, len(rows), step):
+                    cos = _np_fold(u[:, s : s + step, None], u[:, None, s:])
+                    i, j = np.nonzero(
+                        (r[s : s + step, None] < r[None, s:])
+                        & ((cos >= threshold) | np.isnan(cos))
+                    )
+                    parts.append((rows[s + i], rows[s + j], cos[i, j]))
+            a, b, cos = map(np.concatenate, zip(*parts))
+            return pa.table(
+                [ids.take(a), ids.take(b), _np_round6(cos)], ["id_a", "id_b", "cosine"]
+            )
+
+    return kernel
+
+
 def cosine_neardup_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.45,
-    candidates: DataFrame | None = None,
+    n_bits: int | None = None,
+    dim: int = 64,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
     threshold) — the semantic-dedup step of a training-data pipeline.
 
-    candidates=None runs the exact all-pairs verifier (broadcast
-    nested loop; quadratic — the ground truth, fine to ~10^3
-    vectors). At scale, pass an (id_a, id_b) candidate frame from the
-    LSH (lsh_signature same-bucket pairs — deterministic, so even a
-    SQL oracle can mirror it; see d08) or IVF (same-cluster pairs)
-    machinery: the verification math is IDENTICAL, only the pair
-    source changes — the same exact-vs-candidates duality as d02/d03
-    for text.
+    Rows group by bucket: `lsh_signature(vec_col, n_bits, dim)` (the
+    same-bucket pairs of d08, deterministic, so its SQL oracle mirrors
+    them) or, with n_bits=None, one bucket for all rows — the exact
+    all-pairs verifier, quadratic, the ground truth. Each bucket is
+    scored by ONE Arrow kernel call (`_neardup_kernel`): one shuffle of
+    the vectors keyed by bucket, no pair join, no per-pair interpreted
+    fold. Pair work is in row tiles of `_PAIR_TILE_CELLS` cells, so a
+    bucket of m rows holds O(tile·m) doubles, not O(m²).
 
-    Per-pair cost is ONE dot product: vectors are L2-normalized once
-    per row before the join (cos = dot(a/|a|, b/|b|)), not
-    dot/(|a|·|b|) per pair — 3x less array math on the quadratic
-    side of the plan.
-    """
+    cosine = round(dot(a/|a|, b/|b|), 6) in the SQL form's float64 op
+    order, filtered on the unrounded value. A zero vector scores 0.0
+    with every vector. A NULL vector, a vector with a NULL element, a
+    NULL id or a length mismatch scores NULL, so it pairs with nothing.
+    A NaN or ±Inf element makes the unit vector NaN, and NaN passes
+    every threshold (Spark orders NaN above every value): such a row
+    pairs with every same-length row of its bucket at cosine NaN."""
+    id_type = emb.schema[id_col].dataType.simpleString()
     emb = spread_small_scan(emb.select(id_col, vec_col))
-    a = _unit_vectors(emb, vec_col, "va", F.col(id_col).alias("id_a"))
-    b = _unit_vectors(emb, vec_col, "vb", F.col(id_col).alias("id_b"))
-    if candidates is not None:
-        pairs = candidates.join(a, "id_a").join(b, "id_b")
-    else:
-        pairs = a.join(b, F.col("id_a") < F.col("id_b"))
+    bucket = F.lit(0) if n_bits is None else lsh_signature(vec_col, n_bits, dim)
     return (
-        pairs.withColumn("__cos", _dot("va", "vb"))
-        .filter(F.col("__cos") >= threshold)
-        .select("id_a", "id_b", F.round(F.col("__cos"), 6).alias("cosine"))
+        emb.select(bucket.alias("__bucket"), id_col, vec_col)
+        .groupBy("__bucket")
+        .applyInArrow(
+            _neardup_kernel(threshold, _PAIR_TILE_CELLS),
+            f"id_a {id_type}, id_b {id_type}, cosine double",
+        )
     )
 
 
@@ -600,19 +709,8 @@ def _assign_seeded_argmax_kernel(pts: DataFrame, seeds) -> DataFrame:
     max(struct(round(dot(u, su), 6), -seed_id)) over a broadcast seed
     join (parity test in tests/test_similarity.py):
 
-    - dot: the SQL form materializes zip_with products then left-folds
-      from 0.0 — the kernel multiplies one dimension at a time into an
-      accumulator (`acc += U[:, d] * S[:, d]` per d), the identical
-      IEEE op sequence per (point, seed) element (numpy mul/add are
-      plain IEEE doubles, no FMA);
-    - round(· , 6): Spark rounds HALF_UP on BigDecimal(repr(double)).
-      Fast path: sign·floor(|x|·1e6 + 0.5)/1e6, EXACT whenever the
-      scaled fraction is farther than 1e-7 from .5 (double mul error
-      ≤1e-10 at |x|≤~1, repr-vs-binary gap ≤1e-11); elements inside
-      that window are recomputed with decimal.Decimal(repr(x)) —
-      Python repr is shortest-roundtrip like the JVM's, and ONLY the
-      boundary window can disagree between the two paths. -0.0 results
-      normalize to +0.0 (BigDecimal has no signed zero);
+    - dot and round(·, 6): `_np_fold` over (point, seed) pairs, then
+      `_np_round6` — the SQL form's op sequence and Spark's HALF_UP;
     - argmax tie rule: seeds are sorted by seed_id ascending here and
       np.argmax takes the FIRST maximum — exactly max(-seed_id);
     - u passes through, replacing the SQL form's join-back;
@@ -628,8 +726,6 @@ def _assign_seeded_argmax_kernel(pts: DataFrame, seeds) -> DataFrame:
 
     `seeds`: [(seed_id, [float, ...] | None), ...] in any order.
     """
-    import pyarrow as pa
-
     seed_list = sorted(
         (
             (int(s), None if vec is None else [float(x) for x in vec])
@@ -639,8 +735,6 @@ def _assign_seeded_argmax_kernel(pts: DataFrame, seeds) -> DataFrame:
     )
 
     def kernel(batches):
-        import numpy as np
-
         valid = [(s, vec) for s, vec in seed_list if vec is not None]
         dims = {len(vec) for _, vec in valid}
         if len(dims) > 1:
@@ -648,83 +742,34 @@ def _assign_seeded_argmax_kernel(pts: DataFrame, seeds) -> DataFrame:
                 f"seeded-argmax kernel: seed dims differ ({dims})"
             )
         d = dims.pop() if dims else 0
-        S = (
-            np.asarray([vec for _, vec in valid], dtype=np.float64)
-            if valid
-            else np.zeros((0, d), dtype=np.float64)
-        )
+        S = np.asarray([vec for _, vec in valid], dtype=np.float64)
+        S = S.reshape(len(valid), d)  # (0, d) when no seed has a vector
         sids = np.asarray([s for s, _ in valid], dtype=np.int64)
         min_all = min((s for s, _ in seed_list), default=None)
-        from decimal import ROUND_HALF_UP, Decimal
-
-        q6 = Decimal("0.000001")
         for batch in batches:
             n = len(batch)
             if n == 0 or min_all is None:
                 # no seeds: the SQL form's inner join yields no rows
                 continue
-            ids_np = batch.column("id").cast(pa.int64()).to_numpy(
-                zero_copy_only=False
-            )
             u = batch.column("u")
-            if u.offset != 0:
-                # a sliced ListArray's offsets index the UNsliced
-                # values buffer; take() rebuilds it compacted with
-                # row validity preserved
-                u = u.take(pa.array(np.arange(n), pa.int64()))
-            offs = np.asarray(u.offsets)
-            lens = np.diff(offs)
-            row_null = np.asarray(u.is_null())
-            # rows whose vector contains a NULL element fold to NULL
-            # in the SQL form — route them to the NULL path too
-            if u.values.null_count:
-                elem_ok = np.asarray(u.values.is_valid())
-                cs = np.concatenate(([0], np.cumsum(~elem_ok)))
-                has_null_elem = (cs[offs[1:]] - cs[offs[:-1]]) > 0
-            else:
-                has_null_elem = np.zeros(n, dtype=bool)
-            ok = (~row_null) & (~has_null_elem) & (lens == d) & (len(valid) > 0)
+            flat, starts, lens, ok = _np_lists(u)
+            ok &= (lens == d) & (len(valid) > 0)
             cluster = np.full(n, min_all, dtype=np.int64)
-            cent_out = np.full(n, np.nan, dtype=np.float64)
-            cent_null = ~ok
+            cent = np.full(n, np.nan)
             if ok.any():
-                flat = u.values.to_numpy(zero_copy_only=False).astype(
-                    np.float64
-                )
-                idx = offs[:-1][ok][:, None] + np.arange(d)[None, :]
-                U = flat[idx]
-                m = U.shape[0]
-                # left-fold dot, one dimension at a time (docstring)
-                acc = np.zeros((m, S.shape[0]), dtype=np.float64)
-                for dim in range(d):
-                    acc += U[:, dim : dim + 1] * S[None, :, dim]
-                # Spark-exact HALF_UP 6dp round: vectorized fast path
-                # + exact Decimal recompute inside the .5-boundary
-                # window
-                scaled = np.abs(acc) * 1e6
-                frac = scaled - np.floor(scaled)
-                cent = np.sign(acc) * np.floor(scaled + 0.5) / 1e6
-                risky = np.abs(frac - 0.5) < 1e-7
-                if risky.any():
-                    for r, c in np.argwhere(risky):
-                        cent[r, c] = float(
-                            Decimal(repr(float(acc[r, c]))).quantize(
-                                q6, ROUND_HALF_UP
-                            )
-                        )
-                cent[cent == 0.0] = 0.0  # no -0.0 (BigDecimal-parity)
-                best = np.argmax(cent, axis=1)
+                U = flat[starts[ok][:, None] + np.arange(d)]
+                scores = _np_round6(_np_fold(U.T[:, :, None], S.T[:, None, :]))
+                best = np.argmax(scores, axis=1)
                 cluster[ok] = sids[best]
-                cent_out[ok] = cent[np.arange(m), best]
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "id": pa.array(ids_np, pa.int64()),
-                    "cluster": pa.array(cluster, pa.int64()),
-                    "cent": pa.array(
-                        cent_out, pa.float64(), mask=cent_null
-                    ),
-                    "u": u.cast(pa.list_(pa.float64())),
-                }
+                cent[ok] = scores[np.arange(len(U)), best]
+            yield pa.RecordBatch.from_arrays(
+                [
+                    batch.column("id").cast(pa.int64()),
+                    pa.array(cluster, pa.int64()),
+                    pa.array(cent, pa.float64(), mask=~ok),
+                    u.cast(pa.list_(pa.float64())),
+                ],
+                ["id", "cluster", "cent", "u"],
             )
 
     return pts.select("id", "u").mapInArrow(kernel, _ASSIGN_KERNEL_SCHEMA)
@@ -863,6 +908,8 @@ def mmr_select(
 
     Returns (rank, id, relevance, mmr_score) with rank 1..k.
     """
+    spark = corpus.sparkSession
+    empty = "rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE"
     base = spread_small_scan(
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     )
@@ -877,27 +924,18 @@ def mmr_select(
         qrows = base.filter(F.col("id") == query_id).select("v").collect()
         qraw = qrows[0]["v"] if qrows else None
     if qraw is None:  # empty corpus, or query_id not present in it
-        return corpus.sparkSession.createDataFrame(
-            [], "rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE"
-        )
-    # Normalize the query DRIVER-side with the same left-to-right
-    # float64 ops the corpus-side `_norm` fold uses (acc starts at
-    # 0.0; one square, add, sqrt, divide per element — bit-identical
-    # to the previous in-plan normalization), then inline it as a
-    # LITERAL array: no broadcast join, no per-row query sub-plan —
-    # the analysis/codegen of that join dominated this query's wall
-    # time (pool-bounded data; measured 2.5x).
-    import math
-
-    qacc = 0.0
-    for x in qraw:
-        qacc = qacc + float(x) * float(x)
-    qn = math.sqrt(qacc)
+        return spark.createDataFrame([], empty)
+    # Normalize the query DRIVER-side with the `_norm` fold's float64
+    # ops (`_np_fold`, then sqrt and one divide per element —
+    # bit-identical to the previous in-plan normalization), then
+    # inline it as a LITERAL array: no broadcast join, no per-row
+    # query sub-plan — the analysis/codegen of that join dominated
+    # this query's wall time (pool-bounded data; measured 2.5x).
+    q = np.asarray(qraw, dtype=np.float64)
+    qn = np.sqrt(_np_fold(q, q))
     if qn == 0.0:
-        return corpus.sparkSession.createDataFrame(
-            [], "rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE"
-        )
-    qu = _literal([float(x) / qn for x in qraw])
+        return spark.createDataFrame([], empty)
+    qu = _literal((q / qn).tolist())
     # Zero-norm candidates are excluded (the unit projection alone
     # would keep them at relevance 0): a vector with no direction is
     # neither relevant to nor diverse from anything, just as a zero
@@ -937,11 +975,8 @@ def mmr_select(
     # createDataFrame: the Python->JVM row-conversion path costs
     # ~0.7s per call even warm (measured), pure-literal plans ~0.1s —
     # and k rows of 4 scalars are trivially literal-able.
-    spark = corpus.sparkSession
     if not selected:
-        return spark.createDataFrame(
-            [], "rank INT, vec_id BIGINT, relevance DOUBLE, mmr_score DOUBLE"
-        )
+        return spark.createDataFrame([], empty)
     return spark.range(1).select(
         F.inline(
             F.array(*[
@@ -1411,43 +1446,25 @@ def vector_features_arrow(
     shuffle; at 100 TB this is scan-bound and embarrassingly
     parallel.
     """
-    import pyarrow as pa
 
     def kernel(batches):
-        import numpy as np
-
         for batch in batches:
-            ids = batch.column(id_col)
-            vecs = batch.column(vec_col)
             if len(batch) == 0:
                 continue
-            # a sliced ListArray's offsets index the UNsliced values
-            # buffer; rebuild compacted if a slice ever reaches us
-            if vecs.offset != 0:
-                vecs = pa.ListArray.from_arrays(
-                    pa.array(
-                        np.asarray(vecs.offsets) - vecs.offsets[0].as_py()
-                    ),
-                    vecs.flatten(),
-                )
+            flat, starts, lens, ok = _np_lists(batch.column(vec_col))
             # NULL list slots / NULL elements have no integer-exact
             # meaning here (a null list would silently become an
             # (n_dims=0, 0, 0) row, a null element a NaN whose
             # floor().astype(int64) is undefined garbage that can slip
             # past the overflow guard) — fail loudly instead of
             # emitting wrong values.
-            if vecs.null_count or vecs.values.null_count:
+            if not ok.all():
                 raise ValueError(
                     "vector_features_arrow: NULL embeddings / NULL "
                     "vector elements are not supported; filter or "
                     "impute them before the kernel"
                 )
-            flat = vecs.values.to_numpy(zero_copy_only=False).astype(
-                np.float64
-            )
             micro = np.floor(flat * 1_000_000.0).astype(np.int64)
-            offsets = np.asarray(vecs.offsets)
-            n_dims = np.diff(offsets).astype(np.int32)
             # Segment sums as prefix-sum differences: exact for ANY
             # offsets pattern (empty lists anywhere, including the
             # batch tail) — np.add.reduceat mishandles both a trailing
@@ -1475,12 +1492,12 @@ def vector_features_arrow(
             sq = micro * micro
             cs = np.concatenate(([0], np.cumsum(micro)))
             cs2 = np.concatenate(([0], np.cumsum(sq)))
-            sum_micro = cs[offsets[1:]] - cs[offsets[:-1]]
-            sumsq_micro = cs2[offsets[1:]] - cs2[offsets[:-1]]
+            sum_micro = cs[starts + lens] - cs[starts]
+            sumsq_micro = cs2[starts + lens] - cs2[starts]
             yield pa.RecordBatch.from_pydict(
                 {
-                    "vec_id": ids.cast(pa.int64()),
-                    "n_dims": pa.array(n_dims, pa.int32()),
+                    "vec_id": batch.column(id_col).cast(pa.int64()),
+                    "n_dims": pa.array(lens, pa.int32()),
                     "sum_micro": pa.array(sum_micro, pa.int64()),
                     "sumsq_micro": pa.array(sumsq_micro, pa.int64()),
                 }

@@ -2493,45 +2493,32 @@ def q43_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def d08_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the semantic tier of the
     dedup ladder, above token-level d01-d07), via the SCALE path:
-    same-LSH-bucket candidate pairs (deterministic hyperplanes; the
-    bucket count cuts the quadratic pair space ~2^bits-fold) verified
-    with one exact dot product over per-row-normalized vectors.
-    Because the hyperplanes are fixed literals, the DuckDB oracle
-    computes the IDENTICAL bucketing — the approximate path itself is
+    same-LSH-bucket pairs (deterministic hyperplanes; the bucket count
+    cuts the quadratic pair space ~2^bits-fold), each bucket scored by
+    one Arrow kernel call with one exact dot product over
+    per-row-normalized vectors (cosine_neardup_pairs). Because the
+    hyperplanes are fixed literals, the DuckDB oracle computes the
+    IDENTICAL bucketing — the approximate path itself is
     value-verified, not just the exact one (the exact all-pairs
     verifier is covered by tests/test_similarity.py's subset test).
-    Vector math is zip_with/aggregate codegen — zero Python.
 
     The bit count is ADAPTIVE (floor 4 — what the oracle mirrors,
     resolved at every test scale ≤ 2k vectors): fixed bits make the
-    bucket join quadratic in the corpus (measured 50× wall at 10×
-    vectors). More bits trade recall on moderate-cosine pairs; at
+    per-bucket pair work quadratic in the corpus (measured 50× wall at
+    10× vectors). More bits trade recall on moderate-cosine pairs; at
     corpus scale recover it with OR-construction (several independent
     plane tables, union of candidates) rather than fewer bits."""
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
         adaptive_n_bits,
         cosine_neardup_pairs,
-        lsh_signature,
     )
 
     emb = table(spark, sf_dir, "embeddings")
     bits = adaptive_n_bits(emb.count(), target_bucket=125, floor_bits=4)
-    bucketed = emb.select(
-        "vec_id", lsh_signature("embedding", bits, 64).alias("bucket")
-    )
-    cands = (
-        bucketed.alias("a")
-        .join(
-            bucketed.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-    )
     labels = emb.select(F.col("vec_id").alias("id_a"), F.col("label").alias("label_a"))
     labels_b = emb.select(F.col("vec_id").alias("id_b"), F.col("label").alias("label_b"))
     return (
-        cosine_neardup_pairs(emb, threshold=0.45, candidates=cands)
+        cosine_neardup_pairs(emb, threshold=0.45, n_bits=bits)
         .join(labels, "id_a")
         .join(labels_b, "id_b")
         .withColumn(

@@ -73,7 +73,9 @@ def _user_stats_update(
     count, mean, m2 = state.get if state.exists else (0, 0.0, 0.0)
     anomalies = 0
     for pdf in pdfs:
-        for v in pdf["value"]:
+        # NULLs are skipped, as avg/stddev_samp (and st21/st25) skip
+        # them: one NaN would poison the mean and M2 for good
+        for v in pdf["value"].dropna():
             v = float(v)
             # flag before updating: anomaly = outside 3 sigma of history
             if count >= 10:
@@ -99,7 +101,8 @@ def _user_stats_update(
 
 def running_user_stats(events: DataFrame) -> DataFrame:
     """st04: per-user running mean/std + 3-sigma anomaly counts,
-    maintained as keyed state across micro-batches."""
+    maintained as keyed state across micro-batches. NULL values are
+    skipped, so n_events counts non-NULL values (count(value))."""
     return (
         events.select("user_id", "value")
         .groupBy("user_id")

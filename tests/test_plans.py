@@ -207,8 +207,11 @@ def test_one_vector_vocabulary():
     """similarity.py writes its vector math once: the only
     aggregate/zip_with, as a Column call or as SQL text, is inside
     `_fold` (which `_dot`, `_norm`, `_sq_l2`, `_pow_l2` and
-    lsh_signature build on); and plans/queries.py scores through
-    `_cosine` rather than importing the raw `_dot`/`_norm` folds."""
+    lsh_signature build on); its numpy twins are written once too —
+    the only `acc += x * y` fold is `_np_fold`, the only Decimal
+    HALF_UP round `_np_round6`, the only read of Arrow list offsets
+    `_np_lists` — and plans/queries.py scores through `_cosine`
+    rather than importing the raw `_dot`/`_norm` folds."""
     import ast
     import pathlib
 
@@ -218,12 +221,13 @@ def test_one_vector_vocabulary():
     sites = []
 
     class Visitor(ast.NodeVisitor):
-        fn = None
+        fn = top = None
 
         def visit_FunctionDef(self, node):
             outer, self.fn = self.fn, node.name
+            top, self.top = self.top, self.top or node.name
             self.generic_visit(node)
-            self.fn = outer
+            self.fn, self.top = outer, top
 
         def visit_Call(self, node):
             f = node.func
@@ -238,9 +242,25 @@ def test_one_vector_vocabulary():
             ):
                 sites.append((self.fn, node.value))
 
+        def visit_AugAssign(self, node):
+            if isinstance(node.op, ast.Add) and isinstance(node.value, ast.BinOp):
+                np_sites.add((self.top, "fold"))
+            self.generic_visit(node)
+
+        def visit_Attribute(self, node):
+            if node.attr in ("quantize", "offsets"):
+                np_sites.add((self.top, node.attr))
+            self.generic_visit(node)
+
+    np_sites = set()
     sim = root / "operators" / "similarity.py"
     Visitor().visit(ast.parse(sim.read_text(), str(sim)))
     assert sites and {fn for fn, _ in sites} == {"_fold"}, sites
+    assert np_sites == {
+        ("_np_fold", "fold"),
+        ("_np_lists", "offsets"),
+        ("_np_round6", "quantize"),
+    }, np_sites
 
     queries = ast.parse((root / "plans" / "queries.py").read_text())
     imported = {
@@ -496,12 +516,25 @@ def test_one_streaming_fold():
 
 
 def test_d08_unit_norm_is_not_inlined_per_element(spark, sf_dir):
-    """d08's unit projection divides by a norm COLUMN: the fold must
-    not be inlined into the per-element lambda (CollapseProject does
-    that to a bare transform(v, x -> x / n), costing O(dim²) per
-    row). Inlined, the formatted plan shows `/ SQRT(` once per side."""
+    """No unit projection re-runs the norm fold per element
+    (CollapseProject inlines a norm referenced once into a bare
+    transform(v, x -> x / n), costing O(dim²) per row; inlined, the
+    formatted plan shows `/ SQRT(`). d08 normalizes inside its
+    per-bucket Arrow kernel, so its plan holds no norm at all, and
+    `_unit_vectors` — d11's, mmr_select's and the embedding screen's
+    projection — divides by a norm COLUMN."""
+    from etl_sql_and_pyspark_developement__spark.operators.similarity import (
+        _unit_vectors,
+    )
+
     plan = plan_of(spark, "d08_embedding_neardup", sf_dir)
-    assert "/ SQRT(" not in plan
+    assert "SQRT(" not in plan
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    unit = _unit_vectors(emb, "embedding", "u", "vec_id")
+    plan = unit._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    assert "SQRT(" in plan and "/ SQRT(" not in plan
 
 
 def test_conf_scope_restores_set_and_unset_keys(spark):

@@ -4,6 +4,7 @@ vector in its own bucket (self-similarity) and achieve nonzero recall."""
 from __future__ import annotations
 
 import math
+import os
 
 import pytest
 
@@ -170,14 +171,11 @@ def test_assign_clusters_join_path_matches_inline(spark, vectors, monkeypatch):
 
 
 def test_cosine_neardup_candidates_path_is_subset_with_same_scores(spark, sf_dir):
-    """The LSH-candidates formulation must return a subset of the
-    exact pairs with IDENTICAL cosine values (same verification math,
+    """The LSH-bucketed formulation must return a subset of the exact
+    pairs with IDENTICAL cosine values (same verification math,
     smaller pair source)."""
-    from pyspark.sql import functions as F
-
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
         cosine_neardup_pairs,
-        lsh_signature,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -185,26 +183,133 @@ def test_cosine_neardup_candidates_path_is_subset_with_same_scores(spark, sf_dir
         (r.id_a, r.id_b): r.cosine
         for r in cosine_neardup_pairs(emb, threshold=0.3).collect()
     }
-    sig = lsh_signature("embedding", 4, 64)
-    bucketed = emb.select(F.col("vec_id"), sig.alias("bucket"))
-    cands = (
-        bucketed.alias("a")
-        .join(
-            bucketed.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
-    )
     approx = {
         (r.id_a, r.id_b): r.cosine
-        for r in cosine_neardup_pairs(
-            emb, threshold=0.3, candidates=cands
-        ).collect()
+        for r in cosine_neardup_pairs(emb, threshold=0.3, n_bits=4).collect()
     }
     assert set(approx) <= set(exact)
     assert all(exact[k] == v for k, v in approx.items())
     assert len(approx) > 0
+
+
+def _neardup_sql_form(emb, threshold, n_bits=None, dim=64):
+    """The retired SQL cosine_neardup_pairs, kept as the parity oracle
+    for its per-bucket Arrow kernel: two `_unit_vectors` frames joined
+    onto the (id_a < id_b) pairs — all pairs, or d08's same-bucket
+    candidate self-join — scored by the interpreted `_dot` fold,
+    filtered unrounded, rounded to 6dp."""
+    from etl_sql_and_pyspark_developement__spark.operators.similarity import (
+        _dot,
+        _unit_vectors,
+        lsh_signature,
+    )
+
+    emb = emb.select("vec_id", "embedding")
+    a = _unit_vectors(emb, "embedding", "va", F.col("vec_id").alias("id_a"))
+    b = _unit_vectors(emb, "embedding", "vb", F.col("vec_id").alias("id_b"))
+    if n_bits is None:
+        pairs = a.join(b, F.col("id_a") < F.col("id_b"))
+    else:
+        bucketed = emb.select(
+            "vec_id", lsh_signature("embedding", n_bits, dim).alias("bucket")
+        )
+        cands = (
+            bucketed.alias("a")
+            .join(
+                bucketed.alias("b"),
+                (F.col("a.bucket") == F.col("b.bucket"))
+                & (F.col("a.vec_id") < F.col("b.vec_id")),
+            )
+            .select(F.col("a.vec_id").alias("id_a"), F.col("b.vec_id").alias("id_b"))
+        )
+        pairs = cands.join(a, "id_a").join(b, "id_b")
+    return (
+        pairs.withColumn("__cos", _dot("va", "vb"))
+        .filter(F.col("__cos") >= threshold)
+        .select("id_a", "id_b", F.round(F.col("__cos"), 6).alias("cosine"))
+    )
+
+
+def _neardup_rows(df):
+    return sorted((r.id_a, r.id_b, repr(r.cosine)) for r in df.collect())
+
+
+def test_neardup_kernel_matches_sql_form(spark, sf_dir, monkeypatch):
+    """REPR-parity of cosine_neardup_pairs' per-bucket Arrow kernel
+    against the retired SQL form, on (a) an adversarial fixture and
+    (b) the sf0.01 and sf0.1 embeddings, all pairs and LSH-bucketed,
+    with one tile per bucket and with a tile of one row.
+
+    The fixture holds a zero vector, a NULL vector, a NULL element, a
+    NaN and an Inf element (Spark's `n > 0` and `cos >= t` hold for
+    NaN, so those rows pair at cosine NaN), two rows of another length
+    (they pair with each other only), exact duplicates, a cosine
+    exactly at the 0.6 threshold (3-4-5), cosines ±0.1250005 and
+    0.5749744999999999 on either side of a 6dp .5 boundary (the fast
+    path alone rounds each of them the wrong way; only the Decimal
+    recompute gets HALF_UP right), a one-row bucket, and empty
+    input."""
+    from collections import Counter
+
+    from etl_sql_and_pyspark_developement__spark.operators import similarity as sim
+    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
+
+    c, d = 0.1250005, 0.5749744999999999
+    # each row folds to a norm of exactly 1.0, so its cosine with
+    # row 1 is its first element
+    s, t = math.sqrt(1 - c * c), math.sqrt(1 - d * d)
+    assert math.sqrt(c * c + s * s) == math.sqrt(d * d + t * t) == 1.0
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [3.0, 0.0, 4.0, 0.0]),
+        (3, [c, s, 0.0, 0.0]),
+        (4, [-c, s, 0.0, 0.0]),
+        (18, [d, t, 0.0, 0.0]),
+        (5, [0.0, 0.0, 0.0, 0.0]),
+        (6, None),
+        (7, [1.0, None, 0.0, 0.0]),
+        (8, [float("nan"), 1.0, 0.0, 0.0]),
+        (9, [float("inf"), 1.0, 0.0, 0.0]),
+        (10, [1.0, 0.0, 0.0]),
+        (11, [1.0, 0.5, 0.0]),
+        (12, [0.25, -0.5, 0.75, 1.0]),
+        (13, [0.25, -0.5, 0.75, 1.0]),
+        (14, [0.0, 0.0, 0.0, -1.0]),
+        (15, [0.0, 0.0, 0.0, 1.0]),
+        (16, [0.0, 0.1, 0.2, 1.0]),
+        (17, [-0.3, 0.0, 0.2, 1.0]),
+    ]
+    schema = "vec_id bigint, embedding array<double>"
+    adv = spark.createDataFrame(rows, schema)
+    buckets = adv.select(sim.lsh_signature("embedding", 2, 4).alias("b"))
+    sizes = Counter(r.b for r in buckets.collect())
+    assert 1 in sizes.values() and max(sizes.values()) > 1, sizes
+
+    sf01, sf1 = (os.path.join(os.path.dirname(sf_dir), d) for d in ("sf0.01", "sf0.1"))
+    real = table(spark, sf01, "embeddings")
+    cases = [(adv, t, n_bits, 4) for t in (-1.0, 0.6) for n_bits in (None, 2)]
+    cases += [(adv.limit(0), -1.0, None, 4), (adv.limit(0), -1.0, 2, 4)]
+    cases += [(real, 0.45, None, 64), (real, 0.45, 4, 64)]
+    want = [_neardup_rows(_neardup_sql_form(*case)) for case in cases]
+    for tile in (sim._PAIR_TILE_CELLS, 1):
+        monkeypatch.setattr(sim, "_PAIR_TILE_CELLS", tile)
+        for (emb, threshold, n_bits, dim), rows_want in zip(cases, want):
+            got = _neardup_rows(
+                sim.cosine_neardup_pairs(emb, threshold=threshold, n_bits=n_bits, dim=dim)
+            )
+            assert got == rows_want, (set(got) ^ set(rows_want), tile, n_bits)
+    everything, at_threshold = want[0], want[2]  # all pairs at -1.0 and 0.6
+    assert (1, 3, "0.125001") in everything
+    assert (1, 4, "-0.125001") in everything
+    assert (1, 18, "0.574974") in everything
+    assert (1, 2, "0.6") in at_threshold
+    assert (10, 11, repr(round(1 / math.sqrt(1.25), 6))) in everything
+    assert any(r[2] == "nan" for r in everything)
+    assert want[4] == want[5] == []
+    sf1_emb = table(spark, sf1, "embeddings")
+    assert _neardup_rows(
+        sim.cosine_neardup_pairs(sf1_emb, threshold=0.45, n_bits=4)
+    ) == _neardup_rows(_neardup_sql_form(sf1_emb, 0.45, 4, 64))
 
 
 def test_semantic_dedup_planted_copies(spark, sf_dir):
@@ -357,6 +462,10 @@ def test_seeded_argmax_kernel_matches_sql_form(spark, sf_dir):
             + [0.0] * (d - 4)),
         # NULL vector: every cosine NULL -> smallest seed id, NULL cent
         (8, None),
+        # 0.1250005 and 0.5749744999999999: the fast path rounds each
+        # the wrong way; only the Decimal recompute matches Spark
+        (9, [0.1250005, 0.0, 0.0, 0.0] + [0.0] * (d - 4)),
+        (10, [0.0, 0.5749744999999999, 0.0, 0.0] + [0.0] * (d - 4)),
     ]
     check(rows, seeds)
     # a NULL seed never wins for valid rows and joins the all-NULL

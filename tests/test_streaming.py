@@ -124,6 +124,41 @@ def test_streaming_dedup_removes_injected_dups(spark, events_dir, tmp_path_facto
     assert n == n_src, f"dedup kept {n}, expected {n_src}"
 
 
+def test_st04_null_value_keeps_state_finite():
+    """st04's Welford fold skips a NULL value the way avg/stddev_samp
+    do: the state stays finite, and a later 3-sigma outlier is still
+    flagged. Folding the NULL as NaN made mean and M2 NaN for the rest
+    of the stream, so n_anomalies stopped counting."""
+    import math
+
+    import pandas as pd
+
+    from etl_sql_and_pyspark_developement__spark.streaming.stateful import (
+        _user_stats_update,
+    )
+
+    class FakeState:
+        exists, get = False, None
+
+        def update(self, st):
+            self.exists, self.get = True, st
+
+    def run(state, *values):
+        # a NULL double reaches the pandas chunk as NaN
+        pdf = pd.DataFrame({"value": values}, dtype="float64")
+        (out,) = _user_stats_update((7,), [pdf], state)
+        return out.iloc[0]
+
+    state = FakeState()
+    run(state, *([10.0, 12.0] * 6))
+    out = run(state, None, 11.0)
+    assert state.get[0] == 13 and all(math.isfinite(x) for x in state.get), state.get
+    assert out.n_events == 13 and out.n_anomalies == 0
+    out = run(state, None, 1000.0)
+    assert out.n_anomalies == 1 and math.isfinite(out.std_value), out
+    assert all(math.isfinite(x) for x in state.get), state.get
+
+
 def test_stateful_running_stats(spark, sf_dir, events_dir):
     """st04: applyInPandasWithState running stats must agree with batch
     count/mean per user after processing all files."""
