@@ -2507,7 +2507,14 @@ def d08_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket pair work quadratic in the corpus (measured 50× wall at
     10× vectors). More bits trade recall on moderate-cosine pairs; at
     corpus scale recover it with OR-construction (several independent
-    plane tables, union of candidates) rather than fewer bits."""
+    plane tables, union of candidates) rather than fewer bits.
+
+    What still bounds the lane: the terminal orderBy's range-bounds
+    sampling job runs the kernel stage a second time. At sf0.1 on 4
+    cores the two runs took 217-295 ms of task run time each while
+    every Python task re-read pyspark.zip (see worker_daemon), and
+    80-97 ms each since. It stays because the ordered result is the
+    lane's contract."""
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
         adaptive_n_bits,
         cosine_neardup_pairs,
@@ -9083,6 +9090,13 @@ def s11_arrow_vector_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     (byte wrangling), q105/q113/st33/st41 data sources (connectors),
     and now mapInArrow (columnar numeric kernels) — each with the
     same determinism discipline.
+
+    What still bounds the lane: the terminal orderBy's range-bounds
+    sampling job runs the kernel stage a second time. At sf0.1 on 4
+    cores the two runs took 163-272 ms of task run time each while
+    every Python task re-read pyspark.zip (see worker_daemon), and
+    28-40 ms each since. It stays because the ordered result is the
+    lane's contract.
     """
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
         vector_features_arrow,

@@ -819,7 +819,14 @@ def available_now_backfill(transformed: DataFrame, checkpoint: str, sink_fn):
     processAllAvailable run bit-for-bit, a second AvailableNow run on
     the same checkpoint continues the fold over only-the-new files,
     and the run is genuinely bounded (awaitTermination returns, the
-    query deactivates itself)."""
+    query deactivates itself).
+
+    A stateful run ends with one no-data micro-batch that advances the
+    watermark and evicts state: ~0.3 s of st03's ~1.8-2.0 s over
+    perfbench's three landing files (sf0.1, 4 cores), and st03 is
+    ``llm_pipeline``'s slowest lane, so it sets ``lane_tail_s``. It
+    stays because skipping it would defer timeout and outer-join
+    output in other stateful lanes."""
     q = (
         transformed.writeStream.outputMode("update")
         .foreachBatch(sink_fn)
