@@ -504,6 +504,26 @@ def surprisal_scores(
     )
 
 
+def _bigram_rows(toked: DataFrame, *keep: str) -> DataFrame:
+    """(*keep, w1, bg): one row per adjacent token pair of the token
+    array `t` — w1 the first token, bg the pair joined by a space —
+    for rows of at least two tokens."""
+    return (
+        toked.filter(F.size("t") >= 2)
+        .select(
+            *keep,
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(t) - 1), i -> struct("
+                    "element_at(t, i) AS w1, "
+                    "concat_ws(' ', element_at(t, i), element_at(t, i + 1)) AS bg))"
+                )
+            ).alias("x"),
+        )
+        .select(*keep, "x.w1", "x.bg")
+    )
+
+
 def bigram_surprisal_scores(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -526,20 +546,7 @@ def bigram_surprisal_scores(
     toked = df.select(
         F.col(id_col).alias("doc"), tokens(F.col(text_col)).alias("t")
     )
-    flat = materialize(
-        toked.filter(F.size("t") >= 2)
-        .select(
-            "doc",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), i -> struct("
-                    "element_at(t, i) AS w1, "
-                    "concat_ws(' ', element_at(t, i), element_at(t, i + 1)) AS bg))"
-                )
-            ).alias("x"),
-        )
-        .select("doc", "x.w1", "x.bg")
-    )
+    flat = materialize(_bigram_rows(toked, "doc"))
     f12 = flat.groupBy("bg").agg(F.count("*").alias("c12"))
     f1 = flat.groupBy("w1").agg(F.count("*").alias("c1"))
     return (
@@ -1053,22 +1060,7 @@ def heldout_bigram_eval(
         test_pred.alias("is_test"),
         tokens(F.col(text_col)).alias("t"),
     )
-    flat = materialize(
-        toked.filter(F.size("t") >= 2)
-        .select(
-            "doc",
-            "is_test",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1), i -> struct("
-                    "element_at(t, i) AS w1, "
-                    "concat_ws(' ', element_at(t, i), element_at(t, i + 1))"
-                    " AS bg))"
-                )
-            ).alias("x"),
-        )
-        .select("doc", "is_test", "x.w1", "x.bg")
-    )
+    flat = materialize(_bigram_rows(toked, "doc", "is_test"))
     train = flat.filter(~F.col("is_test"))
     test = flat.filter(F.col("is_test"))
     f12 = train.groupBy("bg").agg(F.count("*").alias("c12"))

@@ -1681,7 +1681,11 @@ def s03_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — centroid sums are double accumulations whose
     cross-engine order difference is ~1 ulp, orders of magnitude
     below any argmin/rank gap, the same literal-mirror contract the
-    s01/s02/d08/d11 oracles rely on. Recall floor additionally
+    s01/s02/d08/d11 oracles rely on. Every nearest centroid — the
+    Lloyd step, the final assignment and the n_probe lists — comes
+    from one numpy kernel (`similarity._nearest`) with the oracle's
+    `ORDER BY dist, cluster` tie rule; a query with a NULL vector
+    probes no list and returns no rows. Recall floor additionally
     asserted in tests/test_similarity.py.
     """
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
@@ -3106,7 +3110,9 @@ def s06_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the RAM story for 10⁹-vector indexes), exact cosine re-rank of
     the top-20 ADC candidates. Fully deterministic (seeded codebooks,
     tie-to-lower-code argmin, fixed-order ADC sum), so the DuckDB
-    oracle mirrors codebooks → codes → ADC → refine value-for-value."""
+    oracle mirrors codebooks → codes → ADC → refine value-for-value.
+    The four codes come from one pass of the nearest-codeword kernel
+    (`similarity._nearest`)."""
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
         ann_pq_topk,
     )
@@ -8657,7 +8663,10 @@ def s10_ivf_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both quantizers are deterministic (lowest-id seeds, argmin ties
     to lower id/code, fixed-order ADC sum), so the DuckDB oracle
     CHAINS the s03 and s06 mirrors value-for-value — the composition
-    is verified, not just each part.
+    is verified, not just each part. The coarse cluster id and the 4
+    PQ codes come from ONE pass of the nearest-codeword kernel
+    (`similarity._nearest`); a query with a NULL vector probes no list
+    and returns no rows.
     """
     from etl_sql_and_pyspark_developement__spark.operators.similarity import (
         ann_ivf_pq_topk,

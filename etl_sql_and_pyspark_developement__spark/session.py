@@ -25,51 +25,69 @@ from pyspark.sql import DataFrame, SparkSession
 DAEMON_MODULE = "etl_sql_and_pyspark_developement__spark.worker_daemon"
 
 
+RUNTIME_CONF = {
+    # The runtime SQL confs both factories set; get_cluster_spark lays
+    # CLUSTER_PRESET over them.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Without this, any plan that reads a cached DataFrame keeps the
+    # full shuffle.partitions fan-out (AQE refuses to change cached
+    # output partitioning) — iterative ops (connected components)
+    # pay 32 near-empty tasks per tiny join. Trading cache-reuse of
+    # the exact partitioning for runtime coalescing is the right
+    # default for this engine's cached frames (small candidate sets).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.files.maxPartitionBytes": "134217728",
+    # Python Data Source filter pushdown is an ENGINE DEFAULT, not
+    # a per-lane mutation: a pushFilters-implementing reader (the
+    # q113 source) refuses to plan while this is false, planning is
+    # lazy (a per-lane set/restore would flip the conf back before
+    # the caller's action plans), and enabling it changes nothing
+    # for readers that don't implement pushFilters — defaulting it
+    # removes any run-order dependence between lanes.
+    "spark.sql.python.filterPushdown.enabled": "true",
+    # events.parquet's ts has shipped as INT64 TIMESTAMP(NANOS),
+    # which the reader rejects unless it reads the column as a long
+    # (catalog.normalize_events_ts converts it); a session default,
+    # so no reader flips it mid-session
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+# The RUNTIME_CONF keys configure_existing sets on a handed-over
+# session. Lanes that run inside a conf_scope (tests/test_plans.py)
+# call it too, so it must not re-arm any other key.
+HANDOVER_KEYS = (
+    "spark.sql.session.timeZone",
+    "spark.sql.adaptive.enabled",
+    "spark.sql.adaptive.coalescePartitions.enabled",
+    "spark.sql.adaptive.skewJoin.enabled",
+    "spark.sql.python.filterPushdown.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+
+
 def get_spark(
     app_name: str = "etl-sql-pyspark-engine",
     cpus: int | str | None = None,
-    shuffle_partitions: int | str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with the engine's standard config."""
+    """Build (or fetch) a SparkSession with the engine's standard
+    config: RUNTIME_CONF, one shuffle partition per core, and the
+    launch-time settings below."""
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
-    shuffle_partitions = shuffle_partitions or os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", str(cpus)
-    )
     builder = SparkSession.builder
     for k, v in (extra_conf or {}).items():
+        builder = builder.config(k, v)
+    for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)
     return (
         builder.appName(app_name)
         .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Without this, any plan that reads a cached DataFrame keeps the
-        # full shuffle.partitions fan-out (AQE refuses to change cached
-        # output partitioning) — iterative ops (connected components)
-        # pay 32 near-empty tasks per tiny join. Trading cache-reuse of
-        # the exact partitioning for runtime coalescing is the right
-        # default for this engine's cached frames (small candidate sets).
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        # Python Data Source filter pushdown is an ENGINE DEFAULT, not
-        # a per-lane mutation: a pushFilters-implementing reader (the
-        # q113 source) refuses to plan while this is false, planning is
-        # lazy (a per-lane set/restore would flip the conf back before
-        # the caller's action plans), and enabling it changes nothing
-        # for readers that don't implement pushFilters — defaulting it
-        # removes any run-order dependence between lanes.
-        .config("spark.sql.python.filterPushdown.enabled", "true")
-        # events.parquet's ts has shipped as INT64 TIMESTAMP(NANOS),
-        # which the reader rejects unless it reads the column as a long
-        # (catalog.normalize_events_ts converts it); a session default,
-        # so no reader flips it mid-session
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", DAEMON_MODULE)
@@ -79,8 +97,9 @@ def get_spark(
 
 CLUSTER_PRESET = {
     # The settings that change when this engine moves from local[32]
-    # to a 1000-executor cluster reading 100 TB. Everything else in
-    # get_spark (AQE, UTC, Arrow, broadcast threshold) carries over.
+    # to a 1000-executor cluster reading 100 TB. Everything in
+    # RUNTIME_CONF (AQE, UTC, Arrow, broadcast threshold, 128 MB file
+    # splits) carries over.
     #
     # shuffle partitions ≈ total shuffle bytes / 128 MB target;
     # AQE coalesces down, so err high. 100 TB input with ~10x
@@ -94,7 +113,6 @@ CLUSTER_PRESET = {
     "spark.dynamicAllocation.enabled": "true",
     "spark.dynamicAllocation.shuffleTracking.enabled": "true",
     # stability at scale
-    "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.shuffle.service.enabled": "true",
     "spark.speculation": "true",
     # the package must be installed in the executors' Python (a
@@ -105,34 +123,20 @@ CLUSTER_PRESET = {
 
 def get_cluster_spark(app_name: str = "etl-sql-pyspark-engine") -> SparkSession:
     """Session factory for a real cluster (spark-submit provides the
-    master); applies CLUSTER_PRESET on top of the standard config."""
+    master): RUNTIME_CONF with CLUSTER_PRESET on top."""
     builder = SparkSession.builder.appName(app_name)
-    for k, v in CLUSTER_PRESET.items():
+    for k, v in {**RUNTIME_CONF, **CLUSTER_PRESET}.items():
         builder = builder.config(k, v)
-    return (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .getOrCreate()
-    )
+    return builder.getOrCreate()
 
 
 def configure_existing(spark: SparkSession) -> SparkSession:
-    """Apply the runtime-settable subset of our config to a session we
+    """Apply the handed-over subset of our runtime config to a session we
     did not create (``__spark_entry__.entry`` receives one). Static
     confs, ``spark.python.daemon.module`` among them, keep the caller's
-    values."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    # engine default (see get_spark): required before a pushFilters
-    # reader can PLAN, harmless for every other source
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    values. Only HANDOVER_KEYS are set."""
+    for k in HANDOVER_KEYS:
+        spark.conf.set(k, RUNTIME_CONF[k])
     return spark
 
 

@@ -206,12 +206,14 @@ def test_one_materialization_site():
 def test_one_vector_vocabulary():
     """similarity.py writes its vector math once: the only
     aggregate/zip_with, as a Column call or as SQL text, is inside
-    `_fold` (which `_dot`, `_norm`, `_sq_l2`, `_pow_l2` and
-    lsh_signature build on); its numpy twins are written once too —
-    the only `acc += x * y` fold is `_np_fold`, the only Decimal
-    HALF_UP round `_np_round6`, the only read of Arrow list offsets
-    `_np_lists` — and plans/queries.py scores through `_cosine`
-    rather than importing the raw `_dot`/`_norm` folds."""
+    `_fold` (which `_dot`, `_norm`, `_sq_l2` and lsh_signature build
+    on); its numpy twins are written once too — the only
+    `acc += x * y` fold is `_np_fold`, the only Decimal HALF_UP round
+    `_np_round6`, the only read of Arrow list offsets `_np_lists` —;
+    `_nearest_kernel` is the only nearest-codeword site: no
+    `array_sort(` argmin, and no `min_by` but mmr_select's query
+    lookup; and plans/queries.py scores through `_cosine` rather than
+    importing the raw `_dot`/`_norm` folds."""
     import ast
     import pathlib
 
@@ -234,6 +236,8 @@ def test_one_vector_vocabulary():
             name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
             if name in ("aggregate", "zip_with"):
                 sites.append((self.fn, name))
+            if name == "min_by":
+                min_by_sites.append(self.top)
             self.generic_visit(node)
 
         def visit_Constant(self, node):
@@ -253,9 +257,13 @@ def test_one_vector_vocabulary():
             self.generic_visit(node)
 
     np_sites = set()
+    min_by_sites = []
     sim = root / "operators" / "similarity.py"
     Visitor().visit(ast.parse(sim.read_text(), str(sim)))
     assert sites and {fn for fn, _ in sites} == {"_fold"}, sites
+    assert "array_sort(" not in sim.read_text()
+    assert "min_by(" not in sim.read_text().replace("F.min_by(", "")
+    assert min_by_sites == ["mmr_select"], min_by_sites
     assert np_sites == {
         ("_np_fold", "fold"),
         ("_np_lists", "offsets"),
@@ -788,8 +796,9 @@ def test_t12_rule_gate_single_scan_no_shuffle(spark, sf_dir):
 
 def test_s06_pq_codes_mapside_and_broadcast_queries(spark, sf_dir):
     plan = plan_of(spark, "s06_pq_ann", sf_dir)
-    # encoding is map-side (zero Python); ADC scan broadcasts the tiny
-    # query side (nested-loop on the != predicate, same shape as s01)
+    # encoding is one narrow mapInArrow kernel (no per-row or scalar
+    # UDF Python); ADC scan broadcasts the tiny query side
+    # (nested-loop on the != predicate, same shape as s01)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "BroadcastNestedLoopJoin" in plan
     assert "CartesianProduct" not in plan

@@ -152,22 +152,166 @@ def test_ivf_recall_vs_bruteforce(spark, vectors):
     assert top and top[0].cand_id == 50
 
 
-def test_assign_clusters_join_path_matches_inline(spark, vectors, monkeypatch):
-    """Both assignment formulations (map-side literals vs broadcast
-    join + min_by) must agree exactly."""
-    from etl_sql_and_pyspark_developement__spark.operators import similarity as sim
+def _sql_double(v: float) -> str:
+    return f"{v!r}D" if math.isfinite(v) else f"CAST('{v}' AS DOUBLE)"
 
-    cents = sim.kmeans_lite_centroids(vectors, "embedding", k=4, iterations=1, dim=16)
-    inline = {
-        r.vec_id: r.cluster
-        for r in sim.assign_clusters(vectors, cents, "vec_id", "embedding").collect()
+
+def _argmin_sql_form(vec: str, table: list[list[float]]):
+    """The retired inline nearest codeword: array_sort over (distance,
+    index) structs of literal codewords, the distance in power(·, 2)
+    form. Ties and NaN go as in the kernel, but a row with no defined
+    distance sorts its all-NULL structs by index and gets code 0."""
+    from etl_sql_and_pyspark_developement__spark.operators.similarity import _fold
+
+    entries = ", ".join(
+        f"named_struct('d', {_fold('power(CAST(x AS DOUBLE) - y, 2)', vec, lit)}, 'i', {i})"
+        for i, lit in enumerate(
+            "array(" + ", ".join(map(_sql_double, c)) + ")" for c in table
+        )
+    )
+    return F.expr(f"cast(array_sort(array({entries}))[0].i as int)")
+
+
+def _join_sql_form(df, vec: str, table: list[list[float]], n: int | None = None):
+    """The retired broadcast-join nearest codeword: every (row,
+    codeword) pair scored by `_sq_l2`, then assign_clusters' min_by
+    (n=None: ties arbitrary, no defined distance gives NULL) or
+    _probe_lists' row_number over (distance, index) (the n nearest;
+    ties to the lower index, NaN last, but a row with no defined
+    distance sorts first and probes codes 0..n-1). {vec_id: code}."""
+    from pyspark.sql import Window
+
+    from etl_sql_and_pyspark_developement__spark.operators.similarity import _sq_l2
+
+    cents = df.sparkSession.createDataFrame(
+        list(enumerate(table)), "cluster int, centroid array<double>"
+    )
+    scored = df.join(F.broadcast(cents), F.lit(True)).withColumn(
+        "__dist", F.expr(_sq_l2(vec, "centroid"))
+    )
+    if n is None:
+        out = scored.groupBy("vec_id").agg(F.min_by("cluster", "__dist").alias("c"))
+        return {r.vec_id: r.c for r in out.collect()}
+    w = Window.partitionBy("vec_id").orderBy("__dist", "cluster")
+    out = scored.withColumn("__pr", F.row_number().over(w)).filter(F.col("__pr") <= n)
+    got: dict = {}
+    for r in out.orderBy("vec_id", "__pr").collect():
+        got.setdefault(r.vec_id, []).append(r.cluster)
+    return got
+
+
+def _codes(df, col):
+    return {r.vec_id: r[col] for r in df.collect()}
+
+
+def test_nearest_kernel_matches_retired_forms(spark, sf_dir, monkeypatch):
+    """`_nearest` against both retired SQL forms, with one tile per
+    batch and with a tile of one row.
+
+    The fixture has ties, a duplicated codeword, an all-NaN vector, a
+    NaN codeword, an Inf element, the zero vector, a NULL vector, a
+    NULL element and rows one element short and long. Where the
+    retired forms disagree the kernel keeps two rules: ties go to the
+    lower index and NaN sorts above every number (the array_sort form;
+    min_by's tie pick is arbitrary), and a row with no defined
+    distance gets a NULL code and probes no list (the min_by form;
+    array_sort gives it code 0 and row_number probes codes 0..n-1).
+    The sf0.01 embeddings take s10's shape: 16 centroids and four PQ
+    subspace codebooks in one kernel pass, and 4 probes."""
+    import pyarrow as pa
+
+    from etl_sql_and_pyspark_developement__spark.operators import similarity as sim
+    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
+
+    nan, inf = float("nan"), float("inf")
+    rows = [
+        (1, [0.0, 1.0]),
+        (2, [0.5, 0.5]),
+        (3, [1.0, 0.0]),
+        (4, [nan, nan]),
+        (5, [0.0, 0.0]),
+        (6, None),
+        (7, [1.0]),
+        (8, [1.0, None]),
+        (9, [1.0, 1.0, 1.0]),
+        (10, [inf, 0.0]),
+        (11, [3.0, 3.0]),
+        (12, [-1.0, -1.0]),
+        (13, [0.9, 0.2]),
+    ]
+    undefined = {6, 7, 8, 9}
+    adv = spark.createDataFrame(rows, "vec_id bigint, v array<double>")
+    dup = [[1.0, 1.0], [1.0, 1.0], [0.0, 0.0]]
+    nan_cw = [[nan, 0.0], [2.0, 2.0], [0.0, 0.0], [1.0, 1.0]]
+    # rows whose nearest codeword is unique and a number, per table
+    tie_free = {"dup": {5, 12}, "nan_cw": {5, 11, 12, 13}}
+    want = {
+        "dup": {1: 0, 2: 0, 3: 0, 4: 0, 5: 2, 10: 0, 11: 0, 12: 2, 13: 0},
+        "nan_cw": {1: 2, 2: 2, 3: 2, 4: 0, 5: 2, 10: 1, 11: 1, 12: 2, 13: 3},
     }
-    monkeypatch.setattr(sim, "MAX_INLINE_CENTROID_CELLS", 0)
-    joined = {
-        r.vec_id: r.cluster
-        for r in sim.assign_clusters(vectors, cents, "vec_id", "embedding").collect()
-    }
-    assert inline == joined
+    probes = {1: [2, 3], 2: [2, 3], 3: [2, 3], 4: [0, 1], 5: [2, 3],
+              10: [1, 2], 11: [1, 3], 12: [2, 3], 13: [3, 2]}
+    tables = {"dup": dup, "nan_cw": nan_cw}
+    inline_rows = adv.select(
+        "vec_id", *(_argmin_sql_form("v", t).alias(name) for name, t in tables.items())
+    ).collect()
+    joined = {name: _join_sql_form(adv, "v", t) for name, t in tables.items()}
+    probed = _join_sql_form(adv, "v", nan_cw, n=2)
+
+    emb = table(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01"), "embeddings")
+    emb = emb.select("vec_id", F.col("embedding").alias("v"))
+    seeds = [
+        [float(x) for x in r.v] for r in emb.orderBy("vec_id").limit(16).collect()
+    ]
+    books = sim._pq_codebooks(seeds[:8], 4, 16)
+    real_inline = emb.select(
+        "vec_id",
+        _argmin_sql_form("v", seeds).alias("cluster"),
+        *(
+            _argmin_sql_form(f"slice(v, {off + 1}, 16)", cb).alias(out)
+            for out, off, cb in books
+        ),
+    ).collect()
+    real_joined = _join_sql_form(emb, "v", seeds)
+    real_probed = _join_sql_form(emb, "v", seeds, n=4)
+    assert len(real_inline) == len(real_probed) == emb.count() > 0
+
+    for tile in (sim._PAIR_TILE_CELLS, 1):
+        monkeypatch.setattr(sim, "_PAIR_TILE_CELLS", tile)
+        got = sim._nearest(adv, "v", 2, [(name, 0, t) for name, t in tables.items()])
+        got_rows = {r.vec_id: r for r in got.collect()}
+        for name in tables:
+            codes = {i: r[name] for i, r in got_rows.items()}
+            assert codes == {**want[name], **dict.fromkeys(undefined)}, (name, tile)
+            for r in inline_rows:
+                assert r[name] == (0 if r.vec_id in undefined else codes[r.vec_id])
+            assert all(joined[name][i] is None for i in undefined)
+            assert {i: joined[name][i] for i in tie_free[name]} == {
+                i: codes[i] for i in tie_free[name]
+            }
+        got_probes = _codes(sim._nearest(adv, "v", 2, [("c", 0, nan_cw)], n=2), "c")
+        assert got_probes == {**probes, **dict.fromkeys(undefined)}, tile
+        assert all(probed[i] == [0, 1] for i in undefined)
+        assert {i: p for i, p in probed.items() if i not in undefined} == probes
+        assert _codes(sim._nearest(adv.limit(0), "v", 2, [("c", 0, dup)]), "c") == {}
+
+        enc = sim._nearest(emb, "v", 64, [("cluster", 0, seeds)] + books)
+        got_real = {r.vec_id: r for r in enc.collect()}
+        for r in real_inline:
+            assert got_real[r.vec_id].asDict() == {
+                **r.asDict(), "v": got_real[r.vec_id].v
+            }, r.vec_id
+        assert {i: r.cluster for i, r in got_real.items()} == real_joined
+        assert _codes(sim._nearest(emb, "v", 64, [("c", 0, seeds)], n=4), "c") == (
+            real_probed
+        )
+
+    # an empty Arrow batch passes through with empty code columns
+    kernel = sim._nearest_kernel("v", 2, [("c", 0, dup)], 2, 1)
+    empty = pa.record_batch([pa.array([], pa.list_(pa.float32()))], names=["v"])
+    (out,) = kernel([empty])
+    assert out.num_rows == 0 and out.schema.names == ["v", "c"]
+    assert out.schema.field("c").type == pa.list_(pa.int32())
 
 
 def test_cosine_neardup_candidates_path_is_subset_with_same_scores(spark, sf_dir):
