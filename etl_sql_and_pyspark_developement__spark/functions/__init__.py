@@ -50,18 +50,25 @@ def bucket_by_thresholds(col: Column, thresholds: list[tuple[float, str]], defau
     return expr.otherwise(default)
 
 
+def hex_int(hex: Column, start: int | Column = 1, digits: int = 8) -> Column:
+    """The engine's one hex-prefix → integer conversion: `digits` hex
+    characters of `hex` from 1-based `start`, read base 16, as a
+    BIGINT. Every deterministic md5 rule (buckets, splits, folds,
+    noise, shuffle keys, SimHash halves) is `hex_int(F.md5(key), …)`,
+    and DuckDB twins replay it digit for digit as
+    CAST(('0x' || substr(md5(key), start, digits)) AS BIGINT).
+
+    Format: a prefix of at most 13 digits (52 bits) is exact in a
+    double, so it also serves as a range-bucketing key; 16 digits
+    overflow a signed BIGINT (values ≥ 2^63), so a 64-bit hash is
+    read as two 8-digit halves, never one."""
+    return F.conv(F.substring(hex, start, digits), 16, 10).cast("long")
+
+
 def md5_bucket(col: Column, mod: int = 100) -> Column:
     """THE engine's deterministic hash-bucket assignment (the p03
-    split contract): first 8 hex chars of md5(value-as-string) read as
-    an integer, mod `mod`. Engine-portable — DuckDB renders the same
-    md5 hex for the same string, so oracle twins mirror it as
+    split contract): `hex_int` of md5(value-as-string), mod `mod`.
+    Oracle twins mirror it as
     CAST(('0x' || substr(md5(CAST(x AS VARCHAR)), 1, 8)) AS BIGINT)
-    % mod. This helper is the ONE definition; inline copies predating
-    it (p03/p07/p20 in plans/queries.py) are pinned by their driver
-    rows and must match it literally.
-    """
-    return (
-        F.conv(F.substring(F.md5(col.cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % mod
-    )
+    % mod."""
+    return hex_int(F.md5(col.cast("string"))) % mod

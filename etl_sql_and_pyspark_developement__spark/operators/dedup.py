@@ -44,6 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.functions import hex_int
 from etl_sql_and_pyspark_developement__spark.operators.spread import spread_small_scan
 from etl_sql_and_pyspark_developement__spark.operators.textstats import (
     bag_fingerprint,
@@ -207,9 +208,9 @@ def _signature_matrix(shingles):
     """(sig, ok) for an Arrow list<string> column of shingle sets:
     sig[i, j] = min over doc i's non-NULL shingles s of mix_j(hi, lo),
     hi/lo = the first two big-endian 32-bit words of md5(UTF-8 bytes
-    of s) — Spark's conv(substring(md5(s), 1, 8), 16, 10) and its
-    9..16 twin. ok[i] is False (signature NULL, the SQL min over no
-    values) where doc i has no non-NULL shingle."""
+    of s), Spark's hex_int(md5(s)) and hex_int(md5(s), 9). ok[i] is
+    False (signature NULL, the SQL min over no values) where doc i has
+    no non-NULL shingle."""
     import hashlib
 
     import numpy as np
@@ -578,12 +579,8 @@ def simhash_signatures(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         )
         .select("doc", F.explode(tokens(F.col("__t"))).alias("tok"))
         .withColumn("__md5", F.md5("tok"))
-        .withColumn(
-            "hi", F.conv(F.substring("__md5", 1, 8), 16, 10).cast("long")
-        )
-        .withColumn(
-            "lo", F.conv(F.substring("__md5", 9, 8), 16, 10).cast("long")
-        )
+        .withColumn("hi", hex_int(F.col("__md5")))
+        .withColumn("lo", hex_int(F.col("__md5"), 9))
     )
     # Single F.expr per column: composing these 64 sums + 4 chunk
     # folds operator-by-operator through py4j costs ~1.5s of query

@@ -17,6 +17,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.functions import hex_int
 from etl_sql_and_pyspark_developement__spark.operators.dedup import (
     _chunk_hamming_pairs,
 )
@@ -404,7 +405,7 @@ def modality_router(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     reason instead of poisoning a decode worker. The dispatch step a
     mixed 100 TB crawl runs BEFORE any expensive decode fan-out.
 
-    Pure codegen (hex/substring/conv integer arithmetic — the sniff
+    Pure codegen (hex/substring/hex_int integer arithmetic — the sniff
     must be cheap precisely because it sees every blob): one scan,
     zero shuffles, zero Python — and therefore a full DuckDB oracle,
     unlike the decode stubs behind it. NULL metadata columns mark the
@@ -428,9 +429,7 @@ def modality_router(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
         F.when(is_png, 9).when(is_jpeg, 4).when(is_wav, 13).otherwise(1)
     )
     body_bytes = n_bytes - (body_off - 1)
-    byte_at = lambda pos_expr: F.conv(  # noqa: E731
-        F.substring(hexp, pos_expr, 2), 16, 10
-    ).cast("int")
+    byte_at = lambda pos_expr: hex_int(hexp, pos_expr, 2).cast("int")  # noqa: E731
     first_b = byte_at((body_off - 1) * 2 + 1)
     last_b = byte_at(n_bytes * 2 - 1)
     is_image = is_png | is_jpeg

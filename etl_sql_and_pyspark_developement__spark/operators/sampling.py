@@ -1,6 +1,6 @@
 """Sampling operators for training-data pipelines: stratified
 sampling, deterministic per-group caps (hot-group downsampling), and
-seeded train/test splits.
+md5-bucket train/test splits.
 
 Scale notes: sampleBy/randomSplit are map-side filters (no shuffle);
 the per-group cap is one window shuffle on the group key — the same
@@ -10,8 +10,10 @@ cost as any per-group operation, used to stop a few giant groups
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from etl_sql_and_pyspark_developement__spark.functions import hex_int, md5_bucket
 
 
 def stratified_sample(
@@ -34,18 +36,6 @@ def per_group_cap(
         .filter(F.col("__rn") <= cap)
         .drop("__rn")
     )
-
-
-def train_test_split(
-    df: DataFrame, id_col: str, test_fraction_pct: int = 10, buckets: int = 100
-) -> tuple[DataFrame, DataFrame]:
-    """Deterministic hash split: rows whose id hashes into the first
-    `test_fraction_pct` of `buckets` go to test. Stable across runs,
-    engines, and re-partitioning — the property random splits lack."""
-    bucket = F.pmod(F.xxhash64(F.col(id_col)), F.lit(buckets))
-    test = df.filter(bucket < test_fraction_pct)
-    train = df.filter(bucket >= test_fraction_pct)
-    return train, test
 
 
 def token_budget_select(
@@ -91,6 +81,13 @@ def token_budget_select(
     return stats.filter(F.col("cum_tokens") <= budget)
 
 
+def _seed_key(seed: str | int, id_col: str) -> Column:
+    """md5(seed:id) as hex: the seeded per-row key of every seeded
+    md5 sampler (epoch shuffle, stratified sample, packing order,
+    curriculum), so one seed names one permutation of the ids."""
+    return F.md5(F.concat(F.lit(str(seed)), F.lit(":"), F.col(id_col).cast("string")))
+
+
 def seeded_shuffle_rank(
     df: DataFrame, id_col: str, seed: str | int = 0
 ) -> DataFrame:
@@ -113,12 +110,9 @@ def seeded_shuffle_rank(
         grouped_prefix_stats,
     )
 
-    key = F.md5(F.concat(F.lit(str(seed)), F.lit(":"), F.col(id_col).cast("string")))
     tagged = (
-        df.withColumn("shuffle_key", key)
-        .withColumn(
-            "__sk", F.conv(F.substring("shuffle_key", 1, 13), 16, 10).cast("long")
-        )
+        df.withColumn("shuffle_key", _seed_key(seed, id_col))
+        .withColumn("__sk", hex_int(F.col("shuffle_key"), digits=13))
         .withColumn("__g", F.lit(1))
         .withColumn("__one", F.lit(1))
     )
@@ -155,11 +149,7 @@ def weighted_mix(
 
     Scale: per-row codegen arithmetic, zero shuffles.
     """
-    bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 1000000
-    )
+    bucket = md5_bucket(F.col(id_col), 1000000)
     rate = F.lit(float(default_rate))
     for val, r in rates.items():
         rate = F.when(F.col(group_col) == val, F.lit(float(r))).otherwise(rate)
@@ -192,11 +182,7 @@ def epoch_expand(
     comes from composing with seeded_shuffle_rank over
     (id, copy_idx).
     """
-    bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 1000000
-    )
+    bucket = md5_bucket(F.col(id_col), 1000000)
     w = F.lit(float(default_weight))
     for val, r in weights.items():
         w = F.when(F.col(group_col) == val, F.lit(float(r))).otherwise(w)
@@ -228,22 +214,7 @@ def stratified_sample_md5(
 
     Scale: per-row codegen arithmetic, map-side filter, no shuffle.
     """
-    bucket = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(str(seed)), F.lit(":"), F.col(id_col).cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(1_000_000),
-    )
+    bucket = F.pmod(hex_int(_seed_key(seed, id_col)), F.lit(1_000_000))
     rate = None
     for stratum, ppm in sorted(fractions_ppm.items()):
         cond = F.col(strata_col) == stratum
@@ -285,19 +256,7 @@ def sequence_pack(
         grouped_prefix_stats,
     )
 
-    pack_num = F.conv(
-        F.substring(
-            F.md5(
-                F.concat(
-                    F.lit(str(seed)), F.lit(":"), F.col(id_col).cast("string")
-                )
-            ),
-            1,
-            13,
-        ),
-        16,
-        10,
-    ).cast("long")
+    pack_num = hex_int(_seed_key(seed, id_col), digits=13)
     tagged = df.withColumn("pack_num", pack_num).withColumn("__g", F.lit(1))
     stats = grouped_prefix_stats(
         tagged,
@@ -349,14 +308,9 @@ def curriculum_order(
     staged = scalable_ntile(
         df, score_col, stages, id_col, out_col="stage", descending=True
     )
-    key = F.md5(
-        F.concat(F.lit(str(seed)), F.lit(":"), F.col(id_col).cast("string"))
-    )
     tagged = (
-        staged.withColumn("shuffle_key", key)
-        .withColumn(
-            "__sk", F.conv(F.substring("shuffle_key", 1, 13), 16, 10).cast("long")
-        )
+        staged.withColumn("shuffle_key", _seed_key(seed, id_col))
+        .withColumn("__sk", hex_int(F.col("shuffle_key"), digits=13))
         .withColumn("__one", F.lit(1))
     )
     ranked = grouped_prefix_stats(
@@ -433,11 +387,7 @@ def temperature_mix(
         )
         .select(group_col, "w_mil", "rate_ppm")
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 1000000
-    )
+    bucket = md5_bucket(F.col(id_col), 1000000)
     return df.join(F.broadcast(rates), group_col).filter(bucket < F.col("rate_ppm"))
 
 
@@ -460,26 +410,10 @@ def res_uniform_expr(id_col: str, seed: int = 7):
     u = 1 would score an unweighted 0 and beat any weight; u = 0
     would make -ln(u) infinite."""
     prefix = RES_SEED_PREFIX.format(seed=seed)
-    return (
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit(prefix), F.col(id_col).cast("string")
-                        )
-                    ),
-                    1,
-                    6,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % RES_UNIFORM_MOD
-            + 1
-        ).cast("double")
-        / F.lit(RES_UNIFORM_DEN)
+    m = hex_int(
+        F.md5(F.concat(F.lit(prefix), F.col(id_col).cast("string"))), digits=6
     )
+    return (m % RES_UNIFORM_MOD + 1).cast("double") / F.lit(RES_UNIFORM_DEN)
 
 
 def res_score_py(doc_id: int, weight: int, seed: int = 7) -> float:
@@ -565,7 +499,6 @@ def leakage_safe_split(
     only (never all docs); the labeling join is one id-keyed
     equi-join; buckets are per-row codegen md5.
     """
-    from etl_sql_and_pyspark_developement__spark.functions import md5_bucket
     from etl_sql_and_pyspark_developement__spark.operators.dedup import (
         dedup_components,
     )

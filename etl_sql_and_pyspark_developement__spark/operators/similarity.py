@@ -1192,10 +1192,10 @@ def ann_pq_topk(
     Scale: codebooks are k_codes×dim floats collected once (a
     constant, not data); encoding is one narrow `_nearest` kernel
     pass for all m_sub codes (zero shuffle), which leaves out a row
-    with no defined distance; the ADC scan is broadcast-queries ×
-    codes with no shuffle; refine joins refine_n·|queries| ids back
-    against the corpus — the only wide op is the final per-query
-    top-k window over refine_n rows.
+    with no defined distance (a query without one returns no rows);
+    the ADC scan is broadcast-queries × codes with no shuffle; refine
+    joins refine_n·|queries| ids back against the corpus — the only
+    wide op is the final per-query top-k window over refine_n rows.
     """
     spark = corpus.sparkSession
     corpus = corpus.filter(F.col(vec_col).isNotNull())
@@ -1215,7 +1215,10 @@ def ann_pq_topk(
     )
     # a row with no defined distance has every code NULL: it is no candidate
     enc = materialize(coded.filter(F.col("code_0").isNotNull()).drop(vec_col))
-    pairs = F.broadcast(_side(queries, id_col, vec_col, "q")).join(
+    # a query with no defined distance (`_nearest`'s rule: NULL vector,
+    # NULL element, or not `dim` elements) returns no rows, as in s03/s10
+    defined = F.size(F.array_compact(vec_col)) == dim
+    pairs = F.broadcast(_side(queries.filter(defined), id_col, vec_col, "q")).join(
         enc, F.col("query_id") != F.col("cand_id")
     )
     return _pq_search(pairs, corpus, id_col, vec_col, books, k, refine_n)

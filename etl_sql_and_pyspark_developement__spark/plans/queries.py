@@ -20,6 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from etl_sql_and_pyspark_developement__spark.functions import hex_int, md5_bucket
 from etl_sql_and_pyspark_developement__spark.session import (
     conf_scope,
     configure_existing,
@@ -2205,19 +2206,13 @@ def p03_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic md5-bucket train/test split (10% test) summarized
     per lang × split. Engine-portable: both Spark and DuckDB render the
     same md5 hex for the same id string, so the assignment — not just
-    the rate — is oracle-verified. xxhash64 (operators/sampling.
-    train_test_split) is the faster JVM-side scale path with the same
-    stability property; md5 is the cross-engine-checkable variant.
+    the rate — is oracle-verified.
 
     Scale: narrow (no shuffle before the tiny groupBy); the hash is
     per-row arithmetic inside whole-stage codegen.
     """
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_bucket(F.col("doc_id"))
     return (
         docs.withColumn(
             "split", F.when(bucket < 10, F.lit("test")).otherwise(F.lit("train"))
@@ -2439,11 +2434,7 @@ def p04_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         kept.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
     )
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_bucket(F.col("doc_id"))
     return (
         uniq.withColumn(
             "split", F.when(bucket < 10, F.lit("test")).otherwise(F.lit("train"))
@@ -2557,11 +2548,7 @@ def d09_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long")
-        % 100
-    )
+    bucket = md5_bucket(F.col("doc_id"))
     keyed = docs.withColumn(
         "split", F.when(bucket < 10, F.lit("test")).otherwise(F.lit("train"))
     )
@@ -3772,19 +3759,8 @@ def p14_label_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
 
     def h(salt: str):
-        return F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"), F.lit("#" + salt)
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        key = F.concat(F.col("doc_id").cast("string"), F.lit("#" + salt))
+        return hex_int(F.md5(key))
 
     base_idx = h("base") % 3
     lab = docs.select("doc_id", base_idx.alias("__b"))
@@ -6043,9 +6019,15 @@ def q81_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "__u",
-            F.expr(
-                "CAST(conv(substring(md5(concat(CAST(b AS STRING), ':',"
-                " CAST(user_id AS STRING))), 1, 6), 16, 10) AS BIGINT)"
+            hex_int(
+                F.md5(
+                    F.concat(
+                        F.col("b").cast("string"),
+                        F.lit(":"),
+                        F.col("user_id").cast("string"),
+                    )
+                ),
+                digits=6,
             ),
         )
         .withColumn("w", F.expr(f"CASE {thresholds} ELSE 7 END"))
@@ -6475,10 +6457,9 @@ def p18_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = table(spark, sf_dir, "documents")
     sharded = docs.select(
-        F.expr(
-            "CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 6),"
-            " 16, 10) AS BIGINT) % 16"
-        ).alias("shard"),
+        (hex_int(F.md5(F.col("doc_id").cast("string")), digits=6) % 16).alias(
+            "shard"
+        ),
         F.expr(
             "CASE WHEN text IS NULL OR text = '' THEN 0"
             " ELSE size(split(text, ' ')) END"
@@ -7004,10 +6985,8 @@ def p19_privacy_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = docs.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs")
     )
-    noise = F.expr(
-        "CAST(conv(substring(md5(concat('dp:', source, ':', lang)),"
-        " 1, 6), 16, 10) AS BIGINT) % 21 - 10"
-    )
+    key = F.concat(F.lit("dp:"), F.col("source"), F.lit(":"), F.col("lang"))
+    noise = hex_int(F.md5(key), digits=6) % 21 - 10
     return (
         cells.withColumn("noise", noise)
         .select(
@@ -7447,9 +7426,12 @@ def p20_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     folded = ev.select(
         "event_id",
         "user_id",
-        F.expr(
-            "CAST(conv(substring(md5(concat('fold:', CAST(user_id AS"
-            " STRING))), 1, 6), 16, 10) AS BIGINT) % 5"
+        (
+            hex_int(
+                F.md5(F.concat(F.lit("fold:"), F.col("user_id").cast("string"))),
+                digits=6,
+            )
+            % 5
         ).alias("fold"),
     )
     per_user = folded.groupBy("user_id").agg(

@@ -425,47 +425,29 @@ def _merge_card_state(parts: DataFrame) -> DataFrame:
 def sink_stream_dataset_card(doc_stream: DataFrame, state_dir: str):
     """st15: INCREMENTAL dataset-card maintenance — the q45 partial-
     merge pattern + q51's mergeable HLL sketches applied to p13's
-    release audit. Each micro-batch contributes per-(source, lang)
-    partials (one pass over the batch); the stored card state is
-    merged with them and rewritten — history is NEVER rescanned, and
+    release audit. Each micro-batch writes its per-(source, lang)
+    partials (one pass over the batch) through `_write_epoch`, and
+    `read_dataset_card` merges them — history is NEVER rescanned, and
     the distinct-fingerprint axis stays decomposable because it lives
     in a union-mergeable sketch rather than an exact set.
 
-    The card state is |sources × langs| rows — a bounded aggregate
-    artifact, so collecting it to the driver between batches is the
-    same legitimate constant-size collect as IVF's centroids (NOT a
-    data collect), and it sidesteps read-overwrite conflicts on the
-    state path.
-
-    Durability caveat: the overwrite is not atomic with the batch
-    commit — a crash between them replays the batch into state that
-    may already include it. A production deployment writes
-    epoch-versioned state keyed by `epoch_id` (idempotent re-merge)
-    alongside the stream checkpoint; the merge math here is unchanged
-    by that hardening.
-    """
-    import os
-
-    def process(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        parts = _card_partials(batch_df)
-        if os.path.isdir(state_dir):
-            prev = spark.read.parquet(state_dir)
-            rows = _merge_card_state(parts.unionByName(prev)).collect()
-        else:
-            rows = parts.collect()
-        merged = spark.createDataFrame(rows, parts.schema)
-        merged.write.mode("overwrite").parquet(state_dir)
-
-    return doc_stream.writeStream.foreachBatch(process)
+    A replayed epoch overwrites its own partials, so it is counted
+    once. The stored state grows by |cells| rows per batch (cells =
+    the (source, lang) pairs the batch touches), as st22's does."""
+    return doc_stream.writeStream.foreachBatch(
+        lambda batch_df, epoch_id: _write_epoch(
+            _card_partials(batch_df), state_dir, epoch_id
+        )
+    )
 
 
 def read_dataset_card(spark: SparkSession, state_dir: str) -> DataFrame:
-    """The maintained card, with the derived (non-decomposable)
-    columns computed at read time from the stored partials — mean
-    quality from sum/count, rule pass rate in ppm, and the approximate
-    distinct-document count from the merged sketch."""
-    s = spark.read.parquet(state_dir)
+    """The maintained card: the stored partials merged by
+    `_merge_card_state`, with the derived (non-decomposable) columns
+    computed at read time — mean quality from sum/count, rule pass
+    rate in ppm, and the approximate distinct-document count from the
+    merged sketch."""
+    s = _merge_card_state(spark.read.parquet(state_dir))
     return s.select(
         "source",
         "lang",

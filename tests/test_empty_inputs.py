@@ -125,3 +125,20 @@ def test_every_query_tolerates_adversarial_text(spark, adversarial_sf_dir):
         except Exception as ex:  # noqa: BLE001
             failures.append(f"{key}: {type(ex).__name__}: {str(ex).splitlines()[0][:100]}")
     assert not failures, "queries crashed on adversarial text:\n" + "\n".join(failures)
+
+
+def test_ann_lanes_drop_null_vector_queries(spark, nulled_sf_dir):
+    """s03, s06 and s10 agree on a query with no defined distance: the
+    nulled fixture's query 3 has a NULL vector, so it returns no row,
+    while every other query still returns its k = 5 neighbours."""
+    for key in ("s03_ann_ivf", "s06_pq_ann", "s10_ivf_pq_ann"):
+        per_query = {
+            r.query_id: r.n
+            for r in QUERIES[key](spark, nulled_sf_dir)
+            .groupBy("query_id")
+            .count()
+            .withColumnRenamed("count", "n")
+            .collect()
+        }
+        assert 3 not in per_query, (key, per_query)
+        assert per_query and set(per_query.values()) == {5}, (key, per_query)

@@ -280,6 +280,57 @@ def test_one_vector_vocabulary():
     assert not imported & {"_dot", "_norm"}, imported & {"_dot", "_norm"}
 
 
+def test_one_md5_key_vocabulary():
+    """The md5 key arithmetic is written once: outside plans/oracles.py
+    (the DuckDB twins) the package's only conv — a call or SQL text —
+    is inside functions.hex_int, and the seeded md5 key
+    concat(seed, ':', id) is built only in sampling._seed_key."""
+    import ast
+    import pathlib
+
+    import etl_sql_and_pyspark_developement__spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    conv, seed_key = set(), set()
+
+    def is_lit(node, value=None):
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "lit"
+            and (value is None or ast.unparse(node.args[0]) == value)
+        )
+
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "plans" / "oracles.py":
+            continue
+        mod = str(path.relative_to(root))
+        tree = ast.parse(path.read_text())
+        for top in ast.walk(tree):
+            if not isinstance(top, ast.FunctionDef):
+                continue
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call):
+                    name = getattr(node.func, "attr", getattr(node.func, "id", None))
+                    if name == "conv":
+                        conv.add((mod, top.name))
+                    args = node.args
+                    if (
+                        name == "concat"
+                        and len(args) == 3
+                        and is_lit(args[0])
+                        and is_lit(args[1], "':'")
+                    ):
+                        seed_key.add((mod, top.name))
+                elif (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and "conv(" in node.value.lower()
+                ):
+                    conv.add((mod, top.name))
+    assert conv == {("functions/__init__.py", "hex_int")}, conv
+    assert seed_key == {("operators/sampling.py", "_seed_key")}, seed_key
+
+
 def test_one_shingle_vocabulary():
     """dedup writes its shingle vocabulary once: shingle_sets is the
     only shingle frame (no shingle_df, no `sh=` parameter); its
@@ -2361,17 +2412,19 @@ def test_plan_metrics_record_subset_matches(spark):
     a pushdown consumer (q108), a broadcast-strategy lane (q106), the
     reuse lane (q112), a Python-stage lane (q127), a plain
     aggregate (q01), the shared-shingle pair path (d02), the
-    benchmark's batch lanes (d03, d08, s11) and the batch twins of the
-    streaming folds (q72, q86). Exact equality, sf0.01 (the record's
-    sf).
+    benchmark's batch lanes (d03, d08, s11), the batch twins of the
+    streaming folds (q72, q86) and the md5-keyed lanes (p02, p03, p07,
+    p18, p19, p20, d04), whose keys all come from functions.hex_int.
+    Exact equality, sf0.01 (the record's sf).
 
     The record is taken at the session default, local[32]. At another
     parallelism d02's shingle document-frequency partial aggregate runs
     over a different number of spread partitions, so its partial-row
     counts, and only those, differ (at local[4]: shuffle_rows [11533,
     22882, 22882] against the recorded [11533, 25702, 25702]); there
-    d02 is compared on every other field. d03, d08, s11, q72 and q86
-    are the same at local[4], [8] and [32]."""
+    d02 is compared on every other field. d03, d08, s11, q72, q86 and
+    the seven md5-keyed lanes are the same at local[4], [8] and [32];
+    no md5-keyed lane that was checked had to be left out."""
     import json
     import os
 
@@ -2403,6 +2456,13 @@ def test_plan_metrics_record_subset_matches(spark):
         "s11_arrow_vector_features",
         "q72_ewma_smoothing",
         "q86_holt_forecast",
+        "p02_stratified_sample",
+        "p03_hash_split",
+        "p07_epoch_shuffle",
+        "p18_shard_manifest",
+        "p19_privacy_noise",
+        "p20_group_kfold",
+        "d04_dedup_simhash",
     ):
         df = QUERIES[key](spark, sf01)
         df.collect()

@@ -1,5 +1,5 @@
-"""Sampling invariants: determinism, per-stratum rates, split
-disjointness/completeness."""
+"""Sampling invariants: determinism, per-stratum rates, per-group
+caps, seeded md5 orderings."""
 
 from __future__ import annotations
 
@@ -26,26 +26,6 @@ def test_stratified_sample_deterministic_and_rates(spark, sf_dir):
     assert counts["fr"] == totals["fr"]  # fraction 1 -> everything
     rate = counts["en"] / totals["en"]
     assert 0.3 < rate < 0.7, f"en sampling rate {rate} far from 0.5"
-
-
-def test_train_test_split_disjoint_complete(spark, sf_dir):
-    from etl_sql_and_pyspark_developement__spark.operators.sampling import (
-        train_test_split,
-    )
-    from etl_sql_and_pyspark_developement__spark.sources.catalog import table
-
-    docs = table(spark, sf_dir, "documents")
-    train, test = train_test_split(docs, "doc_id", test_fraction_pct=10)
-    n_train, n_test, n_all = train.count(), test.count(), docs.count()
-    assert n_train + n_test == n_all
-    assert train.join(test, "doc_id").count() == 0
-    assert 0.02 < n_test / n_all < 0.25  # ~10% with hash variance
-
-    # stable across invocations (hash-based, not random)
-    train2, test2 = train_test_split(docs, "doc_id", test_fraction_pct=10)
-    assert sorted(r.doc_id for r in test.collect()) == sorted(
-        r.doc_id for r in test2.collect()
-    )
 
 
 def test_per_group_cap_exact(spark):

@@ -275,9 +275,11 @@ def _sink_case(case, spark, sf_dir, events_dir, documents_dir, out):
         )
         writer = pipeline.sink_foreach_batch_parquet(stream, out)
         return writer.outputMode("update"), [out]
-    if case == "st13":
+    if case in ("st13", "st15"):
         docs = table(spark, sf_dir, "documents")
         stream = spark.readStream.schema(docs.schema).parquet(documents_dir)
+        if case == "st15":
+            return pipeline.sink_stream_dataset_card(stream, out), [out]
         return pipeline.sink_stream_boilerplate(stream, docs, out), [out]
     if case == "st22":
         stream = pipeline.read_event_stream(spark, events_dir)
@@ -330,7 +332,7 @@ def test_foreach_batch_sink_replayed_epoch_writes_once(
         assert run() == first
 
 
-@pytest.mark.parametrize("case", ["st13", "st22", "st37"])
+@pytest.mark.parametrize("case", ["st13", "st15", "st22", "st37"])
 def test_foreach_batch_sinks_replayed_epoch_write_once(
     spark, sf_dir, events_dir, documents_dir, tmp_path, case
 ):
