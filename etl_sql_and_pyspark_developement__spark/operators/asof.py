@@ -5,7 +5,8 @@ explosion. (The alternative, applyInPandas + pd.merge_asof per group,
 drops to Python; only worth it for many columns of payload.)
 
 For each left row, attaches the latest right row with
-right.ts <= left.ts within the same key.
+right.ts <= left.ts within the same key (or, forward, the earliest
+with right.ts >= left.ts).
 """
 
 from __future__ import annotations
@@ -22,22 +23,38 @@ def as_of_join(
     right_ts: str,
     payload: dict[str, Column | str],
     tiebreak: str | None = None,
+    direction: str = "backward",
 ) -> DataFrame:
     """Return `left` plus, for every name in `payload`, the value of
-    that right-side column from the most recent right row at or before
-    the left row's timestamp (NULL if none).
+    that right-side column from the matching right row within the
+    same key (NULL if none):
 
-    Ties on the right side break toward the greater right timestamp;
-    pass `tiebreak` (a column present on BOTH sides, e.g. an event id)
-    to make duplicate-(key, ts) inputs fully deterministic — without
-    it, callers with duplicate (key, ts) right rows should
+    - ``direction="backward"``: the most recent right row at or before
+      the left row's timestamp; output columns ``asof_<name>``.
+    - ``direction="forward"``: the earliest right row at or after it
+      (pandas merge_asof's other direction, first(ignorenulls) over
+      the following frame); output columns ``asof_fwd_<name>``.
+
+    Equal timestamps match either way: at equal ts the right rows
+    sort on the near side of the left row (before it backward, after
+    it forward). Pass `tiebreak` (a column present on BOTH sides, e.g.
+    an event id) to make duplicate-(key, ts) inputs fully
+    deterministic: the match is then the last preceding (backward) or
+    first following (forward) right row in (ts, tiebreak) order —
+    without it, callers with duplicate (key, ts) right rows should
     pre-aggregate.
     """
+    if direction not in ("backward", "forward"):
+        raise ValueError(f"direction must be 'backward' or 'forward', not {direction!r}")
+    forward = direction == "forward"
+    # the side tag sorts right rows onto the near side of an equal-ts
+    # left row, which makes the match inclusive in both directions
+    left_side, right_side = (0, 1) if forward else (1, 0)
     pay_names = list(payload)
     r = right.select(
         F.col(key).alias("__k"),
         F.col(right_ts).alias("__ts"),
-        F.lit(0).alias("__side"),
+        F.lit(right_side).alias("__side"),
         *([F.col(tiebreak).alias("__tb")] if tiebreak else []),
         *[
             (F.col(c) if isinstance(c, str) else c).alias(f"__p_{n}")
@@ -46,7 +63,7 @@ def as_of_join(
     )
     l = left.withColumn("__k", F.col(key)).withColumn(
         "__ts", F.col(left_ts)
-    ).withColumn("__side", F.lit(1))
+    ).withColumn("__side", F.lit(left_side))
     if tiebreak:
         l = l.withColumn("__tb", F.col(tiebreak))
     for n in pay_names:
@@ -54,77 +71,26 @@ def as_of_join(
     unioned = l.select(*[f.name for f in l.schema.fields]).unionByName(
         r, allowMissingColumns=True
     )
-    # right rows (side 0) sort before left rows at equal ts -> "<=" semantics
     order = ["__ts", "__side"] + (["__tb"] if tiebreak else [])
-    w = (
-        Window.partitionBy("__k")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    w = Window.partitionBy("__k").orderBy(*order)
+    if forward:
+        w, pick, prefix = (
+            w.rowsBetween(Window.currentRow, Window.unboundedFollowing),
+            F.first,
+            "asof_fwd_",
+        )
+    else:
+        w, pick, prefix = (
+            w.rowsBetween(Window.unboundedPreceding, Window.currentRow),
+            F.last,
+            "asof_",
+        )
     matched = unioned
     for n in pay_names:
         matched = matched.withColumn(
-            f"asof_{n}", F.last(f"__p_{n}", ignorenulls=True).over(w)
+            f"{prefix}{n}", pick(f"__p_{n}", ignorenulls=True).over(w)
         )
     return (
-        matched.filter(F.col("__side") == 1)
-        .drop("__k", "__ts", "__side", "__tb", *[f"__p_{n}" for n in pay_names])
-    )
-
-
-def as_of_join_forward(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    payload: dict[str, Column | str],
-    tiebreak: str | None = None,
-) -> DataFrame:
-    """FORWARD as-of: for each left row, the EARLIEST right row with
-    right.ts >= left.ts within the key (NULL if none) — the other half
-    of pandas merge_asof's direction switch, same one-shuffle
-    tag+union+window shape (first(ignorenulls) over the FOLLOWING
-    frame). At equal timestamps the right row matches ("=" included):
-    left rows sort BEFORE right rows there (the mirror of the backward
-    tagging). Output columns are ``asof_fwd_<name>``.
-    """
-    pay_names = list(payload)
-    r = right.select(
-        F.col(key).alias("__k"),
-        F.col(right_ts).alias("__ts"),
-        F.lit(1).alias("__side"),
-        *([F.col(tiebreak).alias("__tb")] if tiebreak else []),
-        *[
-            (F.col(c) if isinstance(c, str) else c).alias(f"__p_{n}")
-            for n, c in payload.items()
-        ],
-    )
-    l = left.withColumn("__k", F.col(key)).withColumn(
-        "__ts", F.col(left_ts)
-    ).withColumn("__side", F.lit(0))
-    if tiebreak:
-        l = l.withColumn("__tb", F.col(tiebreak))
-    for n in pay_names:
-        l = l.withColumn(
-            f"__p_{n}", F.lit(None).cast(r.schema[f"__p_{n}"].dataType)
-        )
-    unioned = l.select(*[f.name for f in l.schema.fields]).unionByName(
-        r, allowMissingColumns=True
-    )
-    # left rows (side 0) sort before right rows at equal ts -> ">=" incl.
-    order = ["__ts", "__side"] + (["__tb"] if tiebreak else [])
-    w = (
-        Window.partitionBy("__k")
-        .orderBy(*order)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    matched = unioned
-    for n in pay_names:
-        matched = matched.withColumn(
-            f"asof_fwd_{n}", F.first(f"__p_{n}", ignorenulls=True).over(w)
-        )
-    return (
-        matched.filter(F.col("__side") == 0)
+        matched.filter(F.col("__side") == left_side)
         .drop("__k", "__ts", "__side", "__tb", *[f"__p_{n}" for n in pay_names])
     )

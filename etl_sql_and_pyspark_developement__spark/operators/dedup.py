@@ -995,9 +995,9 @@ def _segments(
     df: DataFrame, id_col: str, text_col: str, seg_words: int
 ) -> DataFrame:
     """(doc, pos, seg, fp): non-overlapping `seg_words`-token chunks
-    with position and md5 fingerprint — the shared segmentation of the
-    batch scrub (boilerplate_scrub) and the streaming gate
-    (boilerplate_index / boilerplate_apply).
+    with position and md5 fingerprint — the one segmentation of
+    boilerplate_index and boilerplate_apply (the batch scrub d13 and
+    the streaming gate st13).
 
     NOT spread (r11): the interleaved A/B measured the widening
     exchange at +0.46s on d13 — the chunk transform is light and the
@@ -1100,52 +1100,27 @@ def boilerplate_scrub(
     md5 of the reassembled text (md5('') when every segment was
     boilerplate) — value-verifiable without shipping full text.
 
-    Scale (100 TB): four linear passes, never pairwise —
+    The scrub is boilerplate_index over the corpus itself, then
+    boilerplate_apply. Scale (100 TB): four linear passes, never
+    pairwise —
     1. chunk+explode into (doc, pos, seg) — narrow;
     2. doc-frequency count on md5(seg): partial-agg (the distinct
        (doc, fp) pre-step shuffles on high-cardinality fp — skew-free
        even when one banner is in every doc, because partial
        aggregation collapses per-task before the exchange);
     3. left_anti join segments × boiler-fp set on fp — the boiler set
-       is tiny by construction (only fps crossing `min_docs`), so AQE
-       broadcasts it;
+       is tiny by construction (only fps crossing `min_docs`), so it
+       broadcasts;
     4. per-doc reassembly groupBy: collect_list bounded by the doc's
        own segment count — the same size bound as the source row.
     """
-    segs = _segments(df, id_col, text_col, seg_words)
-    boiler = (
-        segs.select("doc", "fp")
-        .distinct()
-        .groupBy("fp")
-        .agg(F.count("*").alias("n_docs_with"))
-        .filter(F.col("n_docs_with") >= min_docs)
-        .select("fp")
-    )
-    kept = segs.join(boiler, "fp", "left_anti")
-    totals = segs.groupBy("doc").agg(F.count("*").alias("n_segs"))
-    reassembled = kept.groupBy("doc").agg(
-        F.count("*").alias("n_kept"),
-        F.md5(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "seg"))),
-                    lambda s: s["seg"],
-                ),
-                " ",
-            )
-        ).alias("clean_fp"),
-    )
-    return (
-        totals.join(reassembled, "doc", "left")
-        .select(
-            F.col("doc").alias(id_col),
-            "n_segs",
-            (F.col("n_segs") - F.coalesce("n_kept", F.lit(0))).alias("n_removed"),
-            F.expr(
-                "1000000 * (n_segs - coalesce(n_kept, 0)) div n_segs"
-            ).alias("removed_ppm"),
-            F.coalesce("clean_fp", F.md5(F.lit(""))).alias("clean_fp"),
-        )
+    boiler = boilerplate_index(df, id_col, text_col, seg_words, min_docs)
+    return boilerplate_apply(df, boiler, id_col, text_col, seg_words).select(
+        id_col,
+        "n_segs",
+        "n_removed",
+        F.expr("1000000 * n_removed div n_segs").alias("removed_ppm"),
+        F.md5("clean_text").alias("clean_fp"),
     )
 
 

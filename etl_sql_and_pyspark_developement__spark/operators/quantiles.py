@@ -1,36 +1,38 @@
-"""Scale-path quantile bucketing and EXACT global ranking without a
-single-task global sort.
+"""EXACT ranks, running sums and weighted quantiles without a
+single-task sort.
 
-Exact NTILE(n) / ROW_NUMBER() over an unpartitioned ORDER BY funnels
-the whole table through ONE window task — at 10⁹+ entities that is the
-canonical driver-of-OOM. Two alternatives live here:
+Exact NTILE(n) / ROW_NUMBER() / running sums over an unpartitioned
+ORDER BY (or over a few giant groups) funnel the whole table through
+ONE window task — at 10⁹+ entities that is the canonical
+driver-of-OOM. Every operator here ranks the same distributed way:
 
-1. `approx_ntile` — approximate buckets from sketch cut points
-   (boundaries off by ≤ 1/accuracy of the mass; exact in expectation).
+(a) a deterministic sketch (percentile_approx, a mergeable partial
+    aggregate — sketch bytes shuffle, never rows) yields P-1 cut
+    points on the sort key, over the whole input or per group;
+(b) every row gets a MONOTONE bucket id `__rb` = 1 + (number of cuts
+    strictly below its key): bucket b never sorts after bucket b+1 and
+    equal keys share a bucket. A narrow codegen comparison — unlike
+    repartitionByRange, whose sampled boundaries are not deterministic
+    across re-computations of the same plan. The cut form follows the
+    input: with no group the cuts are collected once and compared as a
+    LITERAL array; per group they are a |groups|-row frame,
+    broadcast-joined and compared by an unrolled element_at sum
+    (`_range_buckets` records the A/B behind each);
+(c) ONE window over the per-bucket aggregate (≤ |groups|×P rows, tiny
+    by construction) gives each bucket its offsets — rows and sums in
+    the lower buckets of its group — and the group totals
+    (`_bucket_offsets`);
+(d) a local window per (group, bucket) ranks and running-sums rows
+    inside their bucket, so the sort is spread across P tasks per
+    group;
+(e) rank = offset + local rank, running sum = offset sum + local
+    running sum — EXACT wherever the sketch put the cuts, because
+    bucketing is monotone in the key and equal keys always share a
+    bucket. Bucket sizes only need to be balanced, not exact.
 
-2. `scalable_ntile` / `range_bucket` — EXACT global rank, distributed:
-   (a) a deterministic sketch (percentile_approx, mergeable partial
-       agg — sketch bytes shuffle, never rows) yields P-1 cut points;
-   (b) every row gets a MONOTONE bucket id by comparing its sort key
-       against the broadcast cut array (narrow, codegen — unlike
-       repartitionByRange, whose sampled boundaries are not
-       deterministic across re-computations of the same plan);
-   (c) per-bucket local row_number (one window task PER BUCKET — the
-       sort is distributed across P tasks);
-   (d) each bucket's offset = total rows in lower buckets, computed by
-       a window over the P-row bucket-counts aggregate (tiny by
-       construction) and broadcast-joined back;
-   (e) global_rank = offset + local row_number — EXACT regardless of
-       where the sketch put the cuts, because bucketing is monotone in
-       the sort key and equal keys always share a bucket.
-   NTILE then is pure arithmetic on the exact rank (q = n div k,
-   rem = n mod k — the first rem buckets hold q+1 rows):
-       ntile(k) = ceil(rank / (q+1))                 if rank ≤ rem·(q+1)
-                  rem + ceil((rank − rem·(q+1)) / q) otherwise
-   which reproduces SQL's front-loaded-remainder semantics
-   bit-for-bit, verified against F.ntile in tests. (The tempting
-   floor((rank−1)·k/n)+1 is NOT ntile — it spreads the remainder
-   evenly instead of front-loading it.)
+scalable_ntile and grouped_prefix_stats run (a)–(e) over every row;
+grouped_weighted_quantiles stops after (c) and windows only the
+buckets its quantiles cross.
 """
 
 from __future__ import annotations
@@ -40,21 +42,16 @@ from pyspark.sql import functions as F
 
 from etl_sql_and_pyspark_developement__spark.session import materialize
 
+# percentile_approx accuracy of every cut sketch: cut error ≤ 1/_ACCURACY
+# of the mass, far below the 1/P a bucket holds. Balance only —
+# exactness never depends on it.
+_ACCURACY = 10000
 
-def approx_ntile(
-    df: DataFrame,
-    value_col: str,
-    n: int,
-    out_col: str = "bucket",
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Assign each row an approximate n-tile bucket in [1, n] by
-    `value_col`, ascending (bucket 1 = smallest values)."""
-    probs = [i / n for i in range(1, n)]
-    cuts = df.select(
-        F.percentile_approx(value_col, probs, accuracy).alias("c")
-    ).first()["c"]
-    return df.withColumn(out_col, bucket_expr(F.col(value_col), list(cuts)))
+# every helper column the construction adds; callers drop them
+_HELPERS = (
+    "__rkey", "__rb", "__bcnt", "__cnt_off", "__cnt_all",
+    "__bsum", "__sum_off", "__sum_all",
+)
 
 
 def _balanced_sum(terms: list[Column]) -> Column:
@@ -68,82 +65,123 @@ def _balanced_sum(terms: list[Column]) -> Column:
     return terms[0]
 
 
-_UNROLL_MAX = 128
-
-
-def bucket_expr(value: Column, cuts: list[float]) -> Column:
-    """1 + (number of cut points strictly below value) over a LITERAL
-    cut array, as a higher-order filter — no join, no UDF. Measured
-    faster than an unrolled when-sum here (0.7s vs 1.2s inside
-    scalable_ntile at sf0.1): the literal array is one constant and
-    the expression appears in several plan operators, so a 63-term
-    unrolled tree bloats analysis/codegen more than the interpreted
-    per-element lambda costs. (The opposite holds for the per-group
-    JOINED cuts column — see _bucket_from_cuts_col.)"""
-    arr = F.array(*[F.lit(float(c)) for c in cuts])
-    return (
-        F.lit(1) + F.size(F.filter(arr, lambda c: c < value))
-    ).cast("int")
-
-
-def _bucket_from_cuts_col(n_cuts: int) -> Column:
-    """1 + (count of __cuts elements strictly below __rkey) with the
-    fixed-length cut array unrolled into element_at comparisons —
-    measured ~1.6x per pass over the HOF form (q65 2.0s vs 3.4s, gps
-    1.1s vs 1.7s at sf0.1): with a per-ROW array column the HOF lambda
-    is interpreted per element with no constant to hoist. Beyond
-    _UNROLL_MAX cuts the unrolled tree overflows the analyzer stack
-    (~1000 terms), so large cut counts keep the HOF form."""
-    if n_cuts > _UNROLL_MAX:
-        return (
-            F.lit(1)
-            + F.size(F.filter("__cuts", lambda c: c < F.col("__rkey")))
-        ).cast("int")
-    terms = [
-        F.when(
-            F.element_at(F.col("__cuts"), i) < F.col("__rkey"), 1
-        ).otherwise(0)
-        for i in range(1, n_cuts + 1)
-    ]
-    return _balanced_sum([F.lit(1), *terms]).cast("int")
-
-
-def range_bucket(
-    df: DataFrame,
-    key_col: Column,
-    partitions: int = 64,
-    accuracy: int = 10000,
-    out_col: str = "__rb",
+def _range_buckets(
+    df: DataFrame, key: Column, group_col: str | None, partitions: int
 ) -> DataFrame:
-    """Assign each row a deterministic MONOTONE bucket id in [1,
-    partitions] by `key_col` ascending: bucket(b) rows never sort
-    after bucket(b+1) rows, and equal keys share a bucket. The cut
-    points come from one percentile_approx pass (mergeable sketch —
-    deterministic, unlike repartitionByRange's sampling); the bucket
-    assignment itself is a narrow codegen comparison. Bucket sizes are
-    ~n/partitions ± sketch error — they only need to be balanced, not
-    exact, because callers recount per bucket.
+    """Steps (a)–(b): `df` plus `__rkey` (the sort key as a double) and
+    its monotone bucket `__rb` in [1, partitions], within `group_col`
+    when given.
 
-    The eager `.first()` sketch handoff is DELIBERATE (re-examined
-    r12, VERDICT item "lazier sketch handoff" — measured a LOSS both
-    lazy ways and kept): as a DataFrame.scalar() subquery the
-    subquery expression is copied into each unrolled bucket term
-    (q67 construction 1.4s -> 5.1s); as a broadcast 1-row cross join
-    the sketch pass re-executes once per consumer of the bucketed
-    frame and the joined-attribute bucket battery loses the literal
-    constant (isolated interleaved A/B, one scalable_ntile at sf0.1:
-    eager 0.60-0.74s vs lazy-join 2.06-2.20s best-of-3). The eager
-    job is one cheap pass over the caller's ALREADY-materialized
-    frame, and the literal cut array keeps every downstream operator's
-    codegen small — exactly the trade bucket_expr's docstring
-    records."""
-    tagged = df.withColumn("__rkey", key_col.cast("double"))
+    Global cuts are collected EAGERLY and compared as a literal array
+    through a higher-order filter. Both alternatives measured worse
+    (isolated interleaved A/B, one scalable_ntile at sf0.1): a
+    DataFrame.scalar() subquery is copied into every bucket term (q67
+    construction 1.4s -> 5.1s), and a broadcast 1-row cross join
+    re-runs the sketch once per consumer of the bucketed frame and
+    loses the literal constant (eager 0.60-0.74s vs lazy join
+    2.06-2.20s best-of-3). Against a literal array the HOF also beat
+    an unrolled when-sum (0.7s vs 1.2s): the array is one constant,
+    while a 63-term tree bloats analysis and codegen in every operator
+    it appears in.
+
+    Per-group cuts are a |groups|-row frame, broadcast-joined and left
+    lazy: AQE reuses the one broadcast for every consumer of the
+    bucketed frame, and materializing it measured slower (interleaved
+    A/B at sf0.1, 4 cores, 3 rounds, median best-of-runs: q83 2.16s
+    materialized vs 1.68s lazy, p16 1.27s vs 1.10s, p15 1.23s vs
+    1.08s, q65 2.34s vs 2.30s — the eager job costs more construct time
+    than it saves). Against that per-ROW array column the comparison is
+    unrolled into element_at terms: the HOF lambda would be interpreted
+    per element with no constant to hoist (unrolled ~1.6x faster per
+    pass — q65 2.0s vs 3.4s, grouped_prefix_stats 1.1s vs 1.7s at
+    sf0.1)."""
+    tagged = df.withColumn("__rkey", key.cast("double"))
+    groups = [group_col] if group_col else []
     probs = [i / partitions for i in range(1, partitions)]
-    row = tagged.select(
-        F.percentile_approx("__rkey", probs, accuracy).alias("c")
-    ).first()
-    cuts = [float(c) for c in (row["c"] or [])] if row is not None else []
-    return tagged.withColumn(out_col, bucket_expr(F.col("__rkey"), cuts))
+    cuts = tagged.groupBy(*groups).agg(
+        F.percentile_approx("__rkey", probs, _ACCURACY).alias("__cuts")
+    )
+    if group_col is None:
+        lits = [F.lit(float(c)) for c in cuts.first()["__cuts"] or []]
+        below = F.size(F.filter(F.array(*lits), lambda c: c < F.col("__rkey")))
+        return tagged.withColumn("__rb", (F.lit(1) + below).cast("int"))
+    terms = [
+        F.when(F.element_at(F.col("__cuts"), i) < F.col("__rkey"), 1).otherwise(0)
+        for i in range(1, partitions)
+    ]
+    return (
+        tagged.join(F.broadcast(cuts), group_col)
+        .withColumn("__rb", _balanced_sum([F.lit(1), *terms]).cast("int"))
+        .drop("__cuts")
+    )
+
+
+def _bucket_offsets(
+    bucketed: DataFrame, group_col: str | None, sum_col: str | None
+) -> DataFrame:
+    """Step (c): one row per (group, bucket) with the bucket's row
+    count `__bcnt`, the rows in its group's lower buckets `__cnt_off`
+    and the group's row total `__cnt_all`; with `sum_col`, the same
+    three for its sum (`__bsum`, `__sum_off`, `__sum_all`). Columns a
+    caller never reads are pruned from the plan."""
+    groups = [group_col] if group_col else []
+    stats = [("__bcnt", "__cnt", F.count(F.lit(1)))]
+    if sum_col:
+        stats.append(("__bsum", "__sum", F.sum(sum_col)))
+    per_bucket = bucketed.groupBy(*groups, "__rb").agg(
+        *[agg.alias(name) for name, _, agg in stats]
+    )
+    w = Window.partitionBy(*groups).orderBy("__rb")
+    lower = w.rowsBetween(Window.unboundedPreceding, -1)
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    cols = []
+    for name, prefix, _ in stats:
+        cols += [
+            name,
+            F.coalesce(F.sum(name).over(lower), F.lit(0)).alias(f"{prefix}_off"),
+            F.sum(name).over(whole).alias(f"{prefix}_all"),
+        ]
+    return per_bucket.select(*groups, "__rb", *cols)
+
+
+def _prefix_rank(
+    df: DataFrame,
+    group_col: str | None,
+    sum_col: str | None,
+    key: Column,
+    order: list[Column],
+    partitions: int,
+    rank_out: str,
+    cum_out: str | None,
+) -> DataFrame:
+    """Steps (a)–(e): `df` plus the exact row_number `rank_out` in
+    (key ASC, *order) order within `group_col` (all rows when None)
+    and, with `sum_col`, its inclusive running sum `cum_out`; the
+    helper columns stay on for the caller to read and drop.
+
+    The input is materialized: the sketch, the per-bucket aggregate
+    and the rank pass would otherwise each re-execute its whole
+    upstream plan — callers feed a per-entity aggregate or a
+    feature-heavy scan (p06's quality regexes), exactly the frame
+    worth caching (bench: q16 1.75s -> ~0.6s at sf0.1)."""
+    bucketed = _range_buckets(materialize(df), key, group_col, partitions)
+    offsets = _bucket_offsets(bucketed, group_col, sum_col)
+    groups = [group_col] if group_col else []
+    w_local = Window.partitionBy(*groups, "__rb").orderBy(
+        F.col("__rkey").asc(), *order
+    )
+    ranked = bucketed.join(F.broadcast(offsets), [*groups, "__rb"]).withColumn(
+        rank_out, F.col("__cnt_off") + F.row_number().over(w_local)
+    )
+    if sum_col is None:
+        return ranked
+    return ranked.withColumn(
+        cum_out,
+        F.col("__sum_off")
+        + F.sum(sum_col).over(
+            w_local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        ),
+    )
 
 
 def scalable_ntile(
@@ -154,88 +192,65 @@ def scalable_ntile(
     out_col: str = "bucket",
     descending: bool = True,
     range_partitions: int = 64,
-    accuracy: int = 10000,
 ) -> DataFrame:
     """EXACT NTILE(n) over (value_col [DESC], tiebreak_col ASC) with
-    no unpartitioned window: distributed rank via range_bucket +
-    per-bucket row_number + broadcast bucket offsets (module
-    docstring, steps b-e). Bit-identical to
-    F.ntile(n).over(Window.orderBy(...)) — asserted in
+    no unpartitioned window: the global exact rank of the module
+    docstring's steps (a)–(e), then pure arithmetic on it. Bit-identical
+    to F.ntile(n).over(Window.orderBy(...)) — asserted in
     tests/test_sampling.py — at ~P-way parallel sort cost.
-
     `range_partitions` bounds per-task sort size: at 10⁹ entities use
-    n_rows / ~5M. The input is materialized as the sketch, count, and
-    rank passes would otherwise re-execute its whole upstream plan 3x
-    — callers feed it a per-entity aggregate,
-    which is exactly the frame worth caching (bench: q16 1.75s→~0.6s
-    at sf0.1)."""
+    n_rows / ~5M.
+
+    With q = n_rows div n and rem = n_rows mod n, the first rem tiles
+    hold q+1 rows:
+        ntile(n) = ceil(rank / (q+1))                 if rank ≤ rem·(q+1)
+                   rem + ceil((rank − rem·(q+1)) / q) otherwise
+    which reproduces SQL's front-loaded-remainder semantics
+    bit-for-bit. (The tempting floor((rank−1)·n/n_rows)+1 is NOT ntile
+    — it spreads the remainder evenly instead of front-loading it.)"""
     key = -F.col(value_col) if descending else F.col(value_col)
-    df = materialize(df)
-    bucketed = range_bucket(df, key, range_partitions, accuracy)
-    counts = bucketed.groupBy("__rb").count()
-    # ≤ range_partitions rows: a global window over this aggregate is
-    # the q17 "reduce first, window over the tiny series" pattern.
-    w_off = Window.orderBy("__rb").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.select(
-        "__rb",
-        F.coalesce(F.sum("count").over(w_off), F.lit(0)).alias("__off"),
-        F.sum("count")
-        .over(
-            Window.orderBy("__rb").rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("__n"),
+    ranked = _prefix_rank(
+        df, None, None, key, [F.col(tiebreak_col).asc()], range_partitions,
+        "__grank", None,
     )
-    w_local = Window.partitionBy("__rb").orderBy(
-        F.col("__rkey").asc(), F.col(tiebreak_col).asc()
-    )
-    ranked = bucketed.join(F.broadcast(offsets), "__rb").withColumn(
-        "__grank", F.col("__off") + F.row_number().over(w_local)
-    )
-    r, total = F.col("__grank"), F.col("__n")
-    q = F.floor(total / n)  # base bucket size (n div k)
-    rem = total % n  # this many leading buckets get one extra row
-    big = (q + 1) * rem  # ranks covered by the larger buckets
+    r, total = F.col("__grank"), F.col("__cnt_all")
+    q = F.floor(total / n)  # base tile size (n_rows div n)
+    rem = total % n  # this many leading tiles get one extra row
+    big = (q + 1) * rem  # ranks covered by the larger tiles
     # ceil-div via floor((a+b-1)/b); greatest() only guards the
-    # never-taken branch when q=0 (more buckets than rows) from a
+    # never-taken branch when q=0 (more tiles than rows) from a
     # divide-by-zero under ANSI mode.
     tile = F.when(r <= big, F.floor((r + q) / (q + 1))).otherwise(
         rem + F.floor((r - big + F.greatest(q, F.lit(1)) - 1) / F.greatest(q, F.lit(1)))
     ).cast("int")
-    return ranked.withColumn(out_col, tile).drop(
-        "__rb", "__rkey", "__off", "__n", "__grank"
-    )
+    return ranked.withColumn(out_col, tile).drop("__grank", *_HELPERS)
 
 
 def grouped_prefix_stats(
     df: DataFrame,
-    group_col: str,
-    sum_col: str,
+    group_col: str | None,
+    sum_col: str | None,
     priority_cols: list[str],
     tiebreak_col: str,
     rank_out: str = "sel_rank",
     cum_out: str = "cum_sum",
     descending: bool = True,
     range_partitions: int = 32,
-    accuracy: int = 10000,
 ) -> DataFrame:
-    """Per-group EXACT row_number + inclusive running sum of `sum_col`
-    in (priority_cols... DESC, tiebreak ASC) order, without one serial
-    window task per group — the scale form of
-    Window.partitionBy(group).orderBy(...) running totals when groups
-    are few and giant (a handful of sources over 100 TB).
+    """Per-group EXACT row_number `rank_out` + inclusive running sum
+    `cum_out` of `sum_col` in (priority_cols... DESC, tiebreak ASC)
+    order, without one serial window task per group — the scale form
+    of Window.partitionBy(group).orderBy(...) running totals when
+    groups are few and giant (a handful of sources over 100 TB).
+    `group_col=None` ranks the whole input as one order; `sum_col=None`
+    returns the rank alone.
 
-    Same construction as scalable_ntile but per group: per-group cut
-    points on the PRIMARY priority column (one groupBy sketch pass,
-    |groups|×P broadcast — bucketing only needs the primary key to be
-    monotone; secondary priorities and the tiebreak order rows within
-    a bucket, which is consistent because cross-bucket order is
-    decided by the primary alone), monotone in-group bucketing,
-    per-(group,bucket) local window, offsets (preceding-bucket counts
-    AND sums) from a window over the |groups|×P aggregate.
-    Bit-identical to the single-window form — asserted in
-    tests/test_sampling.py."""
+    The module docstring's steps (a)–(e) on the PRIMARY priority column
+    (or the tiebreak, with no priorities): bucketing only needs the
+    primary key to be monotone — secondary priorities and the tiebreak
+    order rows within a bucket, which is consistent because cross-bucket
+    order is decided by the primary alone. Bit-identical to the
+    single-window form — asserted in tests/test_sampling.py."""
     if priority_cols:
         primary = F.col(priority_cols[0])
         key = -primary if descending else primary
@@ -243,46 +258,9 @@ def grouped_prefix_stats(
     else:
         key = F.col(tiebreak_col)
         tail = [F.asc(tiebreak_col)]
-    # Materialized for the same 3-pass reason as scalable_ntile — the
-    # upstream here is often a feature-heavy scan (p06's quality
-    # scoring regexes), the worst thing to execute three times.
-    tagged = materialize(df.withColumn("__rkey", key.cast("double")))
-    probs = [i / range_partitions for i in range(1, range_partitions)]
-    cuts = tagged.groupBy(group_col).agg(
-        F.percentile_approx("__rkey", probs, accuracy).alias("__cuts")
-    )
-    bucketed = tagged.join(F.broadcast(cuts), group_col).withColumn(
-        "__rb", _bucket_from_cuts_col(range_partitions - 1)
-    ).drop("__cuts")
-    per_bucket = bucketed.groupBy(group_col, "__rb").agg(
-        F.count("*").alias("__cnt"), F.sum(sum_col).alias("__bsum")
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__rb")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = per_bucket.select(
-        group_col,
-        "__rb",
-        F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)).alias("__cnt_off"),
-        F.coalesce(F.sum("__bsum").over(w_off), F.lit(0)).alias("__sum_off"),
-    )
-    w_local = Window.partitionBy(group_col, "__rb").orderBy(
-        F.col("__rkey").asc(), *tail
-    )
-    return (
-        bucketed.join(F.broadcast(offsets), [group_col, "__rb"])
-        .withColumn(rank_out, F.col("__cnt_off") + F.row_number().over(w_local))
-        .withColumn(
-            cum_out,
-            F.col("__sum_off")
-            + F.sum(sum_col).over(
-                w_local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            ),
-        )
-        .drop("__rb", "__rkey", "__cnt_off", "__sum_off")
-    )
+    return _prefix_rank(
+        df, group_col, sum_col, key, tail, range_partitions, rank_out, cum_out
+    ).drop(*_HELPERS)
 
 
 def grouped_weighted_quantiles(
@@ -293,7 +271,6 @@ def grouped_weighted_quantiles(
     tiebreak_col: str,
     quantiles: list[tuple[int, int]],
     range_partitions: int = 32,
-    accuracy: int = 1000,
 ) -> DataFrame:
     """EXACT lower weighted quantiles per group: for each (num, den)
     fraction, the first value (in (value, tiebreak) order) whose
@@ -301,67 +278,22 @@ def grouped_weighted_quantiles(
     Returns (group, num, den, q_value, total_w, total_n) — one row
     per group × quantile. Integer weights make every crossing test exact.
 
-    Scale shape — crucially CHEAPER than materializing per-row ranks
+    Crucially CHEAPER than materializing per-row ranks
     (grouped_prefix_stats) when only the quantile POINTS are needed:
-    1. monotone range-bucket by value (deterministic sketch cuts —
-       balance only, exactness never depends on them);
-    2. ONE (group, bucket) aggregation of counts + weight sums;
-    3. locate each quantile's crossing BUCKET on that tiny aggregate
-       (first bucket whose end-of-bucket cumulative weight reaches
-       the mark — unique, because ties in value never straddle a
-       bucket);
-    4. re-join ONLY the crossing buckets (≤ |quantiles| per group,
-       ~1/range_partitions of the data) and run the in-bucket running
-       sum there — the full table is never windowed.
-    Input is NOT checkpointed: it is scanned three times (cuts,
+    after the module docstring's steps (a)–(c) by value, each
+    quantile's crossing BUCKET is located on the tiny per-bucket frame
+    (the first bucket whose end-of-bucket cumulative weight reaches the
+    mark — unique, because ties in value never straddle a bucket), and
+    only the crossing buckets (≤ |quantiles| per group, ~1/P of the
+    data) are re-joined and running-summed — the full table is never
+    windowed.
+    Input is NOT materialized: it is scanned three times (cuts,
     per-bucket agg, crossing-bucket join), which beats materialization
     whenever the upstream is a plain column projection of a scan —
     callers with an expensive upstream should persist it themselves.
     """
-    tagged = df.withColumn("__rkey", F.col(value_col).cast("double"))
-    probs = [i / range_partitions for i in range(1, range_partitions)]
-    # The cuts frame is |groups| rows but its sketch job is a full
-    # scan — it feeds BOTH the per-bucket aggregate and the
-    # crossing-bucket join side, and unmaterialized it would re-run
-    # once per consumer inside the single final action. Checkpointing
-    # a |groups|-row frame is near-free.
-    cuts = materialize(
-        tagged.groupBy(group_col).agg(
-            F.percentile_approx("__rkey", probs, accuracy).alias("__cuts")
-        )
-    )
-    bucketed = (
-        tagged.join(F.broadcast(cuts), group_col)
-        .withColumn("__rb", _bucket_from_cuts_col(range_partitions - 1))
-        .drop("__cuts")
-    )
-    per_bucket = bucketed.groupBy(group_col, "__rb").agg(
-        F.sum(weight_col).alias("__bw"), F.count(F.lit(1)).alias("__bc")
-    )
-    w_grp = Window.partitionBy(group_col).orderBy("__rb")
-    stats = per_bucket.select(
-        group_col,
-        "__rb",
-        "__bw",
-        F.coalesce(
-            F.sum("__bw").over(w_grp.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).alias("__cb"),
-        F.sum("__bw")
-        .over(
-            w_grp.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("__w_all"),
-        F.sum("__bc")
-        .over(
-            w_grp.rowsBetween(
-                Window.unboundedPreceding, Window.unboundedFollowing
-            )
-        )
-        .alias("__n_all"),
-    )
+    bucketed = _range_buckets(df, F.col(value_col), group_col, range_partitions)
+    stats = _bucket_offsets(bucketed, group_col, weight_col)
     # quantile marks inlined as a literal struct array (explode on the
     # tiny stats frame) — a createDataFrame here costs ~0.5s of
     # Python→JVM conversion per call for 3 rows
@@ -379,31 +311,28 @@ def grouped_weighted_quantiles(
     # strictly increasing over non-empty buckets, so it is unique)
     crossing = (
         stats.select("*", marks)
-        .select(
-            group_col, "__rb", "__bw", "__cb", "__w_all", "__n_all",
-            F.col("__m.num").alias("num"), F.col("__m.den").alias("den"),
-        )
+        .select("*", "__m.num", "__m.den")
         .filter(
-            (F.col("den") * (F.col("__cb") + F.col("__bw"))
-             >= F.col("num") * F.col("__w_all"))
-            & (F.col("den") * F.col("__cb") < F.col("num") * F.col("__w_all"))
+            (F.col("den") * (F.col("__sum_off") + F.col("__bsum"))
+             >= F.col("num") * F.col("__sum_all"))
+            & (F.col("den") * F.col("__sum_off") < F.col("num") * F.col("__sum_all"))
         )
-        .select(group_col, "__rb", "num", "den", "__cb", "__w_all", "__n_all")
+        .select(group_col, "__rb", "num", "den", "__sum_off", "__sum_all", "__cnt_all")
     )
     sel = bucketed.join(F.broadcast(crossing), [group_col, "__rb"])
     w_loc = Window.partitionBy(group_col, "__rb", "num", "den").orderBy(
         F.col("__rkey").asc(), F.col(tiebreak_col).asc()
     )
-    run = F.col("__cb") + F.sum(weight_col).over(
+    run = F.col("__sum_off") + F.sum(weight_col).over(
         w_loc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return (
         sel.withColumn("__run", run)
         .filter(
-            (F.col("den") * F.col("__run") >= F.col("num") * F.col("__w_all"))
+            (F.col("den") * F.col("__run") >= F.col("num") * F.col("__sum_all"))
             & (
                 F.col("den") * (F.col("__run") - F.col(weight_col))
-                < F.col("num") * F.col("__w_all")
+                < F.col("num") * F.col("__sum_all")
             )
         )
         .select(
@@ -411,7 +340,7 @@ def grouped_weighted_quantiles(
             "num",
             "den",
             F.col(value_col).alias("q_value"),
-            F.col("__w_all").alias("total_w"),
-            F.col("__n_all").alias("total_n"),
+            F.col("__sum_all").alias("total_w"),
+            F.col("__cnt_all").alias("total_n"),
         )
     )

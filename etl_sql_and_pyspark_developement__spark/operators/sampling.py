@@ -110,22 +110,18 @@ def seeded_shuffle_rank(
         grouped_prefix_stats,
     )
 
-    tagged = (
-        df.withColumn("shuffle_key", _seed_key(seed, id_col))
-        .withColumn("__sk", hex_int(F.col("shuffle_key"), digits=13))
-        .withColumn("__g", F.lit(1))
-        .withColumn("__one", F.lit(1))
+    tagged = df.withColumn("shuffle_key", _seed_key(seed, id_col)).withColumn(
+        "__sk", hex_int(F.col("shuffle_key"), digits=13)
     )
     return grouped_prefix_stats(
         tagged,
-        "__g",
-        "__one",
+        None,
+        None,
         ["__sk"],
         "shuffle_key",
         rank_out="epoch_rank",
-        cum_out="__cum",
         descending=False,
-    ).drop("__g", "__sk", "__one", "__cum")
+    ).drop("__sk")
 
 
 def weighted_mix(
@@ -257,17 +253,16 @@ def sequence_pack(
     )
 
     pack_num = hex_int(_seed_key(seed, id_col), digits=13)
-    tagged = df.withColumn("pack_num", pack_num).withColumn("__g", F.lit(1))
     stats = grouped_prefix_stats(
-        tagged,
-        "__g",
+        df.withColumn("pack_num", pack_num),
+        None,
         token_col,
         ["pack_num"],
         id_col,
         rank_out="pack_rank",
         cum_out="cum_tokens",
         descending=False,
-    ).drop("__g")
+    )
     start_seq = F.expr(f"(cum_tokens - {token_col}) div {max_len}")
     end_seq = F.expr(f"(cum_tokens - 1) div {max_len}")
     return (
@@ -308,19 +303,16 @@ def curriculum_order(
     staged = scalable_ntile(
         df, score_col, stages, id_col, out_col="stage", descending=True
     )
-    tagged = (
-        staged.withColumn("shuffle_key", _seed_key(seed, id_col))
-        .withColumn("__sk", hex_int(F.col("shuffle_key"), digits=13))
-        .withColumn("__one", F.lit(1))
+    tagged = staged.withColumn("shuffle_key", _seed_key(seed, id_col)).withColumn(
+        "__sk", hex_int(F.col("shuffle_key"), digits=13)
     )
     ranked = grouped_prefix_stats(
         tagged,
         "stage",
-        "__one",
+        None,
         ["__sk"],
         "shuffle_key",
         rank_out="__stage_rank",
-        cum_out="__cum",
         descending=False,
     )
     sizes = staged.groupBy("stage").count()

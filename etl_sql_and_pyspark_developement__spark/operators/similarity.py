@@ -1087,13 +1087,12 @@ def density_prune(
         "__vid", "grp", F.coalesce("density_ppm", F.lit(0)).alias("density_ppm")
     )
     ranked = grouped_prefix_stats(
-        base.withColumn("__one", F.lit(1)),
+        base,
         group_col="grp",
-        sum_col="__one",
+        sum_col=None,
         priority_cols=["density_ppm"],
         tiebreak_col="__vid",
         rank_out="dens_rank",
-        cum_out="__cum",
         descending=False,
     )
     counts = base.groupBy("grp").agg(F.count("*").alias("__n"))

@@ -897,7 +897,6 @@ def test_as_of_join_forward_and_tiebreak(spark):
     right rows deterministic on both directions."""
     from etl_sql_and_pyspark_developement__spark.operators.asof import (
         as_of_join,
-        as_of_join_forward,
     )
 
     t = ts("2024-01-01 10:00:00")
@@ -915,9 +914,9 @@ def test_as_of_join_forward_and_tiebreak(spark):
     )
     out = {
         r.pid: r.asof_fwd_val
-        for r in as_of_join_forward(
+        for r in as_of_join(
             left, right, key="k", left_ts="lts", right_ts="rts",
-            payload={"val": "val"}, tiebreak="event_id",
+            payload={"val": "val"}, tiebreak="event_id", direction="forward",
         ).collect()
     }
     assert out["p1"] == 10.0  # at-or-after includes equality
@@ -927,9 +926,10 @@ def test_as_of_join_forward_and_tiebreak(spark):
     dup = spark.createDataFrame(
         [(1, t, 5, 1.0), (1, t, 6, 2.0)], ["k", "rts", "event_id", "val"]
     )
-    fwd = as_of_join_forward(
+    fwd = as_of_join(
         left.filter("pid = 'p1'"), dup, key="k", left_ts="lts",
         right_ts="rts", payload={"val": "val"}, tiebreak="event_id",
+        direction="forward",
     ).collect()[0]
     assert fwd.asof_fwd_val == 1.0
     back = as_of_join(

@@ -331,6 +331,50 @@ def test_one_md5_key_vocabulary():
     assert seed_key == {("operators/sampling.py", "_seed_key")}, seed_key
 
 
+def test_one_range_rank():
+    """operators/quantiles.py writes the exact-rank construction once:
+    one percentile_approx (the cut sketch, global or per group), one
+    `rowsBetween(Window.unboundedPreceding, -1)` (the window over the
+    per-bucket aggregate), and no quantiles signature takes
+    `accuracy`; and no module fakes a global rank or a rank-only call
+    with a constant `__g` group or `__one` sum column —
+    grouped_prefix_stats takes group_col=None / sum_col=None."""
+    import ast
+    import pathlib
+
+    import etl_sql_and_pyspark_developement__spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    quantiles = ast.parse((root / "operators" / "quantiles.py").read_text())
+    sketches, offset_windows, accuracy = [], [], []
+    for node in ast.walk(quantiles):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name == "percentile_approx":
+                sketches.append(node.lineno)
+            if name == "rowsBetween" and [ast.unparse(a) for a in node.args] == [
+                "Window.unboundedPreceding",
+                "-1",
+            ]:
+                offset_windows.append(node.lineno)
+        elif isinstance(node, ast.FunctionDef):
+            args = node.args
+            if "accuracy" in {a.arg for a in args.args + args.kwonlyargs}:
+                accuracy.append(node.name)
+    assert len(sketches) == 1, sketches
+    assert len(offset_windows) == 1, offset_windows
+    assert accuracy == [], accuracy
+
+    fake = set()
+    for path in sorted(root.rglob("*.py")):
+        mod = str(path.relative_to(root))
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and node.value in ("__g", "__one"):
+                fake.add((mod, node.lineno, node.value))
+    assert fake == set(), sorted(fake)
+
+
 def test_one_shingle_vocabulary():
     """dedup writes its shingle vocabulary once: shingle_sets is the
     only shingle frame (no shingle_df, no `sh=` parameter); its
@@ -689,13 +733,22 @@ def test_q45_no_history_window(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
+def _rank_window_on_range_bucket(plan: str) -> bool:
+    """The exact-rank row_number window is partitioned by the range
+    bucket `__rb` (quantiles' step (d)); an unpartitioned rank window —
+    one global sort task — prints `windowspecdefinition(__rkey...`."""
+    import re
+
+    return re.search(r"row_number\(\) windowspecdefinition\(__rb#\d+, ", plan) is not None
+
+
 def test_p07_distributed_rank(spark, sf_dir):
     """Epoch shuffle: the md5 rank goes through the range-bucketed
     machinery (per-bucket windows + a broadcast offsets join), never
     one global sort task; no Python."""
     plan = plan_of(spark, "p07_epoch_shuffle", sf_dir)
     assert "BatchEvalPython" not in plan
-    assert "hashpartitioning(__g" in plan, "rank not bucket-distributed"
+    assert _rank_window_on_range_bucket(plan), "rank not bucket-distributed"
     assert "BroadcastHashJoin" in plan, "bucket offsets must broadcast"
 
 
@@ -1051,12 +1104,10 @@ def test_q58_user_keyed_touch_join(spark, sf_dir):
 
 def test_q60_pareto_distributed_prefix_sum(spark, sf_dir):
     """The cumulative share must ride grouped_prefix_stats' bucketed
-    machinery — windows keyed (__g, __rb), never a single global
+    machinery — the rank window keyed by __rb, never a single global
     ordered window over all parts — and the total broadcasts."""
-    import re
-
     plan = plan_of(spark, "q60_pareto_abc", sf_dir)
-    assert re.search(r"hashpartitioning\(__g#\d+, __rb#\d+", plan), plan[:2000]
+    assert _rank_window_on_range_bucket(plan), plan[:2000]
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -2413,8 +2464,11 @@ def test_plan_metrics_record_subset_matches(spark):
     reuse lane (q112), a Python-stage lane (q127), a plain
     aggregate (q01), the shared-shingle pair path (d02), the
     benchmark's batch lanes (d03, d08, s11), the batch twins of the
-    streaming folds (q72, q86) and the md5-keyed lanes (p02, p03, p07,
-    p18, p19, p20, d04), whose keys all come from functions.hex_int.
+    streaming folds (q72, q86), the md5-keyed lanes (p02, p03, p07,
+    p18, p19, p20, d04), whose keys all come from functions.hex_int,
+    and the exact-rank lanes of operators/quantiles.py (q12, q60, q65,
+    q67, p06, p09, p10: global and grouped cuts, with and without a
+    running sum, and the weighted-quantile crossing search).
     Exact equality, sf0.01 (the record's sf).
 
     The record is taken at the session default, local[32]. At another
@@ -2422,9 +2476,10 @@ def test_plan_metrics_record_subset_matches(spark):
     over a different number of spread partitions, so its partial-row
     counts, and only those, differ (at local[4]: shuffle_rows [11533,
     22882, 22882] against the recorded [11533, 25702, 25702]); there
-    d02 is compared on every other field. d03, d08, s11, q72, q86 and
-    the seven md5-keyed lanes are the same at local[4], [8] and [32];
-    no md5-keyed lane that was checked had to be left out."""
+    d02 is compared on every other field. d03, d08, s11, q72, q86, the
+    seven md5-keyed lanes and the seven rank lanes are the same at
+    local[4], [8] and [32]; no md5-keyed or rank lane that was checked
+    had to be left out."""
     import json
     import os
 
@@ -2463,6 +2518,13 @@ def test_plan_metrics_record_subset_matches(spark):
         "p19_privacy_noise",
         "p20_group_kfold",
         "d04_dedup_simhash",
+        "q12_ltv_deciles",
+        "q60_pareto_abc",
+        "q65_weighted_median",
+        "q67_rfm_segments",
+        "p06_token_budget",
+        "p09_sequence_pack",
+        "p10_curriculum",
     ):
         df = QUERIES[key](spark, sf01)
         df.collect()

@@ -45,37 +45,6 @@ def test_per_group_cap_exact(spark):
     assert sorted(by_grp["b"]) == [0, 1, 2]
 
 
-def test_approx_ntile_tracks_exact_deciles(spark, sf_dir):
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from etl_sql_and_pyspark_developement__spark.operators.quantiles import (
-        approx_ntile,
-    )
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    ltv = orders.groupBy("o_custkey").agg(F.sum("o_totalprice").alias("ltv"))
-    approx = approx_ntile(ltv, "ltv", 10, out_col="b_approx")
-    exact = ltv.withColumn(
-        "b_exact", F.ntile(10).over(Window.orderBy("ltv", "o_custkey"))
-    )
-    joined = approx.join(exact.select("o_custkey", "b_exact"), "o_custkey")
-    rows = joined.select("ltv", "b_approx", "b_exact").collect()
-    n = len(rows)
-    # bucket assignment is monotone in value
-    by_val = sorted(rows, key=lambda r: r.ltv)
-    assert all(a.b_approx <= b.b_approx for a, b in zip(by_val, by_val[1:]))
-    # high sketch accuracy => near-exact agreement (ties aside)
-    agree = sum(r.b_approx == r.b_exact for r in rows)
-    assert agree / n >= 0.95
-    # every bucket within 25% of the ideal size
-    from collections import Counter
-
-    sizes = Counter(r.b_approx for r in rows)
-    ideal = n / 10
-    assert all(abs(sizes.get(b, 0) - ideal) <= max(3, 0.25 * ideal) for b in range(1, 11))
-
-
 def test_weighted_mix_nested_and_deterministic(spark, sf_dir):
     """Threshold-bucket mixing has the NESTED-SAMPLE property random
     sampling lacks: the kept set at a lower rate is a subset of the
